@@ -25,7 +25,10 @@ import graft.expr.{GeoExprs, WeightExprs}
   * (whole-stage codegen, no UDFs), followed by a hash aggregation on
   * `route_id`. At 100 TB of routes this scales linearly with route
   * partitions: no route-side shuffle until the final (already partial-
-  * aggregated) groupBy, whose key cardinality = #routes.
+  * aggregated) groupBy, whose key cardinality = #routes. The multi-date
+  * nightly kernel ([[scoreRoutesForDates]]) evaluates the same factors as
+  * a per-route fold over primitive accident arrays ([[RouteFold]],
+  * [[PairMath]]); this pair-grain form is its bitwise reference.
   *
   * Expected input columns —
   *   routes:    route_id, lat, lon, elev, route_type (canonical lowercase),
@@ -56,11 +59,6 @@ object SafetyKernel {
     CanonicalTypes.zipWithIndex.foldLeft(when(lit(false), lit(0))) {
       case (acc, (t, i)) => acc.when(typeLc === t, i)
     }.otherwise(-1)
-
-  /** The 7×7 matrix flattened route-major for int-indexed lookup. */
-  private val rtMatrixFlat: Seq[Double] =
-    for (p <- CanonicalTypes; a <- CanonicalTypes)
-      yield WeightExprs.RouteTypeWeights((p, a))
 
   /** Per-(route × accident) influence decomposition over a broadcast cross
     * join. Returns the pair grain with every factor as its own column —
@@ -107,17 +105,10 @@ object SafetyKernel {
   /** Accident-side enrichment: severity weight, type index, day count,
     * season flag, weather factor — all per accident, never per pair.
     */
-  def enrichAccidents(accidents: DataFrame, planDate: Column): DataFrame = {
-    val accBase =
-      if (accidents.columns.contains("wsim")) accidents
-      else accidents.withColumn("wsim", lit(NeutralWeatherSimilarity))
-    val accEnriched = accBase
-      .withColumn("__sev_w", WeightExprs.severityWeightKernel(col("severity_raw")))
-      .withColumn("__acc_idx", typeIdx(lower(col("acc_type"))))
-      .withColumn("__days", abs(datediff(planDate, col("a_date"))).cast("double"))
-      .withColumn("__same_season",
-        WeightExprs.seasonOf(planDate) === WeightExprs.seasonOf(col("a_date")))
-      .withColumn("__wfactor", WeightExprs.weatherFactor(col("wsim")))
+  def enrichAccidents(accidents: DataFrame, planDate: Column): DataFrame =
+    accidentScalars(accidents)
+      .withColumn("__days", accidentDayCount(planDate))
+      .withColumn("__same_season", accidentSameSeason(planDate))
       // λ can only be one of the canonical types' values or the default,
       // so the two per-pair pow() calls of the temporal weight collapse to
       // a per-ACCIDENT slot-per-type precompute; the pair loop just
@@ -127,9 +118,30 @@ object SafetyKernel {
       // date-expanded forecast/warming paths) must re-derive this array
       // from the new column too — `temporalSlots` is the shared builder.
       .withColumn("__tw_arr", temporalSlots(col("__days")))
+
+  /** The date-independent accident enrichment — severity weight, type
+    * index, weather factor (wsim defaults to neutral 0.5), cos(lat) —
+    * shared by [[enrichAccidents]] and the multi-date fold's accident
+    * arrays ([[RouteFold]]).
+    */
+  private[kernel] def accidentScalars(accidents: DataFrame): DataFrame = {
+    val accBase =
+      if (accidents.columns.contains("wsim")) accidents
+      else accidents.withColumn("wsim", lit(NeutralWeatherSimilarity))
+    accBase
+      .withColumn("__sev_w", WeightExprs.severityWeightKernel(col("severity_raw")))
+      .withColumn("__acc_idx", typeIdx(lower(col("acc_type"))))
+      .withColumn("__wfactor", WeightExprs.weatherFactor(col("wsim")))
       .withColumn("__a_coslat", cos(radians(col("a_lat"))))
-    accEnriched
   }
+
+  /** |plan date − accident date| in days, as a double. */
+  private[kernel] def accidentDayCount(planDate: Column): Column =
+    abs(datediff(planDate, col("a_date"))).cast("double")
+
+  /** Plan date and accident date fall in the same season. */
+  private[kernel] def accidentSameSeason(planDate: Column): Column =
+    WeightExprs.seasonOf(planDate) === WeightExprs.seasonOf(col("a_date"))
 
   /** One temporal base weight per canonical type (+ the default slot last),
     * as a function of a day-count column — the precompute indexed by
@@ -143,10 +155,8 @@ object SafetyKernel {
       WeightExprs.TemporalLambdaDefault).map(tw): _*)
   }
 
-  // --- the date-INDEPENDENT factor expressions, shared verbatim by the
-  // single-date kernel (influenceColumns) and the multi-date kernel
-  // (scoreRoutesForDates, which evaluates them once per pair below the
-  // date fan-out) — one definition, so the two paths cannot drift ------
+  // --- the pair factor expressions of influenceColumns; PairMath holds
+  // their scalar twins for the multi-date fold ---------------------------
 
   private def spatialExpr(twoH2: Column): Column =
     exp(-(pow(col("dist_km"), 2)) / twoH2)
@@ -160,15 +170,12 @@ object SafetyKernel {
 
   private def routeTypeExpr: Column =
     when(col("__rt_idx") >= 0 && col("__acc_idx") >= 0,
-      element_at(array(rtMatrixFlat.map(lit): _*),
+      element_at(array(PairMath.RouteTypeMatrix.toSeq.map(lit): _*),
         (col("__rt_idx") * 7 + col("__acc_idx") + 1).cast("int")))
       .otherwise(WeightExprs.DefaultRouteTypeWeight)
 
   private def gradeExpr: Column =
     WeightExprs.gradeWeight(col("difficulty"), col("a_difficulty"))
-
-  private val seasonalMultiplier = lit(1.0 +
-    (WeightExprs.SeasonalBoost - 1.0) * WeightExprs.TemporalSeasonalImpact)
 
   /** The per-pair kernel over an already-joined (enriched-routes ×
     * enriched-accidents) frame — shared by the exact cross-join path and
@@ -185,14 +192,6 @@ object SafetyKernel {
     */
   def influenceColumns(pairs: DataFrame): DataFrame = {
     val amplified = pairs.columns.contains("wmult")
-    // a factor column the caller ALREADY computed is kept, not re-derived
-    // — the multi-date kernel (scoreRoutesForDates) evaluates the
-    // date-independent factors once per pair BELOW the date fan-out, and
-    // re-deriving them here would undo exactly that sharing. Same value
-    // either way: the precomputed columns are built from the builders
-    // below, so this is reuse, not a second definition.
-    def keepOr(name: String, expr: => Column): Column =
-      if (pairs.columns.contains(name)) col(name) else expr
     // spatial: exp(-d²/(2h²)) with per-route bandwidth (2h² hoisted)
     val twoH2 =
       if (pairs.columns.contains("__two_h2")) col("__two_h2")
@@ -208,7 +207,7 @@ object SafetyKernel {
       else
         lit(1.0) - lit(WeightExprs.TemporalDecayImpact) *
           (lit(1.0) - pow(pow(col("__lam"), col("__days")), WeightExprs.TemporalDecayShape))
-    val temporal = when(col("__same_season"), baseWeight * seasonalMultiplier)
+    val temporal = when(col("__same_season"), baseWeight * lit(PairMath.SeasonalMultiplier))
       .otherwise(baseWeight)
     // elevation: bonus-only gaussian with per-route constant
     val elevW = elevationExpr
@@ -227,12 +226,12 @@ object SafetyKernel {
       else pairs.withColumn("dist_km",
         GeoExprs.haversineKm(col("lat"), col("lon"), col("a_lat"), col("a_lon")))
     withDist
-      .withColumn("spatial_w", keepOr("spatial_w", spatial))
+      .withColumn("spatial_w", spatial)
       .withColumn("temporal_w", temporal)
-      .withColumn("elevation_w", keepOr("elevation_w", elevW))
-      .withColumn("route_type_w", keepOr("route_type_w", rtW))
+      .withColumn("elevation_w", elevW)
+      .withColumn("route_type_w", rtW)
       .withColumn("severity_w", col("__sev_w"))
-      .withColumn("grade_w", keepOr("grade_w", grW))
+      .withColumn("grade_w", grW)
       // multiplication order mirrors the reference composition exactly
       // (safety_algorithm.py:293-319) — and the DuckDB oracle SQL.
       .withColumn("base_influence",
@@ -270,107 +269,51 @@ object SafetyKernel {
   def scoreRoutes(routes: DataFrame, accidents: DataFrame, planDate: Column): DataFrame =
     scoreRoutes(pairInfluence(routes, accidents, planDate))
 
-  /** Multi-date accident enrichment for [[scoreRoutesForDates]]: the
-    * date-independent scalars exactly as [[enrichAccidents]] hoists them,
-    * plus the two date-DEPENDENT temporal inputs as per-date arrays —
-    * `__tw_by_date(i)` / `__ss_by_date(i)` are the `__tw_arr` /
-    * `__same_season` values [[enrichAccidents]] would compute for
-    * `to_date(lit(dates(i)))`, built from the same expressions.
-    */
-  def enrichAccidentsForDates(accidents: DataFrame, dates: Seq[String]): DataFrame = {
-    require(dates.nonEmpty, "enrichAccidentsForDates: empty dates list")
-    val accBase =
-      if (accidents.columns.contains("wsim")) accidents
-      else accidents.withColumn("wsim", lit(NeutralWeatherSimilarity))
-    def dayCount(d: String): Column =
-      abs(datediff(to_date(lit(d)), col("a_date"))).cast("double")
-    accBase
-      .withColumn("__sev_w", WeightExprs.severityWeightKernel(col("severity_raw")))
-      .withColumn("__acc_idx", typeIdx(lower(col("acc_type"))))
-      .withColumn("__wfactor", WeightExprs.weatherFactor(col("wsim")))
-      .withColumn("__a_coslat", cos(radians(col("a_lat"))))
-      .withColumn("__tw_by_date",
-        array(dates.map(d => temporalSlots(dayCount(d))): _*))
-      .withColumn("__ss_by_date", array(dates.map(d =>
-        WeightExprs.seasonOf(to_date(lit(d))) ===
-          WeightExprs.seasonOf(col("a_date"))): _*))
-  }
-
-  /** Multi-date scoring with SHARED pair geometry — the nightly batch
+  /** Multi-date scoring — the nightly batch
     * (ScoringPipeline.computeDailyScores) scores the same routes ×
     * accidents for several plan dates, and only the TEMPORAL factor
-    * depends on the date. The per-date form re-ran the whole kernel per
-    * date: N × (haversine + spatial/elevation/grade exponentials) for
-    * pairs whose geometry never changes. Here ONE broadcast cross join
-    * evaluates every date-independent factor once per (route, accident)
-    * pair (EvalOnce-pinned so the per-date products reference them as
-    * attributes instead of inlining N copies), each date's influence is
-    * one product COLUMN over those attributes, the aggregate stays keyed
-    * by route alone (N sums per route, not N× the pair rows — the
-    * round-17 explode re-keyed the same pair stream through an N×-bigger
-    * aggregation input), and the per-date fan-out runs AFTER the
-    * aggregate, over |routes| rows.
+    * depends on the date.
+    *
+    * The kernel is a per-route fold, not a pair-grain plan: the accidents
+    * are enriched by the same Catalyst expressions as [[enrichAccidents]],
+    * collected once and broadcast as primitive arrays ([[RouteFold]]);
+    * each balanced route partition then runs one loop per route over
+    * those arrays. The loop evaluates the date-independent factors once
+    * per pair with [[PairMath]], picks each date's precomputed temporal
+    * weight, and accumulates `total_influence` and `n_contributing` per
+    * date in accident order. One `route_id`-keyed aggregate over the fold's
+    * |route rows| merges rows sharing a route_id, and the date fan-out is a
+    * posexplode over |routes| rows. No operator handles a row per pair.
     *
     * Per-(route, date) results are bit-identical to
-    * `scoreRoutes(routes, accidents, to_date(lit(d)))`: the factor
-    * expressions are the same definitions (see the builders above),
-    * `base_influence` multiplies in the same order (temporal is a fresh
-    * per-date value; the date-independent factors are the same doubles),
-    * and each (route, date) group accumulates its accidents in the same
-    * broadcast-iteration order, from exactly one map partition — pinned
-    * by ScoringPipelineSpec's multi-date ≡ per-date arm.
+    * `scoreRoutes(routes, accidents, to_date(lit(d)))`: PairMath performs
+    * the Catalyst factor expressions' operations in the same order with
+    * the same math functions, and each sum adds its accidents in the same
+    * broadcast order as the pair-grain partial aggregate, with Spark's
+    * NULL and NaN semantics — pinned by ScoringPipelineSpec's multi-date ≡
+    * per-date arms.
+    *
+    * Contract: routes carry no `wmult` (amplified weather is scored by
+    * [[pairInfluence]] / KernelPruning only); coordinates, elevations and
+    * difficulties are double or integral; the accident arrays
+    * (accidents × (63 + 64 × dates) bytes) stay below
+    * `spark.sql.maxBroadcastTableSize`. The collect itself is bounded by
+    * `spark.driver.maxResultSize`. Each breach fails with a message.
     *
     * Returns the scoreRoutes columns + `prediction_date`.
     */
   def scoreRoutesForDates(routes: DataFrame, accidents: DataFrame,
                           dates: Seq[String]): DataFrame = {
     require(dates.nonEmpty, "scoreRoutesForDates: empty dates list")
-    import graft.expr.EvalOnceExpr.evalOnce
-    // the shared (date-independent) factors, computed once per pair and
-    // EvalOnce-pinned: the per-date influence columns below reference
-    // these as attributes, and without the pin CollapseProject would
-    // inline each factor's definition into every date's product — the
-    // guide-§4.4 duplication, one asin-haversine per date again. The pin
-    // is value-transparent (EvalOnce's generated code IS the child's).
-    val pairs = enrichRoutes(balance(routes))
-      .crossJoin(broadcast(enrichAccidentsForDates(accidents, dates)))
-      .withColumn("dist_km", evalOnce(GeoExprs.haversineKmHoisted(
-        col("__coslat"), col("lat"), col("lon"),
-        col("__a_coslat"), col("a_lat"), col("a_lon"))))
-      .withColumn("spatial_w", evalOnce(spatialExpr(col("__two_h2"))))
-      .withColumn("elevation_w", evalOnce(elevationExpr))
-      .withColumn("route_type_w", evalOnce(routeTypeExpr))
-      .withColumn("grade_w", evalOnce(gradeExpr))
-    // per-date influence as COLUMNS over the shared factors (round 18):
-    // the round-17 form exploded the date index per pair, tripling the
-    // aggregation input (3.48B rows at the 168K nightly) to re-key the
-    // SAME pair stream; here each date's influence is one more product
-    // column, the aggregate stays keyed by route alone over 1.16B rows,
-    // and the 3× fan-out happens AFTER the aggregate over 168K rows.
-    // Values are bit-identical to the exploded form: same temporal pick
-    // (the per-accident per-type slot arrays), same multiplication
-    // order (spatial·temporal·elevation·route_type·severity·grade, then
-    // ×weather), and each (route, date) sum accumulates its accidents
-    // in the same broadcast-iteration order from exactly one map
-    // partition — pinned by ScoringPipelineSpec's bitwise arm.
-    def influenceFor(i: Int): Column = {
-      val baseWeight = element_at(element_at(col("__tw_by_date"), i + 1),
-        when(col("__rt_idx") >= 0, col("__rt_idx") + 1)
-          .otherwise(CanonicalTypes.size + 1).cast("int"))
-      val temporal = when(element_at(col("__ss_by_date"), i + 1),
-        baseWeight * seasonalMultiplier).otherwise(baseWeight)
-      col("spatial_w") * temporal * col("elevation_w") *
-        col("route_type_w") * col("__sev_w") * col("grade_w") * col("__wfactor")
-    }
-    val narrow = pairs.select(
-      col("route_id") +: dates.indices.map(i => influenceFor(i).as(s"__infl_$i")): _*)
+    require(!routes.columns.contains("wmult") && !accidents.columns.contains("wmult"),
+      "scoreRoutesForDates: routes carry wmult (amplified weather), which the " +
+        "multi-date kernel does not score; use pairInfluence or pairInfluencePruned")
+    val folded = RouteFold(enrichRoutes(balance(routes)), accidents, dates)
     val aggCols = dates.indices.flatMap { i =>
-      Seq(sum(col(s"__infl_$i")).as(s"__tot_$i"),
-        sum(when(col(s"__infl_$i") > SignificanceFloor, 1L).otherwise(0L))
-          .as(s"__n_$i"))
+      Seq(sum(col(s"__tot_$i")).as(s"__tot_$i"), sum(col(s"__n_$i")).as(s"__n_$i"))
     }
     val dateLit = array(dates.map(d => to_date(lit(d))): _*)
-    narrow
+    folded
       .groupBy("route_id")
       .agg(aggCols.head, aggCols.tail: _*)
       .select(col("route_id"), posexplode(array(dates.indices.map(i =>

@@ -13,11 +13,13 @@ import graft.kernel.SafetyKernel
   * Redis TTL cleanup (`safety_computation_optimized.py:827-905`,
   * `cache.py:477-524`).
   *
-  * Scale shape: ONE broadcast cross join covers every date (accidents
-  * side tiny; the date-independent pair geometry is computed once and
-  * only the temporal factor fans out per date — SafetyKernel.
-  * scoreRoutesForDates) → map-side kernel → hash agg keyed by
-  * (route, date) — no shuffle grows with #accidents. Partition overwrite
+  * Scale shape: the accidents are collected once into broadcast
+  * primitive arrays (small side), and each route partition folds every
+  * route over them for all dates at once — the date-independent pair
+  * factors are computed once per pair and only the temporal factor fans
+  * out per date (SafetyKernel.scoreRoutesForDates). No operator carries a
+  * row per pair; the one shuffle is a route_id-keyed merge over |routes|
+  * rows, then the dates fan out over |routes| rows. Partition overwrite
   * makes retries idempotent (the reference needed a distributed lock for
   * that; Spark's dynamic partition overwrite gives the same safety for
   * free).
@@ -25,13 +27,11 @@ import graft.kernel.SafetyKernel
 object ScoringPipeline {
 
   /** Score all routes for each date; returns the rows tagged with
-    * `prediction_date` (the partition column). One shared-geometry
-    * multi-date kernel (SafetyKernel.scoreRoutesForDates, round 17): the
-    * per-date union re-ran the haversine and every date-independent
-    * factor once PER DATE over the identical pair set; the fused form
-    * computes them once per pair and fans out only the temporal factor —
+    * `prediction_date` (the partition column). One multi-date per-route
+    * fold (SafetyKernel.scoreRoutesForDates) computes the date-independent
+    * factors once per pair and fans out only the temporal factor —
     * per-(route, date) values bit-identical to the per-date kernels
-    * (spec-pinned), ~N× less geometry work for N dates.
+    * (spec-pinned).
     */
   def computeDailyScores(routes: DataFrame, accidents: DataFrame,
                          dates: Seq[String]): DataFrame = {

@@ -21,11 +21,45 @@ class ScoringPipelineSpec extends SparkSpec {
     .toDF("accident_id", "a_lat", "a_lon", "a_elev", "acc_type", "severity_raw", "d", "a_difficulty")
     .withColumn("a_date", to_date(col("d"))).drop("d")
 
+  /** (route, date) result rows of the multi-date kernel and of the
+    * single-date kernel run once per date, as strings — exact string
+    * equality is bit-equality of the doubles (NaN and NULL included).
+    */
+  private def multiVsPerDate(rts: DataFrame, accs: DataFrame,
+                             dates: Seq[String]): (Seq[String], Seq[String]) = {
+    def rows(df: DataFrame): Seq[String] =
+      df.select(col("route_id"), col("prediction_date"), col("total_influence"),
+          col("n_contributing"), col("risk_score"), col("color_code"))
+        .orderBy("prediction_date", "route_id")
+        .collect().map(_.toString).toSeq
+    val fused = rows(graft.kernel.SafetyKernel.scoreRoutesForDates(rts, accs, dates))
+    val perDate = rows(dates.map { d =>
+      graft.kernel.SafetyKernel.scoreRoutes(rts, accs, to_date(lit(d)))
+        .withColumn("prediction_date", to_date(lit(d)))
+    }.reduce(_ unionByName _))
+    (fused, perDate)
+  }
+
+  /** The multi-date kernel's output schema: names, order, types and
+    * nullability; route_id keeps the input's nullability.
+    */
+  private def assertScoreSchema(rts: DataFrame, accs: DataFrame, routeIdNullable: Boolean): Unit = {
+    import org.apache.spark.sql.types._
+    val got = graft.kernel.SafetyKernel.scoreRoutesForDates(rts, accs, Seq("2024-07-15")).schema
+    assert(got == StructType(Seq(
+      StructField("route_id", LongType, routeIdNullable),
+      StructField("total_influence", DoubleType, nullable = true),
+      StructField("n_contributing", LongType, nullable = true),
+      StructField("risk_score", DoubleType, nullable = false),
+      StructField("color_code", StringType, nullable = false),
+      StructField("prediction_date", DateType, nullable = true))), got.treeString)
+  }
+
   test("multi-date kernel == per-date kernels, bitwise (shared-geometry fusion)") {
-    // the round-17 fusion (SafetyKernel.scoreRoutesForDates) computes the
-    // date-independent pair geometry once below the date fan-out; this arm
-    // pins BIT-equality of every output value against the per-date form it
-    // replaced — on a denser grid than the shared fixtures so several
+    // the multi-date kernel (SafetyKernel.scoreRoutesForDates) folds each
+    // route over the accident arrays for all dates at once; this arm pins
+    // BIT-equality of every output value against the pair-grain per-date
+    // kernel — on a denser grid than the shared fixtures so several
     // routes, types, seasons and null windows are all represented
     val rts = spark.range(200).select(
       col("id").as("route_id"),
@@ -50,18 +84,137 @@ class ScoringPipelineSpec extends SparkSpec {
       (lit(4.0) + ((col("id") * 7) % 13)).as("a_difficulty"))
     // dates spanning a season boundary so __same_season differs per date
     val dates = Seq("2024-07-15", "2024-09-23", "2024-12-05")
-    def rows(df: DataFrame): Seq[String] =
-      df.select(col("route_id"), col("prediction_date"), col("total_influence"),
-          col("n_contributing"), col("risk_score"), col("color_code"))
-        .orderBy("prediction_date", "route_id")
-        .collect().map(_.toString).toSeq
-    val fused = rows(graft.kernel.SafetyKernel.scoreRoutesForDates(rts, accs, dates))
-    val perDate = rows(dates.map { d =>
-      graft.kernel.SafetyKernel.scoreRoutes(rts, accs, to_date(lit(d)))
-        .withColumn("prediction_date", to_date(lit(d)))
-    }.reduce(_ unionByName _))
+    val (fused, perDate) = multiVsPerDate(rts, accs, dates)
     assert(fused.size == 200 * 3)
     assert(fused == perDate) // exact string equality = bit-equal doubles
+    // a one-date list is the same kernel with one temporal slot set
+    val (one, onePerDate) = multiVsPerDate(rts, accs, Seq("2024-12-05"))
+    assert(one.size == 200 && one == onePerDate)
+    assertScoreSchema(rts, accs, routeIdNullable = false)
+  }
+
+  /** Edge-case fixtures for the bitwise arm: NULL route coordinates, NULL
+    * and NaN route elevation/difficulty/type, a NULL route_id, and
+    * route_ids repeated across rows.
+    */
+  private def edgeRoutes: DataFrame = Seq[(Option[Long], Option[Double], Option[Double],
+      Option[Double], String, Option[Double])](
+    (Some(1L), Some(40.0), Some(-105.0), Some(3000.0), "alpine", Some(10.0)),
+    (Some(2L), None, Some(-105.0), Some(2000.0), "sport", Some(12.0)),
+    (Some(3L), Some(40.2), None, Some(2500.0), "trad", Some(8.0)),
+    (Some(4L), Some(40.1), Some(-105.2), Some(Double.NaN), "sport", Some(Double.NaN)),
+    (Some(1L), Some(40.3), Some(-105.1), Some(2500.0), "trad", Some(8.0)),
+    (Some(5L), Some(40.05), Some(-105.05), None, null, None),
+    (Some(6L), Some(Double.NaN), Some(-105.0), Some(2000.0), "ice", Some(9.0)),
+    (None, Some(40.15), Some(-104.9), Some(2800.0), "mixed", Some(11.0)),
+    (Some(7L), Some(39.9), Some(-105.3), Some(1800.0), "boulder", Some(6.0)),
+    (Some(5L), Some(40.4), Some(-104.8), Some(3100.0), "alpine", None),
+    (Some(7L), Some(39.95), Some(-105.25), Some(1900.0), "aid", Some(7.0)))
+    .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
+
+  private def edgeAccidents(rows: Seq[(Int, Option[Double], Option[Double], Option[Double],
+      String, String, Option[String], Option[Double], Option[Double])]): DataFrame =
+    rows.toDF("accident_id", "a_lat", "a_lon", "a_elev", "acc_type", "severity_raw", "d",
+        "a_difficulty", "wsim")
+      .withColumn("a_date", to_date(col("d"))).drop("d")
+
+  test("multi-date kernel == per-date kernels, bitwise: NULLs, repeated route_ids, one date") {
+    val accs = edgeAccidents(Seq(
+      (1, Some(40.1), Some(-105.0), Some(2900.0), "alpine", "fatal", Some("2023-07-15"), Some(9.0), Some(0.8)),
+      (2, Some(40.0), Some(-105.1), None, "sport", "serious", Some("2024-01-20"), None, Some(0.3)),
+      (3, Some(40.2), Some(-104.9), Some(2600.0), "trad", "minor", Some("2022-10-01"), Some(7.0), Some(0.1)),
+      (4, Some(40.1), Some(-105.0), Some(2900.0), "alpine", "fatal", Some("2023-07-15"), Some(9.0), None),
+      (5, Some(40.1), Some(-105.0), Some(2900.0), "ice", "serious", None, Some(9.0), Some(0.9)),
+      (6, None, Some(-105.0), Some(2900.0), "mixed", "fatal", Some("2023-03-02"), Some(9.0), Some(0.9)),
+      (7, Some(40.1), None, Some(2900.0), "aid", "fatal", Some("2023-03-02"), Some(9.0), Some(0.9)),
+      (8, Some(39.95), Some(-105.2), Some(1850.0), null, null, Some("2024-06-30"), Some(6.5), Some(1.0))))
+    val dates = Seq("2024-07-15", "2024-09-23", "2024-12-05")
+    val (fused, perDate) = multiVsPerDate(edgeRoutes, accs, dates)
+    // 8 distinct route_ids (NULL included): repeated rows merge per (route, date)
+    assert(fused.size == 8 * 3)
+    assert(fused == perDate)
+    // NULL route coordinates: every pair NULL → NULL total, no contributor
+    for (r <- fused.filter(r => r.startsWith("[2,") || r.startsWith("[3,")))
+      assert(r.contains(",null,0,0.0,green]"), r)
+    val (one, onePerDate) = multiVsPerDate(edgeRoutes, accs, Seq("2024-09-23"))
+    assert(one.size == 8 && one == onePerDate)
+    assertScoreSchema(edgeRoutes, accs, routeIdNullable = true)
+    // accidents whose pairs are all NULL (NULL wsim, date or coordinate)
+    val (allVoid, allVoidPerDate) = multiVsPerDate(edgeRoutes, accs.where(col("accident_id") >= 4
+      && col("accident_id") <= 7), dates)
+    assert(allVoid == allVoidPerDate)
+    assert(allVoid.size == 8 * 3 && allVoid.forall(_.contains(",null,0,0.0,green]")), allVoid)
+  }
+
+  test("multi-date kernel == per-date kernels, bitwise: NaN inputs follow Spark's ordering") {
+    // NaN is the largest double in Spark's `>` and `greatest`: a NaN
+    // influence counts as contributing and a NaN grade weight is kept
+    val accs = edgeAccidents(Seq(
+      (1, Some(40.1), Some(-105.0), Some(2900.0), "alpine", "fatal", Some("2023-07-15"), Some(9.0), Some(0.8)),
+      (2, Some(40.0), Some(-105.1), Some(Double.NaN), "sport", "serious", Some("2024-01-20"),
+        Some(Double.NaN), Some(0.6))))
+    val dates = Seq("2024-07-15", "2024-12-05")
+    val (fused, perDate) = multiVsPerDate(edgeRoutes, accs, dates)
+    assert(fused == perDate)
+    assert(fused.exists(_.contains("NaN")), fused)
+    val withNaNWeather = accs.unionByName(edgeAccidents(Seq(
+      (3, Some(40.1), Some(-105.0), Some(2900.0), "trad", "minor", Some("2023-07-15"), Some(9.0),
+        Some(Double.NaN)))))
+    val (nanW, nanWPerDate) = multiVsPerDate(edgeRoutes, withNaNWeather, dates)
+    assert(nanW == nanWPerDate)
+    // route 1 (two rows) pairs with all 3 accidents: each NaN influence
+    // counts as a contributor and the NaN total clamps to risk 100
+    assert(nanW.filter(_.startsWith("[1,")).forall(_.contains(",NaN,6,100.0,red]")), nanW)
+  }
+
+  test("multi-date kernel: an empty accident set scores no rows, and runDaily fails") {
+    val none = accidents.limit(0)
+    val (fused, perDate) = multiVsPerDate(routes, none, Seq("2024-07-15", "2024-07-16"))
+    assert(fused.isEmpty && perDate.isEmpty)
+    // an earlier date's partition exists, so the read-back finds a table
+    // and the row-count invariant is what fails
+    val out = Files.createTempDirectory("scores_empty").toString
+    ScoringPipeline.runDaily(spark, routes, accidents, Seq("2024-07-14"), out)
+    val e = intercept[IllegalArgumentException] {
+      ScoringPipeline.runDaily(spark, routes, none, Seq("2024-07-15"), out)
+    }
+    assert(e.getMessage.contains("scoring invariant violated: wrote 0 rows, expected 2"),
+      e.getMessage)
+  }
+
+  test("multi-date kernel rejects amplified-weather routes (wmult) loudly") {
+    val e = intercept[IllegalArgumentException] {
+      graft.kernel.SafetyKernel.scoreRoutesForDates(
+        routes.withColumn("wmult", lit(1.2)), accidents, Seq("2024-07-15"))
+    }
+    assert(e.getMessage.contains("routes carry wmult"), e.getMessage)
+    // two float columns subtract in float precision in the Catalyst
+    // kernel; the fold reads doubles, so it refuses float inputs
+    val f = intercept[IllegalArgumentException] {
+      graft.kernel.SafetyKernel.scoreRoutesForDates(
+        routes, accidents.withColumn("a_lat", col("a_lat").cast("float")), Seq("2024-07-15"))
+    }
+    assert(f.getMessage.contains("column a_lat is float"), f.getMessage)
+  }
+
+  test("multi-date kernel checks its accident arrays against the broadcast limit") {
+    val key = "spark.sql.maxBroadcastTableSize"
+    val prev = spark.conf.getOption(key)
+    // 1 accident × (63 + 64 × 2) bytes = 191 bytes
+    spark.conf.set(key, "191b")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        graft.kernel.SafetyKernel.scoreRoutesForDates(routes, accidents,
+          Seq("2024-07-15", "2024-07-16"))
+      }
+      assert(e.getMessage.contains("1 accidents × 2 dates take 191 bytes"), e.getMessage)
+      spark.conf.set(key, "192b")
+      assert(graft.kernel.SafetyKernel.scoreRoutesForDates(routes, accidents,
+        Seq("2024-07-15", "2024-07-16")).count() == 4)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("runDaily writes date partitions, invariant holds, rerun is idempotent") {

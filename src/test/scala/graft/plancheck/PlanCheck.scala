@@ -362,16 +362,17 @@ object PlanCheck {
         "evalonce_pins" -> pinned.toString))
     }
 
-    // 17. nightly multi-date kernel shares pair geometry (round-17
-    //     fusion, round-18 column form): ONE cross join, exactly one
-    //     asin-haversine (EvalOnce-pinned shared factors), per-date
-    //     influences as COLUMNS so the aggregate consumes the pair
-    //     stream ONCE keyed by route, and the date fan-out is one
-    //     posexplode ABOVE the aggregate over |routes| rows. Plants:
-    //     reverting to the round-17 pair-grain explode re-introduces
-    //     "Generate explode(" below the aggregate (date_fanout_pre_agg);
-    //     reverting to the per-date union flips asin_count to one PER
-    //     DATE (3).
+    // 17. nightly multi-date kernel shares pair geometry as a per-route
+    //     fold: the accidents are broadcast as primitive arrays and each
+    //     route is folded over them for every date, so the plan holds
+    //     exactly one fold operator (MapPartitions), no join of any kind
+    //     (no pair-grain rows, no haversine in Catalyst), and only exchanges
+    //     over route rows: at most the route-side balance (round robin)
+    //     and one route_id-keyed merge, whose input is the fold's
+    //     |route rows|. The date fan-out stays one posexplode above that
+    //     merge. Plant: restoring the cross-join form re-introduces a
+    //     BroadcastNestedLoopJoin and drops the fold (n_joins 0→1,
+    //     n_fold_ops 1→0).
     contract("nightly_multidate_shared_geometry") {
       def countOcc(hay: String, needle: String): Int = {
         var n = 0; var i = hay.indexOf(needle)
@@ -383,16 +384,23 @@ object PlanCheck {
         graft.queries.Derived.accidents(spark, dir),
         Seq("2024-07-14", "2024-07-15", "2024-07-16"))
       val plan = planString(scores)
-      val asinCount = countOcc(plan, "ASIN(")
-      val postAggFanout = countOcc(plan, "Generate posexplode(")
-      val preAggFanout = countOcc(plan, "Generate explode(")
+      val folds = countOcc(plan, "MapPartitions ")
       val joins = countOcc(plan, "Join")
-      (asinCount == 1 && postAggFanout == 1 && preAggFanout == 0 && joins == 1,
+      val asinCount = countOcc(plan, "ASIN(")
+      val exchanges = plan.linesIterator.filter(_.contains("Exchange ")).toSeq
+      val balance = exchanges.count(_.contains("RoundRobinPartitioning("))
+      val routeKeyed = exchanges.count(_.contains("hashpartitioning(route_id#"))
+      val postAggFanout = countOcc(plan, "Generate posexplode(")
+      (folds == 1 && joins == 0 && asinCount == 0 && balance <= 1 && routeKeyed == 1 &&
+        exchanges.size == balance + routeKeyed && postAggFanout == 1,
         Seq(
+          "n_fold_ops" -> folds.toString,
+          "n_joins" -> joins.toString,
           "asin_count" -> asinCount.toString,
-          "date_fanout_post_agg" -> postAggFanout.toString,
-          "date_fanout_pre_agg" -> preAggFanout.toString,
-          "n_joins" -> joins.toString))
+          "n_exchanges" -> exchanges.size.toString,
+          "route_balance_exchanges" -> balance.toString,
+          "route_id_keyed_exchanges" -> routeKeyed.toString,
+          "date_fanout_post_agg" -> postAggFanout.toString))
     }
 
     // ---- emit -------------------------------------------------------------
