@@ -249,7 +249,8 @@ case class PqAdcScore(first: Expression, second: Expression, third: Expression,
          |    int $idx = $m * $ksub + $cs.getInt($m);
          |    if ($idx < 0 || $idx >= $lt.numElements()) {
          |      throw new IllegalStateException(
-         |        "pq_adc_score: code indexes outside the LUT at subspace " + $m);
+         |        "pq_adc_score: code " + $cs.getInt($m) + " of subspace " + $m +
+         |        " indexes outside the LUT");
          |    }
          |    if ($lt.isNullAt($idx)) { $bad = true; continue; }
          |    $acc = $acc + $lt.getDouble($idx);

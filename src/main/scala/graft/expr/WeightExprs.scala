@@ -13,9 +13,24 @@ import org.apache.spark.sql.functions._
   */
 object WeightExprs {
 
-  private def typeLookup(routeType: Column, table: Map[String, Double], default: Double): Column =
+  /** ASCII case fold: `A`–`Z` become `a`–`z`, every other character stays
+    * as it is — the kernel's case-insensitive key match.
+    *
+    * It replaces `lower` on the kernel's lookups because Spark 4.1's
+    * `lower` (with the default `spark.sql.icu.caseMappings.enabled`) runs
+    * the ICU case-map class initialiser on first use, seconds of one
+    * thread while the stage's other tasks wait. The lookups give the same
+    * result under either fold: every key is lowercase ASCII without `k`,
+    * and the only non-ASCII code point ICU lowercases to pure ASCII is
+    * U+212A KELVIN SIGN (→ `k`) — pinned by AsciiFoldSpec.
+    */
+  def asciiLower(s: Column): Column =
+    translate(s, "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz")
+
+  /** Table lookup on an already folded ([[asciiLower]]) type column. */
+  private def typeLookup(typeLc: Column, table: Map[String, Double], default: Double): Column =
     table.foldLeft(when(lit(false), lit(0.0))) { case (acc, (k, v)) =>
-      acc.when(lower(routeType) === k, lit(v))
+      acc.when(typeLc === k, lit(v))
     }.otherwise(lit(default))
 
   // -------------------------------------------------------------------------
@@ -29,12 +44,13 @@ object WeightExprs {
     "sport" -> 25.0, "aid" -> 30.0, "boulder" -> 20.0)
   val SpatialBandwidthDefault = 50.0
 
-  def spatialBandwidthKm(routeType: Column): Column =
-    typeLookup(routeType, SpatialBandwidth, SpatialBandwidthDefault)
+  /** Bandwidth for a folded ([[asciiLower]]) route-type column. */
+  def spatialBandwidthKm(routeTypeLc: Column): Column =
+    typeLookup(routeTypeLc, SpatialBandwidth, SpatialBandwidthDefault)
 
   /** `exp(-d² / (2h²))` — Gaussian decay, no hard cutoff. */
   def spatialWeight(distanceKm: Column, routeType: Column): Column = {
-    val h = spatialBandwidthKm(routeType)
+    val h = spatialBandwidthKm(asciiLower(routeType))
     exp(-(pow(distanceKm, 2)) / (lit(2.0) * pow(h, 2)))
   }
 
@@ -52,8 +68,9 @@ object WeightExprs {
   val TemporalSeasonalImpact = 0.10
   val SeasonalBoost = 1.5
 
-  def temporalLambda(routeType: Column): Column =
-    typeLookup(routeType, TemporalLambda, TemporalLambdaDefault)
+  /** Decay λ for a folded ([[asciiLower]]) route-type column. */
+  def temporalLambda(routeTypeLc: Column): Column =
+    typeLookup(routeTypeLc, TemporalLambda, TemporalLambdaDefault)
 
   /** Northern-hemisphere season for a date column
     * (ref: `backend/app/utils/time_utils.py:12-56`).
@@ -71,7 +88,7 @@ object WeightExprs {
     */
   def temporalWeight(currentDate: Column, accidentDate: Column, routeType: Column): Column = {
     val days = abs(datediff(currentDate, accidentDate)).cast("double")
-    val baseDecay = pow(temporalLambda(routeType), days)
+    val baseDecay = pow(temporalLambda(asciiLower(routeType)), days)
     val baseWeight = lit(1.0) - lit(TemporalDecayImpact) *
       (lit(1.0) - pow(baseDecay, TemporalDecayShape))
     val sameSeason = seasonOf(currentDate) === seasonOf(accidentDate)
@@ -98,7 +115,7 @@ object WeightExprs {
 
   /** `1 + 0.15·exp(−(Δelev/c)²)`; NULL elevation on either side → 1.0. */
   def elevationWeight(routeElev: Column, accidentElev: Column, routeType: Column): Column = {
-    val c = typeLookup(routeType, ElevationDecayConstant, ElevationDecayDefault)
+    val c = typeLookup(asciiLower(routeType), ElevationDecayConstant, ElevationDecayDefault)
     val diff = abs(accidentElev - routeElev)
     val bonus = lit(ElevationBonusMax) * exp(-pow(diff / c, 2))
     when(routeElev.isNull || accidentElev.isNull, lit(1.0)).otherwise(lit(1.0) + bonus)
@@ -128,20 +145,26 @@ object WeightExprs {
       .when(lower(severity) === "serious", SeverityWeights("serious"))
       .otherwise(1.0) // minor / unknown / unrecognized all 1.0
 
-  /** The KERNEL's severity weight: exact `lower(raw)` dict lookup with
+  /** The KERNEL's severity weight: exact case-folded dict lookup with
     * default 1.0 — the reference influence kernel does NOT apply the
     * term-containment normalizer (`safety_algorithm.py:278` calls
     * `calculate_severity_weight(accident.severity)` which is a plain
     * `SEVERITY_BOOSTERS.get(severity.lower(), 1.0)`,
     * `severity_weighting.py:18-55`) — so free text like "Serious Injury"
     * scores 1.0 in the kernel. normalizeSeverity (F10) remains a separate
-    * data-prep operator.
+    * data-prep operator. A NULL severity matches no key and scores 1.0.
     */
-  def severityWeightKernel(raw: Column): Column =
-    when(raw.isNull, 1.0)
-      .when(lower(raw) === "fatal", SeverityWeights("fatal"))
-      .when(lower(raw) === "serious", SeverityWeights("serious"))
-      .otherwise(1.0)
+  def severityWeightKernel(raw: Column): Column = {
+    val lc = asciiLower(raw)
+    KernelSeverityKeys.foldLeft(when(lit(false), lit(0.0))) { case (acc, k) =>
+      acc.when(lc === k, lit(SeverityWeights(k)))
+    }.otherwise(lit(1.0))
+  }
+
+  /** The severity keys [[severityWeightKernel]] matches; every other value
+    * (minor, unknown, free text) scores 1.0.
+    */
+  private[graft] val KernelSeverityKeys: Seq[String] = Seq("fatal", "serious")
 
   /** Raw free-text severity → canonical level via term containment
     * (ref: `severity_weighting.py:93-148`; order fatal → serious → minor).
@@ -256,11 +279,6 @@ object WeightExprs {
     when(risk < lo, "green").when(risk < mid, "yellow")
       .when(risk < hi, "orange").otherwise("red")
   }
-
-  /** Accident relevance for proximity listings: `100·exp(−d/10)`
-    * (ref: `backend/app/api/v1/mp_routes.py:870-873`).
-    */
-  def impactScore(distanceKm: Column): Column = lit(100.0) * exp(-distanceKm / 10.0)
 
   /** Exponential-decay half-life in years for a decay λ
     * (ref: `backend/app/services/temporal_weighting.py:185-217`).

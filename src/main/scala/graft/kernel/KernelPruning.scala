@@ -73,18 +73,6 @@ object KernelPruning {
     math.max(1L, math.floor(360.0 / minDeg).toLong)
   }
 
-  /** Grid-cell assignment: (latCell, lonCell). Latitude cells are plain
-    * floor-buckets (no wrap); longitude cells index a uniform [0, n) ring
-    * so the accident fan-out can wrap modulo n across ±180°.
-    */
-  private def cellIds(lat: Column, lon: Column, radiusKm: Double,
-                      maxAbsLat: Double): (Column, Column) = {
-    val latDeg = radiusKm / KmPerDegLat
-    val n = lonCells(radiusKm, maxAbsLat)
-    val lonCell = pmod(floor((lon + 180.0) / (360.0 / n)).cast("long"), lit(n))
-    (floor(lat / latDeg).cast("long"), lonCell)
-  }
-
   /** Bandwidth TIERS for the grid: every route's bandwidth maps UP to the
     * smallest tier ≥ it, and each tier gets its own (cell size, lon ring)
     * grid — still lossless (the tier radius covers the route's true gate

@@ -12,9 +12,16 @@ import graft.expr.{GeoExprs, WeightExprs}
   * WeightExprs), so the two agree bit for bit: Spark's POWER and EXP call
   * `StrictMath`, while SIN, ASIN, SQRT, RADIANS and ABS call
   * `java.lang.Math` (`java.lang.Math.exp`/`pow` differ from StrictMath by
-  * an ulp on some inputs). Comparisons follow Spark's double ordering, in
-  * which NaN is larger than every other value. NULL handling stays with
-  * the caller: these take only non-NULL inputs.
+  * an ulp on some inputs). `StrictMath.pow(x, 2)` is written `x * x`:
+  * FdLibm's pow returns exactly `x * x` for `y == 2` (NaN, ±0 and ±∞
+  * included). Comparisons follow Spark's double ordering, in which NaN is
+  * larger than every other value. NULL handling stays with the caller:
+  * these take only non-NULL inputs.
+  *
+  * [[spatialVanishes]] lets the fold skip a pair whose spatial factor is
+  * exactly 0.0 without any trig: `StrictMath.exp(y)` is 0.0 for every
+  * `y < −745.1332191019411` (FdLibm's underflow threshold), which
+  * `−d²/(2h²)` crosses beyond about 38.6 h.
   */
 private[kernel] object PairMath {
 
@@ -37,19 +44,62 @@ private[kernel] object PairMath {
                   cosLat2: Double, lat2: Double, lon2: Double): Double = {
     val dLat = Math.toRadians(lat2 - lat1)
     val dLon = Math.toRadians(lon2 - lon1)
-    val a = StrictMath.pow(Math.sin(dLat / 2), 2) +
-      cosLat1 * cosLat2 * StrictMath.pow(Math.sin(dLon / 2), 2)
+    val sLat = Math.sin(dLat / 2)
+    val sLon = Math.sin(dLon / 2)
+    val a = sLat * sLat + cosLat1 * cosLat2 * (sLon * sLon)
     TwoEarthRadiusKm * Math.asin(Math.sqrt(a))
   }
 
   /** exp(−d²/(2h²)), 2h² hoisted per route. */
   def spatial(distKm: Double, twoH2: Double): Double =
-    StrictMath.exp(-StrictMath.pow(distKm, 2) / twoH2)
+    StrictMath.exp(-(distKm * distKm) / twoH2)
+
+  /** −y below which `StrictMath.exp(y)` returns exactly 0.0. */
+  private val ExpZeroBelow = 745.1332191019411
+
+  /** Relative slack on both skip bounds: far above the few ulps of
+    * rounding in the bounds and in the haversine chain.
+    */
+  private val SkipMargin = 1e-6
+
+  /** Per route: the haversine term `a` (see [[haversineKm]]) above which
+    * `spatial(haversineKm(…), twoH2)` is exactly 0.0, with [[SkipMargin]]
+    * to spare; +∞ when no distance on the sphere gets there (or 2h² is
+    * not a positive number).
+    */
+  def zeroSpatialA(twoH2: Double): Double = {
+    val halfAngle = Math.sqrt(ExpZeroBelow * twoH2) / TwoEarthRadiusKm * (1 + SkipMargin)
+    if (!(halfAngle < Math.PI / 2)) Double.PositiveInfinity
+    else {
+      val s = Math.sin(halfAngle)
+      s * s * (1 + SkipMargin)
+    }
+  }
+
+  /** True only when `spatial(haversineKm(…), twoH2)` is exactly 0.0, for
+    * any inputs: `cosLat1 · cosLat2 ≥ 0`, a trig-free lower bound on the
+    * haversine term `a` clears `zeroA` ([[zeroSpatialA]] of that 2h²),
+    * using `sin x ≥ x − x³/6` for `0 ≤ x < 1` and `sin² x ≥ 0` otherwise,
+    * and the upper bound `sin² x ≤ x²` keeps `a` below 1, so `asin(√a)`
+    * is finite and increasing. A NaN or infinite input fails a test.
+    */
+  def spatialVanishes(cosLat1: Double, lat1: Double, lon1: Double,
+                      cosLat2: Double, lat2: Double, lon2: Double, zeroA: Double): Boolean = {
+    val x1 = Math.abs(Math.toRadians(lat2 - lat1) / 2)
+    val x2 = Math.abs(Math.toRadians(lon2 - lon1) / 2)
+    val c = cosLat1 * cosLat2
+    val s1 = sinLowerBound(x1)
+    val s2 = sinLowerBound(x2)
+    c >= 0 && s1 * s1 + c * (s2 * s2) > zeroA && x1 * x1 + c * (x2 * x2) < 1 - SkipMargin
+  }
+
+  private def sinLowerBound(x: Double): Double = if (x < 1.0) x - x * x * x / 6 else 0.0
 
   /** 1 + 0.15·exp(−(|Δelev|/c)²) — for two non-NULL elevations. */
-  def elevation(elev: Double, aElev: Double, decayC: Double): Double =
-    1.0 + WeightExprs.ElevationBonusMax *
-      StrictMath.exp(-StrictMath.pow(Math.abs(aElev - elev) / decayC, 2))
+  def elevation(elev: Double, aElev: Double, decayC: Double): Double = {
+    val x = Math.abs(aElev - elev) / decayC
+    1.0 + WeightExprs.ElevationBonusMax * StrictMath.exp(-(x * x))
+  }
 
   /** Matrix weight for two canonical type indexes, 0.5 when either is -1. */
   def routeType(routeIdx: Int, accidentIdx: Int): Double =
@@ -57,9 +107,10 @@ private[kernel] object PairMath {
     else WeightExprs.DefaultRouteTypeWeight
 
   /** greatest(0.25, exp(−Δ²/(2σ²))) — for two non-NULL difficulties. */
-  def grade(difficulty: Double, aDifficulty: Double): Double =
-    greatest(WeightExprs.GradeMinWeight,
-      StrictMath.exp(-StrictMath.pow(Math.abs(difficulty - aDifficulty), 2) / GradeTwoSigma2))
+  def grade(difficulty: Double, aDifficulty: Double): Double = {
+    val x = Math.abs(difficulty - aDifficulty)
+    greatest(WeightExprs.GradeMinWeight, StrictMath.exp(-(x * x) / GradeTwoSigma2))
+  }
 
   /** base = spatial·temporal·elevation·route_type·severity·grade, then
     * ×weather — the reference's multiplication order.

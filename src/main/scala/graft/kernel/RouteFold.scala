@@ -22,7 +22,20 @@ private[kernel] final case class AccidentColumns(
     elev: Array[Double], elevNull: Array[Boolean],
     difficulty: Array[Double], difficultyNull: Array[Boolean],
     typeIdx: Array[Int], severity: Array[Double], weather: Array[Double],
-    void: Array[Boolean], temporal: Array[Double])
+    void: Array[Boolean], temporal: Array[Double]) {
+
+  /** Accidents whose non-spatial factors are finite for every route with
+    * finite elevation and difficulty: elevation and difficulty finite or
+    * NULL (factor 1.0), weather factor finite. Temporal, severity and
+    * route-type factors are finite by construction. Derived from the
+    * arrays once per JVM that folds, not broadcast.
+    */
+  @transient lazy val skippable: Array[Boolean] = Array.tabulate(n) { i =>
+    import java.lang.Double.isFinite
+    (elevNull(i) || isFinite(elev(i))) && (difficultyNull(i) || isFinite(difficulty(i))) &&
+      isFinite(weather(i))
+  }
+}
 
 private[kernel] object AccidentColumns {
 
@@ -40,8 +53,14 @@ private[kernel] object AccidentColumns {
   * date-independent factors once per pair ([[PairMath]]) and accumulating
   * `total_influence` / `n_contributing` for every date the way Spark's
   * `sum` does, in accident order.
+  *
+  * A pair whose spatial factor is exactly 0.0 ([[PairMath.spatialVanishes]],
+  * against a threshold computed once per route) is skipped when both
+  * sides' other factors are finite: its influence is then ±0.0, which
+  * changes no sum (they start at +0.0), no contributor count and no
+  * "some pair" flag, so every score stays bit-identical.
   */
-private[kernel] object RouteFold {
+private[graft] object RouteFold {
 
   /** Route columns the loop reads, in this order. */
   private val RouteCols =
@@ -81,21 +100,28 @@ private[kernel] object RouteFold {
       Encoders.row(schema))
   }
 
-  /** Enrich the accidents with the same Catalyst expressions the pair-grain
-    * kernel uses, collect them, check the array size against Spark's
-    * broadcast limit and lay them out column-wise.
+  /** The enriched accident rows the fold collects: the factor inputs, a
+    * NULL-date flag, then per date the temporal slots and season flag.
     */
-  private def collectAccidents(accidents: DataFrame, dates: Seq[String]): AccidentColumns = {
+  private[graft] def accidentFrame(accidents: DataFrame, dates: Seq[String]): DataFrame = {
     import SafetyKernel.{accidentDayCount, accidentSameSeason, accidentScalars}
     val dateCols = dates.flatMap { d =>
       val planDate = to_date(lit(d))
       Seq(SafetyKernel.temporalSlots(accidentDayCount(planDate)), accidentSameSeason(planDate))
     }
-    val rows = accidentScalars(accidents).select(
+    accidentScalars(accidents).select(
       (Seq("a_lat", "a_lon", "__a_coslat", "a_elev", "a_difficulty", "__acc_idx", "__sev_w",
         "__wfactor").map { c =>
         if (DoubleInputs.contains(c)) col(c).cast(DoubleType) else col(c)
-      } ++ Seq(col("a_date").isNull) ++ dateCols): _*).collect()
+      } ++ Seq(col("a_date").isNull) ++ dateCols): _*)
+  }
+
+  /** Enrich the accidents with the same Catalyst expressions the pair-grain
+    * kernel uses, collect them, check the array size against Spark's
+    * broadcast limit and lay them out column-wise.
+    */
+  private def collectAccidents(accidents: DataFrame, dates: Seq[String]): AccidentColumns = {
+    val rows = accidentFrame(accidents, dates).collect()
     val n = rows.length
     val nDates = dates.size
     val bytes = AccidentColumns.sizeInBytes(n, nDates)
@@ -185,6 +211,14 @@ private[kernel] object RouteFold {
     val elevC = r.getDouble(7)
     val rtIdx = r.getInt(8)
     val slot = if (rtIdx >= 0) rtIdx else AccidentColumns.Slots - 1
+    import java.lang.Double.isFinite
+    // +∞ never clears the skip bound: a route whose elevation or difficulty
+    // is NaN or infinite can make a pair's other factors NaN or infinite
+    val zeroA =
+      if ((elevNull || isFinite(elev)) && (difficultyNull || isFinite(difficulty)))
+        PairMath.zeroSpatialA(twoH2)
+      else Double.PositiveInfinity
+    val skippable = acc.skippable
     val n = acc.n
     val nDates = acc.nDates
     val slots = AccidentColumns.Slots
@@ -194,25 +228,29 @@ private[kernel] object RouteFold {
     var paired = false
     var i = 0
     while (i < n) {
+      // a pair whose spatial factor is exactly 0.0 would add ±0.0: skip it
       if (!acc.void(i)) {
         paired = true
-        val spatial = PairMath.spatial(
-          PairMath.haversineKm(cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i)), twoH2)
-        val elevation =
-          if (elevNull || acc.elevNull(i)) 1.0 else PairMath.elevation(elev, acc.elev(i), elevC)
-        val routeType = PairMath.routeType(rtIdx, acc.typeIdx(i))
-        val grade =
-          if (difficultyNull || acc.difficultyNull(i)) 1.0
-          else PairMath.grade(difficulty, acc.difficulty(i))
-        val severity = acc.severity(i)
-        val weather = acc.weather(i)
-        var d = 0
-        while (d < nDates) {
-          val infl = PairMath.influence(spatial, temporal((d * slots + slot) * n + i),
-            elevation, routeType, severity, grade, weather)
-          total(d) += infl
-          if (PairMath.significant(infl)) count(d) += 1
-          d += 1
+        if (!(skippable(i) && PairMath.spatialVanishes(
+            cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i), zeroA))) {
+          val spatial = PairMath.spatial(
+            PairMath.haversineKm(cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i)), twoH2)
+          val elevation =
+            if (elevNull || acc.elevNull(i)) 1.0 else PairMath.elevation(elev, acc.elev(i), elevC)
+          val routeType = PairMath.routeType(rtIdx, acc.typeIdx(i))
+          val grade =
+            if (difficultyNull || acc.difficultyNull(i)) 1.0
+            else PairMath.grade(difficulty, acc.difficulty(i))
+          val severity = acc.severity(i)
+          val weather = acc.weather(i)
+          var d = 0
+          while (d < nDates) {
+            val infl = PairMath.influence(spatial, temporal((d * slots + slot) * n + i),
+              elevation, routeType, severity, grade, weather)
+            total(d) += infl
+            if (PairMath.significant(infl)) count(d) += 1
+            d += 1
+          }
         }
       }
       i += 1

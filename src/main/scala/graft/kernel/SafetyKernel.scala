@@ -31,7 +31,7 @@ import graft.expr.{GeoExprs, WeightExprs}
   * [[PairMath]]); this pair-grain form is its bitwise reference.
   *
   * Expected input columns —
-  *   routes:    route_id, lat, lon, elev, route_type (canonical lowercase),
+  *   routes:    route_id, lat, lon, elev, route_type (canonical, any ASCII case),
   *              difficulty (nullable Double)
   *   accidents: accident_id, a_lat, a_lon, a_elev, acc_type, severity_raw,
   *              a_date, a_difficulty, and optionally wsim (weather
@@ -83,11 +83,12 @@ object SafetyKernel {
   private def balance(routes: DataFrame): DataFrame = graft.Partitioning.balanced(routes)
 
   /** Route-side enrichment: every type-dependent constant hoisted out of
-    * the pair loop.
+    * the pair loop. The type is case-folded once per row
+    * ([[WeightExprs.asciiLower]]) and every lookup reads the folded column.
     */
   def enrichRoutes(routes: DataFrame): DataFrame = {
     val routesEnriched = routes
-      .withColumn("__rt_lc", lower(col("route_type")))
+      .withColumn("__rt_lc", WeightExprs.asciiLower(col("route_type")))
       .withColumn("__h", WeightExprs.spatialBandwidthKm(col("__rt_lc")))
       .withColumn("__lam", WeightExprs.temporalLambda(col("__rt_lc")))
       .withColumn("__elev_c",
@@ -130,7 +131,7 @@ object SafetyKernel {
       else accidents.withColumn("wsim", lit(NeutralWeatherSimilarity))
     accBase
       .withColumn("__sev_w", WeightExprs.severityWeightKernel(col("severity_raw")))
-      .withColumn("__acc_idx", typeIdx(lower(col("acc_type"))))
+      .withColumn("__acc_idx", typeIdx(WeightExprs.asciiLower(col("acc_type"))))
       .withColumn("__wfactor", WeightExprs.weatherFactor(col("wsim")))
       .withColumn("__a_coslat", cos(radians(col("a_lat"))))
   }
@@ -281,9 +282,11 @@ object SafetyKernel {
     * those arrays. The loop evaluates the date-independent factors once
     * per pair with [[PairMath]], picks each date's precomputed temporal
     * weight, and accumulates `total_influence` and `n_contributing` per
-    * date in accident order. One `route_id`-keyed aggregate over the fold's
-    * |route rows| merges rows sharing a route_id, and the date fan-out is a
-    * posexplode over |routes| rows. No operator handles a row per pair.
+    * date in accident order, skipping pairs whose spatial factor is
+    * exactly 0.0 (they would add ±0.0). One `route_id`-keyed aggregate
+    * over the fold's |route rows| merges rows sharing a route_id, and the
+    * date fan-out is a posexplode over |routes| rows. No operator handles
+    * a row per pair.
     *
     * Per-(route, date) results are bit-identical to
     * `scoreRoutes(routes, accidents, to_date(lit(d)))`: PairMath performs

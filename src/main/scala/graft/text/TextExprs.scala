@@ -34,11 +34,6 @@ object TextExprs {
   def bpePieces(text: Column): Column =
     regexp_extract_all(text, lit(BpePattern), lit(0))
 
-  /** Piece count under the BPE-ish pre-tokenizer (upper bound on real BPE
-    * token count; the usual cheap budget estimate for corpus curation).
-    */
-  def bpePieceCount(text: Column): Column = size(bpePieces(text)).cast("long")
-
   /** Token array (single-space separated corpus). */
   def tokens(text: Column): Column = split(text, " ")
 

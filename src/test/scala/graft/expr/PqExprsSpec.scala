@@ -194,6 +194,33 @@ class PqExprsSpec extends SparkSpec {
     }
   }
 
+  test("pq_adc_score: an out-of-LUT code fails with the same message in both engines") {
+    def frame: DataFrame = spark.sql(
+      """SELECT id, codes, lut FROM VALUES
+        |  (0, array(1, 7), array(0.1D, 0.2D, 0.3D, 0.4D, 0.5D, 0.6D, 0.7D, 0.8D))
+        |  AS t(id, codes, lut)""".stripMargin)
+      .repartition(2) // defeat ConvertToLocalRelation so codegen runs
+    def message(mode: String, wholeStage: String): String = {
+      val conf = spark.conf
+      val prev = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+        .map(k => k -> conf.getOption(k))
+      try {
+        conf.set("spark.sql.codegen.factoryMode", mode)
+        conf.set("spark.sql.codegen.wholeStage", wholeStage)
+        val e = intercept[Exception] {
+          frame.select(PqExprs.adcScore(col("codes"), col("lut"), lit(0.0), 2, 4)).collect()
+        }
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).take(10)
+          .collectFirst { case c: IllegalStateException => c.getMessage }
+          .getOrElse(fail(s"$mode/$wholeStage threw ${e.getClass}: ${e.getMessage}"))
+      } finally prev.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    }
+    val interpreted = message("NO_CODEGEN", "false")
+    val codegen = message("CODEGEN_ONLY", "true")
+    assert(interpreted == "pq_adc_score: code 7 of subspace 1 indexes outside the LUT")
+    assert(codegen == interpreted)
+  }
+
   test("evalonce: identity values, both engines, and pins a single evaluation") {
     // value identity: wrapped == unwrapped on nulls and normal values
     def frame: DataFrame = spark.sql(

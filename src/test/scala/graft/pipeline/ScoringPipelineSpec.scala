@@ -167,6 +167,124 @@ class ScoringPipelineSpec extends SparkSpec {
     assert(nanW.filter(_.startsWith("[1,")).forall(_.contains(",NaN,6,100.0,red]")), nanW)
   }
 
+  test("multi-date kernel == per-date kernels, bitwise: far pairs the fold skips") {
+    // pairs beyond ~38.6 h have a spatial factor of exactly 0.0 and the
+    // fold skips them (PairMath.spatialVanishes): a continental and a
+    // global spread, |Δlon| > 180° across the antimeridian, near-pole and
+    // antipodal pairs
+    val types = Seq("alpine", "sport", "trad", "boulder", "ice", "aid", "mixed")
+    val grid = for (lat <- Seq(-89.99, -60.0, -30.0, 0.0, 30.0, 40.0, 60.0, 89.99);
+                    lon <- Seq(-179.9, -105.0, 0.0, 90.0, 179.9)) yield (lat, lon)
+    def routesAt(points: Seq[(Double, Double)]): DataFrame = points.zipWithIndex.map {
+      case ((lat, lon), i) =>
+        (i.toLong, lat, lon, Some(1000.0 + 37 * i), types(i % types.size), Some(5.0 + i % 9))
+    }.toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
+    def accidentsAt(points: Seq[(Double, Double)]): DataFrame =
+      edgeAccidents(points.zipWithIndex.map { case ((lat, lon), i) =>
+        (i, Some(lat), Some(lon), Some(900.0 + 211 * i), types(i % types.size),
+          if (i % 2 == 0) "fatal" else "serious", Some(s"2023-0${1 + i % 9}-15"),
+          Some(4.0 + i % 7), Some(0.3 + 0.05 * i))
+      })
+    val accs = accidentsAt(Seq((-89.95, 179.95), (-30.0, 180.0), (30.0, -180.0), (0.0, 0.1),
+      (40.2, -104.8), (41.5, -100.0), (44.0, 100.0), (60.0, -179.95), (89.95, 0.0),
+      (89.95, 179.0), (-40.0, 75.0)))
+    val dates = Seq("2024-07-15", "2024-12-05")
+    val (fused, perDate) = multiVsPerDate(routesAt(grid), accs, dates)
+    assert(fused.size == grid.size * 2)
+    assert(fused == perDate)
+    // finite latitudes whose difference overflows: the lower bound on the
+    // haversine term clears the skip threshold, but the distance is NaN
+    val hugeLat = Iterator.iterate(Double.MaxValue)(_ * 0.999)
+      .find(x => Math.cos(Math.toRadians(x)) > 0.5).get
+    assert((hugeLat - -hugeLat).isInfinite)
+    val (overflow, overflowPerDate) = multiVsPerDate(routesAt(Seq((hugeLat, 0.0))),
+      accidentsAt(Seq((-hugeLat, 60.0))), dates)
+    assert(overflow == overflowPerDate)
+    assert(overflow.size == 2 && overflow.forall(_.contains(",NaN,1,100.0,red]")), overflow)
+  }
+
+  test("multi-date kernel == per-date kernels, bitwise: a subnormal total is not skipped") {
+    // every accident sits where −d²/2h² lies in (−745.13, −708.4): the
+    // spatial factor, and so the route's total, is subnormal but not 0
+    val kmNorth = (km: Double) => 40.0 + Math.toDegrees(km / graft.expr.GeoExprs.EarthRadiusKm)
+    val rts = Seq((1L, 40.0, -105.0, None: Option[Double], "boulder", None: Option[Double]))
+      .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
+    val accs = edgeAccidents(Seq(755.0, 765.0, 770.0).zipWithIndex.map { case (km, i) =>
+      (i, Some(kmNorth(km)), Some(-105.0), None, "boulder", "fatal", Some("2024-06-01"), None,
+        Some(1.0))
+    })
+    val dates = Seq("2024-07-15", "2024-12-05")
+    val (fused, perDate) = multiVsPerDate(rts, accs, dates)
+    assert(fused == perDate)
+    val totals = graft.kernel.SafetyKernel.scoreRoutesForDates(rts, accs, dates)
+      .select("total_influence").as[Double].collect()
+    assert(totals.length == 2 &&
+      totals.forall(t => t > 0 && t < java.lang.Double.MIN_NORMAL), totals.toSeq)
+  }
+
+  test("multi-date kernel == per-date kernels, bitwise: NaN and ±inf inputs on far pairs") {
+    // a far pair's spatial factor is 0.0, but 0 × NaN and 0 × ∞ are NaN:
+    // non-finite elevation, difficulty or weather factor must keep the
+    // pair in the fold
+    val inf = Double.PositiveInfinity
+    val rts = Seq[(Long, Double, Double, Option[Double], String, Option[Double])](
+      (1L, 40.0, -105.0, Some(Double.NaN), "alpine", Some(10.0)),
+      (2L, 40.0, -105.0, Some(inf), "sport", Some(10.0)),
+      (3L, 40.0, -105.0, Some(-inf), "trad", Some(10.0)),
+      (4L, 40.0, -105.0, Some(3000.0), "ice", Some(Double.NaN)),
+      (5L, 40.0, -105.0, Some(3000.0), "boulder", Some(inf)),
+      (6L, 40.0, -105.0, Some(3000.0), "mixed", Some(10.0)))
+      .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
+    val far = (i: Int, elev: Option[Double], difficulty: Option[Double], wsim: Double) =>
+      (i, Some(61.0 + i * 0.1), Some(-150.0), elev, "alpine", "fatal", Some("2024-05-01"),
+        difficulty, Some(wsim))
+    val accs = edgeAccidents(Seq(
+      far(1, Some(2000.0), Some(9.0), 0.8),
+      far(2, Some(inf), Some(-inf), 0.8),
+      far(3, Some(Double.NaN), Some(9.0), 0.8),
+      far(4, Some(2000.0), Some(inf), 0.8),
+      far(5, Some(2000.0), Some(9.0), Double.NaN),
+      far(6, Some(2000.0), Some(9.0), 1e200))) // weather factor 1e600 = ∞
+    val dates = Seq("2024-07-15", "2024-12-05")
+    val (fused, perDate) = multiVsPerDate(rts, accs, dates)
+    assert(fused == perDate)
+    assert(fused.forall(_.contains(",NaN,")), fused) // every route meets a NaN pair
+    // against the one all-finite accident only the routes' own inputs
+    // decide: a NaN elevation or difficulty makes the pair NaN, while an
+    // infinite one leaves a finite factor and a true zero
+    val (finiteAcc, finiteAccPerDate) =
+      multiVsPerDate(rts, accs.where(col("accident_id") === 1), dates)
+    assert(finiteAcc == finiteAccPerDate)
+    assert(finiteAcc.filter(_.contains(",NaN,")).map(_.take(3)).distinct.sorted ==
+      Seq("[1,", "[4,"), finiteAcc)
+  }
+
+  test("multi-date kernel: mixed-case and non-ASCII types score as under Spark's lower") {
+    // the lookups fold A–Z only (WeightExprs.asciiLower); the same inputs
+    // lowered by Spark's `lower` (the ICU case mapping the kernel used
+    // before) must score bit-identically, including U+0130 and U+212A
+    val rts = Seq[(Long, Double, Double, Option[Double], String, Option[Double])](
+      (1L, 40.0, -105.0, Some(3000.0), "ALPINE", Some(10.0)),
+      (2L, 40.1, -105.1, Some(2000.0), "Sport", Some(12.0)),
+      (3L, 40.2, -105.2, Some(2500.0), "\u0130CE", Some(8.0)),
+      (4L, 40.3, -105.3, Some(2500.0), "TRAD\u212A", Some(8.0)),
+      (5L, 40.4, -105.4, Some(2500.0), "\u212Aice", Some(8.0)))
+      .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
+    val accs = edgeAccidents(Seq(
+      (1, Some(40.1), Some(-105.0), Some(2900.0), "ALPINE", "FATAL", Some("2023-07-15"), Some(9.0), Some(0.8)),
+      (2, Some(40.0), Some(-105.1), Some(2100.0), "sPoRt", "Serious", Some("2024-01-20"), Some(7.0), Some(0.9)),
+      (3, Some(40.2), Some(-104.9), Some(2600.0), "\u0130ce", "fatal\u212A", Some("2022-10-01"), Some(7.0), Some(0.7)),
+      (4, Some(40.3), Some(-105.2), Some(2600.0), "Boulder\u212A", "\u212Anown", Some("2022-11-01"), Some(7.0), Some(0.9))))
+    val lowered = (df: DataFrame, cols: Seq[String]) =>
+      cols.foldLeft(df)((d, c) => d.withColumn(c, lower(col(c))))
+    val dates = Seq("2024-07-15", "2024-12-05")
+    val (fused, perDate) = multiVsPerDate(rts, accs, dates)
+    val (fusedLc, perDateLc) = multiVsPerDate(lowered(rts, Seq("route_type")),
+      lowered(accs, Seq("acc_type", "severity_raw")), dates)
+    assert(fused == perDate && fusedLc == perDateLc)
+    assert(fused == fusedLc)
+  }
+
   test("multi-date kernel: an empty accident set scores no rows, and runDaily fails") {
     val none = accidents.limit(0)
     val (fused, perDate) = multiVsPerDate(routes, none, Seq("2024-07-15", "2024-07-16"))

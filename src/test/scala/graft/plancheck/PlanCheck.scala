@@ -403,6 +403,33 @@ object PlanCheck {
           "date_fanout_post_agg" -> postAggFanout.toString))
     }
 
+    // 18. the nightly fold's lookups case-fold over ASCII only: neither its
+    //     route-side plan nor the accident enrichment it collects holds a
+    //     Lower, Upper or InitCap expression, whose first evaluation runs
+    //     Spark 4.1's ICU case-map class initialiser (seconds on one
+    //     thread). Plant: restoring `lower` in SafetyKernel.enrichRoutes /
+    //     accidentScalars makes route_case_maps / accident_case_maps ≥ 1.
+    contract("nightly_fold_no_icu_case_map") {
+      import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
+      def caseMaps(df: DataFrame): Int = {
+        var n = 0
+        df.queryExecution.executedPlan.foreach(_.expressions.foreach(_.foreach {
+          case _: Lower | _: Upper | _: InitCap => n += 1
+          case _ =>
+        }))
+        n
+      }
+      val dates = Seq("2024-07-14", "2024-07-15", "2024-07-16")
+      val routeSide = caseMaps(graft.pipeline.ScoringPipeline.computeDailyScores(
+        graft.queries.Derived.routes(spark, dir),
+        graft.queries.Derived.accidents(spark, dir), dates))
+      val accidentSide = caseMaps(graft.kernel.RouteFold.accidentFrame(
+        graft.queries.Derived.accidents(spark, dir), dates))
+      (routeSide == 0 && accidentSide == 0,
+        Seq("route_case_maps" -> routeSide.toString,
+          "accident_case_maps" -> accidentSide.toString))
+    }
+
     // ---- emit -------------------------------------------------------------
     val nFail = contracts.count(!_.pass)
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
