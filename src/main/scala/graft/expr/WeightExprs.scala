@@ -113,9 +113,13 @@ object WeightExprs {
   val ElevationDecayDefault = 2400.0
   val ElevationBonusMax = 0.15
 
+  /** Elevation decay constant for a folded ([[asciiLower]]) route-type column. */
+  def elevationDecayConstant(routeTypeLc: Column): Column =
+    typeLookup(routeTypeLc, ElevationDecayConstant, ElevationDecayDefault)
+
   /** `1 + 0.15·exp(−(Δelev/c)²)`; NULL elevation on either side → 1.0. */
   def elevationWeight(routeElev: Column, accidentElev: Column, routeType: Column): Column = {
-    val c = typeLookup(asciiLower(routeType), ElevationDecayConstant, ElevationDecayDefault)
+    val c = elevationDecayConstant(asciiLower(routeType))
     val diff = abs(accidentElev - routeElev)
     val bonus = lit(ElevationBonusMax) * exp(-pow(diff / c, 2))
     when(routeElev.isNull || accidentElev.isNull, lit(1.0)).otherwise(lit(1.0) + bonus)
@@ -139,11 +143,10 @@ object WeightExprs {
     "serious" -> Seq("serious", "severe", "critical", "injured", "injury", "hospitalized"),
     "minor" -> Seq("minor", "slight", "light", "uninjured", "no injury"))
 
-  /** Multiplier for a severity already normalized to fatal/serious/minor/unknown. */
-  def severityWeight(severity: Column): Column =
-    when(lower(severity) === "fatal", SeverityWeights("fatal"))
-      .when(lower(severity) === "serious", SeverityWeights("serious"))
-      .otherwise(1.0) // minor / unknown / unrecognized all 1.0
+  /** Multiplier for a severity already normalized to fatal/serious/minor/unknown:
+    * the kernel's lookup, whose keys are those levels.
+    */
+  def severityWeight(severity: Column): Column = severityWeightKernel(severity)
 
   /** The KERNEL's severity weight: exact case-folded dict lookup with
     * default 1.0 — the reference influence kernel does NOT apply the
@@ -224,7 +227,7 @@ object WeightExprs {
     // default was unreachable exactly when an unnormalized type (raw user
     // input, or inference's 'default') reached the kernel on an ANSI session
     coalesce(
-      try_element_at(m, concat(lower(planningType), lit("|"), lower(accidentType))),
+      try_element_at(m, concat(asciiLower(planningType), lit("|"), asciiLower(accidentType))),
       lit(DefaultRouteTypeWeight))
   }
 

@@ -203,7 +203,9 @@ object KernelPruning {
     // SILENTLY. Make the caller state their multiplier cap; the declared
     // cap is then VERIFIED against the data at execution (below) — a
     // weatherBound smaller than an actual wmult fails the job instead of
-    // silently losing above-floor pairs.
+    // silently losing above-floor pairs. Both read the routes, so an
+    // accident-side wmult is rejected outright.
+    SafetyKernel.requireRouteSideWmult("pairInfluencePruned", accidents)
     require(!routes.columns.contains("wmult") || weatherBound > 1.0,
       "routes carry wmult (amplified weather): pass weatherBound ≥ the max " +
         "multiplier so the prune radius still bounds influence above the floor")

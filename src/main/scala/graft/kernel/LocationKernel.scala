@@ -63,13 +63,10 @@ object LocationKernel {
     // same single-split hazard as SafetyKernel: a one-file locations dim
     // would run the whole |locations| × |accidents| loop on one core
     val locEnriched = graft.Partitioning.balanced(locations)
-      .withColumn("__lt", lower(coalesce(col("loc_type"), lit("trad"))))
+      .withColumn("__lt", WeightExprs.asciiLower(coalesce(col("loc_type"), lit("trad"))))
       .withColumn("__h", WeightExprs.spatialBandwidthKm(col("__lt")))
       .withColumn("__lam", WeightExprs.temporalLambda(col("__lt")))
-      .withColumn("__c",
-        WeightExprs.ElevationDecayConstant.foldLeft(when(lit(false), lit(0.0))) {
-          case (acc, (k, v)) => acc.when(col("__lt") === k, v)
-        }.otherwise(WeightExprs.ElevationDecayDefault))
+      .withColumn("__c", WeightExprs.elevationDecayConstant(col("__lt")))
       // pair-loop hoists (same rationale + bit-identity argument as
       // SafetyKernel.enrichRoutes): cos(lat) for the haversine, 2h² for
       // the spatial Gaussian, λ-index for the temporal per-λ-slot precompute
@@ -81,13 +78,9 @@ object LocationKernel {
         }.otherwise( // unreachable: __lam is always one of the slots
           lit(LambdaSlots.indexOf(WeightExprs.TemporalLambdaDefault) + 1)))
 
-    val accBase =
-      if (accidents.columns.contains("wsim")) accidents
-      else accidents.withColumn("wsim", lit(SafetyKernel.NeutralWeatherSimilarity))
-    val accEnriched = accBase
-      .withColumn("__sev_w", WeightExprs.severityWeightKernel(col("severity_raw")))
-      // cubic weather factor with the exclusion gate — per accident
-      .withColumn("__wf", WeightExprs.weatherFactor(col("wsim")))
+    // severity weight, cubic weather factor with the exclusion gate and
+    // cos(lat) per accident — the same enrichment as the interactive kernel
+    val accEnriched = SafetyKernel.accidentScalars(accidents)
       // clipped (not absolute) day count
       .withColumn("__days",
         greatest(datediff(targetDate, col("a_date")), lit(0)).cast("double"))
@@ -101,9 +94,8 @@ object LocationKernel {
             lit(AvgSeasonalBoost)
         array(LambdaSlots.map(tw): _*)
       })
-      .withColumn("__a_coslat", cos(radians(col("a_lat"))))
       .select(col("accident_id"), col("a_lat"), col("a_lon"), col("a_elev"),
-        col("acc_type"), col("a_difficulty"), col("__sev_w"), col("__wf"),
+        col("acc_type"), col("a_difficulty"), col("__sev_w"), col("__wfactor"),
         col("__ltw_arr"), col("__a_coslat"))
 
     val dist = GeoExprs.haversineKmHoisted(
@@ -119,7 +111,7 @@ object LocationKernel {
     locEnriched.crossJoin(broadcast(accEnriched))
       .withColumn("__dist", dist)
       .withColumn("base_influence",
-        spatial * temporal * elevW * col("__sev_w") * col("__wf"))
+        spatial * temporal * elevW * col("__sev_w") * col("__wfactor"))
       .where(col("base_influence") > floor)
       .select(col("location_id"), col("accident_id"), col("base_influence"),
         col("acc_type"), col("a_difficulty"))

@@ -1,10 +1,9 @@
 package graft.kernel
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.expr.GradeParser
-import graft.weather.WeatherExprs
 
 /** The interactive prediction surface (SURVEY §3.1) — what the reference's
   * `POST /api/v1/predict` computes, as a library call: one planned route
@@ -81,13 +80,7 @@ object Predict {
     */
   def predict(spark: SparkSession, req: PredictionRequest, accidents: DataFrame,
               topK: Int = 50): Prediction = {
-    import spark.implicits._
-    val difficulty: Option[Double] = req.routeGrade.flatMap(GradeParser.parse)
-    val route = Seq((1L, req.latitude, req.longitude, req.elevation,
-      req.routeType, difficulty))
-      .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
-
-    val pairs = SafetyKernel.pairInfluence(route, gateAccidents(req, accidents),
+    val pairs = SafetyKernel.pairInfluence(routeFrame(spark, req), gateAccidents(req, accidents),
       to_date(lit(req.plannedDate))).cache()
     try {
       val scored = SafetyKernel.scoreRoutes(pairs).collect()
@@ -105,6 +98,22 @@ object Predict {
     } finally {
       pairs.unpersist()
     }
+  }
+
+  /** The request as a 1-row routes frame in the kernel schema. */
+  private def routeFrame(spark: SparkSession, req: PredictionRequest): DataFrame = {
+    import spark.implicits._
+    val difficulty: Option[Double] = req.routeGrade.flatMap(GradeParser.parse)
+    Seq((1L, req.latitude, req.longitude, req.elevation, req.routeType, difficulty))
+      .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
+  }
+
+  /** `days` consecutive ISO dates starting at `start` (ISO; a malformed
+    * date throws).
+    */
+  private def planDates(start: String, days: Int): Seq[String] = {
+    val first = java.time.LocalDate.parse(start)
+    (0 until days).map(d => first.plusDays(d).toString)
   }
 
   /** End-to-end interactive predict (S5 complete): the caller supplies the
@@ -167,45 +176,27 @@ object Predict {
   }
 
   /** The 7-day forecast loop (`mp_routes.py:670-796`): one prediction per
-    * date — expressed as a single batch over a dates × route frame rather
-    * than seven sequential queries.
+    * date — the request's route through the multi-date fold
+    * ([[SafetyKernel.scoreRoutesForDates]]) over `days` plan dates, rather
+    * than seven sequential queries. Each day equals a single [[predict]]
+    * at that plan date, bit for bit.
     */
   def forecast(spark: SparkSession, req: PredictionRequest, accidents: DataFrame,
-               days: Int = 7): DataFrame = {
-    import spark.implicits._
-    val difficulty: Option[Double] = req.routeGrade.flatMap(GradeParser.parse)
-    val routes = (0 until days).map { d =>
-      (d.toLong, req.latitude, req.longitude, req.elevation, req.routeType, difficulty)
-    }.toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
-    // route_id doubles as the day offset; each day's plan date shifts
-    val pairs = SafetyKernel.influenceColumns(
-      SafetyKernel.enrichRoutes(routes).crossJoin(
-        broadcast(SafetyKernel.enrichAccidents(gateAccidents(req, accidents),
-          to_date(lit(req.plannedDate)))))
-        // re-derive day-dependent factors per forecast day: days offset,
-        // season flag, AND the temporal precompute built from __days
-        .withColumn("__days",
-          abs(datediff(date_add(to_date(lit(req.plannedDate)), col("route_id").cast("int")),
-            col("a_date"))).cast("double"))
-        .withColumn("__tw_arr", SafetyKernel.temporalSlots(col("__days")))
-        .withColumn("__same_season",
-          graft.expr.WeightExprs.seasonOf(
-            date_add(to_date(lit(req.plannedDate)), col("route_id").cast("int"))) ===
-            graft.expr.WeightExprs.seasonOf(col("a_date"))))
-    SafetyKernel.scoreRoutes(pairs)
-      .withColumn("forecast_date",
-        date_add(to_date(lit(req.plannedDate)), col("route_id").cast("int")))
+               days: Int = 7): DataFrame =
+    SafetyKernel.scoreRoutesForDates(routeFrame(spark, req), gateAccidents(req, accidents),
+        planDates(req.plannedDate, days))
+      .withColumnRenamed("prediction_date", "forecast_date")
       .drop("route_id")
       .orderBy("forecast_date")
-  }
 
   /** Cache-warming twin (`backend/app/tasks/cache_warming.py:25-154`): the
     * reference pre-computes safety for the top-200 valid-coordinate routes
     * × the next 7 days, one kernel call per (route, date), into Redis with
     * a 6-hour TTL. The Spark form is ONE batch: routes limited exactly like
     * the reference (ORDER BY route_id LIMIT n over non-null coordinates),
-    * date-expanded, scored through the same broadcast kernel with per-row
-    * plan dates — 1400 predictions in a single plan instead of 1400
+    * scored through the multi-date fold
+    * ([[SafetyKernel.scoreRoutesForDates]]) for the `days` dates from
+    * `startDate` (ISO) — 1400 predictions in a single plan instead of 1400
     * requests. The "cache" is the scores-by-date table itself (idempotent
     * partition overwrite S8/S9; TTL ↔ retention S10), so warming is just
     * an upsert of this frame.
@@ -214,35 +205,13 @@ object Predict {
     * 1 decimal (`cache_warming.py:125`), color from the UNROUNDED score.
     */
   def warmPopularRoutes(routes: DataFrame, accidents: DataFrame,
-                        startDate: Column, days: Int = 7,
+                        startDate: String, days: Int = 7,
                         topN: Int = 200): DataFrame = {
-    import graft.expr.WeightExprs
     val popular = routes
       .where(col("lat").isNotNull && col("lon").isNotNull)
       .orderBy("route_id").limit(topN)
-    // limit() collapses to one partition — respread before the pair loop
-    val expanded = graft.Partitioning.balanced(popular)
-      .withColumn("target_date",
-        explode(sequence(startDate, date_add(startDate, days - 1))))
-    val pairs = SafetyKernel.influenceColumns(
-      SafetyKernel.enrichRoutes(expanded).crossJoin(
-        broadcast(SafetyKernel.enrichAccidents(accidents, startDate)))
-        // re-derive date-dependent factors per (route, target_date) row,
-        // including the temporal precompute built from __days
-        .withColumn("__days",
-          abs(datediff(col("target_date"), col("a_date"))).cast("double"))
-        .withColumn("__tw_arr", SafetyKernel.temporalSlots(col("__days")))
-        .withColumn("__same_season",
-          WeightExprs.seasonOf(col("target_date")) ===
-            WeightExprs.seasonOf(col("a_date"))))
-    pairs
-      .select("route_id", "target_date", "influence")
-      .groupBy("route_id", "target_date")
-      .agg(sum("influence").as("total_influence"))
-      .withColumn("risk_score",
-        round(WeightExprs.normalizeRiskScore(col("total_influence")), 1))
-      .withColumn("color_code", WeightExprs.colorCode(
-        WeightExprs.normalizeRiskScore(col("total_influence"))))
-      .drop("total_influence")
+    SafetyKernel.scoreRoutesForDates(popular, accidents, planDates(startDate, days))
+      .select(col("route_id"), col("prediction_date").as("target_date"),
+        round(col("risk_score"), 1).as("risk_score"), col("color_code"))
   }
 }

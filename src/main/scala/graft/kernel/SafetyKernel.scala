@@ -66,15 +66,28 @@ object SafetyKernel {
     * analytics A13) all derive from this one plan.
     *
     * Everything that depends on only ONE side is computed BEFORE the join
-    * (type-bandwidth/λ/elevation-constant per route; severity weight,
-    * season flag, day count per accident) so the O(routes × accidents)
+    * (bandwidth/elevation-constant/type index per route; severity weight,
+    * season flag, temporal slots per accident) so the O(routes × accidents)
     * inner loop is pure numeric trig/exp — no string ops, no when-chains
     * over strings. Results are bit-identical to the reference composition
     * (the hoisted values are the same values, evaluated once).
     */
-  def pairInfluence(routes: DataFrame, accidents: DataFrame, planDate: Column): DataFrame =
+  def pairInfluence(routes: DataFrame, accidents: DataFrame, planDate: Column): DataFrame = {
+    requireRouteSideWmult("pairInfluence", accidents)
     influenceColumns(
-      enrichRoutes(balance(routes)).crossJoin(broadcast(enrichAccidents(accidents, planDate))))
+      enrichRoutes(balance(routes)).crossJoin(broadcast(enrichAccidents(accidents, planDate)))
+        .withColumn("dist_km", GeoExprs.haversineKmHoisted(
+          col("__coslat"), col("lat"), col("lon"), col("__a_coslat"), col("a_lat"), col("a_lon"))))
+  }
+
+  /** The A7 multiplier `wmult` is a ROUTE-side column ([[influenceColumns]]).
+    * An accidents frame carrying it would be amplified per pair, yet the
+    * pruned kernel sizes its radius and checks its cap on the routes only,
+    * so above-floor pairs could be lost without an error: reject it.
+    */
+  private[kernel] def requireRouteSideWmult(caller: String, accidents: DataFrame): Unit =
+    require(!accidents.columns.contains("wmult"),
+      s"$caller: accidents carry wmult (amplified weather), a route-side column")
 
   /** The broadcast-NLJ kernel parallelizes over ROUTE partitions only — a
     * small single-file parquet scan (one split) would run the whole
@@ -86,44 +99,34 @@ object SafetyKernel {
     * the pair loop. The type is case-folded once per row
     * ([[WeightExprs.asciiLower]]) and every lookup reads the folded column.
     */
-  def enrichRoutes(routes: DataFrame): DataFrame = {
-    val routesEnriched = routes
+  private[kernel] def enrichRoutes(routes: DataFrame): DataFrame =
+    routes
       .withColumn("__rt_lc", WeightExprs.asciiLower(col("route_type")))
       .withColumn("__h", WeightExprs.spatialBandwidthKm(col("__rt_lc")))
-      .withColumn("__lam", WeightExprs.temporalLambda(col("__rt_lc")))
-      .withColumn("__elev_c",
-        WeightExprs.ElevationDecayConstant.foldLeft(when(lit(false), lit(0.0))) {
-          case (acc, (k, v)) => acc.when(col("__rt_lc") === k, v)
-        }.otherwise(WeightExprs.ElevationDecayDefault))
+      .withColumn("__elev_c", WeightExprs.elevationDecayConstant(col("__rt_lc")))
       .withColumn("__rt_idx", typeIdx(col("__rt_lc")))
       // pair-loop hoists: cos(lat) for the haversine, 2h² for the spatial
       // Gaussian — both depend on the route row only
       .withColumn("__coslat", cos(radians(col("lat"))))
       .withColumn("__two_h2", lit(2.0) * pow(col("__h"), 2))
-    routesEnriched
-  }
 
-  /** Accident-side enrichment: severity weight, type index, day count,
-    * season flag, weather factor — all per accident, never per pair.
+  /** Accident-side enrichment for one plan date: severity weight, type
+    * index, season flag, weather factor — all per accident, never per pair.
     */
-  def enrichAccidents(accidents: DataFrame, planDate: Column): DataFrame =
+  private[kernel] def enrichAccidents(accidents: DataFrame, planDate: Column): DataFrame =
     accidentScalars(accidents)
-      .withColumn("__days", accidentDayCount(planDate))
       .withColumn("__same_season", accidentSameSeason(planDate))
       // λ can only be one of the canonical types' values or the default,
       // so the two per-pair pow() calls of the temporal weight collapse to
       // a per-ACCIDENT slot-per-type precompute; the pair loop just
       // indexes it with the route's type index. Same constants, same op
       // order → the picked value is bit-identical to the inline formula.
-      // NB: callers that re-derive `__days` per row AFTER enrichment (the
-      // date-expanded forecast/warming paths) must re-derive this array
-      // from the new column too — `temporalSlots` is the shared builder.
-      .withColumn("__tw_arr", temporalSlots(col("__days")))
+      .withColumn("__tw_arr", temporalSlots(accidentDayCount(planDate)))
 
   /** The date-independent accident enrichment — severity weight, type
     * index, weather factor (wsim defaults to neutral 0.5), cos(lat) —
-    * shared by [[enrichAccidents]] and the multi-date fold's accident
-    * arrays ([[RouteFold]]).
+    * shared by [[enrichAccidents]], the multi-date fold's accident
+    * arrays ([[RouteFold]]) and [[LocationKernel]].
     */
   private[kernel] def accidentScalars(accidents: DataFrame): DataFrame = {
     val accBase =
@@ -148,7 +151,7 @@ object SafetyKernel {
     * as a function of a day-count column — the precompute indexed by
     * `__rt_idx` in [[influenceColumns]].
     */
-  def temporalSlots(days: Column): Column = {
+  private[kernel] def temporalSlots(days: Column): Column = {
     def tw(lam: Double): Column =
       lit(1.0) - lit(WeightExprs.TemporalDecayImpact) *
         (lit(1.0) - pow(pow(lit(lam), days), WeightExprs.TemporalDecayShape))
@@ -159,8 +162,8 @@ object SafetyKernel {
   // --- the pair factor expressions of influenceColumns; PairMath holds
   // their scalar twins for the multi-date fold ---------------------------
 
-  private def spatialExpr(twoH2: Column): Column =
-    exp(-(pow(col("dist_km"), 2)) / twoH2)
+  private def spatialExpr: Column =
+    exp(-(pow(col("dist_km"), 2)) / col("__two_h2"))
 
   private def elevationExpr: Column = {
     val elevDiff = abs(col("a_elev") - col("elev"))
@@ -180,7 +183,16 @@ object SafetyKernel {
 
   /** The per-pair kernel over an already-joined (enriched-routes ×
     * enriched-accidents) frame — shared by the exact cross-join path and
-    * the grid-pruned equi-join path (KernelPruning).
+    * the grid-pruned equi-join path (KernelPruning). It reads exactly these
+    * columns, which the caller supplies:
+    *
+    *  - `dist_km` (the caller's haversine; both callers compute it with
+    *    `GeoExprs.haversineKmHoisted`);
+    *  - route side ([[enrichRoutes]]): `__two_h2`, `__rt_idx`, `__elev_c`,
+    *    `elev`, `difficulty`;
+    *  - accident side ([[enrichAccidents]]): `__tw_arr`, `__same_season`,
+    *    `__acc_idx`, `__sev_w`, `__wfactor`, `a_elev`, `a_difficulty`;
+    *  - `wsim` and `wmult`, only when the frame carries `wmult`.
     *
     * If the ROUTE side carries a `wmult` column (the A7 extreme-weather
     * multiplier from the route-location bucket's historical stats,
@@ -190,49 +202,27 @@ object SafetyKernel {
     * `wsim × wmult` (final_similarity = base × multiplier,
     * `weather_similarity.py:473`) instead of the accident-hoisted factor —
     * exclusion threshold and quadratic power apply to the amplified value.
+    * Both callers reject an accident-side `wmult` ([[requireRouteSideWmult]]).
     */
-  def influenceColumns(pairs: DataFrame): DataFrame = {
+  private[kernel] def influenceColumns(pairs: DataFrame): DataFrame = {
     val amplified = pairs.columns.contains("wmult")
-    // spatial: exp(-d²/(2h²)) with per-route bandwidth (2h² hoisted)
-    val twoH2 =
-      if (pairs.columns.contains("__two_h2")) col("__two_h2")
-      else lit(2.0) * pow(col("__h"), 2)
-    val spatial = spatialExpr(twoH2)
     // temporal: 1 − 0.35·(1 − (λ^days)^1.5), ×1.05 same season — from the
-    // per-accident per-type-slot precompute when the enrichment provided it
-    val baseWeight =
-      if (pairs.columns.contains("__tw_arr"))
-        element_at(col("__tw_arr"),
-          when(col("__rt_idx") >= 0, col("__rt_idx") + 1)
-            .otherwise(CanonicalTypes.size + 1).cast("int")) // default = last slot
-      else
-        lit(1.0) - lit(WeightExprs.TemporalDecayImpact) *
-          (lit(1.0) - pow(pow(col("__lam"), col("__days")), WeightExprs.TemporalDecayShape))
+    // per-accident per-type-slot precompute
+    val baseWeight = element_at(col("__tw_arr"),
+      when(col("__rt_idx") >= 0, col("__rt_idx") + 1)
+        .otherwise(CanonicalTypes.size + 1).cast("int")) // default = last slot
     val temporal = when(col("__same_season"), baseWeight * lit(PairMath.SeasonalMultiplier))
       .otherwise(baseWeight)
-    // elevation: bonus-only gaussian with per-route constant
-    val elevW = elevationExpr
-    // route-type: int-indexed flat 7×7 matrix (same literals as the map form)
-    val rtW = routeTypeExpr
-    val grW = gradeExpr
-
-    // reuse a dist_km the caller already computed (e.g. the pruned path's
-    // per-type radius gate) — identical expression, evaluated once
-    val withDist =
-      if (pairs.columns.contains("dist_km")) pairs
-      else if (pairs.columns.contains("__coslat") && pairs.columns.contains("__a_coslat"))
-        pairs.withColumn("dist_km", GeoExprs.haversineKmHoisted(
-          col("__coslat"), col("lat"), col("lon"),
-          col("__a_coslat"), col("a_lat"), col("a_lon")))
-      else pairs.withColumn("dist_km",
-        GeoExprs.haversineKm(col("lat"), col("lon"), col("a_lat"), col("a_lon")))
-    withDist
-      .withColumn("spatial_w", spatial)
+    pairs
+      // spatial: exp(-d²/(2h²)) with per-route bandwidth (2h² hoisted)
+      .withColumn("spatial_w", spatialExpr)
       .withColumn("temporal_w", temporal)
-      .withColumn("elevation_w", elevW)
-      .withColumn("route_type_w", rtW)
+      // elevation: bonus-only gaussian with per-route constant
+      .withColumn("elevation_w", elevationExpr)
+      // route-type: int-indexed flat 7×7 matrix (same literals as the map form)
+      .withColumn("route_type_w", routeTypeExpr)
       .withColumn("severity_w", col("__sev_w"))
-      .withColumn("grade_w", grW)
+      .withColumn("grade_w", gradeExpr)
       // multiplication order mirrors the reference composition exactly
       // (safety_algorithm.py:293-319) — and the DuckDB oracle SQL.
       .withColumn("base_influence",
@@ -242,9 +232,8 @@ object SafetyKernel {
         if (amplified) WeightExprs.weatherFactor(col("wsim") * col("wmult"))
         else col("__wfactor"))
       .withColumn("influence", col("base_influence") * col("weather_factor"))
-      .drop("__rt_lc", "__h", "__lam", "__elev_c", "__rt_idx",
-        "__sev_w", "__acc_idx", "__days", "__same_season", "__wfactor",
-        "__coslat", "__a_coslat", "__tw_arr", "__two_h2")
+      .drop("__rt_lc", "__h", "__elev_c", "__rt_idx", "__sev_w", "__acc_idx",
+        "__same_season", "__wfactor", "__coslat", "__a_coslat", "__tw_arr", "__two_h2")
   }
 
   /** Aggregate pair influences to per-route risk (A1 + F16).
@@ -296,8 +285,8 @@ object SafetyKernel {
     * NULL and NaN semantics — pinned by ScoringPipelineSpec's multi-date ≡
     * per-date arms.
     *
-    * Contract: routes carry no `wmult` (amplified weather is scored by
-    * [[pairInfluence]] / KernelPruning only); coordinates, elevations and
+    * Contract: neither side carries `wmult` (amplified weather is scored
+    * by [[pairInfluence]] / KernelPruning only); coordinates, elevations and
     * difficulties are double or integral; the accident arrays
     * (accidents × (63 + 64 × dates) bytes) stay below
     * `spark.sql.maxBroadcastTableSize`. The collect itself is bounded by
@@ -308,9 +297,10 @@ object SafetyKernel {
   def scoreRoutesForDates(routes: DataFrame, accidents: DataFrame,
                           dates: Seq[String]): DataFrame = {
     require(dates.nonEmpty, "scoreRoutesForDates: empty dates list")
-    require(!routes.columns.contains("wmult") && !accidents.columns.contains("wmult"),
+    require(!routes.columns.contains("wmult"),
       "scoreRoutesForDates: routes carry wmult (amplified weather), which the " +
         "multi-date kernel does not score; use pairInfluence or pairInfluencePruned")
+    requireRouteSideWmult("scoreRoutesForDates", accidents)
     val folded = RouteFold(enrichRoutes(balance(routes)), accidents, dates)
     val aggCols = dates.indices.flatMap { i =>
       Seq(sum(col(s"__tot_$i")).as(s"__tot_$i"), sum(col(s"__n_$i")).as(s"__n_$i"))

@@ -22,8 +22,11 @@ object Derived {
       .foldLeft(when(lit(false), lit(""))) { case (acc, (t, i)) => acc.when(key === i, t) }
       .otherwise(Sql.TypeByIdx.last)
 
-  /** Planning date shared with [[Sql.PlanDate]]. */
-  val planDate: Column = to_date(lit("2024-07-15"))
+  /** Planning date shared with [[Sql.PlanDate]], as an ISO string and as a
+    * date column.
+    */
+  val PlanDateIso = "2024-07-15"
+  val planDate: Column = to_date(lit(PlanDateIso))
 
   def routes(s: SparkSession, dir: String): DataFrame =
     Tables.part(s, dir).select(

@@ -214,10 +214,10 @@ object KernelQueries {
 
     // Cache-warming twin (cache_warming.py:25-154): top-200 valid-coord
     // routes × next-7-days, kernel-scored in ONE batch — the reference's
-    // 1400 sequential predict calls as a single date-expanded plan.
+    // 1400 sequential predict calls as one multi-date fold.
     "k19_cache_warming" -> ((s, dir) => {
       graft.kernel.Predict.warmPopularRoutes(
-        Derived.routes(s, dir), Derived.accidents(s, dir), Derived.planDate)
+        Derived.routes(s, dir), Derived.accidents(s, dir), Derived.PlanDateIso)
         .orderBy("route_id", "target_date")
     }),
 

@@ -106,10 +106,15 @@ class PlanShapeSpec extends SparkSpec {
       "memo fan-out should broadcast the (buckets × accidents) memo")
   }
 
-  test("cache warming: accidents broadcast, one exchange for the (route, date) agg") {
+  test("cache warming: one multi-date fold, no join, one exchange for the route agg") {
+    // the accident rows reach the fold as broadcast arrays, never as a
+    // join side: one MapPartitions, no join or cartesian product, and only
+    // the route_id-keyed merge hash-partitions
     val plan = planOf("k19_cache_warming")
-    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
-      "accidents side not broadcast in the warming batch")
+    assert(plan.linesIterator.count(_.contains("MapPartitions ")) == 1,
+      "warming batch does not run one multi-date fold")
+    assert(!plan.contains("Join") && !plan.contains("CartesianProduct"),
+      "warming batch joins the accidents")
     val exchanges = plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(exchanges <= 1, s"unexpected extra shuffles in warming plan: $exchanges")
   }

@@ -268,6 +268,22 @@ class KernelPruningSpec extends SparkSpec {
     assert(KernelPruning.pruneRadiusKm(1e-6, 1.5) > KernelPruning.pruneRadiusKm(1e-6))
   }
 
+  test("an accident-side wmult is rejected by both pair kernels") {
+    // influenceColumns amplifies any joined wmult, but the pruned radius
+    // and its runtime cap read the routes only: accident-side amplification
+    // would be pruned with the unamplified radius and lose pairs silently
+    val amplified = accidents.withColumn("wmult", lit(1.5))
+    val exact = intercept[IllegalArgumentException] {
+      SafetyKernel.pairInfluence(routes, amplified, planDate)
+    }
+    assert(exact.getMessage.contains("pairInfluence: accidents carry wmult"), exact.getMessage)
+    val pruned = intercept[IllegalArgumentException] {
+      KernelPruning.pairInfluencePruned(routes, amplified, planDate, weatherBound = 1.5)
+    }
+    assert(pruned.getMessage.contains("pairInfluencePruned: accidents carry wmult"),
+      pruned.getMessage)
+  }
+
   test("a weatherBound smaller than the data's wmult fails loudly, not silently") {
     // declared 1.1 but actual multiplier 2.0: before the runtime twin of
     // the require, this silently lost above-floor pairs — now the first

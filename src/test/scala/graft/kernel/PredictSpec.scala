@@ -131,21 +131,75 @@ class PredictSpec extends SparkSpec {
   test("forecast: one row per day, dates advance, scores vary smoothly") {
     val f = Predict.forecast(spark, longsPeak, accidents, days = 7).collect()
     assert(f.length == 7)
+    assert(f.head.schema.fieldNames.toSeq ==
+      Seq("total_influence", "n_contributing", "risk_score", "color_code", "forecast_date"))
     val dates = f.map(_.getAs[java.sql.Date]("forecast_date").toString)
     assert(dates.head == "2024-07-15" && dates.last == "2024-07-21")
     val risks = f.map(_.getAs[Double]("risk_score"))
     assert(risks.forall(r => r > 0 && r <= 100))
     // day 0 equals the single predict (same plan date, same kernel)
     assert(approx(risks.head, 3.30406861212714, 1e-9))
-    // EVERY day equals a fresh single predict at that plan date — guards
-    // the date-expanded path against enrichment-time hoists going stale
-    // (the temporal precompute is derived from __days; an override that
-    // doesn't re-derive it would freeze days 1-6 at day-0 decay)
-    (1 until 7).foreach { d =>
-      val single = Predict.predict(spark,
-        longsPeak.copy(plannedDate = f"2024-07-${15 + d}%02d"), accidents)
-      assert(approx(risks(d), single.riskScore, 1e-9),
-        s"forecast day $d diverges from the single predict")
+    // EVERY day equals a fresh single predict at that plan date, bit for
+    // bit: the multi-date fold is the twin of the pair-grain kernel
+    val route = Seq((1L, longsPeak.latitude, longsPeak.longitude, longsPeak.elevation,
+      longsPeak.routeType, Option.empty[Double]))
+      .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
+    (0 until 7).foreach { d =>
+      val day = f"2024-07-${15 + d}%02d"
+      val single = Predict.predict(spark, longsPeak.copy(plannedDate = day), accidents)
+      val total = SafetyKernel.scoreRoutes(route, Predict.gateAccidents(longsPeak, accidents),
+        to_date(lit(day))).head().getAs[Double]("total_influence")
+      assert(risks(d) == single.riskScore, s"forecast day $d diverges from the single predict")
+      assert(f(d).getAs[Double]("total_influence") == total, s"forecast day $d total")
     }
+  }
+
+  test("forecast: a malformed planned date fails loudly") {
+    intercept[java.time.format.DateTimeParseException] {
+      Predict.forecast(spark, longsPeak.copy(plannedDate = "2024-7-15"), accidents)
+    }
+  }
+
+  test("cache warming equals per-date scoreRoutes: NULL coordinates out, season flip, rounding") {
+    // the window 2024-08-29 → 09-04 crosses summer → fall on 09-01, so the
+    // same-season multiplier switches off for the summer accidents and on
+    // for the fall ones inside it
+    val routes = Seq[(Long, Option[Double], Option[Double], Option[Double], String, Option[Double])](
+      (1L, None, Some(-105.0), Some(3000.0), "alpine", None), // NULL coordinate: excluded
+      (2L, Some(40.0), Some(-105.0), Some(3000.0), "alpine", None),
+      (3L, Some(47.0), Some(-121.0), Some(2500.0), "Sport", Some(10.0)),
+      (4L, Some(47.5), Some(-121.5), None, "ice", Some(8.0)),
+      (5L, Some(39.0), Some(-104.0), Some(2000.0), "trad", None)) // beyond topN
+      .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
+    // four summer accidents on route 2's spot, scaled so that its 08-31
+    // risk is 29.97: 30.0 rounded (yellow), green unrounded; the others
+    // sit ~1,500 km away, near routes 3 and 4
+    val atRoute2 = 7.0 * 4 * 1.05 * 1.15 // risk per unit wsim³ at 0 days, same season
+    val wsim = math.cbrt(29.97 / atRoute2)
+    val accidents = (Seq.tabulate(4)(i =>
+      (i + 1, 40.0, -105.0, Some(3000.0), "alpine", "minor", "2024-08-31", Option.empty[Double],
+        wsim)) ++ Seq(
+      (5, 47.1, -121.1, Some(2600.0), "sport", "fatal", "2023-09-20", Some(9.0), 0.8),
+      (6, 47.6, -121.4, Some(2900.0), "ICE", "serious", "2022-06-10", Some(7.0), 0.9),
+      (7, 47.4, -121.6, Some(2800.0), "mixed", "minor", "2021-10-01", Some(8.0), 0.7)))
+      .toDF("accident_id", "a_lat", "a_lon", "a_elev", "acc_type", "severity_raw", "d",
+        "a_difficulty", "wsim")
+      .withColumn("a_date", to_date(col("d"))).drop("d")
+    val dates = (29 to 31).map(d => f"2024-08-$d%02d") ++ (1 to 4).map(d => f"2024-09-$d%02d")
+    val warmed = Predict.warmPopularRoutes(routes, accidents, "2024-08-29", days = 7, topN = 3)
+    val expected = dates.map { d =>
+      SafetyKernel.scoreRoutes(routes.where(col("route_id").between(2, 4)), accidents,
+        to_date(lit(d)))
+        .select(col("route_id"), to_date(lit(d)).as("target_date"),
+          round(col("risk_score"), 1).as("risk_score"), col("color_code"))
+    }.reduce(_ union _)
+    def rows(df: DataFrame): Seq[String] =
+      df.orderBy("route_id", "target_date").collect().map(_.toString).toSeq
+    val got = rows(warmed)
+    assert(got == rows(expected))
+    assert(got.size == 3 * 7 && !got.exists(_.startsWith("[1,")))
+    assert(got.contains("[2,2024-08-31,30.0,green]"), got)
+    // the season flip moves route 2's score between 08-31 and 09-01
+    assert(got.contains("[2,2024-09-01,28.5,green]"), got)
   }
 }

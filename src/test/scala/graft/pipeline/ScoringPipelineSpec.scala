@@ -306,6 +306,12 @@ class ScoringPipelineSpec extends SparkSpec {
         routes.withColumn("wmult", lit(1.2)), accidents, Seq("2024-07-15"))
     }
     assert(e.getMessage.contains("routes carry wmult"), e.getMessage)
+    // the message names the side that carried it
+    val a = intercept[IllegalArgumentException] {
+      graft.kernel.SafetyKernel.scoreRoutesForDates(
+        routes, accidents.withColumn("wmult", lit(1.2)), Seq("2024-07-15"))
+    }
+    assert(a.getMessage.contains("accidents carry wmult"), a.getMessage)
     // two float columns subtract in float precision in the Catalyst
     // kernel; the fold reads doubles, so it refuses float inputs
     val f = intercept[IllegalArgumentException] {

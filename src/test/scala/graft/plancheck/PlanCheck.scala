@@ -403,12 +403,16 @@ object PlanCheck {
           "date_fanout_post_agg" -> postAggFanout.toString))
     }
 
-    // 18. the nightly fold's lookups case-fold over ASCII only: neither its
-    //     route-side plan nor the accident enrichment it collects holds a
-    //     Lower, Upper or InitCap expression, whose first evaluation runs
+    // 18. the kernel's lookups case-fold over ASCII only: neither the
+    //     nightly fold's route-side plan, nor the accident enrichment it
+    //     collects, nor the P6 gate plan (Predict.gateAccidents, ahead of
+    //     every predict and forecast), nor the location kernel's plan holds
+    //     a Lower, Upper or InitCap expression, whose first evaluation runs
     //     Spark 4.1's ICU case-map class initialiser (seconds on one
-    //     thread). Plant: restoring `lower` in SafetyKernel.enrichRoutes /
-    //     accidentScalars makes route_case_maps / accident_case_maps ≥ 1.
+    //     thread). Plants: restoring `lower` in SafetyKernel.enrichRoutes /
+    //     accidentScalars makes route_case_maps / accident_case_maps ≥ 1;
+    //     in WeightExprs.routeTypeWeight, gate_case_maps ≥ 1; in
+    //     LocationKernel's `__lt`, location_case_maps ≥ 1.
     contract("nightly_fold_no_icu_case_map") {
       import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
       def caseMaps(df: DataFrame): Int = {
@@ -419,15 +423,28 @@ object PlanCheck {
         }))
         n
       }
+      import graft.queries.Derived
       val dates = Seq("2024-07-14", "2024-07-15", "2024-07-16")
       val routeSide = caseMaps(graft.pipeline.ScoringPipeline.computeDailyScores(
-        graft.queries.Derived.routes(spark, dir),
-        graft.queries.Derived.accidents(spark, dir), dates))
+        Derived.routes(spark, dir), Derived.accidents(spark, dir), dates))
       val accidentSide = caseMaps(graft.kernel.RouteFold.accidentFrame(
-        graft.queries.Derived.accidents(spark, dir), dates))
-      (routeSide == 0 && accidentSide == 0,
+        Derived.accidents(spark, dir), dates))
+      // the gate reads accidents from an opaque relation, as from a stored
+      // table: over Derived's CASE-built acc_type the optimizer pushes a
+      // case map into the literal branches and folds it away
+      val stored = Derived.accidents(spark, dir)
+      val gate = caseMaps(graft.kernel.Predict.gateAccidents(
+        graft.kernel.Predict.PredictionRequest(40.0, -105.0, Some(3000.0), "Alpine",
+          Derived.PlanDateIso),
+        spark.createDataFrame(stored.rdd, stored.schema)))
+      val location = caseMaps(graft.kernel.LocationKernel.scoreRoutesViaLocations(
+        Derived.routesWithLocation(spark, dir), Derived.locations(spark, dir),
+        Derived.accidents(spark, dir), Derived.planDate))
+      (routeSide == 0 && accidentSide == 0 && gate == 0 && location == 0,
         Seq("route_case_maps" -> routeSide.toString,
-          "accident_case_maps" -> accidentSide.toString))
+          "accident_case_maps" -> accidentSide.toString,
+          "gate_case_maps" -> gate.toString,
+          "location_case_maps" -> location.toString))
     }
 
     // ---- emit -------------------------------------------------------------
