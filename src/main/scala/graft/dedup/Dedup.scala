@@ -72,7 +72,8 @@ object Dedup {
     * all `numHashes` minima in one scan over the token array, no explode,
     * no aggregate, NO shuffle. Agrees bit-for-bit with the column form
     * ([[minhashSignature]], the HOF reference) and with the staged
-    * explode→min-aggregate twin ([[minhashSignaturesStaged]]) — DedupSpec
+    * explode→min-aggregate twin (`MinHashStaged.minhashSignaturesStaged`,
+    * in the test tree) — DedupSpec
     * asserts both. Null-text docs are dropped, exactly as the staged
     * form's explode-of-NULL-array emitted no rows for them.
     */
@@ -83,24 +84,6 @@ object Dedup {
       .select(col(idCol),
         graft.expr.MinHashExpr.minhashSigs(
           TextExprs.tokens(col(textCol)), numHashes, shingleWidth).as("sig"))
-
-  /** The staged explode → hash-aggregate form [[minhashSignatures]]
-    * replaced as the hot path: one row per (doc, shingle), then
-    * `numHashes` codegen'd `min(xxhash64(i, sh))` aggregates reassembled
-    * into a signature array. Kept as the independent derivation the
-    * parity spec pins the native expression against (its only shuffle is
-    * the `idCol`-keyed aggregation with map-side partial mins — already
-    * scale-safe, just strictly more work than the fused scan).
-    */
-  private[graft] def minhashSignaturesStaged(df: DataFrame, idCol: String,
-      textCol: String, numHashes: Int, shingleWidth: Int): DataFrame = {
-    val exploded = graft.Partitioning.balanced(df).select(col(idCol),
-      explode(TextExprs.shingleHashes(col(textCol), shingleWidth)).as("sh"))
-    val mins = (0 until numHashes).map(i => min(xxhash64(lit(i), col("sh"))).as(s"m$i"))
-    exploded.groupBy(idCol)
-      .agg(mins.head, mins.tail: _*)
-      .select(col(idCol), array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
-  }
 
   /** Estimated Jaccard from two signatures: fraction of agreeing minima. */
   def minhashEstimate(sigA: Column, sigB: Column): Column =

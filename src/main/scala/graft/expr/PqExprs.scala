@@ -10,8 +10,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native codegen'd product-quantization kernels — the ANN hot path.
   *
-  * The staged forms (`Similarity.pqEncodeStaged`, and the
-  * `aggregate(sequence(...))` ADC fold) are higher-order functions, which
+  * The staged forms (`PqStaged.pqEncodeStaged` and `PqStaged.adcScoreStaged`,
+  * the `aggregate(sequence(...))` ADC fold, kept in the test tree as
+  * parity twins) are higher-order functions, which
   * are CodegenFallback: every one of the `numSub·ksub·ds` encode terms and
   * every per-candidate LUT lookup runs through an interpreted lambda with
   * boxing. Encoding dominated the 1M-vector ANN bench arms

@@ -54,7 +54,7 @@ object KernelPruning {
   def pruneRadiusKm(floor: Double, weatherBound: Double = 1.0): Double =
     HMaxKm * radiusFactorFor(floor, weatherBound)
 
-  private def radiusFactorFor(floor: Double, weatherBound: Double): Double =
+  private[kernel] def radiusFactorFor(floor: Double, weatherBound: Double): Double =
     math.sqrt(2.0 * math.log(
       NonSpatialBound * math.pow(weatherBound, WeightExprs.WeatherPower) / floor))
 
@@ -184,8 +184,9 @@ object KernelPruning {
     * collapse THROUGH the gated projection for every downstream consumer
     * — e.g. a caller filtering on `route_id` above this frame cannot
     * push that filter toward the routes scan. Callers that pre-filter
-    * should filter the `routes`/`accidents` INPUTS (as
-    * ScoringPipeline.applyAccidentDelta does), not the pair output.
+    * should filter the `routes`/`accidents` INPUTS, not the pair output.
+    * The ingest delta applies the step-5 gate inside the per-route fold
+    * instead (SafetyKernel.scoreRoutesForDates with `prune`).
     *
     * Measured at the 10× batch (1.68M × 69K, same host/session), round 11:
     * 3×3 no lon-filter 157.6 s → K=2 + both prefilters 133.8 s (−15%);

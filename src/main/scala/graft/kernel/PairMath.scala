@@ -21,7 +21,8 @@ import graft.expr.{GeoExprs, WeightExprs}
   * [[spatialVanishes]] lets the fold skip a pair whose spatial factor is
   * exactly 0.0 without any trig: `StrictMath.exp(y)` is 0.0 for every
   * `y < −745.1332191019411` (FdLibm's underflow threshold), which
-  * `−d²/(2h²)` crosses beyond about 38.6 h.
+  * `−d²/(2h²)` crosses beyond about 38.6 h. Against [[gateA]] it skips a
+  * pair beyond a prune gate the same way.
   */
 private[kernel] object PairMath {
 
@@ -67,8 +68,16 @@ private[kernel] object PairMath {
     * to spare; +∞ when no distance on the sphere gets there (or 2h² is
     * not a positive number).
     */
-  def zeroSpatialA(twoH2: Double): Double = {
-    val halfAngle = Math.sqrt(ExpZeroBelow * twoH2) / TwoEarthRadiusKm * (1 + SkipMargin)
+  def zeroSpatialA(twoH2: Double): Double = termBeyond(Math.sqrt(ExpZeroBelow * twoH2))
+
+  /** Per route: the haversine term `a` above which `haversineKm(…)`
+    * exceeds `gateKm`, with [[SkipMargin]] to spare; +∞ when no distance
+    * on the sphere gets there (or the gate is not a number).
+    */
+  def gateA(gateKm: Double): Double = termBeyond(gateKm)
+
+  private def termBeyond(distKm: Double): Double = {
+    val halfAngle = distKm / TwoEarthRadiusKm * (1 + SkipMargin)
     if (!(halfAngle < Math.PI / 2)) Double.PositiveInfinity
     else {
       val s = Math.sin(halfAngle)
@@ -76,7 +85,8 @@ private[kernel] object PairMath {
     }
   }
 
-  /** True only when `spatial(haversineKm(…), twoH2)` is exactly 0.0, for
+  /** True only when `spatial(haversineKm(…), twoH2)` is exactly 0.0 (or,
+    * against a [[gateA]] bound, `haversineKm(…)` exceeds the gate), for
     * any inputs: `cosLat1 · cosLat2 ≥ 0`, a trig-free lower bound on the
     * haversine term `a` clears `zeroA` ([[zeroSpatialA]] of that 2h²),
     * using `sin x ≥ x − x³/6` for `0 ≤ x < 1` and `sin² x ≥ 0` otherwise,

@@ -1,7 +1,7 @@
 package graft.kernel
 
 import org.apache.spark.network.util.JavaUtils
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -59,12 +59,20 @@ private[kernel] object AccidentColumns {
   * sides' other factors are finite: its influence is then ±0.0, which
   * changes no sum (they start at +0.0), no contributor count and no
   * "some pair" flag, so every score stays bit-identical.
+  *
+  * With a prune floor, a pair counts only if its distance is at most the
+  * route's gate `__h · radiusFactor` — the final gate of
+  * [[KernelPruning.pairInfluencePruned]], on the same distance value. A
+  * NaN distance fails the gate. The route's skip threshold is then the
+  * smaller of the zero-spatial bound and the gate's haversine term
+  * ([[PairMath.gateA]]), so a pair beyond the gate costs no trig, and
+  * every route row is emitted, even with no accidents.
   */
 private[graft] object RouteFold {
 
   /** Route columns the loop reads, in this order. */
-  private val RouteCols =
-    Seq("route_id", "lat", "lon", "elev", "difficulty", "__coslat", "__two_h2", "__elev_c", "__rt_idx")
+  private val RouteCols = Seq("route_id", "lat", "lon", "elev", "difficulty", "__coslat",
+    "__two_h2", "__elev_c", "__rt_idx", "__h")
 
   /** Columns read as doubles by the pair math. Integral types widen
     * exactly. Float and decimal types are rejected: given two such
@@ -82,13 +90,17 @@ private[graft] object RouteFold {
         "the kernel reads coordinates, elevations and difficulties as double")
     }
 
-  /** Per-(route row) fold output: route_id, then (total, count) per date. */
+  /** Per-(route row) fold output: route_id, then (total, count) per date.
+    * `prune` is the floor whose gate radius a pair must be within; `None`
+    * keeps every pair.
+    */
   def apply(enrichedRoutes: DataFrame, accidents: DataFrame,
-            dates: Seq[String]): DataFrame = {
+            dates: Seq[Column], prune: Option[Double]): DataFrame = {
     requireDoubleInputs(enrichedRoutes)
     requireDoubleInputs(accidents)
     val spark = enrichedRoutes.sparkSession
     val bc = spark.sparkContext.broadcast(collectAccidents(accidents, dates))
+    val radiusFactor = prune.map(KernelPruning.radiusFactorFor(_, 1.0))
     val routes = enrichedRoutes.select(RouteCols.map { c =>
       if (DoubleInputs.contains(c)) col(c).cast(DoubleType).as(c) else col(c)
     }: _*)
@@ -96,17 +108,16 @@ private[graft] object RouteFold {
       Seq(StructField(s"__tot_$d", DoubleType, nullable = true),
         StructField(s"__n_$d", LongType, nullable = false))
     })
-    routes.mapPartitions((rows: Iterator[Row]) => foldPartition(rows, bc.value))(
+    routes.mapPartitions((rows: Iterator[Row]) => foldPartition(rows, bc.value, radiusFactor))(
       Encoders.row(schema))
   }
 
   /** The enriched accident rows the fold collects: the factor inputs, a
     * NULL-date flag, then per date the temporal slots and season flag.
     */
-  private[graft] def accidentFrame(accidents: DataFrame, dates: Seq[String]): DataFrame = {
+  private[graft] def accidentFrame(accidents: DataFrame, dates: Seq[Column]): DataFrame = {
     import SafetyKernel.{accidentDayCount, accidentSameSeason, accidentScalars}
-    val dateCols = dates.flatMap { d =>
-      val planDate = to_date(lit(d))
+    val dateCols = dates.flatMap { planDate =>
       Seq(SafetyKernel.temporalSlots(accidentDayCount(planDate)), accidentSameSeason(planDate))
     }
     accidentScalars(accidents).select(
@@ -120,7 +131,7 @@ private[graft] object RouteFold {
     * kernel uses, collect them, check the array size against Spark's
     * broadcast limit and lay them out column-wise.
     */
-  private def collectAccidents(accidents: DataFrame, dates: Seq[String]): AccidentColumns = {
+  private def collectAccidents(accidents: DataFrame, dates: Seq[Column]): AccidentColumns = {
     val rows = accidentFrame(accidents, dates).collect()
     val n = rows.length
     val nDates = dates.size
@@ -177,10 +188,12 @@ private[graft] object RouteFold {
 
   /** Fold one route partition. Rows sharing a route_id continue the same
     * sums, in row order — the order a partial hash aggregate adds them.
-    * A cross join with no accidents has no pairs, so no rows come out.
+    * A cross join with no accidents has no pairs, so without a gate no
+    * rows come out; with one (`radiusFactor` set) every route gets a row.
     */
-  private def foldPartition(rows: Iterator[Row], acc: AccidentColumns): Iterator[Row] = {
-    if (acc.n == 0) return Iterator.empty
+  private def foldPartition(rows: Iterator[Row], acc: AccidentColumns,
+                            radiusFactor: Option[Double]): Iterator[Row] = {
+    if (acc.n == 0 && radiusFactor.isEmpty) return Iterator.empty
     val nDates = acc.nDates
     val sums = new java.util.LinkedHashMap[Any, Sums]()
     rows.foreach { r =>
@@ -188,7 +201,7 @@ private[graft] object RouteFold {
       var s = sums.get(key)
       if (s == null) { s = new Sums(nDates); sums.put(key, s) }
       // NULL coordinates make every pair's distance, and so its influence, NULL
-      if (!r.isNullAt(1) && !r.isNullAt(2)) foldRoute(r, acc, s)
+      if (!r.isNullAt(1) && !r.isNullAt(2)) foldRoute(r, acc, s, radiusFactor)
     }
     import scala.jdk.CollectionConverters._
     sums.entrySet.iterator.asScala.map { e =>
@@ -199,7 +212,8 @@ private[graft] object RouteFold {
     }
   }
 
-  private def foldRoute(r: Row, acc: AccidentColumns, s: Sums): Unit = {
+  private def foldRoute(r: Row, acc: AccidentColumns, s: Sums,
+                        radiusFactor: Option[Double]): Unit = {
     val lat = r.getDouble(1)
     val lon = r.getDouble(2)
     val elevNull = r.isNullAt(3)
@@ -218,6 +232,11 @@ private[graft] object RouteFold {
       if ((elevNull || isFinite(elev)) && (difficultyNull || isFinite(difficulty)))
         PairMath.zeroSpatialA(twoH2)
       else Double.PositiveInfinity
+    // pruned: a pair beyond the gate is dropped, so the skip bound is also
+    // the gate's own haversine term
+    val gated = radiusFactor.isDefined
+    val gateKm = radiusFactor.fold(Double.PositiveInfinity)(r.getDouble(9) * _)
+    val skipA = if (gated) math.min(zeroA, PairMath.gateA(gateKm)) else zeroA
     val skippable = acc.skippable
     val n = acc.n
     val nDates = acc.nDates
@@ -228,28 +247,32 @@ private[graft] object RouteFold {
     var paired = false
     var i = 0
     while (i < n) {
-      // a pair whose spatial factor is exactly 0.0 would add ±0.0: skip it
+      // a pair whose spatial factor is exactly 0.0 would add ±0.0, and one
+      // beyond the gate is dropped: skip it
       if (!acc.void(i)) {
         paired = true
         if (!(skippable(i) && PairMath.spatialVanishes(
-            cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i), zeroA))) {
-          val spatial = PairMath.spatial(
-            PairMath.haversineKm(cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i)), twoH2)
-          val elevation =
-            if (elevNull || acc.elevNull(i)) 1.0 else PairMath.elevation(elev, acc.elev(i), elevC)
-          val routeType = PairMath.routeType(rtIdx, acc.typeIdx(i))
-          val grade =
-            if (difficultyNull || acc.difficultyNull(i)) 1.0
-            else PairMath.grade(difficulty, acc.difficulty(i))
-          val severity = acc.severity(i)
-          val weather = acc.weather(i)
-          var d = 0
-          while (d < nDates) {
-            val infl = PairMath.influence(spatial, temporal((d * slots + slot) * n + i),
-              elevation, routeType, severity, grade, weather)
-            total(d) += infl
-            if (PairMath.significant(infl)) count(d) += 1
-            d += 1
+            cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i), skipA))) {
+          val distKm = PairMath.haversineKm(cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i))
+          // Catalyst's `dist_km <= __gate_km`: a NaN distance fails it
+          if (!gated || distKm <= gateKm) {
+            val spatial = PairMath.spatial(distKm, twoH2)
+            val elevation =
+              if (elevNull || acc.elevNull(i)) 1.0 else PairMath.elevation(elev, acc.elev(i), elevC)
+            val routeType = PairMath.routeType(rtIdx, acc.typeIdx(i))
+            val grade =
+              if (difficultyNull || acc.difficultyNull(i)) 1.0
+              else PairMath.grade(difficulty, acc.difficulty(i))
+            val severity = acc.severity(i)
+            val weather = acc.weather(i)
+            var d = 0
+            while (d < nDates) {
+              val infl = PairMath.influence(spatial, temporal((d * slots + slot) * n + i),
+                elevation, routeType, severity, grade, weather)
+              total(d) += infl
+              if (PairMath.significant(infl)) count(d) += 1
+              d += 1
+            }
           }
         }
       }

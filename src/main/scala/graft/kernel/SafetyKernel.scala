@@ -295,28 +295,49 @@ object SafetyKernel {
     * Returns the scoreRoutes columns + `prediction_date`.
     */
   def scoreRoutesForDates(routes: DataFrame, accidents: DataFrame,
-                          dates: Seq[String]): DataFrame = {
+                          dates: Seq[String]): DataFrame =
+    scoreRoutesForDates(routes, accidents, dates.map(d => to_date(lit(d))), prune = None)
+
+  /** The multi-date fold over date columns (any date-valued expression,
+    * e.g. a serving date literal), optionally pruned.
+    *
+    * With `prune = Some(floor)` a pair counts only if its distance is at
+    * most the route's gate `__h · √(2·ln(B/floor))` — exactly the final
+    * gate of [[KernelPruning.pairInfluencePruned]] (same distance value,
+    * same `<=`, so a NaN distance fails it) — and every route gets a row,
+    * with `0.0`/`0` when no pair passes (a NULL coordinate or an empty
+    * accident set included), as [[KernelPruning.scoreRoutesPruned]]
+    * re-attaches them. Per route, the pruned fold is bit-identical to
+    * `pairInfluence` filtered to that gate and summed. It has no latitude
+    * domain: beyond `maxAbsLat` (72°) the grid kernel can miss an
+    * in-radius pair, which the fold keeps; below it the two keep the same
+    * pairs and their totals differ only by summation order.
+    * `prune = None` is the exact multi-date kernel above.
+    */
+  def scoreRoutesForDates(routes: DataFrame, accidents: DataFrame,
+                          dates: Seq[Column], prune: Option[Double]): DataFrame = {
     require(dates.nonEmpty, "scoreRoutesForDates: empty dates list")
     require(!routes.columns.contains("wmult"),
       "scoreRoutesForDates: routes carry wmult (amplified weather), which the " +
         "multi-date kernel does not score; use pairInfluence or pairInfluencePruned")
     requireRouteSideWmult("scoreRoutesForDates", accidents)
-    val folded = RouteFold(enrichRoutes(balance(routes)), accidents, dates)
+    val folded = RouteFold(enrichRoutes(balance(routes)), accidents, dates, prune)
     val aggCols = dates.indices.flatMap { i =>
       Seq(sum(col(s"__tot_$i")).as(s"__tot_$i"), sum(col(s"__n_$i")).as(s"__n_$i"))
     }
-    val dateLit = array(dates.map(d => to_date(lit(d))): _*)
+    // pruned: a route no pair reaches reads 0.0, as scoreRoutesPruned fills it
+    val total = if (prune.isDefined) coalesce(col("col.t"), lit(0.0)) else col("col.t")
     folded
       .groupBy("route_id")
       .agg(aggCols.head, aggCols.tail: _*)
       .select(col("route_id"), posexplode(array(dates.indices.map(i =>
         struct(col(s"__tot_$i").as("t"), col(s"__n_$i").as("n"))): _*)))
       .select(col("route_id"),
-        col("col.t").as("total_influence"), col("col.n").as("n_contributing"),
+        total.as("total_influence"), col("col.n").as("n_contributing"),
         col("pos").as("__di"))
       .withColumn("risk_score", WeightExprs.normalizeRiskScore(col("total_influence")))
       .withColumn("color_code", WeightExprs.colorCode(col("risk_score")))
-      .withColumn("prediction_date", element_at(dateLit, col("__di") + 1))
+      .withColumn("prediction_date", element_at(array(dates: _*), col("__di") + 1))
       .drop("__di")
   }
 

@@ -103,23 +103,31 @@ object ScoringPipeline {
     * partitions, never the table — the same shape a Delta/Iceberg MERGE
     * compiles to on parquet-class storage.
     */
-  def mergeScores(spark: SparkSession, updates: DataFrame, outPath: String): Unit = {
-    val dates = updates.select("prediction_date").distinct()
+  def mergeScores(spark: SparkSession, updates: DataFrame, outPath: String): Unit =
+    // materialize before writing: the sink overwrites partitions the plan
+    // is reading (Spark refuses a self-overwriting lineage otherwise)
+    writeScores(mergedScores(spark, updates, outPath).localCheckpoint(), outPath)
+
+  /** The rows [[mergeScores]] writes: the touched partitions' stored rows
+    * whose keys the updates do not carry, plus the updates. The updates
+    * are checkpointed once on entry, so the dates, the anti-join keys and
+    * the union all read one materialized relation instead of planning and
+    * running the update subtree (a kernel, for an ingest) three times.
+    */
+  private[graft] def mergedScores(spark: SparkSession, updates: DataFrame,
+                                  outPath: String): DataFrame = {
+    val u = updates.localCheckpoint()
+    val dates = u.select("prediction_date").distinct()
     val existing =
       if (new Path(outPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
         .exists(new Path(outPath))) {
         spark.read.parquet(outPath)
           // partition pruning keeps this scan to the touched dates
           .join(broadcast(dates), Seq("prediction_date"), "left_semi")
-          .join(updates.select("route_id", "prediction_date"),
+          .join(u.select("route_id", "prediction_date"),
             Seq("route_id", "prediction_date"), "left_anti")
-      } else updates.limit(0)
-    // materialize before writing: the sink overwrites partitions the plan
-    // is reading (Spark refuses a self-overwriting lineage otherwise)
-    val merged = existing
-      .unionByName(updates.select(existing.columns.map(col): _*))
-      .localCheckpoint()
-    writeScores(merged, outPath)
+      } else u.limit(0)
+    existing.unionByName(u.select(existing.columns.map(col): _*))
   }
 
   /** EXACT incremental re-scoring for newly-ingested accidents — the
@@ -128,11 +136,11 @@ object ScoringPipeline {
     * aggregate DECOMPOSES — `total_influence` is a sum over accidents and
     * `n_contributing` a sum of indicators — so adding accidents is a
     * delta-kernel over routes × NEW accidents only, added onto the stored
-    * totals, with risk/color re-derived from the new total. Work is
-    * O(routes × new-accidents); with `pruned = true` it drops further to
-    * O(routes-within-radius × new) through the grid-cell equi-join
-    * (influence below the 1e-6 floor is dropped — same bound as the
-    * pruned nightly itself).
+    * totals, with risk/color re-derived from the new total. The delta is
+    * the per-route fold over the new accidents for the one plan date
+    * ([[accidentDeltaTotals]]); `pruned = true` drops the pairs beyond
+    * each route's prune gate (influence below the 1e-6 floor — same bound
+    * as the pruned nightly itself), which the fold skips without trig.
     *
     * `oldScores` needs (route_id, total_influence, n_contributing) — what
     * [[computeDailyScores]] writes; other columns pass through with risk,
@@ -155,18 +163,20 @@ object ScoringPipeline {
   }
 
   /** The per-route delta a set of new accidents contributes:
-    * (route_id, d_total, d_n). With `pruned`, only in-radius routes carry
-    * nonzero rows.
+    * (route_id, d_total, d_n) — one call to the per-route fold
+    * ([[SafetyKernel.scoreRoutesForDates]]) for the single plan date. Exact
+    * (`pruned = false`), its values are bit-identical to
+    * `SafetyKernel.scoreRoutes`, and an empty batch gives no rows. With
+    * `pruned`, every route gets a row and only routes with a pair inside
+    * their prune gate carry nonzero values.
     */
   def accidentDeltaTotals(routes: DataFrame, newAccidents: DataFrame,
                           planDate: org.apache.spark.sql.Column,
-                          pruned: Boolean = false): DataFrame = {
-    val deltaScores =
-      if (pruned) graft.kernel.KernelPruning.scoreRoutesPruned(routes, newAccidents, planDate)
-      else SafetyKernel.scoreRoutes(routes, newAccidents, planDate)
-    deltaScores.select(col("route_id"),
-      col("total_influence").as("d_total"), col("n_contributing").as("d_n"))
-  }
+                          pruned: Boolean = false): DataFrame =
+    SafetyKernel.scoreRoutesForDates(routes, newAccidents, Seq(planDate),
+        prune = if (pruned) Some(SafetyKernel.SignificanceFloor) else None)
+      .select(col("route_id"),
+        col("total_influence").as("d_total"), col("n_contributing").as("d_n"))
 
   /** Fold (d_total, d_n) deltas onto stored scores and re-derive risk/color
     * from the new totals. FULL outer on the keys: a delta whose key has no

@@ -525,7 +525,7 @@ object Similarity {
       IndexedSeq.tabulate(numSub, ksub, ds)((m, j, d) => ((m + j + d) % 4) * 0.5 - 0.75))
   }
 
-  private def cbLit(cb: PqCodebooks): Column = typedLit(cb.cb.map(_.map(_.toSeq).toSeq).toSeq)
+  private[sim] def cbLit(cb: PqCodebooks): Column = typedLit(cb.cb.map(_.map(_.toSeq).toSeq).toSeq)
 
   /** Encode a vector as its `numSub` nearest-codeword indices (L2 per
     * subvector, ties to the LOWEST index via first-position-of-min — the
@@ -534,7 +534,8 @@ object Similarity {
     * are bit-identical across engines. A vector shorter than the model's
     * `numSub·ds` dims encodes as NULL.
     *
-    * Native codegen'd expression (round 17): the staged HOF form below is
+    * Native codegen'd expression (round 17): the staged HOF form
+    * (`PqStaged.pqEncodeStaged`, in the test tree) is
     * CodegenFallback — all `numSub·ksub·ds` terms ran through interpreted
     * lambdas per CORPUS ROW, and encoding dominated the 1M-vector ANN
     * arms (ann_pq_encode_1m ≈ the whole ann_pq_1m wall). Values are
@@ -543,29 +544,6 @@ object Similarity {
     */
   def pqEncode(vec: Column, cb: PqCodebooks): Column =
     graft.expr.PqExprs.pqEncode(vec, cb.numSub, cb.ksub, cb.ds, cb.cb)
-
-  /** The staged higher-order-function form of [[pqEncode]] — the original
-    * hot path, kept as the parity twin PqExprsSpec pins the native
-    * expression against (the MinHashSigs discipline: replacing an
-    * operator's internals keeps the replaced form as a bit-identity
-    * witness). One top-level size() guard so short vectors rank last
-    * instead of throwing INVALID_ARRAY_INDEX under ANSI mode; a
-    * per-element try_element_at guard measured 3× slower across the whole
-    * 256-term tree, so the guard sits OUTSIDE the hot fold.
-    */
-  private[graft] def pqEncodeStaged(vec: Column, cb: PqCodebooks): Column = {
-    val cmat = cbLit(cb)
-    val enc = transform(sequence(lit(0), lit(cb.numSub - 1)), m => {
-      val dists = transform(sequence(lit(0), lit(cb.ksub - 1)), j =>
-        aggregate(sequence(lit(0), lit(cb.ds - 1)), lit(0.0), (acc, d) => {
-          val x = element_at(vec, m * cb.ds + d + 1)
-          val c = element_at(element_at(element_at(cmat, m + 1), j + 1), d + 1)
-          acc + (x - c) * (x - c)
-        }))
-      (array_position(dists, array_min(dists)) - 1).cast("int")
-    })
-    when(size(vec) >= cb.numSub * cb.ds, enc).otherwise(lit(null).cast("array<int>"))
-  }
 
   /** Per-query ADC lookup table: entry `m·ksub + j` is the dot of the
     * query's m-th subvector with codeword j — computed ONCE per query,
@@ -587,15 +565,6 @@ object Similarity {
     // throwing INVALID_ARRAY_INDEX mid-scan
     when(size(qv) >= cb.numSub * cb.ds, lut).otherwise(lit(null).cast("array<double>"))
   }
-
-  /** Staged higher-order-function form of the ADC sum — the parity twin
-    * PqExprsSpec pins the native `pq_adc_score` against (seed variants
-    * cover both the plain 0.0-seeded and the residual sim-seeded folds).
-    */
-  private[graft] def adcScoreStaged(codes: Column, lut: Column, seed: Column,
-                                    cb: PqCodebooks): Column =
-    aggregate(sequence(lit(0), lit(cb.numSub - 1)), seed, (acc, m) =>
-      acc + element_at(lut, m.cast("int") * cb.ksub + element_at(codes, m + 1) + 1))
 
   /** Approximate top-k by PQ/ADC: corpus rows carry only their codes, each
     * pair is scored as Σₘ lut[m·ksub + codeₘ] (≈ the raw dot product),

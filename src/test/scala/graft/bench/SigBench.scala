@@ -27,12 +27,12 @@ object SigBench {
     }
     def min3(fn: => DataFrame): Double = Seq(time(fn), time(fn), time(fn)).min
     val native = min3(graft.dedup.Dedup.minhashSignatures(docs, "doc_id", "text", 16, 3))
-    val staged = min3(graft.dedup.Dedup.minhashSignaturesStaged(docs, "doc_id", "text", 16, 3))
+    val staged = min3(graft.dedup.MinHashStaged.minhashSignaturesStaged(docs, "doc_id", "text", 16, 3))
     val fullNative = min3(graft.dedup.Dedup.lshCandidatePairs(
       graft.dedup.Dedup.minhashSignatures(docs, "doc_id", "text", 16, 3),
       "doc_id", 16, 4))
     val fullStaged = min3(graft.dedup.Dedup.lshCandidatePairs(
-      graft.dedup.Dedup.minhashSignaturesStaged(docs, "doc_id", "text", 16, 3),
+      graft.dedup.MinHashStaged.minhashSignaturesStaged(docs, "doc_id", "text", 16, 3),
       "doc_id", 16, 4))
     println(f"[sigbench] sigs_native=$native%.3f sigs_staged=$staged%.3f " +
       f"lsh_native=$fullNative%.3f lsh_staged=$fullStaged%.3f sf=$dir%s")

@@ -56,7 +56,7 @@ class DedupSpec extends SparkSpec {
     // three identically to pass
     val native = Dedup.minhashSignatures(docs, "doc_id", "text", 16, 3)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val staged = Dedup.minhashSignaturesStaged(docs, "doc_id", "text", 16, 3)
+    val staged = MinHashStaged.minhashSignaturesStaged(docs, "doc_id", "text", 16, 3)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(native == staged)
   }

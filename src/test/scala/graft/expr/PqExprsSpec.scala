@@ -61,7 +61,7 @@ class PqExprsSpec extends SparkSpec {
     val native = vecs64.select(col("vec_id"),
       Similarity.pqEncode(col("v"), cb64).as("codes")).collect().map(_.toString)
     val staged = vecs64.select(col("vec_id"),
-      Similarity.pqEncodeStaged(col("v"), cb64).as("codes")).collect().map(_.toString)
+      graft.sim.PqStaged.pqEncodeStaged(col("v"), cb64).as("codes")).collect().map(_.toString)
     assert(native.sameElements(staged))
   }
 
@@ -85,7 +85,7 @@ class PqExprsSpec extends SparkSpec {
       Similarity.pqEncode(col("v"), cb).as("codes")).orderBy("id")
       .collect().map(_.toString)
     val staged = frame.select(col("id"),
-      Similarity.pqEncodeStaged(col("v"), cb).as("codes")).orderBy("id")
+      graft.sim.PqStaged.pqEncodeStaged(col("v"), cb).as("codes")).orderBy("id")
       .collect().map(_.toString)
     assert(native.sameElements(staged),
       s"native=${native.toSeq} staged=${staged.toSeq}")
@@ -134,12 +134,12 @@ class PqExprsSpec extends SparkSpec {
     val nativeZero = strs(pairs.select(col("qid"), col("nid"),
       PqExprs.adcScore(col("codes"), col("lut"), lit(0.0), cb64.numSub, cb64.ksub).as("s")))
     val stagedZero = strs(pairs.select(col("qid"), col("nid"),
-      Similarity.adcScoreStaged(col("codes"), col("lut"), lit(0.0), cb64).as("s")))
+      graft.sim.PqStaged.adcScoreStaged(col("codes"), col("lut"), lit(0.0), cb64).as("s")))
     assert(nativeZero == stagedZero)
     val nativeSim = strs(pairs.select(col("qid"), col("nid"),
       PqExprs.adcScore(col("codes"), col("lut"), col("sim"), cb64.numSub, cb64.ksub).as("s")))
     val stagedSim = strs(pairs.select(col("qid"), col("nid"),
-      Similarity.adcScoreStaged(col("codes"), col("lut"), col("sim"), cb64).as("s")))
+      graft.sim.PqStaged.adcScoreStaged(col("codes"), col("lut"), col("sim"), cb64).as("s")))
     assert(nativeSim == stagedSim)
   }
 
@@ -158,7 +158,7 @@ class PqExprsSpec extends SparkSpec {
       PqExprs.adcScore(col("codes"), col("lut"), col("seed"), 2, 4).as("s")).orderBy("id")
     val native = nat(frame).collect().map(_.toString)
     val staged = frame.select(col("id"),
-      Similarity.adcScoreStaged(col("codes"), col("lut"), col("seed"), cb).as("s"))
+      graft.sim.PqStaged.adcScoreStaged(col("codes"), col("lut"), col("seed"), cb).as("s"))
       .orderBy("id").collect().map(_.toString)
     assert(native.sameElements(staged),
       s"native=${native.toSeq} staged=${staged.toSeq}")

@@ -551,6 +551,63 @@ class ScoringPipelineSpec extends SparkSpec {
     }
   }
 
+  test("pruned ingest: applyAccidentDelta + mergeScores leaves old + delta on the plan date") {
+    // routes over ~8° × 10°: the 1e-6 gates (107–401 km) leave far routes
+    // out of a new accident's reach
+    val routes = spark.range(200).select(
+      col("id").as("route_id"),
+      (lit(36.0) + (col("id") % 40) / 5.0).as("lat"),
+      (lit(-115.0) + (col("id") % 50) / 5.0).as("lon"),
+      (lit(1500.0) + (col("id") % 2000)).as("elev"),
+      when(col("id") % 3 === 0, "alpine").when(col("id") % 3 === 1, "sport")
+        .otherwise("trad").as("route_type"),
+      (lit(5.0) + (col("id") % 11)).as("difficulty"))
+    val acc = spark.range(60).select(
+      col("id").as("accident_id"),
+      (lit(36.0) + ((col("id") * 37) % 40) / 5.0).as("a_lat"),
+      (lit(-115.0) + ((col("id") * 53) % 50) / 5.0).as("a_lon"),
+      (lit(1400.0) + ((col("id") * 13) % 2200)).as("a_elev"),
+      when(col("id") % 2 === 0, "alpine").otherwise("sport").as("acc_type"),
+      when(col("id") % 3 === 0, "fatal").otherwise("minor").as("severity_raw"),
+      date_add(to_date(lit("2023-01-01")), (col("id") % 500).cast("int")).as("a_date"),
+      (lit(4.0) + ((col("id") * 7) % 13)).as("a_difficulty"))
+    val oldAcc = acc.where(col("accident_id") % 5 =!= 0)
+    val newAcc = acc.where(col("accident_id") % 5 === 0)
+    val planIso = "2024-07-15"
+    val planDate = to_date(lit(planIso))
+    val out = Files.createTempDirectory("pruned-ingest").toString
+    ScoringPipeline.writeScores(ScoringPipeline.computeDailyScores(routes, oldAcc,
+      Seq(planIso, "2024-07-16")), out)
+    def table(): Map[(Long, String), org.apache.spark.sql.Row] = spark.read.parquet(out)
+      .select(col("route_id"), col("prediction_date").cast("string"), col("total_influence"),
+        col("n_contributing"), col("risk_score"), col("color_code"))
+      .collect().map(r => (r.getLong(0), r.getString(1)) -> r).toMap
+    val before = table()
+    val delta = ScoringPipeline.accidentDeltaTotals(routes, newAcc, planDate, pruned = true)
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
+    assert(delta.size == 200)
+    assert(delta.values.exists(_._1 > 0.0) && delta.values.exists(_ == ((0.0, 0L))))
+    val updates = ScoringPipeline.applyAccidentDelta(
+      spark.read.parquet(out).where(col("prediction_date") === planDate),
+      routes, newAcc, planDate, pruned = true)
+    ScoringPipeline.mergeScores(spark, updates, out)
+    val after = table()
+    assert(spark.read.parquet(out).count() == before.size && after.keySet == before.keySet)
+    before.foreach { case (k @ (id, d), b) =>
+      val a = after(k)
+      if (d == planIso) {
+        val (dt, dn) = delta(id)
+        val t = (if (b.isNullAt(2)) 0.0 else b.getDouble(2)) + dt
+        assert(a.getDouble(2) == t && a.getLong(3) == b.getLong(3) + dn, s"$k: $a vs $b + $dt")
+        assert(a.getDouble(4) == math.min(100.0, math.max(0.0, t * 7.0)), s"$k risk")
+      } else assert(a == b, s"$k: another date's row changed")
+    }
+    // an empty batch: a 0.0/0 delta for every route
+    val none = ScoringPipeline.accidentDeltaTotals(routes, newAcc.limit(0), planDate, pruned = true)
+    assert(none.count() == delta.size &&
+      none.where(col("d_total") =!= 0.0 || col("d_n") =!= 0L).count() == 0)
+  }
+
   test("pruned delta touches only routes near the new accident") {
     import spark.implicits._
     val routes = (1L to 500L).map { i =>
@@ -561,12 +618,13 @@ class ScoringPipelineSpec extends SparkSpec {
       java.sql.Date.valueOf("2024-06-01"), Some(7.0)))
       .toDF("accident_id", "a_lat", "a_lon", "a_elev", "acc_type", "severity_raw",
         "a_date", "a_difficulty")
-    val delta = graft.kernel.KernelPruning.scoreRoutesPruned(
-      routes, newAcc, graft.queries.Derived.planDate)
+    val delta = ScoringPipeline.accidentDeltaTotals(
+      routes, newAcc, graft.queries.Derived.planDate, pruned = true)
     // one localized accident must not influence the whole route table
     // (far routes keep a zero-delta row — the scoring contract — but only
     // in-radius routes carry actual influence)
-    val touched = delta.where(col("total_influence") > 0).count()
+    assert(delta.count() == 500)
+    val touched = delta.where(col("d_total") > 0).count()
     assert(touched > 0 && touched < 500, s"pruned delta touched $touched of 500")
   }
 }

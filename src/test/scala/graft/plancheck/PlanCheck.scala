@@ -424,19 +424,20 @@ object PlanCheck {
         n
       }
       import graft.queries.Derived
+      // the kernel sides read opaque relations, as from a stored table:
+      // over Derived's CASE-built type columns the optimizer pushes a case
+      // map into the literal branches and folds it away
+      def opaque(df: DataFrame): DataFrame = spark.createDataFrame(df.rdd, df.schema)
+      val routes = opaque(Derived.routes(spark, dir))
+      val accidents = opaque(Derived.accidents(spark, dir))
       val dates = Seq("2024-07-14", "2024-07-15", "2024-07-16")
       val routeSide = caseMaps(graft.pipeline.ScoringPipeline.computeDailyScores(
-        Derived.routes(spark, dir), Derived.accidents(spark, dir), dates))
+        routes, accidents, dates))
       val accidentSide = caseMaps(graft.kernel.RouteFold.accidentFrame(
-        Derived.accidents(spark, dir), dates))
-      // the gate reads accidents from an opaque relation, as from a stored
-      // table: over Derived's CASE-built acc_type the optimizer pushes a
-      // case map into the literal branches and folds it away
-      val stored = Derived.accidents(spark, dir)
+        accidents, dates.map(d => to_date(lit(d)))))
       val gate = caseMaps(graft.kernel.Predict.gateAccidents(
         graft.kernel.Predict.PredictionRequest(40.0, -105.0, Some(3000.0), "Alpine",
-          Derived.PlanDateIso),
-        spark.createDataFrame(stored.rdd, stored.schema)))
+          Derived.PlanDateIso), accidents))
       val location = caseMaps(graft.kernel.LocationKernel.scoreRoutesViaLocations(
         Derived.routesWithLocation(spark, dir), Derived.locations(spark, dir),
         Derived.accidents(spark, dir), Derived.planDate))
@@ -445,6 +446,55 @@ object PlanCheck {
           "accident_case_maps" -> accidentSide.toString,
           "gate_case_maps" -> gate.toString,
           "location_case_maps" -> location.toString))
+    }
+
+    // 19. an ingest scores its accident delta with the per-route fold, and
+    //     the MERGE evaluates that update once: the update frame of
+    //     applyAccidentDelta(pruned = true) holds exactly one fold operator
+    //     (MapPartitions), no join on the grid cells and no explode of a
+    //     cell window; the merged frame mergeScores checkpoints holds no
+    //     kernel operator, because it reads the update through one
+    //     checkpointed relation (Scan ExistingRDD) in its dates, its
+    //     anti-join keys and its union. Plants: the grid-pruned pair kernel
+    //     in accidentDeltaTotals makes n_fold_ops 0 and cell_joins 1; a
+    //     mergeScores without the update checkpoint plans the update subtree
+    //     into the merged plan (merged_kernel_ops 1, merged_checkpoint_scans
+    //     0).
+    contract("ingest_delta_fold_single_eval") {
+      def countOcc(hay: String, needle: String): Int = {
+        var n = 0; var i = hay.indexOf(needle)
+        while (i >= 0) { n += 1; i = hay.indexOf(needle, i + needle.length) }
+        n
+      }
+      import graft.pipeline.ScoringPipeline
+      import graft.queries.Derived
+      val routes = Derived.routes(spark, dir)
+      val accidents = Derived.accidents(spark, dir)
+      val tmp = java.nio.file.Files.createTempDirectory("plancheck-ingest").toFile
+      try {
+        val out = s"$tmp/scores"
+        ScoringPipeline.writeScores(ScoringPipeline.computeDailyScores(routes,
+          accidents.where(col("accident_id") % 5 =!= 0), Seq(Derived.PlanDateIso)), out)
+        val stored = spark.read.parquet(out).where(col("prediction_date") === Derived.planDate)
+        val updates = ScoringPipeline.applyAccidentDelta(stored, routes,
+          accidents.where(col("accident_id") % 5 === 0), Derived.planDate, pruned = true)
+        val updatePlan = planString(updates)
+        val mergedPlan = planString(ScoringPipeline.mergedScores(spark, updates, out))
+        val folds = countOcc(updatePlan, "MapPartitions ")
+        val cellJoins = updatePlan.linesIterator.count(l => l.contains("Join") &&
+          l.contains("__cell_lat"))
+        val cellExplodes = countOcc(updatePlan, "Generate explode(")
+        val mergedKernelOps = countOcc(mergedPlan, "MapPartitions ") +
+          mergedPlan.linesIterator.count(l => l.contains("Join") && l.contains("__cell_lat"))
+        val checkpointScans = countOcc(mergedPlan, "Scan ExistingRDD")
+        (folds == 1 && cellJoins == 0 && cellExplodes == 0 && mergedKernelOps == 0 &&
+          checkpointScans >= 1, Seq(
+          "n_fold_ops" -> folds.toString,
+          "cell_joins" -> cellJoins.toString,
+          "cell_window_explodes" -> cellExplodes.toString,
+          "merged_kernel_ops" -> mergedKernelOps.toString,
+          "merged_checkpoint_scans" -> checkpointScans.toString))
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
     }
 
     // ---- emit -------------------------------------------------------------
