@@ -54,9 +54,15 @@ object KernelPruning {
   def pruneRadiusKm(floor: Double, weatherBound: Double = 1.0): Double =
     HMaxKm * radiusFactorFor(floor, weatherBound)
 
-  private[kernel] def radiusFactorFor(floor: Double, weatherBound: Double): Double =
+  private def radiusFactorFor(floor: Double, weatherBound: Double): Double =
     math.sqrt(2.0 * math.log(
       NonSpatialBound * math.pow(weatherBound, WeightExprs.WeatherPower) / floor))
+
+  /** Gate radius per km of bandwidth at the significance floor, unamplified
+    * weather: a route's gate is `__h` times this.
+    */
+  private[kernel] val SignificanceRadiusFactor: Double =
+    radiusFactorFor(SafetyKernel.SignificanceFloor, 1.0)
 
   private val KmPerDegLat = 111.0
 
@@ -114,8 +120,7 @@ object KernelPruning {
   private[graft] def tier0CellDegrees(maxAbsLat: Double = 72.0): (Double, Double) = {
     val sportTierKm = RadiusTierKm.find(_ >= WeightExprs.SpatialBandwidth("sport"))
       .getOrElse(RadiusTierKm.last)
-    val cellKm = sportTierKm *
-      radiusFactorFor(SafetyKernel.SignificanceFloor, 1.0) / CellDiv
+    val cellKm = sportTierKm * SignificanceRadiusFactor / CellDiv
     (cellKm / KmPerDegLat, 360.0 / lonCells(cellKm, maxAbsLat))
   }
 
@@ -186,7 +191,7 @@ object KernelPruning {
     * push that filter toward the routes scan. Callers that pre-filter
     * should filter the `routes`/`accidents` INPUTS, not the pair output.
     * The ingest delta applies the step-5 gate inside the per-route fold
-    * instead (SafetyKernel.scoreRoutesForDates with `prune`).
+    * instead (SafetyKernel.scoreRoutesForDates with `pruned`).
     *
     * Measured at the 10× batch (1.68M × 69K, same host/session), round 11:
     * 3×3 no lon-filter 157.6 s → K=2 + both prefilters 133.8 s (−15%);

@@ -21,8 +21,8 @@ import graft.expr.{GeoExprs, WeightExprs}
   * [[spatialVanishes]] lets the fold skip a pair whose spatial factor is
   * exactly 0.0 without any trig: `StrictMath.exp(y)` is 0.0 for every
   * `y < −745.1332191019411` (FdLibm's underflow threshold), which
-  * `−d²/(2h²)` crosses beyond about 38.6 h. Against [[gateA]] it skips a
-  * pair beyond a prune gate the same way.
+  * `−d²/(2h²)` crosses beyond about 38.6 h. [[beyondGate]] skips a pair
+  * beyond a prune gate ([[gateA]]) the same way.
   */
 private[kernel] object PairMath {
 
@@ -76,6 +76,13 @@ private[kernel] object PairMath {
     */
   def gateA(gateKm: Double): Double = termBeyond(gateKm)
 
+  /** Per route: the latitude difference (degrees) beyond which
+    * `haversineKm(…)` exceeds `gateKm`, with [[SkipMargin]] to spare, for
+    * two latitudes within ±90°: the distance is then at least R·|Δφ|.
+    */
+  def gateLatDeg(gateKm: Double): Double =
+    Math.toDegrees(gateKm / GeoExprs.EarthRadiusKm) * (1 + SkipMargin)
+
   private def termBeyond(distKm: Double): Double = {
     val halfAngle = distKm / TwoEarthRadiusKm * (1 + SkipMargin)
     if (!(halfAngle < Math.PI / 2)) Double.PositiveInfinity
@@ -85,25 +92,45 @@ private[kernel] object PairMath {
     }
   }
 
-  /** True only when `spatial(haversineKm(…), twoH2)` is exactly 0.0 (or,
-    * against a [[gateA]] bound, `haversineKm(…)` exceeds the gate), for
-    * any inputs: `cosLat1 · cosLat2 ≥ 0`, a trig-free lower bound on the
-    * haversine term `a` clears `zeroA` ([[zeroSpatialA]] of that 2h²),
-    * using `sin x ≥ x − x³/6` for `0 ≤ x < 1` and `sin² x ≥ 0` otherwise,
-    * and the upper bound `sin² x ≤ x²` keeps `a` below 1, so `asin(√a)`
-    * is finite and increasing. A NaN or infinite input fails a test.
+  /** True only when `spatial(haversineKm(…), twoH2)` is exactly 0.0, for
+    * any inputs: the lower bound of [[aAbove]] clears `zeroA`
+    * ([[zeroSpatialA]] of that 2h²), and the upper bound `sin² x ≤ x²`
+    * keeps `a` below 1, so `asin(√a)` is finite and increasing. A NaN or
+    * infinite input fails a test.
     */
   def spatialVanishes(cosLat1: Double, lat1: Double, lon1: Double,
                       cosLat2: Double, lat2: Double, lon2: Double, zeroA: Double): Boolean = {
     val x1 = Math.abs(Math.toRadians(lat2 - lat1) / 2)
     val x2 = Math.abs(Math.toRadians(lon2 - lon1) / 2)
     val c = cosLat1 * cosLat2
-    val s1 = sinLowerBound(x1)
-    val s2 = sinLowerBound(x2)
-    c >= 0 && s1 * s1 + c * (s2 * s2) > zeroA && x1 * x1 + c * (x2 * x2) < 1 - SkipMargin
+    aAbove(x1, x2, c, zeroA) && x1 * x1 + c * (x2 * x2) < 1 - SkipMargin
   }
 
-  private def sinLowerBound(x: Double): Double = if (x < 1.0) x - x * x * x / 6 else 0.0
+  /** True only when `haversineKm(…)` exceeds the gate `gateA` was made
+    * from ([[gateA]]) or is NaN, for any inputs: the lower bound of
+    * [[aAbove]] clears `gateA`. No upper bound on `a` is needed: past 1
+    * the distance is NaN, which fails a gate too.
+    */
+  def beyondGate(cosLat1: Double, lat1: Double, lon1: Double,
+                 cosLat2: Double, lat2: Double, lon2: Double, gateA: Double): Boolean =
+    aAbove(Math.abs(Math.toRadians(lat2 - lat1) / 2), Math.abs(Math.toRadians(lon2 - lon1) / 2),
+      cosLat1 * cosLat2, gateA)
+
+  /** `c = cosLat1 · cosLat2 ≥ 0` and a trig-free lower bound on the
+    * haversine term `a = sin² x1 + c · sin² x2` exceeds `bound`.
+    */
+  private def aAbove(x1: Double, x2: Double, c: Double, bound: Double): Boolean = {
+    val s1 = sinLowerBound(x1)
+    val s2 = sinLowerBound(x2)
+    c >= 0 && s1 * s1 + c * (s2 * s2) > bound
+  }
+
+  /** A lower bound on `sin x` for `x ≥ 0`: `x − x³/6` below 1; on
+    * [1, 2.1], inside [1, π − 1] where `sin x ≥ sin 1 > 0.8414`, 0.84;
+    * 0 beyond.
+    */
+  private def sinLowerBound(x: Double): Double =
+    if (x < 1.0) x - x * x * x / 6 else if (x <= 2.1) 0.84 else 0.0
 
   /** 1 + 0.15·exp(−(|Δelev|/c)²) — for two non-NULL elevations. */
   def elevation(elev: Double, aElev: Double, decayC: Double): Double = {

@@ -35,6 +35,24 @@ private[kernel] final case class AccidentColumns(
     (elevNull(i) || isFinite(elev(i))) && (difficultyNull(i) || isFinite(difficulty(i))) &&
       isFinite(weather(i))
   }
+
+  /** Some accident is not void: every route with coordinates has a pair. */
+  @transient lazy val anyLive: Boolean = void.exists(!_)
+
+  private def onSphere(i: Int): Boolean = lat(i) >= -90 && lat(i) <= 90
+
+  /** The non-void accidents with a latitude within ±90°, by latitude, and
+    * those latitudes: the pruned fold's latitude band searches them.
+    */
+  @transient lazy val (latOrder: Array[Int], latSorted: Array[Double]) = {
+    val order = (0 until n).filter(i => !void(i) && onSphere(i)).sortBy(lat(_)).toArray
+    (order, order.map(lat(_)))
+  }
+
+  /** The non-void accidents whose latitude is outside ±90° or NaN: no
+    * latitude band excludes them.
+    */
+  @transient lazy val offSphere: Array[Int] = (0 until n).filter(i => !void(i) && !onSphere(i)).toArray
 }
 
 private[kernel] object AccidentColumns {
@@ -60,13 +78,18 @@ private[kernel] object AccidentColumns {
   * changes no sum (they start at +0.0), no contributor count and no
   * "some pair" flag, so every score stays bit-identical.
   *
-  * With a prune floor, a pair counts only if its distance is at most the
-  * route's gate `__h · radiusFactor` — the final gate of
+  * Pruned, a pair counts only if its distance is at most the route's gate
+  * `__h · SignificanceRadiusFactor` — the final gate of
   * [[KernelPruning.pairInfluencePruned]], on the same distance value. A
-  * NaN distance fails the gate. The route's skip threshold is then the
-  * smaller of the zero-spatial bound and the gate's haversine term
-  * ([[PairMath.gateA]]), so a pair beyond the gate costs no trig, and
-  * every route row is emitted, even with no accidents.
+  * NaN distance fails the gate. The loop then visits only the accidents
+  * inside the gate's latitude band (`Band`, a binary search over the
+  * accidents sorted by latitude, read back in accident order so the sums
+  * keep their order), and skips a visited pair beyond the gate without
+  * trig ([[PairMath.beyondGate]] against the route's [[PairMath.gateA]],
+  * whatever the pair's other factors). Dropped pairs still count as
+  * paired, so both modes emit the same rows. Per route the pruned loop
+  * costs a scan of one bit per accident plus the band's accidents, not a
+  * test per accident.
   */
 private[graft] object RouteFold {
 
@@ -91,16 +114,16 @@ private[graft] object RouteFold {
     }
 
   /** Per-(route row) fold output: route_id, then (total, count) per date.
-    * `prune` is the floor whose gate radius a pair must be within; `None`
-    * keeps every pair.
+    * `pruned` drops the pairs beyond each route's gate; otherwise every
+    * pair counts.
     */
   def apply(enrichedRoutes: DataFrame, accidents: DataFrame,
-            dates: Seq[Column], prune: Option[Double]): DataFrame = {
+            dates: Seq[Column], pruned: Boolean): DataFrame = {
     requireDoubleInputs(enrichedRoutes)
     requireDoubleInputs(accidents)
     val spark = enrichedRoutes.sparkSession
     val bc = spark.sparkContext.broadcast(collectAccidents(accidents, dates))
-    val radiusFactor = prune.map(KernelPruning.radiusFactorFor(_, 1.0))
+    val radiusFactor = if (pruned) Some(KernelPruning.SignificanceRadiusFactor) else None
     val routes = enrichedRoutes.select(RouteCols.map { c =>
       if (DoubleInputs.contains(c)) col(c).cast(DoubleType).as(c) else col(c)
     }: _*)
@@ -188,20 +211,20 @@ private[graft] object RouteFold {
 
   /** Fold one route partition. Rows sharing a route_id continue the same
     * sums, in row order — the order a partial hash aggregate adds them.
-    * A cross join with no accidents has no pairs, so without a gate no
-    * rows come out; with one (`radiusFactor` set) every route gets a row.
+    * A cross join with no accidents has no pairs, so no rows come out.
     */
   private def foldPartition(rows: Iterator[Row], acc: AccidentColumns,
                             radiusFactor: Option[Double]): Iterator[Row] = {
-    if (acc.n == 0 && radiusFactor.isEmpty) return Iterator.empty
+    if (acc.n == 0) return Iterator.empty
     val nDates = acc.nDates
     val sums = new java.util.LinkedHashMap[Any, Sums]()
+    val band = radiusFactor.map(new Band(acc, _))
     rows.foreach { r =>
       val key = r.get(0)
       var s = sums.get(key)
       if (s == null) { s = new Sums(nDates); sums.put(key, s) }
       // NULL coordinates make every pair's distance, and so its influence, NULL
-      if (!r.isNullAt(1) && !r.isNullAt(2)) foldRoute(r, acc, s, radiusFactor)
+      if (!r.isNullAt(1) && !r.isNullAt(2)) foldRoute(r, acc, s, band)
     }
     import scala.jdk.CollectionConverters._
     sums.entrySet.iterator.asScala.map { e =>
@@ -212,8 +235,65 @@ private[graft] object RouteFold {
     }
   }
 
+  /** The pruned fold's candidates for one route, in accident order: with
+    * both latitudes within ±90° a pair's distance is at least R·|Δφ|, so
+    * only the accidents inside the gate's latitude band
+    * ([[PairMath.gateLatDeg]]) and those off the sphere can pass the gate;
+    * a route off the sphere takes every non-void accident. A route's gate
+    * is `__h · radiusFactor`. Scratch arrays are reused across one
+    * partition's routes.
+    */
+  private final class Band(acc: AccidentColumns, val radiusFactor: Double) {
+    private val bits = new Array[Long]((acc.n + 63) / 64)
+    val cand = new Array[Int](acc.n)
+
+    /** Fills `cand` and returns how many it holds. */
+    def select(lat: Double, gateKm: Double): Int = {
+      val order = acc.latOrder
+      val sorted = acc.latSorted
+      var j = 0
+      var hi = order.length
+      if (lat >= -90 && lat <= 90) {
+        val deg = PairMath.gateLatDeg(gateKm)
+        j = firstIndex(sorted, lat - deg, strict = false)
+        hi = firstIndex(sorted, lat + deg, strict = true)
+      }
+      while (j < hi) { mark(order(j)); j += 1 }
+      acc.offSphere.foreach(mark)
+      // read the marks back in index order, clearing them
+      var m = 0
+      var w = 0
+      while (w < bits.length) {
+        var word = bits(w)
+        if (word != 0L) {
+          bits(w) = 0L
+          while (word != 0L) {
+            cand(m) = (w << 6) + java.lang.Long.numberOfTrailingZeros(word)
+            m += 1
+            word &= word - 1
+          }
+        }
+        w += 1
+      }
+      m
+    }
+
+    private def mark(i: Int): Unit = bits(i >>> 6) |= 1L << i
+
+    /** The first index whose value is at least `x` (above `x` if `strict`). */
+    private def firstIndex(sorted: Array[Double], x: Double, strict: Boolean): Int = {
+      var lo = 0
+      var hi = sorted.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (sorted(mid) < x || (strict && sorted(mid) == x)) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+  }
+
   private def foldRoute(r: Row, acc: AccidentColumns, s: Sums,
-                        radiusFactor: Option[Double]): Unit = {
+                        band: Option[Band]): Unit = {
     val lat = r.getDouble(1)
     val lon = r.getDouble(2)
     val elevNull = r.isNullAt(3)
@@ -232,11 +312,9 @@ private[graft] object RouteFold {
       if ((elevNull || isFinite(elev)) && (difficultyNull || isFinite(difficulty)))
         PairMath.zeroSpatialA(twoH2)
       else Double.PositiveInfinity
-    // pruned: a pair beyond the gate is dropped, so the skip bound is also
-    // the gate's own haversine term
-    val gated = radiusFactor.isDefined
-    val gateKm = radiusFactor.fold(Double.PositiveInfinity)(r.getDouble(9) * _)
-    val skipA = if (gated) math.min(zeroA, PairMath.gateA(gateKm)) else zeroA
+    val gated = band.isDefined
+    val gateKm = band.fold(Double.PositiveInfinity)(r.getDouble(9) * _.radiusFactor)
+    val gateA = PairMath.gateA(gateKm)
     val skippable = acc.skippable
     val n = acc.n
     val nDates = acc.nDates
@@ -244,15 +322,22 @@ private[graft] object RouteFold {
     val temporal = acc.temporal
     val total = s.total
     val count = s.count
-    var paired = false
-    var i = 0
-    while (i < n) {
-      // a pair whose spatial factor is exactly 0.0 would add ±0.0, and one
-      // beyond the gate is dropped: skip it
+    // a route with coordinates pairs with every non-void accident
+    s.any ||= acc.anyLive
+    // pruned: only the accidents in the gate's latitude band can pass it
+    val m = band.fold(n)(_.select(lat, gateKm))
+    val cand = band.fold(null: Array[Int])(_.cand)
+    var k = 0
+    while (k < m) {
+      val i = if (gated) cand(k) else k
+      // a pair beyond the gate is dropped, and one whose spatial factor is
+      // exactly 0.0 would add ±0.0: skip it
       if (!acc.void(i)) {
-        paired = true
-        if (!(skippable(i) && PairMath.spatialVanishes(
-            cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i), skipA))) {
+        val skip =
+          if (gated) PairMath.beyondGate(cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i), gateA)
+          else skippable(i) && PairMath.spatialVanishes(
+            cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i), zeroA)
+        if (!skip) {
           val distKm = PairMath.haversineKm(cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i))
           // Catalyst's `dist_km <= __gate_km`: a NaN distance fails it
           if (!gated || distKm <= gateKm) {
@@ -276,8 +361,7 @@ private[graft] object RouteFold {
           }
         }
       }
-      i += 1
+      k += 1
     }
-    s.any ||= paired
   }
 }

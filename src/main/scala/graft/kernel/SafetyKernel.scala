@@ -296,44 +296,44 @@ object SafetyKernel {
     */
   def scoreRoutesForDates(routes: DataFrame, accidents: DataFrame,
                           dates: Seq[String]): DataFrame =
-    scoreRoutesForDates(routes, accidents, dates.map(d => to_date(lit(d))), prune = None)
+    scoreRoutesForDates(routes, accidents, dates.map(d => to_date(lit(d))), pruned = false)
 
   /** The multi-date fold over date columns (any date-valued expression,
     * e.g. a serving date literal), optionally pruned.
     *
-    * With `prune = Some(floor)` a pair counts only if its distance is at
-    * most the route's gate `__h · √(2·ln(B/floor))` — exactly the final
+    * With `pruned` a pair counts only if its distance is at most the
+    * route's gate `__h · √(2·ln(B/SignificanceFloor))` — exactly the final
     * gate of [[KernelPruning.pairInfluencePruned]] (same distance value,
-    * same `<=`, so a NaN distance fails it) — and every route gets a row,
-    * with `0.0`/`0` when no pair passes (a NULL coordinate or an empty
-    * accident set included), as [[KernelPruning.scoreRoutesPruned]]
-    * re-attaches them. Per route, the pruned fold is bit-identical to
-    * `pairInfluence` filtered to that gate and summed. It has no latitude
-    * domain: beyond `maxAbsLat` (72°) the grid kernel can miss an
-    * in-radius pair, which the fold keeps; below it the two keep the same
-    * pairs and their totals differ only by summation order.
-    * `prune = None` is the exact multi-date kernel above.
+    * same `<=`, so a NaN distance fails it). Per route, the pruned fold is
+    * bit-identical to `pairInfluence` with every non-NULL influence beyond
+    * that gate replaced by 0.0, then summed: the rows are the exact
+    * kernel's, and a route no pair reaches reads 0.0/0 (NULL/0 when every
+    * influence is NULL, as with a NULL coordinate; no rows for an empty
+    * accident set). [[KernelPruning.scoreRoutesPruned]] differs: it
+    * re-attaches every route with 0.0/0, and it has a latitude domain, so
+    * beyond `maxAbsLat` (72°) it can miss an in-radius pair, which the
+    * fold keeps; below it the two keep the same pairs and their totals
+    * differ only by summation order. `pruned = false` is the exact
+    * multi-date kernel above.
     */
   def scoreRoutesForDates(routes: DataFrame, accidents: DataFrame,
-                          dates: Seq[Column], prune: Option[Double]): DataFrame = {
+                          dates: Seq[Column], pruned: Boolean): DataFrame = {
     require(dates.nonEmpty, "scoreRoutesForDates: empty dates list")
     require(!routes.columns.contains("wmult"),
       "scoreRoutesForDates: routes carry wmult (amplified weather), which the " +
         "multi-date kernel does not score; use pairInfluence or pairInfluencePruned")
     requireRouteSideWmult("scoreRoutesForDates", accidents)
-    val folded = RouteFold(enrichRoutes(balance(routes)), accidents, dates, prune)
+    val folded = RouteFold(enrichRoutes(balance(routes)), accidents, dates, pruned)
     val aggCols = dates.indices.flatMap { i =>
       Seq(sum(col(s"__tot_$i")).as(s"__tot_$i"), sum(col(s"__n_$i")).as(s"__n_$i"))
     }
-    // pruned: a route no pair reaches reads 0.0, as scoreRoutesPruned fills it
-    val total = if (prune.isDefined) coalesce(col("col.t"), lit(0.0)) else col("col.t")
     folded
       .groupBy("route_id")
       .agg(aggCols.head, aggCols.tail: _*)
       .select(col("route_id"), posexplode(array(dates.indices.map(i =>
         struct(col(s"__tot_$i").as("t"), col(s"__n_$i").as("n"))): _*)))
       .select(col("route_id"),
-        total.as("total_influence"), col("col.n").as("n_contributing"),
+        col("col.t").as("total_influence"), col("col.n").as("n_contributing"),
         col("pos").as("__di"))
       .withColumn("risk_score", WeightExprs.normalizeRiskScore(col("total_influence")))
       .withColumn("color_code", WeightExprs.colorCode(col("risk_score")))

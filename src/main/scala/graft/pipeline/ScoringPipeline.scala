@@ -141,6 +141,14 @@ object ScoringPipeline {
     * ([[accidentDeltaTotals]]); `pruned = true` drops the pairs beyond
     * each route's prune gate (influence below the 1e-6 floor — same bound
     * as the pruned nightly itself), which the fold skips without trig.
+    * The batch is collected on the driver and broadcast (its arrays must
+    * stay below `spark.sql.maxBroadcastTableSize`, else the call fails).
+    * Per route the pruned fold scans one bit per new accident and visits
+    * only those inside its gate's latitude band, so its work grows with
+    * routes × batch / 64 plus the in-band pairs: it suits a batch that is
+    * small next to the route catalogue, as an ingest's is.
+    * `graft.bench.IngestBatchBench` (test tree) times it against the
+    * grid-pruned kernel over growing batches.
     *
     * `oldScores` needs (route_id, total_influence, n_contributing) — what
     * [[computeDailyScores]] writes; other columns pass through with risk,
@@ -166,15 +174,17 @@ object ScoringPipeline {
     * (route_id, d_total, d_n) — one call to the per-route fold
     * ([[SafetyKernel.scoreRoutesForDates]]) for the single plan date. Exact
     * (`pruned = false`), its values are bit-identical to
-    * `SafetyKernel.scoreRoutes`, and an empty batch gives no rows. With
-    * `pruned`, every route gets a row and only routes with a pair inside
-    * their prune gate carry nonzero values.
+    * `SafetyKernel.scoreRoutes`. Both modes give the same rows (none for an
+    * empty batch, NULL `d_total` where every influence is NULL); with
+    * `pruned`, only routes with a pair inside their prune gate carry
+    * nonzero values. [[applyDeltaTotals]] reads a missing or NULL delta
+    * as 0.
     */
   def accidentDeltaTotals(routes: DataFrame, newAccidents: DataFrame,
                           planDate: org.apache.spark.sql.Column,
                           pruned: Boolean = false): DataFrame =
     SafetyKernel.scoreRoutesForDates(routes, newAccidents, Seq(planDate),
-        prune = if (pruned) Some(SafetyKernel.SignificanceFloor) else None)
+        pruned = pruned)
       .select(col("route_id"),
         col("total_influence").as("d_total"), col("n_contributing").as("d_n"))
 

@@ -733,9 +733,9 @@ object StreamingOps {
         .where(col("ingest_batch").isin(toFold: _*))
         .groupBy("route_id", "prediction_date")
         .agg(sum("d_total").as("d_total"), sum("d_n").as("d_n"))
-      // no checkpoint here: mergeScores checkpoints the merged frame (which
-      // subsumes this one) before any write, breaking the read-overwrite
-      // lineage once instead of materializing the same rows twice
+      // no checkpoint here: mergeScores checkpoints these updates once for
+      // its dates, anti-join keys and union, then checkpoints the merged
+      // frame before the overwrite
       val touched = graft.pipeline.ScoringPipeline.applyDeltaTotals(
         spark.read.parquet(basePath)
           .join(deltas.select("route_id", "prediction_date"),

@@ -325,13 +325,11 @@ class KernelPruningSpec extends SparkSpec {
     assert(math.abs(selfSim - 1.0) < 1e-9)
   }
 
-  // --- the pruned per-route fold (SafetyKernel.scoreRoutesForDates, prune) --
+  // --- the pruned per-route fold (SafetyKernel.scoreRoutesForDates, pruned) -
 
-  private val pruneFloor = SafetyKernel.SignificanceFloor
-
-  /** The fold over one plan date, exact (`None`) or pruned at the significance floor. */
-  private def fold(rts: DataFrame, accs: DataFrame, prune: Option[Double]): DataFrame =
-    SafetyKernel.scoreRoutesForDates(rts, accs, Seq(planDate), prune)
+  /** The fold over one plan date, exact or pruned at the significance floor. */
+  private def fold(rts: DataFrame, accs: DataFrame, pruned: Boolean): DataFrame =
+    SafetyKernel.scoreRoutesForDates(rts, accs, Seq(planDate), pruned)
 
   /** (route_id, total_influence, n_contributing) rows as strings, by route:
     * string equality is bit-equality of the doubles (NaN and NULL included).
@@ -340,23 +338,23 @@ class KernelPruningSpec extends SparkSpec {
     df.select("route_id", "total_influence", "n_contributing").orderBy("route_id")
       .collect().map(_.toString).toSeq
 
-  /** The pruned fold's definition on the pair grain: `pairInfluence` kept
-    * where `dist_km <= __h · radiusFactor`, summed per route, and every
-    * route re-attached with 0.0/0 when no pair passes.
+  /** The pruned fold's definition on the pair grain: `pairInfluence` with
+    * every non-NULL influence beyond `dist_km <= __h · radiusFactor`
+    * replaced by 0.0, summed per route.
     */
   private def gatedPairTotals(rts: DataFrame, accs: DataFrame): DataFrame = {
-    val rf = KernelPruning.radiusFactorFor(pruneFloor, 1.0)
     val gated = SafetyKernel.pairInfluence(
         rts.withColumn("gate_km", graft.expr.WeightExprs.spatialBandwidthKm(
-          graft.expr.WeightExprs.asciiLower(col("route_type"))) * rf), accs, planDate)
-      .where(col("dist_km") <= col("gate_km"))
-    rts.select("route_id").distinct()
-      .join(SafetyKernel.scoreRoutes(gated), Seq("route_id"), "left")
-      .na.fill(Map("total_influence" -> 0.0, "n_contributing" -> 0L))
+          graft.expr.WeightExprs.asciiLower(col("route_type"))) *
+          KernelPruning.SignificanceRadiusFactor), accs, planDate)
+      .withColumn("influence",
+        when(col("influence").isNull || col("dist_km") <= col("gate_km"), col("influence"))
+          .otherwise(lit(0.0)))
+    SafetyKernel.scoreRoutes(gated)
   }
 
   private def gateKm(routeType: String): Double =
-    graft.expr.WeightExprs.SpatialBandwidth(routeType) * KernelPruning.radiusFactorFor(pruneFloor, 1.0)
+    graft.expr.WeightExprs.SpatialBandwidth(routeType) * KernelPruning.SignificanceRadiusFactor
 
   private def distKm(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double =
     PairMath.haversineKm(math.cos(math.toRadians(lat1)), lat1, lon1,
@@ -386,8 +384,8 @@ class KernelPruningSpec extends SparkSpec {
 
   test("pruned fold == pairInfluence gated at each route's radius, bitwise") {
     // NULL route and accident coordinates, a NaN distance (NaN latitude),
-    // |Δlon| > 180° across the antimeridian, and a pair one ulp either side
-    // of the gate
+    // |Δlon| > 180° across the antimeridian, a pair one ulp either side of
+    // the gate, and an accident past the pole (no latitude band holds it)
     val edgeLat = latAtGate(45.0, -110.0, gateKm("trad"))
     assert(distKm(45.0, -110.0, edgeLat, -110.0) <= gateKm("trad"))
     assert(distKm(45.0, -110.0, Math.nextUp(edgeLat), -110.0) > gateKm("trad"))
@@ -397,7 +395,8 @@ class KernelPruningSpec extends SparkSpec {
       (3L, Some(40.2), None, Some(2500.0), "trad", Some(8.0)),
       (4L, Some(Double.NaN), Some(-105.0), Some(2000.0), "ice", Some(9.0)),
       (5L, Some(10.0), Some(179.9), Some(1200.0), "sport", Some(7.0)),
-      (6L, Some(45.0), Some(-110.0), Some(1800.0), "trad", Some(8.0)))
+      (6L, Some(45.0), Some(-110.0), Some(1800.0), "trad", Some(8.0)),
+      (7L, Some(88.0), Some(0.0), Some(2500.0), "alpine", Some(9.0)))
       .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
     val accs = accidentRows(Seq(
       (1L, Some(40.1), Some(-105.0), "alpine"),
@@ -408,22 +407,26 @@ class KernelPruningSpec extends SparkSpec {
       (6L, Some(Math.nextUp(edgeLat)), Some(-110.0), "trad"),
       (7L, Some(43.0), Some(-105.0), "alpine"),  // ~333 km: inside route 1's 401 km gate
       (8L, Some(44.0), Some(-105.0), "ice"),     // ~445 km: beyond it
-      (9L, Some(-30.0), Some(20.0), "mixed")))
-    val pruned = totalRows(fold(rts, accs, Some(pruneFloor)))
+      (9L, Some(-30.0), Some(20.0), "mixed"),
+      (10L, Some(91.0), Some(0.0), "alpine")))  // ~334 km from route 7
+    val pruned = totalRows(fold(rts, accs, pruned = true))
     assert(pruned == totalRows(gatedPairTotals(rts, accs)))
-    assert(pruned.size == 6)
-    // NULL coordinates and the NaN distance: no pair passes, 0.0/0
-    for (id <- Seq(2, 3, 4)) assert(pruned.contains(s"[$id,0.0,0]"), pruned)
-    // the exact fold keeps the NaN-distance pairs: NaN total, every pair counts
-    assert(totalRows(fold(rts, accs, None)).contains("[4,NaN,7]"))
-    // the antimeridian pair (~16 km apart) contributes
-    assert(!pruned.contains("[5,0.0,0]"), pruned)
+    assert(pruned.size == 7)
+    // NULL coordinates: every influence is NULL, as in the exact kernel
+    for (id <- Seq(2, 3)) assert(pruned.contains(s"[$id,null,0]"), pruned)
+    // the NaN distance fails every gate: 0.0/0; the exact fold keeps those
+    // pairs, a NaN total with every pair counted
+    assert(pruned.contains("[4,0.0,0]"), pruned)
+    assert(totalRows(fold(rts, accs, pruned = false)).contains("[4,NaN,8]"))
+    // the antimeridian pair (~16 km apart) and the one across the pole
+    // contribute
+    assert(!pruned.contains("[5,0.0,0]") && !pruned.contains("[7,0.0,0]"), pruned)
     // route 6 keeps the pair at the gate and drops the one an ulp beyond
     val edgePairs = SafetyKernel.pairInfluence(rts.where(col("route_id") === 6L),
         accs.where(col("accident_id").isin(5L, 6L)), planDate)
       .select("accident_id", "influence").as[(Long, Double)].collect().toMap
     val route6 = fold(rts.where(col("route_id") === 6L),
-      accs.where(col("accident_id").isin(5L, 6L)), Some(pruneFloor))
+      accs.where(col("accident_id").isin(5L, 6L)), pruned = true)
       .select("total_influence").as[Double].head()
     assert(route6 == 0.0 + edgePairs(5L) && edgePairs(6L) > 0.0, (route6, edgePairs))
   }
@@ -431,7 +434,7 @@ class KernelPruningSpec extends SparkSpec {
   test("pruned fold vs the grid kernel: same pairs up to 72°, and the fold keeps polar ones") {
     // up to maxAbsLat the grid keeps the same pairs; totals differ only by
     // the order the pairs are summed in
-    val fused = fold(routes, accidents, Some(pruneFloor))
+    val fused = fold(routes, accidents, pruned = true)
       .select("route_id", "total_influence", "n_contributing").collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
     val grid = KernelPruning.scoreRoutesPruned(routes, accidents, planDate)
@@ -444,6 +447,9 @@ class KernelPruningSpec extends SparkSpec {
       assert(math.abs(t - gt) <= 1e-12 * math.abs(gt), s"route $id: total $t vs $gt")
     }
     assert(fused.values.count(_._2 > 0) > 100)
+    // and bitwise the gated pair sums, in accident order, over many pairs
+    assert(totalRows(fold(routes, accidents, pruned = true)) ==
+      totalRows(gatedPairTotals(routes, accidents)))
     // at 80°N the alpine route's 401 km gate spans more longitude than the
     // grid's ±2 cells (sized at 72°): an accident 15° east (~289 km) is in
     // radius, the grid never pairs them, the fold does
@@ -451,24 +457,13 @@ class KernelPruningSpec extends SparkSpec {
       .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
     val polarAcc = accidentRows(Seq((1L, Some(80.0), Some(15.0), "alpine")))
     assert(distKm(80.0, 0.0, 80.0, 15.0) < gateKm("alpine"))
-    val polarFold = fold(polarRoute, polarAcc, Some(pruneFloor))
+    val polarFold = fold(polarRoute, polarAcc, pruned = true)
       .select("total_influence", "n_contributing").as[(Double, Long)].head()
     val polarGrid = KernelPruning.scoreRoutesPruned(polarRoute, polarAcc, planDate)
       .select("total_influence", "n_contributing").as[(Double, Long)].head()
     assert(polarFold._1 > 0.0 && polarFold._2 == 1L, polarFold)
     assert(polarGrid == ((0.0, 0L)), polarGrid)
-    assert(totalRows(fold(polarRoute, polarAcc, Some(pruneFloor))) ==
+    assert(totalRows(fold(polarRoute, polarAcc, pruned = true)) ==
       totalRows(gatedPairTotals(polarRoute, polarAcc)))
-  }
-
-  test("pruned fold: an empty batch gives every route a 0.0/0 row") {
-    val none = fold(routes, accidents.limit(0), Some(pruneFloor))
-      .select("route_id", "total_influence", "n_contributing", "risk_score", "color_code")
-      .collect()
-    assert(none.length == 500)
-    assert(none.forall(r => r.getDouble(1) == 0.0 && r.getLong(2) == 0L &&
-      r.getDouble(3) == 0.0 && r.getString(4) == "green"))
-    // the exact fold of an empty batch has no pairs, so no rows
-    assert(fold(routes, accidents.limit(0), None).count() == 0)
   }
 }

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The scalar facts the multi-date fold's exactness rests on
   * ([[PairMath]]): `x * x` is `StrictMath.pow(x, 2)` bit for bit, exp
   * underflows to exactly 0.0 below the skip threshold's constant, and the
-  * trig-free skip test only fires on pairs whose spatial factor is 0.0.
+  * trig-free skip tests only fire on pairs whose spatial factor is 0.0 or
+  * that lie beyond a prune gate.
   */
 class PairMathSpec extends AnyFunSuite {
 
@@ -57,6 +58,31 @@ class PairMathSpec extends AnyFunSuite {
     }
     assert(fired > 400000, fired) // the bound is useful, not just sound
     assert(zeroMissed < fired, s"missed $zeroMissed of ${fired + zeroMissed} zero pairs")
+  }
+
+  test("beyondGate fires only on pairs beyond the gate or at a NaN distance") {
+    val gates = Seq(20.0, 25.0, 40.0, 50.0, 75.0).map(_ * KernelPruning.SignificanceRadiusFactor)
+    var fired, beyondMissed = 0L // the latter on the sphere only
+    for (_ <- 0 until 400000) {
+      val lat1 = rnd.nextDouble() * 180 - 90
+      val lon1 = rnd.nextDouble() * 360 - 180
+      // half the partners near the gates (~107–401 km), half anywhere
+      val (lat2, lon2) =
+        if (rnd.nextBoolean()) (lat1 + (rnd.nextDouble() * 8 - 4), lon1 + (rnd.nextDouble() * 10 - 5))
+        else (rnd.nextDouble() * 180 - 90, rnd.nextDouble() * 720 - 360)
+      val lat2c = if (rnd.nextInt(8) == 0) lat2 * 4 else math.max(-90.0, math.min(90.0, lat2))
+      val c1 = Math.cos(Math.toRadians(lat1))
+      val c2 = Math.cos(Math.toRadians(lat2c))
+      val dist = PairMath.haversineKm(c1, lat1, lon1, c2, lat2c, lon2)
+      for (gate <- gates) {
+        if (PairMath.beyondGate(c1, lat1, lon1, c2, lat2c, lon2, PairMath.gateA(gate))) {
+          fired += 1
+          assert(!(dist <= gate), s"($lat1, $lon1) – ($lat2c, $lon2), gate $gate km: $dist km")
+        } else if (!(dist <= gate) && math.abs(lat2c) <= 90) beyondMissed += 1
+      }
+    }
+    // useful on far pairs too, where the haversine term passes 1/2
+    assert(beyondMissed * 100 < fired, s"missed $beyondMissed, fired $fired")
   }
 
   test("zeroSpatialA never fires for a negative, NaN or unbounded 2h²") {

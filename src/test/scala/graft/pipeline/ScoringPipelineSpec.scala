@@ -289,6 +289,10 @@ class ScoringPipelineSpec extends SparkSpec {
     val none = accidents.limit(0)
     val (fused, perDate) = multiVsPerDate(routes, none, Seq("2024-07-15", "2024-07-16"))
     assert(fused.isEmpty && perDate.isEmpty)
+    // the pruned delta keeps the exact kernel's rows: none
+    for (pruned <- Seq(false, true))
+      assert(ScoringPipeline.accidentDeltaTotals(routes, none, to_date(lit("2024-07-15")),
+        pruned).isEmpty, s"pruned = $pruned")
     // an earlier date's partition exists, so the read-back finds a table
     // and the row-count invariant is what fails
     val out = Files.createTempDirectory("scores_empty").toString
@@ -602,10 +606,6 @@ class ScoringPipelineSpec extends SparkSpec {
         assert(a.getDouble(4) == math.min(100.0, math.max(0.0, t * 7.0)), s"$k risk")
       } else assert(a == b, s"$k: another date's row changed")
     }
-    // an empty batch: a 0.0/0 delta for every route
-    val none = ScoringPipeline.accidentDeltaTotals(routes, newAcc.limit(0), planDate, pruned = true)
-    assert(none.count() == delta.size &&
-      none.where(col("d_total") =!= 0.0 || col("d_n") =!= 0L).count() == 0)
   }
 
   test("pruned delta touches only routes near the new accident") {
