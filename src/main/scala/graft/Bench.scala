@@ -19,8 +19,8 @@ import graft.sim.Similarity
   *  - `kernel_batch_168k`: the nightly batch at production scale — 168K
   *    routes × 6.9K accidents ≈ 1.16B kernel evaluations (reference:
   *    5-15 min per date, single node)
-  *  - `kernel_batch_168k_pruned`: the same batch through the grid-pruned
-  *    equi-join (KernelPruning, floor 1e-6) — the 100 TB path
+  *  - `kernel_batch_168k_pruned`: the same batch through the pruned fold
+  *    (KernelPruning, floor 1e-6) — the 100 TB path
   */
 object Bench {
 
@@ -33,7 +33,7 @@ object Bench {
 
   /** Synthetic reference-production-scale routes (compute-bound benchmark;
     * rows generated partition-parallel exactly like a real scan would be).
-    * Spread ≈ 20°×30° — continental, so grid pruning has room to work.
+    * Spread ≈ 20°×30° — continental, so pruning has room to work.
     */
   def syntheticRoutes(spark: SparkSession, n: Long): DataFrame =
     spark.range(n).select(
@@ -118,62 +118,56 @@ object Bench {
   // --- scale-stress gate: 10× blow-up + planted skew ------------------------
 
   /** The nightly batch at 10× the reference's production scale — 1.68M
-    * routes × 69K accidents ≈ 116G pair-candidates. Only the grid-pruned
-    * path runs here: this is precisely the scale-up the pruning exists for
-    * (the exact cross join would evaluate all 116G pairs; the grid keeps
-    * the per-route work proportional to nearby accidents).
-    * KernelPruningSpec pins exact-vs-pruned bit-equality above the 1e-6
-    * floor at 10× density with a planted hot cell; this entry demonstrates
-    * throughput and bounded memory at the full blown-up shape.
+    * routes × 69K accidents ≈ 116G pair-candidates. Only the pruned path
+    * runs here: this is precisely the scale-up the pruning exists for (the
+    * exact kernel would evaluate all 116G pairs; the pruned fold visits
+    * per route only the accidents inside its gate's latitude band).
+    * KernelPruningSpec pins the pruned totals bitwise to the gated pair
+    * sums, and `n_contributing` to the exact kernel's, at 10× density with
+    * a planted hot cell; this entry demonstrates throughput and bounded
+    * memory at the full blown-up shape.
     *
-    * Measured funnel at this shape: 116G raw candidates → ~9G inside the
-    * K=2 tier-grid windows (the round-10 3×3 grid admitted ~13G; finer
-    * cells cut the window area 9r²→6.25r²) → lat + lon prefilters (one
-    * compare / one sqrt·|sin|) → 3.79G pairs genuinely within their
-    * per-route gate radius, each owed full influence math for exactness
-    * above the floor. Round-11 A/B on one host: 3×3 157.6 s → K=2 + both
-    * prefilters 133.8 s (−15%); K=3 and prefilter-less variants measured
-    * WORSE, so this is the chosen point (KernelPruning doc has the table).
-    * Round 18: per-bandwidth tiers shrink each route's window to its own
-    * gate radius (count-only join+gate wall 68.6 → 60.7 s; gated pairs
-    * unchanged at 3.785G — the exact gate is bit-identical), and K=3 was
-    * re-measured at the swapped fan-out: still worse (69.3 s count-only).
+    * 3.785G of the 116G pairs lie within their route's gate radius, each
+    * owed full influence math (counted on the retired grid kernel's join,
+    * which produced exactly the gated pairs).
     */
   def kernelBatch10x(spark: SparkSession): DataFrame =
     KernelPruning.scoreRoutesPruned(
       syntheticRoutes(spark, 1680000), syntheticAccidents(spark, 69000), planDate)
 
+  /** Extents in degrees (lat, lon) of the cell the skewed generators plant
+    * their hot half in: half the sport gate radius per side, the lon width
+    * taken at 72° and rounded so a whole number of cells spans 360°. This
+    * is the sport-tier cell of the grid kernel the pruned fold replaced,
+    * kept so the planted coordinates stay the same.
+    */
+  private[graft] val HotCellDegrees: (Double, Double) = {
+    val cellKm = graft.expr.WeightExprs.SpatialBandwidth("sport") *
+      KernelPruning.SignificanceRadiusFactor / 2
+    val lonCells = math.max(1L,
+      math.floor(360.0 / (cellKm / (111.0 * math.cos(math.toRadians(72.0))))).toLong)
+    (cellKm / 111.0, 360.0 / lonCells)
+  }
+
   /** The 10× catalog under REALISTIC geo-clustering: ids < n/2 follow the
     * uniform continental lattice; ids ≥ n/2 — half the catalog — are
-    * planted strictly inside ONE grid cell of the SPORT-bandwidth tier
-    * ("half the routes in a few crags"), as sport routes so the plant
-    * cell is the hot routes' own tier's cell. The cell geometry comes
-    * from KernelPruning's own constants, so a tier/CellDiv change moves
-    * the plant with it (round 18's per-bandwidth tiers did exactly that —
-    * the hot cell is now the 25 km sport tier's, previously the 30 km
-    * tier-0 cell).
+    * planted as sport routes strictly inside ONE [[HotCellDegrees]] cell
+    * ("half the routes in a few crags").
     *
     * Why this should NOT blow up the pruned plan, stated so the measured
-    * entry has a prediction to check: the pruned kernel is a BROADCAST
-    * equi-join probed from the route side, and `Partitioning.balanced`
-    * round-robins routes across tasks — so co-located routes do not
-    * co-locate in any task, and per-task pair output stays
-    * (routes per task) × (accidents within each route's window), which is
-    * ACCIDENT-density-bound, not route-density-bound. Route clustering
-    * alone therefore concentrates probes of one hashmap key (cheap, the
-    * map is read-only broadcast state) but not output. The skew that
-    * genuinely inflates work is accident-side clustering (it lengthens
-    * every hot-window route's candidate list); the bit-equality spec
-    * covers that with a planted hot accident cell at 10× density,
-    * `kernel_batch_10x_accskew` measures its wall, and
-    * `kernel_batch_10x_skew` pins the route-clustering wall within ~1.5×
-    * of the uniform `kernel_batch_10x` (prediction: at or below it — the
-    * hot half sits in tier 0, whose windows are the smallest; the
-    * committed BENCH entry is the check).
+    * entry has a prediction to check: the pruned fold broadcasts the
+    * accidents, and `Partitioning.balanced` round-robins routes across
+    * tasks — so co-located routes do not co-locate in any task, and
+    * per-task work stays (routes per task) × (accidents within each
+    * route's latitude band), which is ACCIDENT-density-bound, not
+    * route-density-bound. The skew that genuinely inflates work is
+    * accident-side clustering; the bitwise spec covers that with a planted
+    * hot accident cell at 10× density, and `kernel_batch_10x_accskew`
+    * measures its wall.
     */
   def syntheticRoutesSkewed(spark: SparkSession, n: Long): DataFrame = {
-    val (latDeg, lonDeg) = KernelPruning.tier0CellDegrees()
-    // center of the tier-0 cell containing (40.0, -109.0); jitter spans
+    val (latDeg, lonDeg) = HotCellDegrees
+    // center of the hot cell containing (40.0, -109.0); jitter spans
     // ±0.4 cell per axis, so every hot route is strictly interior
     val latC = (math.floor(40.0 / latDeg) + 0.5) * latDeg
     val lonC = (math.floor((-109.0 + 180.0) / lonDeg) + 0.5) * lonDeg - 180.0
@@ -194,42 +188,23 @@ object Bench {
   /** ACCIDENT-side clustering — the direction [[syntheticRoutesSkewed]]'s
     * analysis names as the genuinely dangerous one: ids < n/2 follow the
     * uniform lattice; ids ≥ n/2 — half the accident history — are planted
-    * strictly inside the SAME sport-tier cell the route-skew arm uses
-    * ("half of all accidents at a few famous crags"). Clustered accidents
-    * lengthen the candidate list of every route whose probe window covers
-    * the hot cell, and they all hash to ONE broadcast-map key.
+    * strictly inside the SAME [[HotCellDegrees]] cell the route-skew arm
+    * uses ("half of all accidents at a few famous crags"). Clustered
+    * accidents land in the latitude band of every route near the hot cell.
     *
-    * Measured work model (round 16 — this corrects an earlier prediction
-    * here that the extra pairs were "tens of millions" and the arm would
-    * land at or below uniform; the window-area arithmetic behind that was
-    * wrong): each tier's 25-cell probe window covers 3–19% of the 20°×30°
-    * lattice — (5·tierRadius/2)² against ~5.2M km² — so ~160K uniform
-    * routes iterate the 34.5K hot candidates, and the gate genuinely
-    * admits MORE pairs than the uniform arm: 4.658G vs 3.785G gated pairs
-    * (ratio 1.230, measured by `graft.bench.ArmWork`; the uniform count
-    * also reconfirms the 3.79G funnel figure in [[kernelBatch10x]]'s doc).
-    * Every extra pair is above the 1e-6 floor and owed exact influence
-    * math (bit-equality is spec-pinned: KernelPruningSpec "10x density +
-    * planted hot cell" and the accident-skew generator spec), so the arm
-    * SHOULD run above uniform — the paired per-run walls in BENCH_LOCAL's
-    * `arm_runs` put accskew/uniform at ≈1.0–1.1×, noise-bounded (pooled
-    * paired median 1.073, committed-series median 1.005), across rotated
-    * positions, BELOW the 1.230× pair ratio, and ArmWork's count-only walls (join +
-    * prefilters + haversine gate, influence math pruned) are equal across
-    * the two arms: candidate volume is a wash (the uniform half's
-    * candidates halve, the hot cell's add a like amount), per-task balance
-    * holds (round-robin probe side, read-only replicated broadcast map —
-    * no shuffle partition inherits the hot key), and the wall tracks
-    * gated-pair volume. That is the design's actual guarantee: work is
-    * accident-density-bound — proportional to pairs within the gate
-    * radius, which skew genuinely increases — never route-count-bound or
-    * partition-skew-bound. (An earlier note here suggested salting the
-    * hot grid key as a remedy; salting redistributes SHUFFLE partitions
-    * and is a no-op for a balanced broadcast probe — it would neither cut
-    * candidates nor pairs.)
+    * The gate genuinely admits MORE pairs than the uniform arm: 4.658G vs
+    * 3.785G gated pairs (ratio 1.230, counted on the retired grid kernel's
+    * join, which produced exactly the gated pairs). Every extra pair is
+    * above the 1e-6 floor and owed exact influence math (spec-pinned:
+    * KernelPruningSpec "10x density + planted hot cell" and the
+    * accident-skew generator spec). Work is accident-density-bound —
+    * proportional to the accidents within each route's band, which skew
+    * genuinely increases — never route-count-bound or
+    * partition-skew-bound: the broadcast arrays are read-only on every
+    * executor, and no shuffle partition inherits the hot cell.
     */
   def syntheticAccidentsSkewed(spark: SparkSession, n: Long): DataFrame = {
-    val (latDeg, lonDeg) = KernelPruning.tier0CellDegrees()
+    val (latDeg, lonDeg) = HotCellDegrees
     val latC = (math.floor(40.0 / latDeg) + 0.5) * latDeg
     val lonC = (math.floor((-109.0 + 180.0) / lonDeg) + 0.5) * lonDeg - 180.0
     val hot = spark.range(n / 2, n).select(
@@ -250,7 +225,7 @@ object Bench {
       syntheticRoutes(spark, 1680000), syntheticAccidentsSkewed(spark, 69000), planDate)
 
   /** 100× the reference's production batch — 16.8M routes × 69K accidents
-    * ≈ 1.16T raw pair-candidates through the tiered pruned kernel. The
+    * ≈ 1.16T raw pair-candidates through the pruned fold. The
     * linearity point for the "100×-safe" design claim: candidates scale
     * ~linearly with routes, so wall should land within ~1.5× of 10× the
     * `kernel_batch_10x` number. EXPLICIT-ONLY (≈ tens of minutes): runs
@@ -1437,10 +1412,10 @@ object Bench {
         Await.result(Future.sequence(reqs), 600.seconds)
       } finally pool.shutdown()
     } }
-    // min-of-2 like the suite: the pruned plan is a 3-branch union whose
-    // first execution pays JIT for every branch's codegen — session
-    // bring-up, not kernel throughput (the once-only 10× entry amortizes
-    // the same cost over minutes of real work)
+    // min-of-2 like the suite: the first execution pays JIT for the
+    // plan's codegen and the fold's loop — session bring-up, not kernel
+    // throughput (the once-only 10× entry amortizes the same cost over
+    // minutes of real work)
     def time2(fn: => DataFrame): Double = {
       val a = time(fn); val b = time(fn)
       if (a < 0 || b < 0) -1.0 else math.min(a, b)

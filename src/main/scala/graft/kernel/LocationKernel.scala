@@ -122,9 +122,10 @@ object LocationKernel {
     * (route_id, location_id, route_type, difficulty).
     *
     * Routes whose location has NO pair above the significance floor (or no
-    * location row at all) are re-attached with risk 0 / green — same
-    * contract as KernelPruning.scoreRoutesPruned: the nightly upsert must
-    * overwrite their previous scores with 0, not leave them stale.
+    * location row at all) are re-attached with risk 0 / green, as the fold
+    * (`SafetyKernel.scoreRoutesForDates`) gives a route with coordinates
+    * that no pair reaches 0.0/0: the nightly upsert must overwrite their
+    * previous scores with 0, not leave them stale.
     *
     * DOCUMENTED DIVERGENCE (faithful to the reference's own two paths):
     * `n_contributing` here counts every pair surviving the BASE-grain

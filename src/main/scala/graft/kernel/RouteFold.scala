@@ -79,9 +79,8 @@ private[kernel] object AccidentColumns {
   * "some pair" flag, so every score stays bit-identical.
   *
   * Pruned, a pair counts only if its distance is at most the route's gate
-  * `__h · SignificanceRadiusFactor` — the final gate of
-  * [[KernelPruning.pairInfluencePruned]], on the same distance value. A
-  * NaN distance fails the gate. The loop then visits only the accidents
+  * `__h · SignificanceRadiusFactor` ([[KernelPruning]]). A NaN distance
+  * fails the gate. The loop then visits only the accidents
   * inside the gate's latitude band (`Band`, a binary search over the
   * accidents sorted by latitude, read back in accident order so the sums
   * keep their order), and skips a visited pair beyond the gate without
@@ -339,7 +338,7 @@ private[graft] object RouteFold {
             cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i), zeroA)
         if (!skip) {
           val distKm = PairMath.haversineKm(cosLat, lat, lon, acc.cosLat(i), acc.lat(i), acc.lon(i))
-          // Catalyst's `dist_km <= __gate_km`: a NaN distance fails it
+          // `dist_km <= gate`: a NaN distance fails it
           if (!gated || distKm <= gateKm) {
             val spatial = PairMath.spatial(distKm, twoH2)
             val elevation =

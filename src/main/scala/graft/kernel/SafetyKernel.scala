@@ -81,11 +81,11 @@ object SafetyKernel {
   }
 
   /** The A7 multiplier `wmult` is a ROUTE-side column ([[influenceColumns]]).
-    * An accidents frame carrying it would be amplified per pair, yet the
-    * pruned kernel sizes its radius and checks its cap on the routes only,
-    * so above-floor pairs could be lost without an error: reject it.
+    * An accidents frame carrying it would be amplified per pair by
+    * [[pairInfluence]] and ignored by the fold ([[scoreRoutesForDates]]),
+    * so the two would score it differently without an error: reject it.
     */
-  private[kernel] def requireRouteSideWmult(caller: String, accidents: DataFrame): Unit =
+  private def requireRouteSideWmult(caller: String, accidents: DataFrame): Unit =
     require(!accidents.columns.contains("wmult"),
       s"$caller: accidents carry wmult (amplified weather), a route-side column")
 
@@ -99,7 +99,7 @@ object SafetyKernel {
     * the pair loop. The type is case-folded once per row
     * ([[WeightExprs.asciiLower]]) and every lookup reads the folded column.
     */
-  private[kernel] def enrichRoutes(routes: DataFrame): DataFrame =
+  private def enrichRoutes(routes: DataFrame): DataFrame =
     routes
       .withColumn("__rt_lc", WeightExprs.asciiLower(col("route_type")))
       .withColumn("__h", WeightExprs.spatialBandwidthKm(col("__rt_lc")))
@@ -113,7 +113,7 @@ object SafetyKernel {
   /** Accident-side enrichment for one plan date: severity weight, type
     * index, season flag, weather factor — all per accident, never per pair.
     */
-  private[kernel] def enrichAccidents(accidents: DataFrame, planDate: Column): DataFrame =
+  private def enrichAccidents(accidents: DataFrame, planDate: Column): DataFrame =
     accidentScalars(accidents)
       .withColumn("__same_season", accidentSameSeason(planDate))
       // λ can only be one of the canonical types' values or the default,
@@ -182,12 +182,10 @@ object SafetyKernel {
     WeightExprs.gradeWeight(col("difficulty"), col("a_difficulty"))
 
   /** The per-pair kernel over an already-joined (enriched-routes ×
-    * enriched-accidents) frame — shared by the exact cross-join path and
-    * the grid-pruned equi-join path (KernelPruning). It reads exactly these
-    * columns, which the caller supplies:
+    * enriched-accidents) frame — the body of [[pairInfluence]]. It reads
+    * exactly these columns, which the caller supplies:
     *
-    *  - `dist_km` (the caller's haversine; both callers compute it with
-    *    `GeoExprs.haversineKmHoisted`);
+    *  - `dist_km` (the caller's haversine, `GeoExprs.haversineKmHoisted`);
     *  - route side ([[enrichRoutes]]): `__two_h2`, `__rt_idx`, `__elev_c`,
     *    `elev`, `difficulty`;
     *  - accident side ([[enrichAccidents]]): `__tw_arr`, `__same_season`,
@@ -202,9 +200,9 @@ object SafetyKernel {
     * `wsim × wmult` (final_similarity = base × multiplier,
     * `weather_similarity.py:473`) instead of the accident-hoisted factor —
     * exclusion threshold and quadratic power apply to the amplified value.
-    * Both callers reject an accident-side `wmult` ([[requireRouteSideWmult]]).
+    * An accident-side `wmult` is rejected ([[requireRouteSideWmult]]).
     */
-  private[kernel] def influenceColumns(pairs: DataFrame): DataFrame = {
+  private def influenceColumns(pairs: DataFrame): DataFrame = {
     val amplified = pairs.columns.contains("wmult")
     // temporal: 1 − 0.35·(1 − (λ^days)^1.5), ×1.05 same season — from the
     // per-accident per-type-slot precompute
@@ -286,7 +284,7 @@ object SafetyKernel {
     * per-date arms.
     *
     * Contract: neither side carries `wmult` (amplified weather is scored
-    * by [[pairInfluence]] / KernelPruning only); coordinates, elevations and
+    * by [[pairInfluence]] only); coordinates, elevations and
     * difficulties are double or integral; the accident arrays
     * (accidents × (63 + 64 × dates) bytes) stay below
     * `spark.sql.maxBroadcastTableSize`. The collect itself is bounded by
@@ -301,27 +299,24 @@ object SafetyKernel {
   /** The multi-date fold over date columns (any date-valued expression,
     * e.g. a serving date literal), optionally pruned.
     *
-    * With `pruned` a pair counts only if its distance is at most the
-    * route's gate `__h · √(2·ln(B/SignificanceFloor))` — exactly the final
-    * gate of [[KernelPruning.pairInfluencePruned]] (same distance value,
-    * same `<=`, so a NaN distance fails it). Per route, the pruned fold is
-    * bit-identical to `pairInfluence` with every non-NULL influence beyond
-    * that gate replaced by 0.0, then summed: the rows are the exact
+    * With `pruned` a pair counts only if its distance `dist_km` is at
+    * most the route's gate `__h · √(2·ln(B/SignificanceFloor))`
+    * ([[KernelPruning]]; a NaN distance fails it). Per route, the pruned
+    * fold is bit-identical to `pairInfluence` with every non-NULL influence
+    * beyond that gate replaced by 0.0, then summed: the rows are the exact
     * kernel's, and a route no pair reaches reads 0.0/0 (NULL/0 when every
     * influence is NULL, as with a NULL coordinate; no rows for an empty
-    * accident set). [[KernelPruning.scoreRoutesPruned]] differs: it
-    * re-attaches every route with 0.0/0, and it has a latitude domain, so
-    * beyond `maxAbsLat` (72°) it can miss an in-radius pair, which the
-    * fold keeps; below it the two keep the same pairs and their totals
-    * differ only by summation order. `pruned = false` is the exact
-    * multi-date kernel above.
+    * accident set). There is no latitude domain: the gate holds at the
+    * poles and across the antimeridian. [[KernelPruning.scoreRoutesPruned]]
+    * is this fold for one date. `pruned = false` is the exact multi-date
+    * kernel above.
     */
   def scoreRoutesForDates(routes: DataFrame, accidents: DataFrame,
                           dates: Seq[Column], pruned: Boolean): DataFrame = {
     require(dates.nonEmpty, "scoreRoutesForDates: empty dates list")
     require(!routes.columns.contains("wmult"),
       "scoreRoutesForDates: routes carry wmult (amplified weather), which the " +
-        "multi-date kernel does not score; use pairInfluence or pairInfluencePruned")
+        "multi-date kernel does not score; use pairInfluence")
     requireRouteSideWmult("scoreRoutesForDates", accidents)
     val folded = RouteFold(enrichRoutes(balance(routes)), accidents, dates, pruned)
     val aggCols = dates.indices.flatMap { i =>

@@ -139,16 +139,17 @@ object ScoringPipeline {
     * totals, with risk/color re-derived from the new total. The delta is
     * the per-route fold over the new accidents for the one plan date
     * ([[accidentDeltaTotals]]); `pruned = true` drops the pairs beyond
-    * each route's prune gate (influence below the 1e-6 floor — same bound
-    * as the pruned nightly itself), which the fold skips without trig.
+    * each route's prune gate (influence below the 1e-6 floor — the same
+    * fold as `KernelPruning.scoreRoutesPruned`), which it skips without
+    * trig.
     * The batch is collected on the driver and broadcast (its arrays must
     * stay below `spark.sql.maxBroadcastTableSize`, else the call fails).
     * Per route the pruned fold scans one bit per new accident and visits
     * only those inside its gate's latitude band, so its work grows with
     * routes × batch / 64 plus the in-band pairs: it suits a batch that is
     * small next to the route catalogue, as an ingest's is.
-    * `graft.bench.IngestBatchBench` (test tree) times it against the
-    * grid-pruned kernel over growing batches.
+    * `graft.bench.IngestBatchBench` (test tree) times the pruned delta
+    * against the exact one (`pruned = false`) over growing batches.
     *
     * `oldScores` needs (route_id, total_influence, n_contributing) — what
     * [[computeDailyScores]] writes; other columns pass through with risk,

@@ -6,7 +6,7 @@ import graft.SparkSpec
   * asserted against `.explain` output so regressions surface in CI:
   * filter/column pushdown reaches the parquet scan, the kernel joins
   * broadcast with no route-side shuffle before partial aggregation, and
-  * the pruned kernel plans an equi-join instead of a cross join.
+  * the pruned kernel plans one per-route fold and no join.
   */
 class PlanShapeSpec extends SparkSpec {
 
@@ -34,25 +34,27 @@ class PlanShapeSpec extends SparkSpec {
     assert(exchanges <= 1, s"unexpected extra shuffles: $exchanges")
   }
 
-  test("pruned kernel: equi-join on grid cells, no cross join in the plan") {
+  test("pruned kernel: one per-route fold, no join of any kind in the plan") {
     import org.apache.spark.sql.functions._
     val pruned = graft.kernel.KernelPruning.scoreRoutesPruned(
       graft.queries.Derived.routes(spark, dir),
       graft.queries.Derived.accidents(spark, dir),
       to_date(lit("2024-07-15")))
     val plan = pruned.queryExecution.executedPlan.toString
-    assert(!plan.contains("NestedLoopJoin") && !plan.contains("CartesianProduct"),
-      "pruned path still plans a cross join")
-    assert(plan.contains("BroadcastHashJoin"), "cell join is not a broadcast hash join")
+    assert(plan.sliding("MapPartitions ".length).count(_ == "MapPartitions ") == 1,
+      "pruned path is not one fold operator:\n" + plan)
+    assert(!plan.contains("Join") && !plan.contains("CartesianProduct"),
+      "pruned path plans a join:\n" + plan)
+    assert(!plan.contains("ASIN("), "pruned path computes a haversine in Catalyst")
   }
 
-  test("pruned kernel: broadcast grid join survives AQE re-optimization") {
+  test("pruned kernel: AQE's final plan keeps the fold and plans no join") {
     import org.apache.spark.sql.functions._
     // At 100× scale AQE is ON (runtime skew/shuffle re-planning is how a
     // real cluster survives); the plan-shape guards above pin shapes only
     // under AQE-off. Execute under AQE and assert the FINAL adaptive plan
-    // still runs the grid join as a broadcast hash join — not a re-planned
-    // sort-merge or cartesian.
+    // still runs the fold — not a re-planned sort-merge, nested-loop or
+    // cartesian join.
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try {
@@ -65,13 +67,11 @@ class PlanShapeSpec extends SparkSpec {
       assert(full.contains("AdaptiveSparkPlan"), "AQE was not engaged:\n" + full.take(500))
       assert(full.contains("isFinalPlan=true"), "adaptive plan never finalized")
       // toString shows BOTH "== Final Plan ==" and "== Initial Plan =="
-      // sections; only what AQE actually finalized matters (the initial
-      // plan legitimately carries a SortMergeJoin that AQE then demotes
-      // to a broadcast once it sees the build side's true size)
+      // sections; only what AQE actually finalized matters
       val plan = full.split("== Initial Plan ==").head
-      assert(plan.contains("BroadcastHashJoin"),
-        "grid join lost its broadcast under AQE re-optimization")
-      assert(!plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"),
+      assert(plan.contains("MapPartitions "), "the fold is missing from the final plan")
+      assert(!plan.contains("SortMergeJoin") && !plan.contains("NestedLoopJoin") &&
+        !plan.contains("CartesianProduct"),
         "AQE re-planned the pruned kernel into a shuffle/cross join")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }

@@ -3,24 +3,22 @@ package graft.bench
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev-only paired timer for the pruned ingest delta as the batch grows:
-  * the per-route fold (`ScoringPipeline.accidentDeltaTotals`, pruned) against
-  * the grid-pruned pair kernel (`KernelPruning.scoreRoutesPruned`, the
-  * delta's earlier path), over `graft.Bench`'s synthetic routes and
-  * accidents. Per batch size it runs each side once to warm up, then
-  * `reps` pairs in alternating order, and prints the median and
-  * quartiles of each side's seconds and the median per-pair ratio.
-  * Test-tree main: running it never moves the src/main stamp.
+/** Dev-only paired timer for the ingest delta as the batch grows: the
+  * pruned fold (`ScoringPipeline.accidentDeltaTotals`, `pruned = true`)
+  * against the exact fold (`pruned = false`, which scores every pair), over
+  * `graft.Bench`'s synthetic routes and accidents. Per batch size it runs
+  * each side once to warm up, then `reps` pairs in alternating order, and
+  * prints the median and quartiles of each side's seconds and the median
+  * per-pair ratio. Test-tree main: running it never moves the src/main
+  * stamp.
   *
   *   sbt 'Test/runMain graft.bench.IngestBatchBench [routes] [batch,batch,…] [reps] [cores] [spread]'
   *
   * Defaults: 20000 routes, batches 100,1000,7000,30000, 5 reps, 4 cores,
   * spread 1. A `spread` s ≠ 1 stretches both sides' coordinates: the
   * synthetic 20° × 30° box becomes 20·s° × 30·s° from 60°S 180°W
-  * (latitude clamped at 70°N, inside the grid kernel's 72° domain). Fewer
-  * pairs then fall inside a gate, so the fold's per-pair cost tends to its
-  * trig-free skip while the grid kernel's candidates thin out — the
-  * fold's least favourable shape.
+  * (latitude clamped at 70°N). Fewer pairs then fall inside a gate, and
+  * both folds skip more of them without trig.
   */
 object IngestBatchBench {
   def main(args: Array[String]): Unit = {
@@ -59,24 +57,22 @@ object IngestBatchBench {
     batches.foreach { n =>
       val batch = stretch(graft.Bench.syntheticAccidents(spark, n), "a_lat", "a_lon")
         .localCheckpoint()
-      def fold(): Double = time(
-        graft.pipeline.ScoringPipeline.accidentDeltaTotals(routes, batch, planDate, pruned = true))
-      def grid(): Double = time(
-        graft.kernel.KernelPruning.scoreRoutesPruned(routes, batch, planDate)
-          .select(col("route_id"), col("total_influence").as("d_total"),
-            col("n_contributing").as("d_n")))
-      fold(); grid()
+      def delta(pruned: Boolean): Double = time(
+        graft.pipeline.ScoringPipeline.accidentDeltaTotals(routes, batch, planDate, pruned))
+      def fold(): Double = delta(pruned = true)
+      def exact(): Double = delta(pruned = false)
+      fold(); exact()
       val pairs = (0 until reps).map { r =>
-        if (r % 2 == 0) { val f = fold(); (f, grid()) }
-        else { val g = grid(); (fold(), g) }
+        if (r % 2 == 0) { val f = fold(); (f, exact()) }
+        else { val e = exact(); (fold(), e) }
       }
       val (f25, f50, f75) = quartiles(pairs.map(_._1))
-      val (g25, g50, g75) = quartiles(pairs.map(_._2))
-      val ratio = quartiles(pairs.map { case (f, g) => f / g })._2
-      val foldWins = pairs.count { case (f, g) => f < g }
+      val (e25, e50, e75) = quartiles(pairs.map(_._2))
+      val ratio = quartiles(pairs.map { case (f, e) => f / e })._2
+      val foldWins = pairs.count { case (f, e) => f < e }
       println(f"[ingestbench] routes=$nRoutes%d batch=$n%d cores=$cores%d reps=$reps%d spread=$spread%.0f " +
-        f"fold_s=$f50%.3f [$f25%.3f,$f75%.3f] grid_s=$g50%.3f [$g25%.3f,$g75%.3f] " +
-        f"fold/grid=$ratio%.2f fold_wins=$foldWins%d/$reps%d")
+        f"fold_s=$f50%.3f [$f25%.3f,$f75%.3f] exact_s=$e50%.3f [$e25%.3f,$e75%.3f] " +
+        f"fold/exact=$ratio%.2f fold_wins=$foldWins%d/$reps%d")
     }
     spark.stop()
   }

@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   * `src/main/scala` so BENCH_LOCAL.json's min-merge history survives
   * adding measurement tooling; the generators and kernel under test are
   * the same public `graft.Bench.syntheticRoutes/syntheticAccidents` and
-  * `graft.kernel.KernelPruning.scoreRoutesPruned` the committed
-  * `kernel_batch_10x/100x` entries run — this file adds no third code
-  * path, only a multiplier knob.
+  * `graft.kernel.KernelPruning.scoreRoutesPruned` (the pruned fold) the
+  * committed `kernel_batch_10x/100x` entries run — this file adds no
+  * third code path, only a multiplier knob. The committed series in
+  * LINEARITY.md was measured on the grid-cell join the fold replaced.
   *
   * Run: SPARK_GRAFT_CPUS=32 sbt 'Test/runMain graft.bench.LinearityPoint 500'
   * Prints one bare JSON line: {"metric":"kernel_batch_500x","value":…}.

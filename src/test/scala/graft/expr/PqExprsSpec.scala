@@ -220,27 +220,4 @@ class PqExprsSpec extends SparkSpec {
     assert(interpreted == "pq_adc_score: code 7 of subspace 1 indexes outside the LUT")
     assert(codegen == interpreted)
   }
-
-  test("evalonce: identity values, both engines, and pins a single evaluation") {
-    // value identity: wrapped == unwrapped on nulls and normal values
-    def frame: DataFrame = spark.sql(
-      """SELECT id, x FROM VALUES (0, 1.5D), (1, CAST(NULL AS DOUBLE)), (2, -0.0D)
-        |  AS t(id, x)""".stripMargin)
-      .repartition(2) // defeat ConvertToLocalRelation so codegen runs
-      .select(col("id"), col("x"),
-        EvalOnceExpr.evalOnce(sqrt(abs(col("x")) + 1.0)).as("y"))
-    val plain = frame.select(col("id"), col("x"),
-      sqrt(abs(col("x")) + 1.0).as("y")).orderBy("id").collect().map(_.toString)
-    val pinned = frame.orderBy("id").collect().map(_.toString)
-    assert(plain.sameElements(pinned))
-    assertParity(frame.orderBy("id"))
-    // the single-evaluation pin: a filter on the wrapped column must stay
-    // ABOVE the projection (no pushdown-inlining), so the optimized plan
-    // contains the SQRT exactly once — the unwrapped form is inlined into
-    // the filter and evaluated twice
-    val filtered = frame.where(col("y") > 1.0)
-    val planStr = filtered.queryExecution.executedPlan.toString
-    assert(planStr.sliding("SQRT".length).count(_ == "SQRT") == 1,
-      s"expected exactly one SQRT in the pinned plan:\n$planStr")
-  }
 }

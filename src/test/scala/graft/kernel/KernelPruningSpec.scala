@@ -1,6 +1,6 @@
 package graft.kernel
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -31,11 +31,80 @@ class KernelPruningSpec extends SparkSpec {
 
   private val planDate = to_date(lit("2024-07-15"))
 
+  /** The fold over one plan date, exact or pruned at the significance floor. */
+  private def fold(rts: DataFrame, accs: DataFrame, pruned: Boolean): DataFrame =
+    SafetyKernel.scoreRoutesForDates(rts, accs, Seq(planDate), pruned)
+
+  /** (route_id, total_influence, n_contributing) rows as strings, by route:
+    * string equality is bit-equality of the doubles (NaN and NULL included).
+    */
+  private def totalRows(df: DataFrame): Seq[String] =
+    df.select("route_id", "total_influence", "n_contributing").orderBy("route_id")
+      .collect().map(_.toString).toSeq
+
+  /** The pruned fold's definition on the pair grain: `pairInfluence` with
+    * every non-NULL influence beyond `dist_km <= __h · radiusFactor`
+    * replaced by 0.0, summed per route.
+    */
+  private def gatedPairTotals(rts: DataFrame, accs: DataFrame): DataFrame = {
+    val gated = SafetyKernel.pairInfluence(
+        rts.withColumn("gate_km", graft.expr.WeightExprs.spatialBandwidthKm(
+          graft.expr.WeightExprs.asciiLower(col("route_type"))) *
+          KernelPruning.SignificanceRadiusFactor), accs, planDate)
+      .withColumn("influence",
+        when(col("influence").isNull || col("dist_km") <= col("gate_km"), col("influence"))
+          .otherwise(lit(0.0)))
+    SafetyKernel.scoreRoutes(gated)
+  }
+
+  /** route_id → (total_influence, n_contributing, risk_score) row. */
+  private def byRoute(df: DataFrame): Map[Long, Row] =
+    df.select("route_id", "total_influence", "n_contributing", "risk_score").collect()
+      .map(r => r.getLong(0) -> r).toMap
+
+  /** The pruned kernel keeps every significant pair, checked at route
+    * grain: its totals are bitwise the gated pair sums, and its
+    * `n_contributing` (pairs above the floor) equals the exact kernel's for
+    * every route. Returns the pruned and the exact rows by route.
+    */
+  private def keepsEverySignificantPair(rts: DataFrame,
+                                        accs: DataFrame): (Map[Long, Row], Map[Long, Row]) = {
+    val pruned = KernelPruning.scoreRoutesPruned(rts, accs, planDate)
+    val prunedTotals = totalRows(pruned)
+    val gatedTotals = totalRows(gatedPairTotals(rts, accs))
+    val firstDiff = prunedTotals.zipAll(gatedTotals, "", "").find { case (a, b) => a != b }
+    assert(firstDiff.isEmpty, s"pruned totals vs the gated pair sums: $firstDiff")
+    val p = byRoute(pruned)
+    val e = byRoute(SafetyKernel.scoreRoutes(rts, accs, planDate))
+    assert(p.keySet == e.keySet)
+    val miscounted = e.collect {
+      case (id, r) if p(id).getLong(2) != r.getLong(2) => (id, p(id).getLong(2), r.getLong(2))
+    }
+    assert(miscounted.isEmpty, s"(route, pruned n, exact n): ${miscounted.take(5)}")
+    (p, e)
+  }
+
+  private def gateKm(routeType: String): Double =
+    graft.expr.WeightExprs.SpatialBandwidth(routeType) * KernelPruning.SignificanceRadiusFactor
+
+  private def distKm(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double =
+    PairMath.haversineKm(math.cos(math.toRadians(lat1)), lat1, lon1,
+      math.cos(math.toRadians(lat2)), lat2, lon2)
+
+  private def accidentRows(rows: Seq[(Long, Option[Double], Option[Double], String)]): DataFrame =
+    rows.zipWithIndex.map { case ((id, lat, lon, t), i) =>
+      (id, lat, lon, Some(1500.0 + 150 * i), t, if (i % 2 == 0) "fatal" else "serious",
+        java.sql.Date.valueOf(s"2023-0${1 + i % 9}-10"), Some(6.0 + i % 5))
+    }.toDF("accident_id", "a_lat", "a_lon", "a_elev", "acc_type", "severity_raw", "a_date",
+      "a_difficulty")
+
   test("prune radius formula: floor 1e-6 with alpine bandwidth") {
-    val r = KernelPruning.pruneRadiusKm(1e-6)
+    // alpine has the widest bandwidth, so its gate is the widest radius
+    val r = gateKm("alpine")
     val expected = 75.0 * math.sqrt(2.0 * math.log(KernelPruning.NonSpatialBound / 1e-6))
     assert(approx(r, expected, 1e-9))
     assert(r > 300 && r < 500) // sanity: a few hundred km
+    assert(graft.expr.WeightExprs.SpatialBandwidth.values.forall(_ <= 75.0))
   }
 
   test("pruned scoring matches exact scoring within the floor error bound") {
@@ -45,7 +114,7 @@ class KernelPruningSpec extends SparkSpec {
     val pruned = KernelPruning.scoreRoutesPruned(routes, accidents, planDate)
       .select("route_id", "risk_score").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(pruned.keySet == exact.keySet) // every route present (left join)
+    assert(pruned.keySet == exact.keySet) // the exact kernel's rows
     // dropped pairs each contribute < floor → risk error < nAcc·floor·7
     val bound = 200 * SafetyKernel.SignificanceFloor * 7.0 + 1e-9
     val maxErr = exact.keys.map(k => math.abs(exact(k) - pruned(k))).max
@@ -53,29 +122,19 @@ class KernelPruningSpec extends SparkSpec {
   }
 
   test("pruned pair stream is a strict subset and keeps every significant pair") {
-    val exactPairs = SafetyKernel.pairInfluence(routes, accidents, planDate)
-      .select("route_id", "accident_id", "influence")
-      .where(col("influence") >= SafetyKernel.SignificanceFloor)
-      .as[(Long, Long, Double)].collect().toSet
-    val prunedPairs = KernelPruning.pairInfluencePruned(routes, accidents, planDate)
-      .select("route_id", "accident_id", "influence")
-      .as[(Long, Long, Double)].collect()
-    // no duplicates from the 3×3 fan-out (each pair lands in exactly one cell join)
-    assert(prunedPairs.length == prunedPairs.map(p => (p._1, p._2)).distinct.length)
-    // every significant pair survives with identical influence
-    val prunedSet = prunedPairs.toSet
-    assert(exactPairs.subsetOf(prunedSet))
-    // and pruning actually pruned something on spread-out data
-    val totalPairs = routes.count() * accidents.count()
-    assert(prunedPairs.length < totalPairs)
+    val (pruned, exact) = keepsEverySignificantPair(routes, accidents)
+    assert(pruned.size == 500)
+    // and pruning actually dropped pairs on spread-out data
+    assert(exact.exists { case (id, r) => pruned(id).getDouble(1) != r.getDouble(1) },
+      "no route lost a pair to the gate")
   }
 
   test("10x density + planted hot cell: pruned still bit-equal above the floor") {
     // the scale-stress shape the bench runs at 1.7M × 69K: accident density
     // 100× the base spec, including a degenerate cluster — 5000 accidents
-    // piled onto ONE coordinate (one grid cell). Equality above the floor
-    // must be exact, not approximate, and the 3×3 fan-out must not
-    // duplicate pairs even in the hot cell.
+    // piled onto ONE coordinate. The pruned totals must equal the gated
+    // pair sums bit for bit, and every route keeps its exact contributor
+    // count, one row per route.
     val denseRoutes = spark.range(1000).select(
       col("id").as("route_id"),
       (lit(35.0) + (col("id") % 2000) / 100.0).as("lat"),
@@ -103,38 +162,24 @@ class KernelPruningSpec extends SparkSpec {
       (lit(4.0) + (col("id") % 13)).as("a_difficulty"))
     val dense = spread.union(hotCell)
 
-    val exactPairs = SafetyKernel.pairInfluence(denseRoutes, dense, planDate)
-      .select("route_id", "accident_id", "influence")
-      .where(col("influence") >= SafetyKernel.SignificanceFloor)
-      .as[(Long, Long, Double)].collect().toSet
-    val prunedPairs = KernelPruning.pairInfluencePruned(denseRoutes, dense, planDate)
-      .select("route_id", "accident_id", "influence")
-      .as[(Long, Long, Double)].collect()
-    assert(prunedPairs.length == prunedPairs.map(p => (p._1, p._2)).distinct.length,
-      "3x3 fan-out duplicated a pair")
-    assert(exactPairs.subsetOf(prunedPairs.toSet),
-      "a significant pair was pruned at 10x density")
-    // the planted cluster is inside the grid's reach of nearby routes
-    assert(exactPairs.exists(_._2 >= 1000000L), "hot cell produced no significant pairs")
+    val (pruned, exact) = keepsEverySignificantPair(denseRoutes, dense)
+    assert(pruned.size == 1000)
+    // the planted cluster is inside the gate of nearby routes
+    assert(KernelPruning.scoreRoutesPruned(denseRoutes, hotCell, planDate)
+      .where(col("n_contributing") > 0).count() > 0, "hot cell produced no significant pairs")
     // risk error bound still holds with 20K accidents
-    val exact = SafetyKernel.scoreRoutes(denseRoutes, dense, planDate)
-      .select("route_id", "risk_score").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val pruned = KernelPruning.scoreRoutesPruned(denseRoutes, dense, planDate)
-      .select("route_id", "risk_score").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val bound = 20000 * SafetyKernel.SignificanceFloor * 7.0 + 1e-9
-    val maxErr = exact.keys.map(k => math.abs(exact(k) - pruned(k))).max
+    val maxErr = exact.keys.map(k => math.abs(exact(k).getDouble(3) - pruned(k).getDouble(3))).max
     assert(maxErr <= bound, s"max error $maxErr vs bound $bound")
   }
 
   test("geo-skewed catalog (half the routes in ONE tier-0 cell): still bit-equal above the floor") {
     // the kernel_batch_10x_skew layout at spec scale: Bench's skewed
-    // generator plants ids >= n/2 strictly inside one tier-0 grid cell.
+    // generator plants ids >= n/2 strictly inside one hot cell
+    // (Bench.HotCellDegrees, the grid kernel's former sport-tier cell).
     // Route-side clustering must change NOTHING about correctness — the
-    // equi-join's losslessness argument is per-pair geometry, independent
-    // of how many routes share a cell — and the fan-out must not
-    // duplicate pairs in the hot cell.
+    // gate is per-pair geometry, independent of how many routes share a
+    // place — and every route keeps one row.
     // 1500 accidents: the synthetic (lat, lon) pattern is a 1-D curve
     // (both coords driven by id), so small counts leave the hot cell's
     // neighborhood empty — 1500 puts the nearest accident ~40 km from
@@ -143,8 +188,8 @@ class KernelPruningSpec extends SparkSpec {
     val skewed = graft.Bench.syntheticRoutesSkewed(spark, 2000)
     val acc = graft.Bench.syntheticAccidents(spark, 1500)
 
-    // the plant is real: the hot half occupies exactly one tier-0 cell
-    val (latDeg, lonDeg) = KernelPruning.tier0CellDegrees()
+    // the plant is real: the hot half occupies exactly one cell
+    val (latDeg, lonDeg) = graft.Bench.HotCellDegrees
     val hotCells = skewed.where(col("route_id") >= 1000)
       .select(floor(col("lat") / latDeg).as("la"),
         floor((col("lon") + 180.0) / lonDeg).as("lo"))
@@ -152,45 +197,34 @@ class KernelPruningSpec extends SparkSpec {
     assert(hotCells == 1L, s"hot half spans $hotCells cells, expected 1")
     assert(skewed.count() == 2000)
 
-    val exactPairs = SafetyKernel.pairInfluence(skewed, acc, planDate)
-      .select("route_id", "accident_id", "influence")
-      .where(col("influence") >= SafetyKernel.SignificanceFloor)
-      .as[(Long, Long, Double)].collect().toSet
-    val prunedPairs = KernelPruning.pairInfluencePruned(skewed, acc, planDate)
-      .select("route_id", "accident_id", "influence")
-      .as[(Long, Long, Double)].collect()
-    assert(prunedPairs.length == prunedPairs.map(p => (p._1, p._2)).distinct.length,
-      "fan-out duplicated a pair under route-side clustering")
-    assert(exactPairs.subsetOf(prunedPairs.toSet),
-      "a significant pair was pruned on the skewed layout")
+    val (pruned, _) = keepsEverySignificantPair(skewed, acc)
+    assert(pruned.size == 2000)
     // hot routes genuinely participate (the cell sits inside the
     // continental accident spread, so significant pairs must exist there)
-    assert(exactPairs.exists(_._1 >= 1000L),
+    assert(pruned.exists { case (id, r) => id >= 1000L && r.getLong(2) > 0 },
       "hot-cell routes produced no significant pairs — plant is dead")
   }
 
   test("accident-skewed history (half the accidents in ONE tier-0 cell): still bit-equal above the floor") {
     // the kernel_batch_10x_accskew layout at spec scale: Bench's skewed
-    // accident generator plants ids >= n/2 strictly inside one tier-0
+    // accident generator plants ids >= n/2 strictly inside the same hot
     // cell — the direction the route-skew analysis names as dangerous
-    // (it lengthens the candidate list of every route whose window
-    // covers the hot cell, and all hot accidents share ONE grid key).
-    // Correctness must be unchanged: losslessness is per-pair geometry,
-    // and the fan-out must not duplicate pairs however many accidents
-    // share a cell.
+    // (the hot accidents fall in the latitude band of every nearby route).
+    // Correctness must be unchanged: the gate is per-pair geometry,
+    // however many accidents share a place.
     // 6000 routes = ONE full period of the synthetic lattice (lat cycles
     // mod 2000, lon mod 3000 → 6000 distinct points); shorter prefixes
     // are a partial diagonal whose nearest point to the hot cell is
-    // ~750 km — outside every tier's gate radius — which would leave the
+    // ~750 km — outside every gate radius — which would leave the
     // liveness assertion below vacuously dead. At the full lattice the
-    // nearest points sit 68-111 km out, inside the wide-tier gates (the
+    // nearest points sit 68-111 km out, inside the wider gates (the
     // bench-scale catalog replays this same 6000-point lattice 280×, so
     // liveness here proves the 10x arm's hot half is live too).
     val rts = graft.Bench.syntheticRoutes(spark, 6000)
     val acc = graft.Bench.syntheticAccidentsSkewed(spark, 1500)
 
-    // the plant is real: the hot half occupies exactly one tier-0 cell
-    val (latDeg, lonDeg) = KernelPruning.tier0CellDegrees()
+    // the plant is real: the hot half occupies exactly one cell
+    val (latDeg, lonDeg) = graft.Bench.HotCellDegrees
     val hotCells = acc.where(col("accident_id") >= 750)
       .select(floor(col("a_lat") / latDeg).as("la"),
         floor((col("a_lon") + 180.0) / lonDeg).as("lo"))
@@ -198,27 +232,19 @@ class KernelPruningSpec extends SparkSpec {
     assert(hotCells == 1L, s"hot half spans $hotCells cells, expected 1")
     assert(acc.count() == 1500)
 
-    val exactPairs = SafetyKernel.pairInfluence(rts, acc, planDate)
-      .select("route_id", "accident_id", "influence")
-      .where(col("influence") >= SafetyKernel.SignificanceFloor)
-      .as[(Long, Long, Double)].collect().toSet
-    val prunedPairs = KernelPruning.pairInfluencePruned(rts, acc, planDate)
-      .select("route_id", "accident_id", "influence")
-      .as[(Long, Long, Double)].collect()
-    assert(prunedPairs.length == prunedPairs.map(p => (p._1, p._2)).distinct.length,
-      "fan-out duplicated a pair under accident-side clustering")
-    assert(exactPairs.subsetOf(prunedPairs.toSet),
-      "a significant pair was pruned on the accident-skewed layout")
+    val (pruned, _) = keepsEverySignificantPair(rts, acc)
+    assert(pruned.size == 6000)
     // hot accidents genuinely participate (the cell sits inside the
     // continental route spread, so significant pairs must exist there)
-    assert(exactPairs.exists(_._2 >= 750L),
+    assert(KernelPruning.scoreRoutesPruned(rts, acc.where(col("accident_id") >= 750), planDate)
+      .where(col("n_contributing") > 0).count() > 0,
       "hot-cell accidents produced no significant pairs — plant is dead")
   }
 
-  test("polar maxAbsLat: degenerate 1-2 cell lon rings emit no duplicate pairs") {
-    // at maxAbsLat = 89 the widest tier's lon ring collapses to ONE cell
-    // (minDeg ≈ 207°) — the old constant ±1 fan-out then emitted every
-    // accident 3× per (tier, dlat) as duplicate keys, tripling influence
+  test("polar routes (88-89°N): one row each, every significant pair kept") {
+    // near the pole a gate spans every longitude: the grid kernel this
+    // replaced needed a widened latitude domain here and de-duplicated its
+    // collapsed longitude rings; the fold has neither
     val polarRoutes = spark.range(40).select(
       col("id").as("route_id"),
       (lit(88.0) + (col("id") % 100) / 100.0).as("lat"),
@@ -233,70 +259,52 @@ class KernelPruningSpec extends SparkSpec {
       lit("fatal").as("severity_raw"),
       date_add(to_date(lit("2024-01-01")), (col("id") % 730).cast("int")).as("a_date"),
       (lit(4.0) + ((col("id") * 7) % 13)).as("a_difficulty"))
-    val pairs = KernelPruning.pairInfluencePruned(
-      polarRoutes, polarAcc, planDate, maxAbsLat = 89.0)
-      .select("route_id", "accident_id", "influence")
-      .as[(Long, Long, Double)].collect()
-    assert(pairs.nonEmpty)
-    assert(pairs.length == pairs.map(p => (p._1, p._2)).distinct.length,
-      "duplicate (route, accident) pairs from a collapsed lon ring")
-    // and every significant exact pair still survives with equal influence
-    val exact = SafetyKernel.pairInfluence(polarRoutes, polarAcc, planDate)
-      .select("route_id", "accident_id", "influence")
-      .where(col("influence") >= SafetyKernel.SignificanceFloor)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(exact.subsetOf(pairs.toSet))
+    val (pruned, _) = keepsEverySignificantPair(polarRoutes, polarAcc)
+    assert(pruned.size == 40)
+    assert(pruned.values.exists(_.getLong(2) > 0))
   }
 
-  test("amplified weather (wmult) requires an explicit weatherBound") {
+  test("amplified weather (wmult): rejected when pruned, scored when exact") {
     val amplified = routes.withColumn("wmult", lit(1.5))
-    intercept[IllegalArgumentException] {
-      KernelPruning.pairInfluencePruned(amplified, accidents, planDate)
+    val ex = intercept[IllegalArgumentException] {
+      KernelPruning.scoreRoutesPruned(amplified, accidents, planDate)
     }
-    // with the bound declared, the radius grows to cover (wsim·wmult)³ and
-    // the pruned result matches the exact amplified kernel above the floor
-    val exact = SafetyKernel.pairInfluence(amplified, accidents, planDate)
-      .select("route_id", "accident_id", "influence")
-      .where(col("influence") >= SafetyKernel.SignificanceFloor)
-      .as[(Long, Long, Double)].collect().toSet
-    val pruned = KernelPruning.pairInfluencePruned(
-      amplified, accidents, planDate, weatherBound = 1.5)
-      .select("route_id", "accident_id", "influence")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(exact.subsetOf(pruned))
-    // the declared bound widens the gate monotonically
-    assert(KernelPruning.pruneRadiusKm(1e-6, 1.5) > KernelPruning.pruneRadiusKm(1e-6))
+    assert(ex.getMessage.contains("scoreRoutesForDates: routes carry wmult") &&
+      ex.getMessage.endsWith("use pairInfluence"), ex.getMessage)
+    // k16's path: the exact pair kernel scores (wsim·wmult) per pair
+    val plain = byRoute(SafetyKernel.scoreRoutes(routes, accidents, planDate))
+    val amp = byRoute(SafetyKernel.scoreRoutes(amplified, accidents, planDate))
+    assert(amp.keySet == plain.keySet)
+    assert(amp.exists { case (id, r) => r.getDouble(1) != plain(id).getDouble(1) },
+      "wmult changed no exact total")
   }
 
   test("an accident-side wmult is rejected by both pair kernels") {
-    // influenceColumns amplifies any joined wmult, but the pruned radius
-    // and its runtime cap read the routes only: accident-side amplification
-    // would be pruned with the unamplified radius and lose pairs silently
+    // influenceColumns amplifies any joined wmult, while the fold reads the
+    // weather factor from the accidents alone: the two would score an
+    // accident-side multiplier differently, so both reject it
     val amplified = accidents.withColumn("wmult", lit(1.5))
     val exact = intercept[IllegalArgumentException] {
       SafetyKernel.pairInfluence(routes, amplified, planDate)
     }
     assert(exact.getMessage.contains("pairInfluence: accidents carry wmult"), exact.getMessage)
     val pruned = intercept[IllegalArgumentException] {
-      KernelPruning.pairInfluencePruned(routes, amplified, planDate, weatherBound = 1.5)
+      KernelPruning.scoreRoutesPruned(routes, amplified, planDate)
     }
-    assert(pruned.getMessage.contains("pairInfluencePruned: accidents carry wmult"),
+    assert(pruned.getMessage.contains("scoreRoutesForDates: accidents carry wmult"),
       pruned.getMessage)
   }
 
-  test("a weatherBound smaller than the data's wmult fails loudly, not silently") {
-    // declared 1.1 but actual multiplier 2.0: before the runtime twin of
-    // the require, this silently lost above-floor pairs — now the first
-    // offending route raise_error's the job
-    val lying = routes.withColumn("wmult", lit(2.0))
-    val ex = intercept[Exception] {
-      KernelPruning.pairInfluencePruned(lying, accidents, planDate,
-        weatherBound = 1.1).count()
+  test("a route-side wmult fails the pruned kernel, whatever its values") {
+    // the grid kernel accepted a declared cap and checked it per route at
+    // execution; the fold rejects the column itself, before any job runs,
+    // so no multiplier (above 1, neutral or NULL) is scored unamplified
+    for (m <- Seq(lit(2.0), lit(1.0), lit(null).cast("double"))) {
+      val ex = intercept[IllegalArgumentException] {
+        KernelPruning.scoreRoutesPruned(routes.withColumn("wmult", m), accidents, planDate)
+      }
+      assert(ex.getMessage.contains("routes carry wmult (amplified weather)"), ex.getMessage)
     }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
-    assert(messages(ex).exists(_.contains("exceeds declared weatherBound")),
-      s"expected the wmult guard message, got: $ex")
   }
 
   test("SQL function registration: dot_f64 + parse_grade + simhash64 + weather_similarity") {
@@ -327,39 +335,6 @@ class KernelPruningSpec extends SparkSpec {
 
   // --- the pruned per-route fold (SafetyKernel.scoreRoutesForDates, pruned) -
 
-  /** The fold over one plan date, exact or pruned at the significance floor. */
-  private def fold(rts: DataFrame, accs: DataFrame, pruned: Boolean): DataFrame =
-    SafetyKernel.scoreRoutesForDates(rts, accs, Seq(planDate), pruned)
-
-  /** (route_id, total_influence, n_contributing) rows as strings, by route:
-    * string equality is bit-equality of the doubles (NaN and NULL included).
-    */
-  private def totalRows(df: DataFrame): Seq[String] =
-    df.select("route_id", "total_influence", "n_contributing").orderBy("route_id")
-      .collect().map(_.toString).toSeq
-
-  /** The pruned fold's definition on the pair grain: `pairInfluence` with
-    * every non-NULL influence beyond `dist_km <= __h · radiusFactor`
-    * replaced by 0.0, summed per route.
-    */
-  private def gatedPairTotals(rts: DataFrame, accs: DataFrame): DataFrame = {
-    val gated = SafetyKernel.pairInfluence(
-        rts.withColumn("gate_km", graft.expr.WeightExprs.spatialBandwidthKm(
-          graft.expr.WeightExprs.asciiLower(col("route_type"))) *
-          KernelPruning.SignificanceRadiusFactor), accs, planDate)
-      .withColumn("influence",
-        when(col("influence").isNull || col("dist_km") <= col("gate_km"), col("influence"))
-          .otherwise(lit(0.0)))
-    SafetyKernel.scoreRoutes(gated)
-  }
-
-  private def gateKm(routeType: String): Double =
-    graft.expr.WeightExprs.SpatialBandwidth(routeType) * KernelPruning.SignificanceRadiusFactor
-
-  private def distKm(lat1: Double, lon1: Double, lat2: Double, lon2: Double): Double =
-    PairMath.haversineKm(math.cos(math.toRadians(lat1)), lat1, lon1,
-      math.cos(math.toRadians(lat2)), lat2, lon2)
-
   /** The last accident latitude due north of (lat, lon) whose distance is
     * within `gate`: one ulp further north the pair is beyond it.
     */
@@ -374,13 +349,6 @@ class KernelPruningSpec extends SparkSpec {
     }
     lo
   }
-
-  private def accidentRows(rows: Seq[(Long, Option[Double], Option[Double], String)]): DataFrame =
-    rows.zipWithIndex.map { case ((id, lat, lon, t), i) =>
-      (id, lat, lon, Some(1500.0 + 150 * i), t, if (i % 2 == 0) "fatal" else "serious",
-        java.sql.Date.valueOf(s"2023-0${1 + i % 9}-10"), Some(6.0 + i % 5))
-    }.toDF("accident_id", "a_lat", "a_lon", "a_elev", "acc_type", "severity_raw", "a_date",
-      "a_difficulty")
 
   test("pruned fold == pairInfluence gated at each route's radius, bitwise") {
     // NULL route and accident coordinates, a NaN distance (NaN latitude),
@@ -431,39 +399,68 @@ class KernelPruningSpec extends SparkSpec {
     assert(route6 == 0.0 + edgePairs(5L) && edgePairs(6L) > 0.0, (route6, edgePairs))
   }
 
-  test("pruned fold vs the grid kernel: same pairs up to 72°, and the fold keeps polar ones") {
-    // up to maxAbsLat the grid keeps the same pairs; totals differ only by
-    // the order the pairs are summed in
-    val fused = fold(routes, accidents, pruned = true)
-      .select("route_id", "total_influence", "n_contributing").collect()
-      .map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    val grid = KernelPruning.scoreRoutesPruned(routes, accidents, planDate)
-      .select("route_id", "total_influence", "n_contributing").collect()
-      .map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    assert(fused.keySet == grid.keySet && fused.size == 500)
-    fused.foreach { case (id, (t, n)) =>
-      val (gt, gn) = grid(id)
-      assert(n == gn, s"route $id: n_contributing $n vs $gn")
-      assert(math.abs(t - gt) <= 1e-12 * math.abs(gt), s"route $id: total $t vs $gt")
-    }
-    assert(fused.values.count(_._2 > 0) > 100)
-    // and bitwise the gated pair sums, in accident order, over many pairs
-    assert(totalRows(fold(routes, accidents, pruned = true)) ==
-      totalRows(gatedPairTotals(routes, accidents)))
-    // at 80°N the alpine route's 401 km gate spans more longitude than the
-    // grid's ±2 cells (sized at 72°): an accident 15° east (~289 km) is in
-    // radius, the grid never pairs them, the fold does
+  test("scoreRoutesPruned is the one-date pruned fold, polar pairs included") {
+    val pruned = KernelPruning.scoreRoutesPruned(routes, accidents, planDate)
+    // the columns of scoreRoutes, in order and type
+    assert(pruned.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+      "route_id" -> "bigint", "total_influence" -> "double", "n_contributing" -> "bigint",
+      "risk_score" -> "double", "color_code" -> "string"))
+    def allRows(df: DataFrame): Seq[String] =
+      df.select("route_id", "total_influence", "n_contributing", "risk_score", "color_code")
+        .orderBy("route_id").collect().map(_.toString).toSeq
+    val viaFold = allRows(fold(routes, accidents, pruned = true))
+    assert(allRows(pruned) == viaFold && viaFold.size == 500)
+    assert(byRoute(pruned).values.count(_.getLong(2) > 0) > 100)
+    // bitwise the gated pair sums, in accident order, over many pairs
+    assert(totalRows(pruned) == totalRows(gatedPairTotals(routes, accidents)))
+    // at 80°N the alpine route's 401 km gate spans 15° of longitude (~289
+    // km), which the grid kernel this replaced never paired (its cells were
+    // sized at 72°): the fold has no latitude domain and keeps the pair
     val polarRoute = Seq((1L, 80.0, 0.0, Some(3000.0), "alpine", Some(10.0)))
       .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
     val polarAcc = accidentRows(Seq((1L, Some(80.0), Some(15.0), "alpine")))
     assert(distKm(80.0, 0.0, 80.0, 15.0) < gateKm("alpine"))
-    val polarFold = fold(polarRoute, polarAcc, pruned = true)
-      .select("total_influence", "n_contributing").as[(Double, Long)].head()
-    val polarGrid = KernelPruning.scoreRoutesPruned(polarRoute, polarAcc, planDate)
-      .select("total_influence", "n_contributing").as[(Double, Long)].head()
-    assert(polarFold._1 > 0.0 && polarFold._2 == 1L, polarFold)
-    assert(polarGrid == ((0.0, 0L)), polarGrid)
-    assert(totalRows(fold(polarRoute, polarAcc, pruned = true)) ==
-      totalRows(gatedPairTotals(polarRoute, polarAcc)))
+    val polar = KernelPruning.scoreRoutesPruned(polarRoute, polarAcc, planDate)
+    val (t, n) = polar.select("total_influence", "n_contributing").as[(Double, Long)].head()
+    assert(t > 0.0 && n == 1L, (t, n))
+    assert(totalRows(polar) == totalRows(gatedPairTotals(polarRoute, polarAcc)))
+  }
+
+  test("scoreRoutesPruned rows: NULL coordinate, repeated id, no accidents") {
+    // the exact kernel's row contract (SafetyKernel.scoreRoutes): a
+    // NULL-coordinate route reads NULL/0, a repeated route_id gives one
+    // row, a route no pair reaches reads a total with its dropped sub-floor
+    // pairs removed, and an empty accident set gives no rows
+    val rts = Seq[(Long, Option[Double], Option[Double], Option[Double], String, Option[Double])](
+      (1L, Some(40.0), Some(-105.0), Some(3000.0), "alpine", Some(10.0)),
+      (2L, None, Some(-105.0), Some(2000.0), "sport", Some(12.0)),
+      (3L, Some(40.2), Some(-105.1), Some(2500.0), "trad", Some(8.0)),
+      (3L, Some(40.2), Some(-105.1), Some(2500.0), "trad", Some(8.0)),
+      (4L, Some(43.5), Some(-105.0), Some(1800.0), "sport", Some(7.0)))
+      .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
+    val accs = accidentRows(Seq(
+      (1L, Some(40.1), Some(-105.0), "alpine"),
+      (2L, Some(40.5), Some(-105.3), "trad")))
+    // route 4 is ~334 km from the nearer accident, beyond its 134 km gate
+    assert(distKm(43.5, -105.0, 40.5, -105.3) > gateKm("sport"))
+    def shape(df: DataFrame): Seq[(Long, Boolean, Long)] =
+      df.select(col("route_id"), col("total_influence").isNull, col("n_contributing"))
+        .as[(Long, Boolean, Long)].collect().sortBy(_._1).toSeq
+    val pruned = KernelPruning.scoreRoutesPruned(rts, accs, planDate)
+    val exact = SafetyKernel.scoreRoutes(rts, accs, planDate)
+    assert(shape(pruned) == shape(exact))
+    assert(shape(pruned) == Seq((1L, false, 2L), (2L, true, 0L), (3L, false, 4L), (4L, false, 0L)),
+      shape(pruned))
+    val p = byRoute(pruned)
+    val e = byRoute(exact)
+    // every pair of routes 1 and 3 is inside the gate: the exact totals
+    assert(p(1L).getDouble(1) == e(1L).getDouble(1))
+    // route 4's pairs are all beyond it: 0.0 for the exact sub-floor total
+    assert(p(4L).getDouble(1) == 0.0 &&
+      e(4L).getDouble(1) > 0.0 && e(4L).getDouble(1) < 2 * SafetyKernel.SignificanceFloor,
+      (p(4L), e(4L)))
+    val none = accs.where(lit(false))
+    assert(KernelPruning.scoreRoutesPruned(rts, none, planDate).count() == 0L)
+    assert(SafetyKernel.scoreRoutes(rts, none, planDate).count() == 0L)
   }
 }

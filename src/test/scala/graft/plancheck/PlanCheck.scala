@@ -39,6 +39,12 @@ object PlanCheck {
   private def countLines(plan: String, needle: String): Int =
     plan.linesIterator.count(_.contains(needle))
 
+  private def countOcc(hay: String, needle: String): Int = {
+    var n = 0; var i = hay.indexOf(needle)
+    while (i >= 0) { n += 1; i = hay.indexOf(needle, i + needle.length) }
+    n
+  }
+
   /** Same code-identity notion as Bench and QUANT_LADDER.md, so a
     * PLANCHECK row is checkable against the code state it was taken from
     * (single shared impl: [[graft.SrcStamp]]).
@@ -91,22 +97,28 @@ object PlanCheck {
         "n_hash_exchanges" -> exchanges.toString))
     }
 
-    // 3. pruned kernel: grid equi-join is a broadcast hash join, no cross join
-    contract("kernel_pruned_equijoin") {
+    // 3. pruned kernel is the per-route fold: exactly one fold operator
+    //    (MapPartitions) and no join of any kind — no cell equi-join, no
+    //    cross join. Plant: the grid-cell pair kernel this replaced plans a
+    //    BroadcastHashJoin and no fold (n_fold_ops 1→0, n_joins 0→1).
+    contract("kernel_pruned_fold") {
       val pruned = graft.kernel.KernelPruning.scoreRoutesPruned(
         graft.queries.Derived.routes(spark, dir),
         graft.queries.Derived.accidents(spark, dir),
         to_date(lit("2024-07-15")))
       val plan = planString(pruned)
-      val noCross = !plan.contains("NestedLoopJoin") && !plan.contains("CartesianProduct")
-      val bhj = plan.contains("BroadcastHashJoin")
-      (noCross && bhj, Seq(
-        "broadcast_hash_join" -> bhj.toString,
-        "no_cross_join" -> noCross.toString))
+      val folds = countOcc(plan, "MapPartitions ")
+      val joins = countOcc(plan, "Join") + countOcc(plan, "CartesianProduct")
+      (folds == 1 && joins == 0, Seq(
+        "n_fold_ops" -> folds.toString,
+        "n_joins" -> joins.toString))
     }
 
-    // 4. pruned kernel keeps its broadcast under AQE re-optimization
-    //    (the one contract that needs an execution — AQE finalizes on run)
+    // 4. the pruned kernel keeps its shape under AQE re-optimization (the
+    //    one contract that needs an execution — AQE finalizes on run): the
+    //    final plan holds the fold and no sort-merge, nested-loop or
+    //    cartesian join. Plant: the grid kernel's final plan holds no fold
+    //    (final_fold_ops 1→0).
     contract("kernel_pruned_aqe_final") {
       spark.conf.set("spark.sql.adaptive.enabled", "true")
       try {
@@ -118,13 +130,13 @@ object PlanCheck {
         val full = planString(pruned)
         val finalized = full.contains("isFinalPlan=true")
         val finalPlan = full.split("== Initial Plan ==").head
-        val bhj = finalPlan.contains("BroadcastHashJoin")
-        val noSmj = !finalPlan.contains("SortMergeJoin") &&
-          !finalPlan.contains("CartesianProduct")
-        (finalized && bhj && noSmj, Seq(
+        val folds = countOcc(finalPlan, "MapPartitions ")
+        val noBadJoin = !finalPlan.contains("SortMergeJoin") &&
+          !finalPlan.contains("NestedLoopJoin") && !finalPlan.contains("CartesianProduct")
+        (finalized && folds == 1 && noBadJoin, Seq(
           "aqe_finalized" -> finalized.toString,
-          "final_broadcast_hash_join" -> bhj.toString,
-          "no_smj_or_cross" -> noSmj.toString))
+          "final_fold_ops" -> folds.toString,
+          "no_smj_nlj_or_cross" -> noBadJoin.toString))
       } finally spark.conf.set("spark.sql.adaptive.enabled", "false")
     }
 
@@ -308,11 +320,6 @@ object PlanCheck {
     //     (≥2 occurrences) and flips this contract (plant recorded in
     //     MUTATION_RUN.md).
     contract("dedup_sig_single_eval_d05_d06") {
-      def countOcc(hay: String, needle: String): Int = {
-        var n = 0; var i = hay.indexOf(needle)
-        while (i >= 0) { n += 1; i = hay.indexOf(needle, i + needle.length) }
-        n
-      }
       val d05 = planOf("d05_minhash_lsh")
       val d06 = planOf("d06_simhash")
       val d05Sigs = countOcc(d05, "minhash_sigs(")
@@ -326,40 +333,23 @@ object PlanCheck {
         "d06_checkpoint_scans" -> d06Rdd.toString))
     }
 
-    // 16. pruned kernel computes the haversine ONCE (round-17 funnel):
-    //     the EvalOnce pins keep the optimizer from inlining the gates
-    //     into the join condition and re-deriving dist in the influence
-    //     projection — the pre-17 plan carried TWO asin-haversines per
-    //     gated pair (join condition + projection). Values are identical
-    //     either way (the specs can't see this), so the contract is the
-    //     only guard: exactly ONE ASIN in the whole pruned plan, the
-    //     asin-free squared pre-gates present (SIN appears in the
-    //     candidate funnel), and the lat prefilter folded into the join
-    //     condition. Plant: dropping the EvalOnce wrappers (or reverting
-    //     to the inline haversineKmHoisted gate) flips asin_count to ≥2.
-    contract("kernel_pruned_single_haversine") {
-      def countOcc(hay: String, needle: String): Int = {
-        var n = 0; var i = hay.indexOf(needle)
-        while (i >= 0) { n += 1; i = hay.indexOf(needle, i + needle.length) }
-        n
-      }
+    // 16. the pruned kernel computes its haversine inside the fold, once
+    //     per visited pair (PairMath.haversineKm), never as a Catalyst
+    //     expression: the plan holds no ASIN and no evalonce pin. Plant:
+    //     the grid kernel this replaced computes dist_km in Catalyst (one
+    //     ASIN) behind three evalonce pins (asin_count 0→1, evalonce_pins
+    //     0→3).
+    contract("kernel_pruned_haversine_in_fold") {
       val pruned = graft.kernel.KernelPruning.scoreRoutesPruned(
         graft.queries.Derived.routes(spark, dir),
         graft.queries.Derived.accidents(spark, dir),
         to_date(lit("2024-07-15")))
       val plan = planString(pruned)
       val asinCount = countOcc(plan, "ASIN(")
-      // anchored to the Join node's condition (round-18 advisor fix): a
-      // regression that demotes the prefilter to a post-join Filter —
-      // losing the short-circuit before the broadcast row is fetched —
-      // must fail this, not just "* 111.0 appears somewhere in the plan"
-      val latPreInJoin = plan.linesIterator.exists(l =>
-        l.contains("BroadcastHashJoin") && l.contains("* 111.0"))
-      val pinned = countOcc(plan, "evalonce(") >= 3
-      (asinCount == 1 && latPreInJoin && pinned, Seq(
+      val pins = countOcc(plan, "evalonce(")
+      (asinCount == 0 && pins == 0, Seq(
         "asin_count" -> asinCount.toString,
-        "lat_prefilter_present" -> latPreInJoin.toString,
-        "evalonce_pins" -> pinned.toString))
+        "evalonce_pins" -> pins.toString))
     }
 
     // 17. nightly multi-date kernel shares pair geometry as a per-route
@@ -374,11 +364,6 @@ object PlanCheck {
     //     BroadcastNestedLoopJoin and drops the fold (n_joins 0→1,
     //     n_fold_ops 1→0).
     contract("nightly_multidate_shared_geometry") {
-      def countOcc(hay: String, needle: String): Int = {
-        var n = 0; var i = hay.indexOf(needle)
-        while (i >= 0) { n += 1; i = hay.indexOf(needle, i + needle.length) }
-        n
-      }
       val scores = graft.pipeline.ScoringPipeline.computeDailyScores(
         graft.queries.Derived.routes(spark, dir),
         graft.queries.Derived.accidents(spark, dir),
@@ -461,11 +446,6 @@ object PlanCheck {
     //     into the merged plan (merged_kernel_ops 1, merged_checkpoint_scans
     //     0).
     contract("ingest_delta_fold_single_eval") {
-      def countOcc(hay: String, needle: String): Int = {
-        var n = 0; var i = hay.indexOf(needle)
-        while (i >= 0) { n += 1; i = hay.indexOf(needle, i + needle.length) }
-        n
-      }
       import graft.pipeline.ScoringPipeline
       import graft.queries.Derived
       val routes = Derived.routes(spark, dir)

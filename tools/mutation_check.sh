@@ -378,16 +378,15 @@ run_mutation_spec sink-static-overwrite \
       .parquet(outPath)' \
   'graft.pipeline.ScoringPipelineSpec'
 
-# M23: longitude prefilter over-tightened — the sound great-circle lower
-# bound 2R·√(cosφ₁cosφ₂)·|sin(Δλ/2)| doubled to 4R·… over-prunes: every
-# in-radius pair whose lon-bound exceeds half the gate is silently
-# dropped (exactly the failure class a wrong prefilter introduces), so
-# the "keeps every significant pair" subset spec and the exact-vs-pruned
-# error-bound spec both fail on the continental-spread fixture
-run_mutation_spec lon-prefilter-overtight \
-  src/main/scala/graft/kernel/KernelPruning.scala \
-  '.where(lit(2.0 * graft.expr.GeoExprs.EarthRadiusKm) *' \
-  '.where(lit(4.0 * graft.expr.GeoExprs.EarthRadiusKm) *' \
+# M23: the pruned fold's latitude band halved — PairMath.gateLatDeg is the
+# half-width of the band each route searches; at half the gate radius an
+# in-radius pair outside the narrowed band is silently dropped (exactly
+# the failure class an over-tight prefilter introduces), so the bitwise
+# pruned-fold specs and the exact-vs-pruned contributor counts fail
+run_mutation_spec band-half-gate \
+  src/main/scala/graft/kernel/PairMath.scala \
+  'Math.toDegrees(gateKm / GeoExprs.EarthRadiusKm) * (1 + SkipMargin)' \
+  'Math.toDegrees(gateKm / GeoExprs.EarthRadiusKm) * (1 + SkipMargin) / 2' \
   'graft.kernel.KernelPruningSpec'
 
 echo ""
