@@ -520,11 +520,9 @@ object Bench {
     */
   def annIvfPq200k(spark: SparkSession): DataFrame = {
     val e = syntheticEmbeddings(spark, 200000L)
-    val oneHot = Array.tabulate(16)(j =>
-      j -> Seq.tabulate(64)(d => if (d == j) 1.0 else 0.0))
     Similarity.ivfPqTopKWithModel(
       e.where(col("vec_id") < 40), e.where(col("vec_id") >= 40),
-      "vec_id", "embedding", oneHot,
+      "vec_id", "embedding", Similarity.oneHotCentroids(16, 64),
       Similarity.pqFixedCodebooks(dim = 64, numSub = 8, ksub = 4),
       nprobe = 4, k = 10)
   }
@@ -572,11 +570,9 @@ object Bench {
 
   def annIvfPq1m(spark: SparkSession): DataFrame = {
     val e = syntheticEmbeddings(spark, 1000000L)
-    val oneHot = Array.tabulate(16)(j =>
-      j -> Seq.tabulate(64)(d => if (d == j) 1.0 else 0.0))
     Similarity.ivfPqTopKWithModel(
       e.where(col("vec_id") < 40), e.where(col("vec_id") >= 40),
-      "vec_id", "embedding", oneHot,
+      "vec_id", "embedding", Similarity.oneHotCentroids(16, 64),
       Similarity.pqFixedCodebooks(dim = 64, numSub = 8, ksub = 4),
       nprobe = 4, k = 10)
   }

@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StructType}
 /** Native scalar kernel for the 6-factor weather-pattern similarity
   * (SURVEY A3-A5; ref `backend/app/services/weather_similarity.py:88-218`).
   *
-  * The Column-form similarity (WeatherExprs.weatherSimilarity /
-  * withWeatherSimilarity) is correct but builds a ~10k-node expression
+  * The staged Column-form similarity (WeatherExprs.withWeatherSimilarity)
+  * is correct but builds a ~10k-node expression
   * tree: five weighted Pearsons over 7-day arrays via higher-order
   * functions, each a deep `aggregate`/`zip_with` nest. Every query that
   * composes it (k14/k16/k18 kernels, interactive predict) paid ~10-20 s of

@@ -860,11 +860,9 @@ object PipelineQueries {
     // lowest cell), the nprobe cut, and the exact-cosine top-k.
     "s03b_ivf_probe" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      val oneHot: Array[(Int, Seq[Double])] = Array.tabulate(8)(j =>
-        j -> Seq.tabulate(64)(d => if (d == j) 1.0 else 0.0))
       Similarity.ivfTopKWithCentroids(
         e.where(col("vec_id") < 10), e.where(col("vec_id") >= 10),
-        "vec_id", "embedding", oneHot, nprobe = 3, k = 3)
+        "vec_id", "embedding", Similarity.oneHotCentroids(8, 64), nprobe = 3, k = 3)
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           round(col("cosine"), 4).as("cosine"))
         .orderBy("query_id", "rank")
@@ -932,11 +930,9 @@ object PipelineQueries {
     // in the data (both SFs, measured), so the kept flag cannot flip on a
     // last-ulp dot-product difference between engines.
     "s04b_semantic_dedup_cells" -> ((s, dir) => {
-      val oneHot: Array[(Int, Seq[Double])] = Array.tabulate(8)(j =>
-        j -> Seq.tabulate(64)(d => if (d == j) 1.0 else 0.0))
       Similarity.semanticDedupWithCentroids(
-        Tables.embeddings(s, dir), "vec_id", "embedding", oneHot,
-        tau = SemDedupTau)
+        Tables.embeddings(s, dir), "vec_id", "embedding",
+        Similarity.oneHotCentroids(8, 64), tau = SemDedupTau)
         .select(col("id").as("vec_id"), col("cell"), col("cell_capped"),
           round(col("max_prior_sim"), 4).as("max_prior_sim"), col("kept"))
         .orderBy("vec_id")
@@ -1241,11 +1237,10 @@ object PipelineQueries {
     // (cell, code_key hash-matched as INT/BIGINT, ADC score).
     "s08_ann_ivfpq" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      val oneHot: Array[(Int, Seq[Double])] = Array.tabulate(8)(j =>
-        j -> Seq.tabulate(64)(d => if (d == j) 1.0 else 0.0))
       Similarity.ivfPqTopKWithModel(
         e.where(col("vec_id") < 10), e.where(col("vec_id") >= 10),
-        "vec_id", "embedding", oneHot, PqOracleBooks, nprobe = 3, k = 3)
+        "vec_id", "embedding", Similarity.oneHotCentroids(8, 64), PqOracleBooks,
+        nprobe = 3, k = 3)
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           col("cell"), col("code_key"), round(col("score"), 4).as("score"))
         .orderBy("query_id", "rank")
@@ -1257,11 +1252,10 @@ object PipelineQueries {
     // seeded score replay term-for-term under one-hot cells ----------------
     "s09_ann_ivfpq_res" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
-      val oneHot: Array[(Int, Seq[Double])] = Array.tabulate(8)(j =>
-        j -> Seq.tabulate(64)(d => if (d == j) 1.0 else 0.0))
       Similarity.ivfPqTopKResidualWithModel(
         e.where(col("vec_id") < 10), e.where(col("vec_id") >= 10),
-        "vec_id", "embedding", oneHot, PqOracleBooks, nprobe = 3, k = 3)
+        "vec_id", "embedding", Similarity.oneHotCentroids(8, 64), PqOracleBooks,
+        nprobe = 3, k = 3)
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           col("cell"), col("code_key"), round(col("score"), 4).as("score"))
         .orderBy("query_id", "rank")

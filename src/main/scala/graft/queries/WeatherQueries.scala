@@ -291,7 +291,7 @@ object WeatherQueries {
   /** Variable-length similarity of each VALID assembled pattern vs the
     * 7-day current pattern: x = current series (first n days), y =
     * assembled series; weights pow(0.85, n-1-day_idx) normalized;
-    * freeze-thaw of current over its FULL 7 days (weatherSimilarity does
+    * freeze-thaw of current over its FULL 7 days (the similarity does
     * not slice daily_temps). Ends in `sims(accident_id, wsim)` — valid
     * accidents only; callers LEFT JOIN + coalesce(wsim, 0.5) for the
     * missing-pattern neutral path.

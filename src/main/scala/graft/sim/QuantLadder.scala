@@ -72,8 +72,7 @@ object QuantLadder {
     // the oracle's fixed quarter codebooks
     val cb = Similarity.pqTrainCodebooks(c, "vec_id", "embedding",
       numSub = 8, ksub = 16, iters = 3)
-    val oneHot = Array.tabulate(16)(j =>
-      j -> Seq.tabulate(64)(d => if (d == j) 1.0 else 0.0))
+    val oneHot = Similarity.oneHotCentroids(16, 64)
     // residual model (cell means + residual-trained books), trained once
     // like the other tiers' models — walls time the query path only
     val (resMeans, resCb) = Similarity.ivfPqResidualModel(c, "vec_id", "embedding",

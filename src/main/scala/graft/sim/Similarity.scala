@@ -33,6 +33,15 @@ object Similarity {
     df.select(col(idCol).as(outId), v.as(outVec), VectorExprs.norm(v).as(outNorm))
   }
 
+  /** The per-query cut every ranking stage ends on: number each query's
+    * rows in `order` into `rankCol` and keep ranks ≤ `k`. The top-k tails
+    * rank into "rank" (ties to the lower `neighbor_id` as the order's last
+    * key); the IVF probe stages cut their `nprobe` cells into "rk".
+    */
+  private def perQueryTop(df: DataFrame, rankCol: String, k: Int, order: Column*): DataFrame =
+    df.withColumn(rankCol, row_number().over(Window.partitionBy("query_id").orderBy(order: _*)))
+      .where(col(rankCol) <= k)
+
   /** Exact top-k neighbors: for each row of `queries`, the k highest-cosine
     * rows of `corpus`. Both inputs need (`idCol`, `vecCol`); queries are
     * broadcast (the small side of the nested-loop join) and norms are
@@ -49,13 +58,10 @@ object Similarity {
     val c = withNorm(graft.Partitioning.balanced(corpus), idCol, vecCol,
       "neighbor_id", "c_vec", "c_n")
       .where(col("c_n") > 0) // NaN cosine would out-rank every real neighbor
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    q.crossJoin(c)
+    perQueryTop(q.crossJoin(c)
       .withColumn("cosine",
-        VectorExprs.dot(col("q_vec"), col("c_vec")) / (col("q_n") * col("c_n")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+        VectorExprs.dot(col("q_vec"), col("c_vec")) / (col("q_n") * col("c_n"))),
+      "rank", k, col("cosine").desc, col("neighbor_id").asc)
       .select("query_id", "rank", "neighbor_id", "cosine")
   }
 
@@ -241,6 +247,14 @@ object Similarity {
     ivfTopKWithCentroids(queries, corpus, idCol, vecCol, centroids, nprobe, k)
   }
 
+  /** `n` one-hot unit centroids in `dim` dimensions: cell j is the j-th
+    * axis, so a vector's dot with it is the coordinate read `v[j]` — what
+    * lets the s03b/s04b/s08/s09 oracles replay assignment and probing in
+    * SQL.
+    */
+  def oneHotCentroids(n: Int, dim: Int): Array[(Int, Seq[Double])] =
+    Array.tabulate(n)(j => j -> Seq.tabulate(dim)(d => if (d == j) 1.0 else 0.0))
+
   /** The IVF QUERY path with caller-supplied centroids — what [[ivfTopK]]
     * runs after training. Exposed separately so the probe/assign/rank
     * machinery is testable (and oracle-checkable: s03b feeds it one-hot
@@ -272,24 +286,20 @@ object Similarity {
       .withColumn("cell", nearestCell(col("c_vec"), centroids))
       .select("cell", "neighbor_id", "c_vec", "c_n")
 
-    val wProbe = Window.partitionBy("query_id").orderBy(col("sim").desc, col("cell").asc)
-    val probes = withNorm(queries, idCol, vecCol, "query_id", "q_vec", "q_n")
+    val probes = perQueryTop(withNorm(queries, idCol, vecCol, "query_id", "q_vec", "q_n")
       .where(col("q_n") > 0) // a zero-norm query's probe sims are all NaN
       .crossJoin(cdf)
-      .withColumn("sim", VectorExprs.dot(col("q_vec"), col("c_vec")) / col("q_n"))
-      .withColumn("rk", row_number().over(wProbe)).where(col("rk") <= nprobe)
+      .withColumn("sim", VectorExprs.dot(col("q_vec"), col("c_vec")) / col("q_n")),
+      "rk", nprobe, col("sim").desc, col("cell").asc)
       .select("query_id", "q_vec", "q_n", "cell")
 
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
     // no distinct: cells are single-valued per corpus row and a query's
     // probe cells are pairwise distinct, so a candidate appears once
-    broadcast(probes).join(assigned, "cell")
+    perQueryTop(broadcast(probes).join(assigned, "cell")
       .withColumn("cosine",
         VectorExprs.dot(col("q_vec"), col("c_vec")) / (col("q_n") * col("c_n")))
-      .select("query_id", "neighbor_id", "cosine")
-      .withColumn("rank", row_number().over(wTop))
-      .where(col("rank") <= k)
+      .select("query_id", "neighbor_id", "cosine"),
+      "rank", k, col("cosine").desc, col("neighbor_id").asc)
       .select("query_id", "rank", "neighbor_id", "cosine")
   }
 
@@ -338,16 +348,13 @@ object Similarity {
         explode(concat(array(col("sig")),
           transform(sequence(lit(0), lit(bits - 1)),
             i => col("sig").bitwiseXOR(pow(lit(2.0), i).cast("long"))))).as("bucket"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
     // no distinct: a corpus row has ONE bucket and the bits+1 probe buckets
     // are pairwise distinct, so a candidate pair appears exactly once
-    broadcast(q).join(c, "bucket")
+    perQueryTop(broadcast(q).join(c, "bucket")
       .withColumn("cosine",
         VectorExprs.dot(col("q_vec"), col("c_vec")) / (col("q_n") * col("c_n")))
-      .select("query_id", "neighbor_id", "cosine")
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+      .select("query_id", "neighbor_id", "cosine"),
+      "rank", k, col("cosine").desc, col("neighbor_id").asc)
       .select("query_id", "rank", "neighbor_id", "cosine")
   }
 
@@ -484,14 +491,11 @@ object Similarity {
     // follows scan partitioning, which maxPartitionBytes bounds at scale.
     val c = graft.Partitioning.balanced(int8Quantized(corpus, idCol, vecCol,
       "neighbor_id", "c_codes", "c_scale", normalize))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    q.crossJoin(c)
+    perQueryTop(q.crossJoin(c)
       .withColumn("qdot", Int8Exprs.dotI8(col("q_codes"), col("c_codes")))
       .withColumn("score",
-        (col("q_scale") * col("c_scale")) * col("qdot").cast("double"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+        (col("q_scale") * col("c_scale")) * col("qdot").cast("double")),
+      "rank", k, col("score").desc, col("neighbor_id").asc)
       .select("query_id", "rank", "neighbor_id", "qdot", "score")
   }
 
@@ -582,22 +586,48 @@ object Similarity {
       pqEncode(col(vecCol).cast("array<double>"), cb).as("codes")))
     val q = broadcast(queries.select(col(idCol).as("query_id"),
       pqAdcLut(col(vecCol).cast("array<double>"), cb).as("lut")))
-    // native ADC sum — the staged aggregate() fold ran interpreted per
-    // CANDIDATE PAIR (|queries| × corpus); bit-identity spec-pinned
-    val score = graft.expr.PqExprs.adcScore(
-      col("codes"), col("lut"), lit(0.0), cb.numSub, cb.ksub)
+    adcTopK(q.crossJoin(c), cb, lit(0.0), k)
+  }
+
+  /** The ADC scoring tail shared by [[pqTopKADC]] and the IVFADC query
+    * path: candidate pairs carrying `codes` and their query's `lut` are
+    * scored `seed + Σₘ lut[m·ksub + codeₘ]` (the native ADC sum, folded
+    * left from `seed`; the staged aggregate() form ran interpreted per
+    * CANDIDATE PAIR, bit-identity spec-pinned), packed into `code_key`
+    * and cut per query. Returns (query_id, rank, neighbor_id, `keep`…,
+    * code_key, score).
+    */
+  private def adcTopK(pairs: DataFrame, cb: PqCodebooks, seed: Column, k: Int,
+                      keep: String*): DataFrame = {
     val codeKey = (0 until cb.numSub).map(m =>
       element_at(col("codes"), m + 1).cast("long") *
         lit(math.pow(cb.ksub.toDouble, m.toDouble).toLong))
       .reduce(_ + _)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    q.crossJoin(c)
-      .withColumn("score", score)
-      .withColumn("code_key", codeKey)
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "code_key", "score")
+    perQueryTop(pairs
+      .withColumn("score",
+        graft.expr.PqExprs.adcScore(col("codes"), col("lut"), seed, cb.numSub, cb.ksub))
+      .withColumn("code_key", codeKey),
+      "rank", k, col("score").desc, col("neighbor_id").asc)
+      .select((Seq("query_id", "rank", "neighbor_id") ++ keep ++ Seq("code_key", "score"))
+        .map(col): _*)
+  }
+
+  /** The exact re-rank (the "R" of ADC+R) shared by [[pqTopKADCRerank]]
+    * and [[ivfPqTopKRerank]]: fetch the full vectors of the
+    * (query_id, neighbor_id) shortlist `cands` and rank it by the exact
+    * dot. Returns (query_id, rank, neighbor_id, dot).
+    */
+  private def exactRerank(cands: DataFrame, queries: DataFrame, corpus: DataFrame,
+                          idCol: String, vecCol: String, k: Int): DataFrame = {
+    val cv = corpus.select(col(idCol).as("neighbor_id"),
+      col(vecCol).cast("array<double>").as("cv"))
+    val qv = broadcast(queries.select(col(idCol).as("query_id"),
+      col(vecCol).cast("array<double>").as("qv")))
+    perQueryTop(cands.select("query_id", "neighbor_id")
+      .join(cv, Seq("neighbor_id")).join(qv, Seq("query_id"))
+      .withColumn("dot", VectorExprs.dot(col("qv"), col("cv"))),
+      "rank", k, col("dot").desc, col("neighbor_id").asc)
+      .select("query_id", "rank", "neighbor_id", "dot")
   }
 
   // ------------------------------------------------------------------
@@ -633,13 +663,10 @@ object Similarity {
     val q = broadcast(coded(queries, "query_id"))
     // encode before balancing — 8 B/row through the exchange, not 512
     val c = graft.Partitioning.balanced(coded(corpus, "neighbor_id"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    q.crossJoin(c)
+    perQueryTop(q.crossJoin(c)
       .withColumn("hamming",
-        bit_count(col("query_id_code").bitwiseXOR(col("neighbor_id_code"))))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+        bit_count(col("query_id_code").bitwiseXOR(col("neighbor_id_code")))),
+      "rank", k, col("hamming").asc, col("neighbor_id").asc)
       .select("query_id", "rank", "neighbor_id", "hamming")
   }
 
@@ -655,19 +682,8 @@ object Similarity {
   def pqTopKADCRerank(queries: DataFrame, corpus: DataFrame,
                       idCol: String, vecCol: String, cb: PqCodebooks,
                       k: Int, shortlist: Int = 50): DataFrame = {
-    val cands = pqTopKADC(queries, corpus, idCol, vecCol, cb, shortlist)
-      .select("query_id", "neighbor_id")
-    val cv = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("cv"))
-    val qv = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dot").desc, col("neighbor_id").asc)
-    cands.join(cv, Seq("neighbor_id")).join(qv, Seq("query_id"))
-      .withColumn("dot", VectorExprs.dot(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "dot")
+    exactRerank(pqTopKADC(queries, corpus, idCol, vecCol, cb, shortlist),
+      queries, corpus, idCol, vecCol, k)
   }
 
   // ------------------------------------------------------------------
@@ -699,63 +715,8 @@ object Similarity {
   def ivfPqTopKWithModel(queries: DataFrame, corpus: DataFrame,
                          idCol: String, vecCol: String,
                          centroids: Array[(Int, Seq[Double])],
-                         cb: PqCodebooks, nprobe: Int, k: Int): DataFrame = {
-    require(centroids.zipWithIndex.forall { case ((id, _), i) => id == i },
-      "centroid labels must equal their array positions (0..n-1)")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cdf = broadcast(centroids.toSeq.toDF("cell", "c_vec"))
-
-    // one corpus scan: map-side assignment + encoding, codes-only output —
-    // encoded BEFORE the balance exchange, so the shuffle that spreads the
-    // probe join carries (cell, id, codes), never the raw doubles
-    val assigned = graft.Partitioning.balanced(corpus
-      .select(col(idCol).as("neighbor_id"), col(vecCol).cast("array<double>").as("v"))
-      .where(col("v").isNotNull) // null vector: no cell, no codes — excluded
-      .select(nearestCell(col("v"), centroids).as("cell"),
-        col("neighbor_id"), pqEncode(col("v"), cb).as("codes")))
-
-    // probe ranking on the raw dot: centroids are unit-normalized, the
-    // query's own norm is a positive per-query constant, so the nprobe
-    // order equals the cosine order without a division (and stays exactly
-    // replayable for one-hot centroids: sim = a coordinate read)
-    val wProbe = Window.partitionBy("query_id").orderBy(col("sim").desc, col("cell").asc)
-    // the LUT lives in its OWN per-query broadcast frame, joined back in
-    // AFTER the nprobe cut: the window's hash exchange then carries only
-    // (query_id, cell, sim) scalars — no vector array rides ANY shuffle in
-    // this plan (one LUT copy per query, better than nprobe copies)
-    val qlut = broadcast(queries
-      .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .where(col("qv").isNotNull)
-      .select(col("query_id"), pqAdcLut(col("qv"), cb).as("lut")))
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .where(col("qv").isNotNull)
-      .crossJoin(cdf)
-      .withColumn("sim", VectorExprs.dot(col("qv"), col("c_vec")))
-      .select("query_id", "cell", "sim")
-      .withColumn("rk", row_number().over(wProbe)).where(col("rk") <= nprobe)
-      .join(qlut, "query_id")
-      .select("query_id", "lut", "cell")
-
-    // native ADC sum (see pqTopKADC) — per probed-cell candidate
-    val score = graft.expr.PqExprs.adcScore(
-      col("codes"), col("lut"), lit(0.0), cb.numSub, cb.ksub)
-    val codeKey = (0 until cb.numSub).map(m =>
-      element_at(col("codes"), m + 1).cast("long") *
-        lit(math.pow(cb.ksub.toDouble, m.toDouble).toLong))
-      .reduce(_ + _)
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    // no distinct: corpus cells are single-valued and a query's probe
-    // cells pairwise distinct, so a candidate appears exactly once
-    broadcast(probes).join(assigned, "cell")
-      .withColumn("score", score)
-      .withColumn("code_key", codeKey)
-      .withColumn("rank", row_number().over(wTop))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cell", "code_key", "score")
-  }
+                         cb: PqCodebooks, nprobe: Int, k: Int): DataFrame =
+    ivfPqQuery(queries, corpus, idCol, vecCol, centroids, cb, nprobe, k, residual = false)
 
   /** Residual IVFADC — the composition as Jégou et al. actually publish
     * it (TPAMI 2011 §V.A): the PQ codes quantize the RESIDUAL v − c(v)
@@ -778,67 +739,77 @@ object Similarity {
   def ivfPqTopKResidualWithModel(queries: DataFrame, corpus: DataFrame,
                                  idCol: String, vecCol: String,
                                  centroids: Array[(Int, Seq[Double])],
-                                 cb: PqCodebooks, nprobe: Int, k: Int): DataFrame = {
+                                 cb: PqCodebooks, nprobe: Int, k: Int): DataFrame =
+    ivfPqQuery(queries, corpus, idCol, vecCol, centroids, cb, nprobe, k, residual = true)
+
+  /** The one IVFADC query path behind [[ivfPqTopKWithModel]] and
+    * [[ivfPqTopKResidualWithModel]]. The two forms differ only in what the
+    * codes quantize (`v`, or the residual `v − c(v)`) and in the ADC seed
+    * (0.0, or the probe similarity `sim` = dot(q, c)).
+    */
+  private def ivfPqQuery(queries: DataFrame, corpus: DataFrame,
+                         idCol: String, vecCol: String,
+                         centroids: Array[(Int, Seq[Double])],
+                         cb: PqCodebooks, nprobe: Int, k: Int,
+                         residual: Boolean): DataFrame = {
     require(centroids.zipWithIndex.forall { case ((id, _), i) => id == i },
       "centroid labels must equal their array positions (0..n-1)")
     val spark = corpus.sparkSession
     import spark.implicits._
     val cdf = broadcast(centroids.toSeq.toDF("cell", "c_vec"))
 
-    // one corpus scan: assignment, centroid fetch (broadcast), residual,
-    // encode — codes-only output; encoded BEFORE the balance exchange, so
-    // the doubles never leave the map side OR ride the balance shuffle
-    val assigned = graft.Partitioning.balanced(corpus
+    // one corpus scan: map-side assignment + encoding, codes-only output —
+    // encoded BEFORE the balance exchange, so the shuffle that spreads the
+    // probe join carries (cell, id, codes), never the raw doubles
+    val vecs = corpus
       .select(col(idCol).as("neighbor_id"), col(vecCol).cast("array<double>").as("v"))
-      .where(col("v").isNotNull)
-      .select(nearestCell(col("v"), centroids).as("cell"), col("neighbor_id"), col("v"))
-      .join(cdf, "cell")
-      // residual as its OWN projection before encoding: authored inline,
-      // the zip_with would be re-evaluated by every one of pqEncode's
-      // numSub·ksub·ds element_at terms (the HOF re-evaluation trap —
-      // measured 12× on the quantization-ladder corpus). As a separate
-      // non-cheap multi-referenced column, CollapseProject keeps it
-      // materialized once per row.
-      .select(col("cell"), col("neighbor_id"),
-        zip_with(col("v"), col("c_vec"), (a, b) => a - b).as("rv"))
-      .select(col("cell"), col("neighbor_id"), pqEncode(col("rv"), cb).as("codes")))
+      .where(col("v").isNotNull) // null vector: no cell, no codes — excluded
+    val assigned = graft.Partitioning.balanced(
+      if (!residual)
+        vecs.select(nearestCell(col("v"), centroids).as("cell"),
+          col("neighbor_id"), pqEncode(col("v"), cb).as("codes"))
+      else vecs
+        .select(nearestCell(col("v"), centroids).as("cell"), col("neighbor_id"), col("v"))
+        .join(cdf, "cell") // the cell's centroid, fetched map-side (broadcast)
+        // residual as its OWN projection before encoding: authored inline,
+        // the zip_with would be re-evaluated by every one of pqEncode's
+        // numSub·ksub·ds element_at terms (the HOF re-evaluation trap —
+        // measured 12× on the quantization-ladder corpus). As a separate
+        // non-cheap multi-referenced column, CollapseProject keeps it
+        // materialized once per row.
+        .select(col("cell"), col("neighbor_id"),
+          zip_with(col("v"), col("c_vec"), (a, b) => a - b).as("rv"))
+        .select(col("cell"), col("neighbor_id"), pqEncode(col("rv"), cb).as("codes")))
 
-    val wProbe = Window.partitionBy("query_id").orderBy(col("sim").desc, col("cell").asc)
-    // RAW-query LUT (not the residual's): dot(q, r̂) is what the ADC sum
-    // reconstructs; dot(q, c) arrives exactly via `sim`. Same shape as the
-    // non-residual form: the LUT joins in from a per-query broadcast after
-    // the nprobe cut, so the probe window's shuffle carries scalars only
-    val qlut = broadcast(queries
+    // probe ranking on the raw dot: centroids are unit-normalized, the
+    // query's own norm is a positive per-query constant, so the nprobe
+    // order equals the cosine order without a division (and stays exactly
+    // replayable for one-hot centroids: sim = a coordinate read)
+    def queryVecs = queries
       .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
       .where(col("qv").isNotNull)
-      .select(col("query_id"), pqAdcLut(col("qv"), cb).as("lut")))
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .where(col("qv").isNotNull)
+    // the LUT (always the RAW query's: dot(q, r̂) is what the residual ADC
+    // sum reconstructs) lives in its OWN per-query broadcast frame, joined
+    // back in AFTER the nprobe cut: the window's hash exchange then carries
+    // only (query_id, cell, sim) scalars — no vector array rides ANY
+    // shuffle in this plan (one LUT copy per query, better than nprobe
+    // copies)
+    val qlut = broadcast(queryVecs.select(col("query_id"), pqAdcLut(col("qv"), cb).as("lut")))
+    val probes = perQueryTop(queryVecs
       .crossJoin(cdf)
       .withColumn("sim", VectorExprs.dot(col("qv"), col("c_vec")))
-      .select("query_id", "cell", "sim")
-      .withColumn("rk", row_number().over(wProbe)).where(col("rk") <= nprobe)
+      .select("query_id", "cell", "sim"),
+      "rk", nprobe, col("sim").desc, col("cell").asc)
       .join(qlut, "query_id")
-      .select("query_id", "lut", "cell", "sim")
+      .select((Seq("query_id", "lut", "cell") ++ (if (residual) Seq("sim") else Nil))
+        .map(col): _*)
 
-    // native ADC sum seeded with sim: ((sim + t0) + t1) + … — the
-    // association the generated oracle SQL replays (bit-identical to the
-    // staged fold; spec-pinned)
-    val score = graft.expr.PqExprs.adcScore(
-      col("codes"), col("lut"), col("sim"), cb.numSub, cb.ksub)
-    val codeKey = (0 until cb.numSub).map(m =>
-      element_at(col("codes"), m + 1).cast("long") *
-        lit(math.pow(cb.ksub.toDouble, m.toDouble).toLong))
-      .reduce(_ + _)
-    val wTop = Window.partitionBy("query_id")
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    broadcast(probes).join(assigned, "cell")
-      .withColumn("score", score)
-      .withColumn("code_key", codeKey)
-      .withColumn("rank", row_number().over(wTop))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cell", "code_key", "score")
+    // no distinct: corpus cells are single-valued and a query's probe
+    // cells pairwise distinct, so a candidate appears exactly once. The
+    // residual score seeds the ADC sum with sim: ((sim + t0) + t1) + … —
+    // the association the generated oracle SQL replays
+    adcTopK(broadcast(probes).join(assigned, "cell"), cb,
+      if (residual) col("sim") else lit(0.0), k, "cell")
   }
 
   /** Residual IVFADC behind the trainers. The coarse stage trains the
@@ -861,12 +832,21 @@ object Similarity {
                         nlist: Int, nprobe: Int, numSub: Int, ksub: Int, k: Int,
                         iters: Int = 3): DataFrame = {
     val (means, cb) = ivfPqResidualModel(corpus, idCol, vecCol, nlist, numSub, ksub, iters)
-    if (means.isEmpty)
-      ivfPqTopKResidualWithModel(queries.limit(0), corpus.limit(0), idCol, vecCol,
-        Array(0 -> Seq.fill(cb.numSub * cb.ds)(0.0)), cb, nprobe, k)
-    else
-      ivfPqTopKResidualWithModel(queries, corpus, idCol, vecCol, means, cb, nprobe, k)
+    ivfPqTrained(queries, corpus, idCol, vecCol, means, cb, nprobe, k, residual = true)
   }
+
+  /** [[ivfPqQuery]] over a trained model; a model with no cells (an empty /
+    * all-null corpus) gives the empty result with the right schema.
+    */
+  private def ivfPqTrained(queries: DataFrame, corpus: DataFrame,
+                           idCol: String, vecCol: String,
+                           centroids: Array[(Int, Seq[Double])],
+                           cb: PqCodebooks, nprobe: Int, k: Int,
+                           residual: Boolean): DataFrame =
+    if (centroids.isEmpty)
+      ivfPqQuery(queries.limit(0), corpus.limit(0), idCol, vecCol,
+        Array(0 -> Seq.fill(cb.numSub * cb.ds)(0.0)), cb, nprobe, k, residual)
+    else ivfPqQuery(queries, corpus, idCol, vecCol, centroids, cb, nprobe, k, residual)
 
   /** Trains the residual model: (cell means, residual-trained codebooks).
     * Exposed separately so benches/pipelines can train once and reuse the
@@ -915,62 +895,8 @@ object Similarity {
     * similarity `v[cell + 1]` (one-hot dot = a coordinate read) before
     * the ADC terms.
     */
-  def ivfPqResidualOracleSql(cb: PqCodebooks, nprobe: Int, k: Int): String = {
-    val M = cb.numSub; val K = cb.ksub; val ds = cb.ds
-    def sq(m: Int, j: Int): String =
-      (0 until ds).map { d =>
-        val c = cb.cb(m)(j)(d)
-        val coord = m * ds + d
-        val rv = s"(v[${coord + 1}] - (CASE WHEN cell = $coord THEN 1.0 ELSE 0.0 END))"
-        s"($rv - $c) * ($rv - $c)"
-      }.mkString(" + ")
-    def code(m: Int): String = {
-      val lst = (0 until K).map(j => s"(${sq(m, j)})").mkString("[", ", ", "]")
-      s"(list_position($lst, list_min($lst)) - 1)"
-    }
-    def dot(m: Int, j: Int): String =
-      (0 until ds).map { d =>
-        s"p.v[${m * ds + d + 1}] * ${cb.cb(m)(j)(d)}"
-      }.mkString(" + ")
-    def scoreTerm(m: Int): String =
-      s"(CASE enc.c$m " +
-        (0 until K).map(j => s"WHEN $j THEN ${dot(m, j)}").mkString(" ") +
-        " END)"
-    val encCols = (0 until M).map(m => s"${code(m)} AS c$m").mkString(",\n         ")
-    val keyExpr = (0 until M).map(m =>
-      s"CAST(enc.c$m AS BIGINT) * ${math.pow(K.toDouble, m.toDouble).toLong}")
-      .mkString(" + ")
-    val scoreExpr = "p.v[p.cell + 1] + " + (0 until M).map(scoreTerm).mkString(" + ")
-    s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id < 10),
-       |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id >= 10),
-       |enc0 AS (
-       |  SELECT neighbor_id,
-       |         CAST(list_indexof(v[1:8], list_max(v[1:8])) - 1 AS INT) AS cell,
-       |         v
-       |  FROM c),
-       |enc AS (
-       |  SELECT neighbor_id, cell,
-       |         $encCols
-       |  FROM enc0),
-       |qp AS (SELECT query_id, v, CAST(j AS INT) AS cell,
-       |              row_number() OVER (PARTITION BY query_id
-       |                ORDER BY v[j+1] DESC, j ASC) AS rk
-       |       FROM q, range(8) t(j)),
-       |probes AS (SELECT query_id, v, cell FROM qp WHERE rk <= $nprobe),
-       |pairs AS (
-       |  SELECT p.query_id, enc.neighbor_id, enc.cell,
-       |         $keyExpr AS code_key,
-       |         $scoreExpr AS score
-       |  FROM probes p JOIN enc USING (cell)),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cell, code_key, score,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                                 ORDER BY score DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM pairs)
-       |SELECT query_id, rank, neighbor_id, cell, code_key, round(score, 4) AS score
-       |FROM ranked WHERE rank <= $k
-       |ORDER BY query_id, rank""".stripMargin
-  }
+  def ivfPqResidualOracleSql(cb: PqCodebooks, nprobe: Int, k: Int): String =
+    adcOracleSql(cb, k, Some(nprobe -> true))
 
   /** IVFADC behind the deterministic trainers — the production entry:
     * spherical-kmeans coarse cells ([[ivfTrainCentroids]]) + per-subvector
@@ -984,11 +910,7 @@ object Similarity {
                 iters: Int = 3): DataFrame = {
     val centroids = ivfTrainCentroids(corpus, idCol, vecCol, nlist, iters)
     val cb = pqTrainCodebooks(corpus, idCol, vecCol, numSub, ksub, iters)
-    if (centroids.isEmpty)
-      ivfPqTopKWithModel(queries.limit(0), corpus.limit(0), idCol, vecCol,
-        Array(0 -> Seq.fill(cb.numSub * cb.ds)(0.0)), cb, nprobe, k)
-    else
-      ivfPqTopKWithModel(queries, corpus, idCol, vecCol, centroids, cb, nprobe, k)
+    ivfPqTrained(queries, corpus, idCol, vecCol, centroids, cb, nprobe, k, residual = false)
   }
 
   /** IVFADC+R: the probed-cell ADC scan selects a `shortlist` per query,
@@ -1002,20 +924,8 @@ object Similarity {
                       centroids: Array[(Int, Seq[Double])],
                       cb: PqCodebooks, nprobe: Int, k: Int,
                       shortlist: Int = 50): DataFrame = {
-    val cands = ivfPqTopKWithModel(queries, corpus, idCol, vecCol,
-      centroids, cb, nprobe, shortlist)
-      .select("query_id", "neighbor_id")
-    val cv = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).cast("array<double>").as("cv"))
-    val qv = broadcast(queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("qv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dot").desc, col("neighbor_id").asc)
-    cands.join(cv, Seq("neighbor_id")).join(qv, Seq("query_id"))
-      .withColumn("dot", VectorExprs.dot(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "dot")
+    exactRerank(ivfPqTopKWithModel(queries, corpus, idCol, vecCol,
+      centroids, cb, nprobe, shortlist), queries, corpus, idCol, vecCol, k)
   }
 
   /** DuckDB twin of [[ivfPqTopKWithModel]] under 8 one-hot centroids —
@@ -1026,56 +936,8 @@ object Similarity {
     * code_key, and the ADC chain replayed term for term WITHIN probed
     * cells only.
     */
-  def ivfPqOracleSql(cb: PqCodebooks, nprobe: Int, k: Int): String = {
-    val M = cb.numSub; val K = cb.ksub; val ds = cb.ds
-    def sq(m: Int, j: Int): String =
-      (0 until ds).map { d =>
-        val c = cb.cb(m)(j)(d)
-        s"(v[${m * ds + d + 1}] - $c) * (v[${m * ds + d + 1}] - $c)"
-      }.mkString(" + ")
-    def code(m: Int): String = {
-      val lst = (0 until K).map(j => s"(${sq(m, j)})").mkString("[", ", ", "]")
-      s"(list_position($lst, list_min($lst)) - 1)"
-    }
-    def dot(m: Int, j: Int): String =
-      (0 until ds).map { d =>
-        s"p.v[${m * ds + d + 1}] * ${cb.cb(m)(j)(d)}"
-      }.mkString(" + ")
-    def scoreTerm(m: Int): String =
-      s"(CASE enc.c$m " +
-        (0 until K).map(j => s"WHEN $j THEN ${dot(m, j)}").mkString(" ") +
-        " END)"
-    val encCols = (0 until M).map(m => s"${code(m)} AS c$m").mkString(",\n         ")
-    val keyExpr = (0 until M).map(m =>
-      s"CAST(enc.c$m AS BIGINT) * ${math.pow(K.toDouble, m.toDouble).toLong}")
-      .mkString(" + ")
-    val scoreExpr = (0 until M).map(scoreTerm).mkString(" + ")
-    s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id < 10),
-       |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id >= 10),
-       |enc AS (
-       |  SELECT neighbor_id,
-       |         CAST(list_indexof(v[1:8], list_max(v[1:8])) - 1 AS INT) AS cell,
-       |         $encCols
-       |  FROM c),
-       |qp AS (SELECT query_id, v, CAST(j AS INT) AS cell,
-       |              row_number() OVER (PARTITION BY query_id
-       |                ORDER BY v[j+1] DESC, j ASC) AS rk
-       |       FROM q, range(8) t(j)),
-       |probes AS (SELECT query_id, v, cell FROM qp WHERE rk <= $nprobe),
-       |pairs AS (
-       |  SELECT p.query_id, enc.neighbor_id, enc.cell,
-       |         $keyExpr AS code_key,
-       |         $scoreExpr AS score
-       |  FROM probes p JOIN enc USING (cell)),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cell, code_key, score,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                                 ORDER BY score DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM pairs)
-       |SELECT query_id, rank, neighbor_id, cell, code_key, round(score, 4) AS score
-       |FROM ranked WHERE rank <= $k
-       |ORDER BY query_id, rank""".stripMargin
-  }
+  def ivfPqOracleSql(cb: PqCodebooks, nprobe: Int, k: Int): String =
+    adcOracleSql(cb, k, Some(nprobe -> false))
 
   /** DuckDB twin of [[pqEncode]] + [[pqTopKADC]] over the embeddings
     * table — GENERATED from the same codebooks so the two can never
@@ -1085,20 +947,37 @@ object Similarity {
     * term, so with exact-binary codebook literals (e.g.
     * [[pqFixedCodebooks]]' quarters) the replay is bit-for-bit.
     */
-  def pqOracleSql(cb: PqCodebooks, k: Int): String = {
+  def pqOracleSql(cb: PqCodebooks, k: Int): String = adcOracleSql(cb, k, None)
+
+  /** The one generator behind [[pqOracleSql]] (`ivf` = None: every query
+    * against every code), [[ivfPqOracleSql]] (`ivf` = Some(nprobe ->
+    * false)) and [[ivfPqResidualOracleSql]] (Some(nprobe -> true)). The
+    * IVF forms assign cells and probe the query's top-`nprobe` one-hot
+    * cells; the residual form also encodes `v − c(v)` and seeds the score
+    * chain with the probe similarity `v[cell + 1]`.
+    */
+  private def adcOracleSql(cb: PqCodebooks, k: Int, ivf: Option[(Int, Boolean)]): String = {
     val M = cb.numSub; val K = cb.ksub; val ds = cb.ds
+    val residual = ivf.exists(_._2)
+    // the coordinate encoding reads: raw, or minus the one-hot centroid's
+    // coordinate (the zip_with's subtraction order)
+    def x(coord: Int): String =
+      if (residual) s"(v[${coord + 1}] - (CASE WHEN cell = $coord THEN 1.0 ELSE 0.0 END))"
+      else s"v[${coord + 1}]"
     def sq(m: Int, j: Int): String =
       (0 until ds).map { d =>
         val c = cb.cb(m)(j)(d)
-        s"(v[${m * ds + d + 1}] - $c) * (v[${m * ds + d + 1}] - $c)"
+        val xd = x(m * ds + d)
+        s"($xd - $c) * ($xd - $c)"
       }.mkString(" + ")
     def code(m: Int): String = {
       val lst = (0 until K).map(j => s"(${sq(m, j)})").mkString("[", ", ", "]")
       s"(list_position($lst, list_min($lst)) - 1)"
     }
+    val qv = if (ivf.isEmpty) "q.v" else "p.v"
     def dot(m: Int, j: Int): String =
       (0 until ds).map { d =>
-        s"q.v[${m * ds + d + 1}] * ${cb.cb(m)(j)(d)}"
+        s"$qv[${m * ds + d + 1}] * ${cb.cb(m)(j)(d)}"
       }.mkString(" + ")
     def scoreTerm(m: Int): String =
       s"(CASE enc.c$m " +
@@ -1108,26 +987,61 @@ object Similarity {
     val keyExpr = (0 until M).map(m =>
       s"CAST(enc.c$m AS BIGINT) * ${math.pow(K.toDouble, m.toDouble).toLong}")
       .mkString(" + ")
-    val scoreExpr = (0 until M).map(scoreTerm).mkString(" + ")
+    val scoreExpr = (if (residual) "p.v[p.cell + 1] + " else "") +
+      (0 until M).map(scoreTerm).mkString(" + ")
+    // cell = argmax of the first 8 coordinates, first-of-max ties
+    val cellCol = "CAST(list_indexof(v[1:8], list_max(v[1:8])) - 1 AS INT) AS cell"
+    val enc = ivf match {
+      case None =>
+        s"""enc AS (
+           |  SELECT neighbor_id,
+           |         $encCols
+           |  FROM c),""".stripMargin
+      case Some((_, false)) =>
+        s"""enc AS (
+           |  SELECT neighbor_id,
+           |         $cellCol,
+           |         $encCols
+           |  FROM c),""".stripMargin
+      case Some((_, true)) =>
+        s"""enc0 AS (
+           |  SELECT neighbor_id,
+           |         $cellCol,
+           |         v
+           |  FROM c),
+           |enc AS (
+           |  SELECT neighbor_id, cell,
+           |         $encCols
+           |  FROM enc0),""".stripMargin
+    }
+    val (probes, pairCols, pairsFrom, cell) = ivf match {
+      case None => ("", "q.query_id, enc.neighbor_id,", "q CROSS JOIN enc", "")
+      case Some((nprobe, _)) =>
+        (s"""
+           |qp AS (SELECT query_id, v, CAST(j AS INT) AS cell,
+           |              row_number() OVER (PARTITION BY query_id
+           |                ORDER BY v[j+1] DESC, j ASC) AS rk
+           |       FROM q, range(8) t(j)),
+           |probes AS (SELECT query_id, v, cell FROM qp WHERE rk <= $nprobe),""".stripMargin,
+          "p.query_id, enc.neighbor_id, enc.cell,", "probes p JOIN enc USING (cell)", "cell, ")
+    }
     s"""WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id < 10),
        |c AS (SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id >= 10),
-       |enc AS (
-       |  SELECT neighbor_id,
-       |         $encCols
-       |  FROM c),
-       |pairs AS (
-       |  SELECT q.query_id, enc.neighbor_id,
-       |         $keyExpr AS code_key,
-       |         $scoreExpr AS score
-       |  FROM q CROSS JOIN enc),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, code_key, score,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                                 ORDER BY score DESC, neighbor_id ASC) AS INT) AS rank
-       |  FROM pairs)
-       |SELECT query_id, rank, neighbor_id, code_key, round(score, 4) AS score
-       |FROM ranked WHERE rank <= $k
-       |ORDER BY query_id, rank""".stripMargin
+       |""".stripMargin + enc + probes +
+      s"""
+         |pairs AS (
+         |  SELECT $pairCols
+         |         $keyExpr AS code_key,
+         |         $scoreExpr AS score
+         |  FROM $pairsFrom),
+         |ranked AS (
+         |  SELECT query_id, neighbor_id, ${cell}code_key, score,
+         |         CAST(row_number() OVER (PARTITION BY query_id
+         |                                 ORDER BY score DESC, neighbor_id ASC) AS INT) AS rank
+         |  FROM pairs)
+         |SELECT query_id, rank, neighbor_id, ${cell}code_key, round(score, 4) AS score
+         |FROM ranked WHERE rank <= $k
+         |ORDER BY query_id, rank""".stripMargin
   }
 
   /** Deterministic PQ training: per-subvector Lloyd's on the same

@@ -99,22 +99,26 @@ object WeatherAssembly {
                               current: Column): DataFrame = {
     val withPat = accidents
       .join(assemblePatterns(weather, accidents), Seq("accident_id"), "left")
-    // native single-node similarity kernel (bit-identical to the staged
-    // Column form — WeatherSimExprSpec): keeps the downstream kernel plans
-    // free of the ~10k-node staged expression tree
-    // outer coalesce: a NULL CURRENT pattern (e.g. a left-joined forecast
-    // frame with a missing bucket) makes the similarity NULL, and a NULL
-    // wsim would null the influence and silently drop the accident from
-    // the risk sum — the reference treats a missing forecast as the same
-    // neutral 0.5 as a missing accident pattern
-    // (safety_computation_optimized.py:552-554)
     withPat
-      .withColumn("wsim",
-        coalesce(
-          when(col("pattern").isNull,
-            lit(graft.kernel.SafetyKernel.NeutralWeatherSimilarity))
-            .otherwise(graft.expr.WeatherPatternSimilarity.similarity(current, col("pattern"))),
-          lit(graft.kernel.SafetyKernel.NeutralWeatherSimilarity)))
+      .withColumn("wsim", similarityOrNeutral(current, col("pattern")))
       .drop("pattern", "n_days")
   }
+
+  /** Similarity of `current` against an assembled `pattern`, with the
+    * reference's neutral 0.5 for a missing pattern and — outer coalesce —
+    * for a NULL similarity: a NULL CURRENT pattern (e.g. a left-joined
+    * forecast frame with a missing bucket) makes the similarity NULL, and a
+    * NULL wsim would null the influence and silently drop the accident from
+    * the risk sum; the reference treats a missing forecast as the same
+    * neutral 0.5 as a missing accident pattern
+    * (safety_computation_optimized.py:552-554). The similarity is the
+    * native single-node kernel (bit-identical to the staged Column form —
+    * WeatherSimExprSpec), which keeps the downstream kernel plans free of
+    * the ~10k-node staged expression tree.
+    */
+  private[weather] def similarityOrNeutral(current: Column, pattern: Column): Column =
+    coalesce(
+      when(pattern.isNull, lit(graft.kernel.SafetyKernel.NeutralWeatherSimilarity))
+        .otherwise(graft.expr.WeatherPatternSimilarity.similarity(current, pattern)),
+      lit(graft.kernel.SafetyKernel.NeutralWeatherSimilarity))
 }

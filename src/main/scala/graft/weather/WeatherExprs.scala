@@ -40,35 +40,6 @@ object WeatherExprs {
     greatest(lit(0.0),
       lit(1.0) - abs(ftA - ftB) / (greatest(ftA, ftB, lit(1)) + lit(7)))
 
-  /** Base 6-factor similarity (no extreme-weather amplification).
-    * Invalid pattern on either side (< 5 days) → 0.0
-    * (`weather_similarity.py:124-126`).
-    */
-  def weatherSimilarity(current: Column, accident: Column): Column = {
-    val nDays = least(size(current.getField("temperature")),
-      size(accident.getField("temperature")))
-    val weights = StatsExprs.withinWindowWeights(nDays)
-
-    def corrScore(field: String): Column =
-      factorScore(StatsExprs.weightedPearson(
-        slice(current.getField(field), lit(1), nDays),
-        slice(accident.getField(field), lit(1), nDays), weights))
-
-    val ftA = StatsExprs.freezeThawCount(current.getField("daily_temps"))
-    val ftB = StatsExprs.freezeThawCount(accident.getField("daily_temps"))
-
-    // canonical factor order mirrors the reference dict iteration order
-    val scores = Seq(
-      corrScore("temperature"), corrScore("precipitation"),
-      corrScore("wind_speed"), corrScore("visibility"),
-      corrScore("cloud_cover"), freezeThawSimilarity(ftA, ftB))
-    val base = scores.map(_ * lit(FactorWeight)).reduce(_ + _)
-
-    when(size(current.getField("temperature")) < MinWeatherDaysRequired ||
-      size(accident.getField("temperature")) < MinWeatherDaysRequired, lit(0.0))
-      .otherwise(base)
-  }
-
   val ExtremeSdThreshold = 2.0
   /** Per-factor penalty per SD beyond threshold (`algorithm_config.py:177-182`). */
   val ExtremePenalty: Map[String, Double] = Map(
@@ -93,18 +64,17 @@ object WeatherExprs {
     lit(1.0) + terms.reduce(_ + _)
   }
 
-  /** Full similarity with optional amplification. */
-  def weatherSimilarity(current: Column, accident: Column, stats: Column): Column =
-    weatherSimilarity(current, accident) * extremeMultiplier(current, stats)
-
-  /** Staged (let-bound) twin of [[weatherSimilarity]] for bulk use: every
-    * shared subexpression (patterns, weights, per-factor moments) becomes a
-    * materialized column in its own projection, so the expression DAG is
-    * evaluated once per value instead of exponentially re-expanded — the
-    * single-Column form duplicates the weight-normalization subtree ~5× per
-    * factor and the moment subtrees on top of that, which is what made the
-    * naive form O(seconds) per thousand rows. Arithmetic and operation
-    * order are identical, so results match the Column form bit-for-bit.
+  /** Base 6-factor similarity (no extreme-weather amplification) as
+    * staged (let-bound) columns — the Column-expression twin of the native
+    * [[graft.expr.WeatherPatternSimilarity]]: every shared subexpression
+    * (patterns, weights, per-factor moments) becomes a materialized column
+    * in its own projection, so the expression DAG is evaluated once per
+    * value instead of exponentially re-expanded (a single-Column spelling
+    * duplicates the weight-normalization subtree ~5× per factor and the
+    * moment subtrees on top of that — O(seconds) per thousand rows).
+    * Invalid pattern on either side (< 5 days) → 0.0
+    * (`weather_similarity.py:124-126`); arithmetic and operation order
+    * match the native kernel bit-for-bit.
     */
   def withWeatherSimilarity(df: org.apache.spark.sql.DataFrame, current: Column,
                             accident: Column, out: String): org.apache.spark.sql.DataFrame =
@@ -146,8 +116,7 @@ object WeatherExprs {
     // withinWindowWeights(n): raw = pow(decay, n-1-k); normalized by its
     // sum. greatest(…, 0): an EMPTY pattern (_n = 0, e.g. a no-rows
     // Forecast bucket) must flow through to the final <5-day guard as 0.0,
-    // not crash on sequence(-1, 0, -1) — the Column-form twin survives the
-    // same input only because its CaseWhen evaluates weights lazily.
+    // not crash on sequence(-1, 0, -1).
     d = d.withColumn("__wsim_wraw",
       transform(sequence(greatest(col("__wsim_n") - 1, lit(0)), lit(0), lit(-1)),
         k => pow(lit(StatsExprs.WithinWindowDecay), k.cast("double"))))

@@ -3,8 +3,6 @@ package graft.weather
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.expr.WeatherPatternSimilarity
-
 /** Bucket-grain weather-similarity MEMO table — the Spark twin of the
   * reference batch engine's per-bucket similarity cache
   * (`compute_weather_similarities_cached`,
@@ -44,17 +42,10 @@ object WeatherMemo {
         .select(col("accident_id"), col("pattern")), Seq("accident_id"), "left")
     buckets.select(col(bucketCol)).distinct()
       .crossJoin(broadcast(accPat))
+      // a bucket whose currentFor(bucket) is NULL carries the same
+      // neutral 0.5 as a missing accident pattern
       .withColumn("wsim",
-        // coalesce: a bucket whose currentFor(bucket) is NULL must carry
-        // the same neutral 0.5 as a missing accident pattern, not a NULL
-        // that drops its accidents from downstream risk sums (reference
-        // treats a missing forecast as neutral, optimized.py:552-554)
-        coalesce(
-          when(col("pattern").isNull,
-            lit(graft.kernel.SafetyKernel.NeutralWeatherSimilarity))
-            .otherwise(WeatherPatternSimilarity.similarity(
-              currentFor(col(bucketCol)), col("pattern"))),
-          lit(graft.kernel.SafetyKernel.NeutralWeatherSimilarity)))
+        WeatherAssembly.similarityOrNeutral(currentFor(col(bucketCol)), col("pattern")))
       .drop("pattern")
   }
 

@@ -201,6 +201,13 @@ class ScoringPipelineSpec extends SparkSpec {
       accidentsAt(Seq((-hugeLat, 60.0))), dates)
     assert(overflow == overflowPerDate)
     assert(overflow.size == 2 && overflow.forall(_.contains(",NaN,1,100.0,red]")), overflow)
+    // within 1e-7° of antipodal: the haversine term rounds past 1 and the
+    // JVM's distance is NaN, which the skip test must not drop
+    val (antipode, antipodePerDate) = multiVsPerDate(
+      routesAt(Seq((-60.46632855234573, -56.404525797748036))),
+      accidentsAt(Seq((60.46632860192279, 123.59547414066873))), dates)
+    assert(antipode == antipodePerDate)
+    assert(antipode.size == 2 && antipode.forall(_.contains(",NaN,1,100.0,red]")), antipode)
   }
 
   test("multi-date kernel == per-date kernels, bitwise: a subnormal total is not skipped") {

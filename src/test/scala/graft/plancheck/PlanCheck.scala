@@ -335,10 +335,8 @@ object PlanCheck {
 
     // 16. the pruned kernel computes its haversine inside the fold, once
     //     per visited pair (PairMath.haversineKm), never as a Catalyst
-    //     expression: the plan holds no ASIN and no evalonce pin. Plant:
-    //     the grid kernel this replaced computes dist_km in Catalyst (one
-    //     ASIN) behind three evalonce pins (asin_count 0→1, evalonce_pins
-    //     0→3).
+    //     expression: the plan holds no ASIN. Plant: the grid kernel this
+    //     replaced computes dist_km in Catalyst (asin_count 0→1).
     contract("kernel_pruned_haversine_in_fold") {
       val pruned = graft.kernel.KernelPruning.scoreRoutesPruned(
         graft.queries.Derived.routes(spark, dir),
@@ -346,10 +344,7 @@ object PlanCheck {
         to_date(lit("2024-07-15")))
       val plan = planString(pruned)
       val asinCount = countOcc(plan, "ASIN(")
-      val pins = countOcc(plan, "evalonce(")
-      (asinCount == 0 && pins == 0, Seq(
-        "asin_count" -> asinCount.toString,
-        "evalonce_pins" -> pins.toString))
+      (asinCount == 0, Seq("asin_count" -> asinCount.toString))
     }
 
     // 17. nightly multi-date kernel shares pair geometry as a per-route
@@ -436,15 +431,15 @@ object PlanCheck {
     // 19. an ingest scores its accident delta with the per-route fold, and
     //     the MERGE evaluates that update once: the update frame of
     //     applyAccidentDelta(pruned = true) holds exactly one fold operator
-    //     (MapPartitions), no join on the grid cells and no explode of a
-    //     cell window; the merged frame mergeScores checkpoints holds no
-    //     kernel operator, because it reads the update through one
-    //     checkpointed relation (Scan ExistingRDD) in its dates, its
-    //     anti-join keys and its union. Plants: the grid-pruned pair kernel
-    //     in accidentDeltaTotals makes n_fold_ops 0 and cell_joins 1; a
-    //     mergeScores without the update checkpoint plans the update subtree
-    //     into the merged plan (merged_kernel_ops 1, merged_checkpoint_scans
-    //     0).
+    //     (MapPartitions) and exactly one join, the full outer join of
+    //     applyDeltaTotals that lays the delta onto the stored scores; the
+    //     merged frame mergeScores checkpoints holds no fold, because it
+    //     reads the update through one checkpointed relation (Scan
+    //     ExistingRDD) in its dates, its anti-join keys and its union.
+    //     Plants: a broadcast cross join in accidentDeltaTotals makes
+    //     n_joins 2; a mergeScores without the update checkpoint plans the
+    //     update subtree into the merged plan (merged_kernel_ops 1,
+    //     merged_checkpoint_scans 0).
     contract("ingest_delta_fold_single_eval") {
       import graft.pipeline.ScoringPipeline
       import graft.queries.Derived
@@ -461,17 +456,14 @@ object PlanCheck {
         val updatePlan = planString(updates)
         val mergedPlan = planString(ScoringPipeline.mergedScores(spark, updates, out))
         val folds = countOcc(updatePlan, "MapPartitions ")
-        val cellJoins = updatePlan.linesIterator.count(l => l.contains("Join") &&
-          l.contains("__cell_lat"))
-        val cellExplodes = countOcc(updatePlan, "Generate explode(")
-        val mergedKernelOps = countOcc(mergedPlan, "MapPartitions ") +
-          mergedPlan.linesIterator.count(l => l.contains("Join") && l.contains("__cell_lat"))
+        val joins = updatePlan.linesIterator
+          .filter(l => l.contains("Join") || l.contains("CartesianProduct")).toSeq
+        val mergedKernelOps = countOcc(mergedPlan, "MapPartitions ")
         val checkpointScans = countOcc(mergedPlan, "Scan ExistingRDD")
-        (folds == 1 && cellJoins == 0 && cellExplodes == 0 && mergedKernelOps == 0 &&
-          checkpointScans >= 1, Seq(
+        (folds == 1 && joins.size == 1 && joins.forall(_.contains("FullOuter")) &&
+          mergedKernelOps == 0 && checkpointScans >= 1, Seq(
           "n_fold_ops" -> folds.toString,
-          "cell_joins" -> cellJoins.toString,
-          "cell_window_explodes" -> cellExplodes.toString,
+          "n_joins" -> joins.size.toString,
           "merged_kernel_ops" -> mergedKernelOps.toString,
           "merged_checkpoint_scans" -> checkpointScans.toString))
       } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)

@@ -14,8 +14,7 @@ class IvfPqAnnSpec extends SparkSpec {
   import spark.implicits._
 
   private val cb = Similarity.pqFixedCodebooks(dim = 64, numSub = 8, ksub = 4)
-  private val oneHot: Array[(Int, Seq[Double])] = Array.tabulate(8)(j =>
-    j -> Seq.tabulate(64)(d => if (d == j) 1.0 else 0.0))
+  private val oneHot = Similarity.oneHotCentroids(8, 64)
 
   private val dir = "/root/testdata/sf0.001"
   private def q = spark.read.parquet(s"$dir/embeddings.parquet").where(col("vec_id") < 10)

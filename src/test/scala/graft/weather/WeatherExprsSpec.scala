@@ -4,11 +4,14 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.expr.WeatherPatternSimilarity
 
 /** Composite weather-similarity fidelity — expected values produced by
   * executing the reference calculate_weather_similarity on these exact
   * patterns (test_safety_algorithm.py reference_weather fixture + an
-  * adversarial winter pattern).
+  * adversarial winter pattern). The composite is the native
+  * [[WeatherPatternSimilarity]] every caller uses; the staged detailed
+  * form must reproduce it.
   */
 class WeatherExprsSpec extends SparkSpec {
 
@@ -36,13 +39,13 @@ class WeatherExprsSpec extends SparkSpec {
       (-1, 4, 9), (-2, 3, 8), (-3, 2, 7)))
 
   test("self-similarity ≈ 1 (reference: 0.9999999999999998)") {
-    assert(approx(evalDouble(WeatherExprs.weatherSimilarity(wp1, wp1)),
+    assert(approx(evalDouble(WeatherPatternSimilarity.similarity(wp1, wp1)),
       0.9999999999999998, 1e-9))
   }
 
   test("dissimilar patterns: reference exact value, symmetric") {
-    val a = evalDouble(WeatherExprs.weatherSimilarity(wp1, wp2))
-    val b = evalDouble(WeatherExprs.weatherSimilarity(wp2, wp1))
+    val a = evalDouble(WeatherPatternSimilarity.similarity(wp1, wp2))
+    val b = evalDouble(WeatherPatternSimilarity.similarity(wp2, wp1))
     assert(approx(a, 0.6549681645127438, 1e-9), s"got $a")
     assert(approx(a, b, 1e-12))
   }
@@ -51,8 +54,8 @@ class WeatherExprsSpec extends SparkSpec {
     val short = WeatherExprs.pattern(
       arr(15, 16, 17), arr(0, 0, 0), arr(5, 5, 5), arr(10, 10, 10),
       arr(20, 20, 20), temps((10, 15, 20), (10, 15, 20), (10, 15, 20)))
-    assert(evalDouble(WeatherExprs.weatherSimilarity(short, wp1)) == 0.0)
-    assert(evalDouble(WeatherExprs.weatherSimilarity(wp1, short)) == 0.0)
+    assert(evalDouble(WeatherPatternSimilarity.similarity(short, wp1)) == 0.0)
+    assert(evalDouble(WeatherPatternSimilarity.similarity(wp1, short)) == 0.0)
   }
 
   test("detailed breakdown: factors sum to the composite, invalid → zeros") {
