@@ -35,8 +35,8 @@ object AnsiCheck {
       s"""{"queries":$n,"failures":${failedNames.size},"failed":[${
         failedNames.map("\"" + _ + "\"").mkString(",")}],"conf":"ansi=true,aqe=true"}""" + "\n")
     spark.stop()
-    // a guard that always exits 0 can't gate anything (same class of bug
-    // as the fixed Scratch exit code)
+    // a guard that always exits 0 can't gate anything: scripts see the
+    // failure in the exit code, not just in a FAIL line of the log
     if (failedNames.nonEmpty) sys.exit(1)
   }
 }

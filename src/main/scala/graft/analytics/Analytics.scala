@@ -91,7 +91,9 @@ object Analytics {
       .withColumn("same_route",
         when(col("route").isNull || a === "" || b.isNull || b === "", false)
           .otherwise(a === b || a.contains(b) || b.contains(a)))
-      .orderBy(col("distance_km").asc, col("date").desc_nulls_last)
+      // accident_id last: accidents tied on distance and date (a NULL date
+      // included) must not cross the limit in an arbitrary order
+      .orderBy(col("distance_km").asc, col("date").desc_nulls_last, col("accident_id").asc)
       .limit(limit)
   }
 

@@ -121,6 +121,20 @@ object Dedup {
       .distinct()
   }
 
+  /** (id, sig, band, bucket): one row per (doc, band) of a signature
+    * frame, bucket = xxhash64 of the band's `sigLen / bands` signature
+    * slice — the one banding of the batch and streaming LSH paths.
+    */
+  private[graft] def bandSignatures(df: DataFrame, idCol: String, sigLen: Int,
+                                    bands: Int): DataFrame = {
+    val r = sigLen / bands
+    df.select(col(idCol), col("sig"),
+        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+          b => xxhash64(b, concat_ws(",", slice(col("sig"), b * r + 1, lit(r)))))))
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "bucket")
+  }
+
   /** (band, bucket, id, sig) posting list for a signature frame: one row
     * per (doc, band), bucket = xxhash64 of the band's signature slice.
     * With `maxBucketSize`, postings in buckets larger than the cap are
@@ -130,13 +144,7 @@ object Dedup {
     */
   private def bandedPostings(df: DataFrame, idCol: String, sigLen: Int,
       bands: Int, maxBucketSize: Option[Int]): DataFrame = {
-    val r = sigLen / bands
-    val banded0 = df.select(
-      col(idCol), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => xxhash64(b, concat_ws(",", slice(col("sig"), b * r + 1, lit(r)))))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
+    val banded0 = bandSignatures(df, idCol, sigLen, bands)
     maxBucketSize match {
       case Some(cap) =>
         val w = Window.partitionBy("band", "bucket")

@@ -48,11 +48,16 @@ object WeightExprs {
   def spatialBandwidthKm(routeTypeLc: Column): Column =
     typeLookup(routeTypeLc, SpatialBandwidth, SpatialBandwidthDefault)
 
-  /** `exp(-d² / (2h²))` — Gaussian decay, no hard cutoff. */
-  def spatialWeight(distanceKm: Column, routeType: Column): Column = {
-    val h = spatialBandwidthKm(asciiLower(routeType))
-    exp(-(pow(distanceKm, 2)) / (lit(2.0) * pow(h, 2)))
-  }
+  /** `2h²`, the Gaussian's denominator for a bandwidth `h`. */
+  def twoBandwidthSq(h: Column): Column = lit(2.0) * pow(h, 2)
+
+  /** `exp(-d² / 2h²)` for a given `2h²` — Gaussian decay, no hard cutoff. */
+  def spatialKernel(distKm: Column, twoH2: Column): Column =
+    exp(-(pow(distKm, 2)) / twoH2)
+
+  /** [[spatialKernel]] with the route type's bandwidth. */
+  def spatialWeight(distanceKm: Column, routeType: Column): Column =
+    spatialKernel(distanceKm, twoBandwidthSq(spatialBandwidthKm(asciiLower(routeType))))
 
   // -------------------------------------------------------------------------
   // Temporal (ref: backend/app/services/temporal_weighting.py:24-80,
@@ -67,6 +72,8 @@ object WeightExprs {
   val TemporalDecayShape = 1.5
   val TemporalSeasonalImpact = 0.10
   val SeasonalBoost = 1.5
+  /** The same-season temporal multiplier, 1 + (1.5 − 1)·0.10. */
+  val SeasonalMultiplier: Double = 1.0 + (SeasonalBoost - 1.0) * TemporalSeasonalImpact
 
   /** Decay λ for a folded ([[asciiLower]]) route-type column. */
   def temporalLambda(routeTypeLc: Column): Column =
@@ -83,18 +90,27 @@ object WeightExprs {
       .otherwise("fall")
   }
 
-  /** `base=λ^days; w = 1 − 0.35·(1 − base^1.5)`, ×1.05 when same season.
-    * `days` is |Δdays| (ref uses abs, `time_utils.py:59-77`).
+  /** |Δdays| between two dates, as a double (ref uses abs, `time_utils.py:59-77`). */
+  def dayCount(planDate: Column, accidentDate: Column): Column =
+    abs(datediff(planDate, accidentDate)).cast("double")
+
+  /** Both dates fall in the same season. */
+  def sameSeason(a: Column, b: Column): Column = seasonOf(a) === seasonOf(b)
+
+  /** `1 − 0.35·(1 − (λ^days)^1.5)`: the decay before any seasonal boost. */
+  def temporalBase(lambda: Column, days: Column): Column =
+    lit(1.0) - lit(TemporalDecayImpact) * (lit(1.0) - pow(pow(lambda, days), TemporalDecayShape))
+
+  /** `base`, ×[[SeasonalMultiplier]] when `inSeason`. */
+  def seasonallyBoosted(inSeason: Column, base: Column): Column =
+    when(inSeason, base * lit(SeasonalMultiplier)).otherwise(base)
+
+  /** [[temporalBase]] with the route type's λ, boosted when both dates
+    * share a season.
     */
-  def temporalWeight(currentDate: Column, accidentDate: Column, routeType: Column): Column = {
-    val days = abs(datediff(currentDate, accidentDate)).cast("double")
-    val baseDecay = pow(temporalLambda(asciiLower(routeType)), days)
-    val baseWeight = lit(1.0) - lit(TemporalDecayImpact) *
-      (lit(1.0) - pow(baseDecay, TemporalDecayShape))
-    val sameSeason = seasonOf(currentDate) === seasonOf(accidentDate)
-    val seasonalMultiplier = lit(1.0 + (SeasonalBoost - 1.0) * TemporalSeasonalImpact)
-    when(sameSeason, baseWeight * seasonalMultiplier).otherwise(baseWeight)
-  }
+  def temporalWeight(currentDate: Column, accidentDate: Column, routeType: Column): Column =
+    seasonallyBoosted(sameSeason(currentDate, accidentDate),
+      temporalBase(temporalLambda(asciiLower(routeType)), dayCount(currentDate, accidentDate)))
 
   // -------------------------------------------------------------------------
   // Elevation (ref: backend/app/services/elevation_weighting.py:16-50,
@@ -117,13 +133,14 @@ object WeightExprs {
   def elevationDecayConstant(routeTypeLc: Column): Column =
     typeLookup(routeTypeLc, ElevationDecayConstant, ElevationDecayDefault)
 
-  /** `1 + 0.15·exp(−(Δelev/c)²)`; NULL elevation on either side → 1.0. */
-  def elevationWeight(routeElev: Column, accidentElev: Column, routeType: Column): Column = {
-    val c = elevationDecayConstant(asciiLower(routeType))
-    val diff = abs(accidentElev - routeElev)
-    val bonus = lit(ElevationBonusMax) * exp(-pow(diff / c, 2))
-    when(routeElev.isNull || accidentElev.isNull, lit(1.0)).otherwise(lit(1.0) + bonus)
-  }
+  /** `1 + 0.15·exp(−(|Δelev|/c)²)`; NULL elevation on either side → 1.0. */
+  def elevationBonus(routeElev: Column, accElev: Column, decayC: Column): Column =
+    when(routeElev.isNull || accElev.isNull, lit(1.0))
+      .otherwise(lit(1.0) + lit(ElevationBonusMax) * exp(-pow(abs(accElev - routeElev) / decayC, 2)))
+
+  /** [[elevationBonus]] with the route type's decay constant. */
+  def elevationWeight(routeElev: Column, accidentElev: Column, routeType: Column): Column =
+    elevationBonus(routeElev, accidentElev, elevationDecayConstant(asciiLower(routeType)))
 
   // -------------------------------------------------------------------------
   // Severity (ref: backend/app/services/severity_weighting.py:18-148,
@@ -143,28 +160,24 @@ object WeightExprs {
     "serious" -> Seq("serious", "severe", "critical", "injured", "injury", "hospitalized"),
     "minor" -> Seq("minor", "slight", "light", "uninjured", "no injury"))
 
-  /** Multiplier for a severity already normalized to fatal/serious/minor/unknown:
-    * the kernel's lookup, whose keys are those levels.
-    */
-  def severityWeight(severity: Column): Column = severityWeightKernel(severity)
-
-  /** The KERNEL's severity weight: exact case-folded dict lookup with
-    * default 1.0 — the reference influence kernel does NOT apply the
-    * term-containment normalizer (`safety_algorithm.py:278` calls
+  /** The severity weight: exact case-folded dict lookup with default 1.0.
+    * The reference influence kernel does NOT apply the term-containment
+    * normalizer (`safety_algorithm.py:278` calls
     * `calculate_severity_weight(accident.severity)` which is a plain
     * `SEVERITY_BOOSTERS.get(severity.lower(), 1.0)`,
     * `severity_weighting.py:18-55`) — so free text like "Serious Injury"
     * scores 1.0 in the kernel. normalizeSeverity (F10) remains a separate
-    * data-prep operator. A NULL severity matches no key and scores 1.0.
+    * data-prep operator, whose levels this lookup scores too. A NULL
+    * severity matches no key and scores 1.0.
     */
-  def severityWeightKernel(raw: Column): Column = {
+  def severityWeight(raw: Column): Column = {
     val lc = asciiLower(raw)
     KernelSeverityKeys.foldLeft(when(lit(false), lit(0.0))) { case (acc, k) =>
       acc.when(lc === k, lit(SeverityWeights(k)))
     }.otherwise(lit(1.0))
   }
 
-  /** The severity keys [[severityWeightKernel]] matches; every other value
+  /** The severity keys [[severityWeight]] matches; every other value
     * (minor, unknown, free text) scores 1.0.
     */
   private[graft] val KernelSeverityKeys: Seq[String] = Seq("fatal", "serious")

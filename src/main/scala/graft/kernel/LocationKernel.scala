@@ -57,9 +57,8 @@ object LocationKernel {
     * neutral 0.5 when absent, :360-363). Passes through acc_type and
     * a_difficulty for the per-route adjustment.
     */
-  def locationBaseInfluence(locations: DataFrame, accidents: DataFrame,
-                            targetDate: Column,
-                            floor: Double = SafetyKernel.SignificanceFloor): DataFrame = {
+  private[kernel] def locationBaseInfluence(locations: DataFrame, accidents: DataFrame,
+                                            targetDate: Column): DataFrame = {
     // same single-split hazard as SafetyKernel: a one-file locations dim
     // would run the whole |locations| × |accidents| loop on one core
     val locEnriched = graft.Partitioning.balanced(locations)
@@ -71,7 +70,7 @@ object LocationKernel {
       // SafetyKernel.enrichRoutes): cos(lat) for the haversine, 2h² for
       // the spatial Gaussian, λ-index for the temporal per-λ-slot precompute
       .withColumn("__coslat", cos(radians(col("loc_lat"))))
-      .withColumn("__two_h2", lit(2.0) * pow(col("__h"), 2))
+      .withColumn("__two_h2", WeightExprs.twoBandwidthSq(col("__h")))
       .withColumn("__lam_idx",
         LambdaSlots.zipWithIndex.foldLeft(when(lit(false), lit(0))) {
           case (acc, (lam, i)) => acc.when(col("__lam") === lam, i + 1)
@@ -87,13 +86,8 @@ object LocationKernel {
       // per-accident temporal precompute, one slot per possible λ (incl.
       // the constant boost — same multiplication order as the inline form,
       // so the indexed value is bit-identical)
-      .withColumn("__ltw_arr", {
-        def tw(lam: Double): Column =
-          (lit(1.0) - lit(WeightExprs.TemporalDecayImpact) *
-            (lit(1.0) - pow(pow(lit(lam), col("__days")), WeightExprs.TemporalDecayShape))) *
-            lit(AvgSeasonalBoost)
-        array(LambdaSlots.map(tw): _*)
-      })
+      .withColumn("__ltw_arr", array(LambdaSlots.map(lam =>
+        WeightExprs.temporalBase(lit(lam), col("__days")) * lit(AvgSeasonalBoost)): _*))
       .select(col("accident_id"), col("a_lat"), col("a_lon"), col("a_elev"),
         col("acc_type"), col("a_difficulty"), col("__sev_w"), col("__wfactor"),
         col("__ltw_arr"), col("__a_coslat"))
@@ -101,7 +95,7 @@ object LocationKernel {
     val dist = GeoExprs.haversineKmHoisted(
       col("__coslat"), col("loc_lat"), col("loc_lon"),
       col("__a_coslat"), col("a_lat"), col("a_lon"))
-    val spatial = exp(-pow(col("__dist"), 2) / col("__two_h2"))
+    val spatial = WeightExprs.spatialKernel(col("__dist"), col("__two_h2"))
     val temporal = element_at(col("__ltw_arr"), col("__lam_idx"))
     // batch elevation variant: at-or-below → 1.0, higher decays
     val elevDiff = col("a_elev") - col("loc_elev")
@@ -112,7 +106,7 @@ object LocationKernel {
       .withColumn("__dist", dist)
       .withColumn("base_influence",
         spatial * temporal * elevW * col("__sev_w") * col("__wfactor"))
-      .where(col("base_influence") > floor)
+      .where(col("base_influence") > SafetyKernel.SignificanceFloor)
       .select(col("location_id"), col("accident_id"), col("base_influence"),
         col("acc_type"), col("a_difficulty"))
   }

@@ -7,12 +7,16 @@ import graft.expr.{GeoExprs, WeightExprs}
   * for every (route, accident) pair.
   *
   * Each function performs the same operations, in the same order and with
-  * the same math functions, as the Catalyst factor expressions of the
-  * pair-grain kernel ([[SafetyKernel.influenceColumns]], GeoExprs,
-  * WeightExprs), so the two agree bit for bit: Spark's POWER and EXP call
-  * `StrictMath`, while SIN, ASIN, SQRT, RADIANS and ABS call
-  * `java.lang.Math` (`java.lang.Math.exp`/`pow` differ from StrictMath by
-  * an ulp on some inputs). `StrictMath.pow(x, 2)` is written `x * x`:
+  * the same math functions, as the one Catalyst body of its factor
+  * (`GeoExprs.haversineKmHoisted`, `WeightExprs.spatialKernel`,
+  * `elevationBonus`, `gradeWeight`) that the pair-grain kernel
+  * ([[SafetyKernel.influenceColumns]]) evaluates, so the two agree bit for
+  * bit. The temporal factor has no twin here: the fold reads the Catalyst
+  * `temporalBase` slots and applies `WeightExprs.SeasonalMultiplier`
+  * ([[RouteFold]]). Spark's POWER and EXP call `StrictMath`, while SIN,
+  * ASIN, SQRT, RADIANS and ABS call `java.lang.Math`
+  * (`java.lang.Math.exp`/`pow` differ from StrictMath by an ulp on some
+  * inputs). `StrictMath.pow(x, 2)` is written `x * x`:
   * FdLibm's pow returns exactly `x * x` for `y == 2` (NaN, ±0 and ±∞
   * included). Comparisons follow Spark's double ordering, in which NaN is
   * larger than every other value. NULL handling stays with the caller:
@@ -28,10 +32,6 @@ private[kernel] object PairMath {
 
   private val TwoEarthRadiusKm = 2.0 * GeoExprs.EarthRadiusKm
   private val GradeTwoSigma2 = 2.0 * WeightExprs.GradeSigma * WeightExprs.GradeSigma
-
-  /** The same-season temporal multiplier, 1 + (1.5 − 1)·0.10. */
-  val SeasonalMultiplier: Double =
-    1.0 + (WeightExprs.SeasonalBoost - 1.0) * WeightExprs.TemporalSeasonalImpact
 
   /** Canonical (planning, accident) route-type weights, flattened
     * planning-major: index = planningIdx × 7 + accidentIdx.

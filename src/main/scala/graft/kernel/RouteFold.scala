@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
+import graft.expr.WeightExprs
+
 /** The accident side of the multi-date fold, one primitive array per
   * factor input, indexed by the accidents' collect order (the order a
   * broadcast nested-loop join iterates its build side).
@@ -138,10 +140,8 @@ private[graft] object RouteFold {
     * NULL-date flag, then per date the temporal slots and season flag.
     */
   private[graft] def accidentFrame(accidents: DataFrame, dates: Seq[Column]): DataFrame = {
-    import SafetyKernel.{accidentDayCount, accidentSameSeason, accidentScalars}
-    val dateCols = dates.flatMap { planDate =>
-      Seq(SafetyKernel.temporalSlots(accidentDayCount(planDate)), accidentSameSeason(planDate))
-    }
+    import SafetyKernel.{accidentSameSeason, accidentScalars, temporalSlots}
+    val dateCols = dates.flatMap(planDate => Seq(temporalSlots(planDate), accidentSameSeason(planDate)))
     accidentScalars(accidents).select(
       (Seq("a_lat", "a_lon", "__a_coslat", "a_elev", "a_difficulty", "__acc_idx", "__sev_w",
         "__wfactor").map { c =>
@@ -187,7 +187,7 @@ private[graft] object RouteFold {
           var s = 0
           while (s < slots) {
             temporal((d * slots + s) * n + i) =
-              if (sameSeason) tw(s) * PairMath.SeasonalMultiplier else tw(s)
+              if (sameSeason) tw(s) * WeightExprs.SeasonalMultiplier else tw(s)
             s += 1
           }
           d += 1

@@ -30,6 +30,12 @@ import graft.expr.{GeoExprs, WeightExprs}
   * a per-route fold over primitive accident arrays ([[RouteFold]],
   * [[PairMath]]); this pair-grain form is its bitwise reference.
   *
+  * Each factor's Catalyst formula is written once, in WeightExprs
+  * (`spatialKernel`, `temporalBase`, `seasonallyBoosted`, `elevationBonus`,
+  * `severityWeight`, `gradeWeight`): this kernel applies them to hoisted
+  * per-route and per-accident columns, the standalone factor weights to
+  * per-type lookups, so both evaluate the same expression trees.
+  *
   * Expected input columns —
   *   routes:    route_id, lat, lon, elev, route_type (canonical, any ASCII case),
   *              difficulty (nullable Double)
@@ -108,7 +114,7 @@ object SafetyKernel {
       // pair-loop hoists: cos(lat) for the haversine, 2h² for the spatial
       // Gaussian — both depend on the route row only
       .withColumn("__coslat", cos(radians(col("lat"))))
-      .withColumn("__two_h2", lit(2.0) * pow(col("__h"), 2))
+      .withColumn("__two_h2", WeightExprs.twoBandwidthSq(col("__h")))
 
   /** Accident-side enrichment for one plan date: severity weight, type
     * index, season flag, weather factor — all per accident, never per pair.
@@ -121,7 +127,7 @@ object SafetyKernel {
       // a per-ACCIDENT slot-per-type precompute; the pair loop just
       // indexes it with the route's type index. Same constants, same op
       // order → the picked value is bit-identical to the inline formula.
-      .withColumn("__tw_arr", temporalSlots(accidentDayCount(planDate)))
+      .withColumn("__tw_arr", temporalSlots(planDate))
 
   /** The date-independent accident enrichment — severity weight, type
     * index, weather factor (wsim defaults to neutral 0.5), cos(lat) —
@@ -133,53 +139,26 @@ object SafetyKernel {
       if (accidents.columns.contains("wsim")) accidents
       else accidents.withColumn("wsim", lit(NeutralWeatherSimilarity))
     accBase
-      .withColumn("__sev_w", WeightExprs.severityWeightKernel(col("severity_raw")))
+      .withColumn("__sev_w", WeightExprs.severityWeight(col("severity_raw")))
       .withColumn("__acc_idx", typeIdx(WeightExprs.asciiLower(col("acc_type"))))
       .withColumn("__wfactor", WeightExprs.weatherFactor(col("wsim")))
       .withColumn("__a_coslat", cos(radians(col("a_lat"))))
   }
 
-  /** |plan date − accident date| in days, as a double. */
-  private[kernel] def accidentDayCount(planDate: Column): Column =
-    abs(datediff(planDate, col("a_date"))).cast("double")
-
   /** Plan date and accident date fall in the same season. */
   private[kernel] def accidentSameSeason(planDate: Column): Column =
-    WeightExprs.seasonOf(planDate) === WeightExprs.seasonOf(col("a_date"))
+    WeightExprs.sameSeason(planDate, col("a_date"))
 
-  /** One temporal base weight per canonical type (+ the default slot last),
-    * as a function of a day-count column — the precompute indexed by
-    * `__rt_idx` in [[influenceColumns]].
+  /** For one plan date, the accident's temporal base weight
+    * ([[WeightExprs.temporalBase]]) per canonical type, with the default
+    * slot last — the precompute indexed by `__rt_idx` in
+    * [[influenceColumns]].
     */
-  private[kernel] def temporalSlots(days: Column): Column = {
-    def tw(lam: Double): Column =
-      lit(1.0) - lit(WeightExprs.TemporalDecayImpact) *
-        (lit(1.0) - pow(pow(lit(lam), days), WeightExprs.TemporalDecayShape))
-    array((CanonicalTypes.map(WeightExprs.TemporalLambda) :+
-      WeightExprs.TemporalLambdaDefault).map(tw): _*)
+  private[kernel] def temporalSlots(planDate: Column): Column = {
+    val days = WeightExprs.dayCount(planDate, col("a_date"))
+    array((CanonicalTypes.map(WeightExprs.TemporalLambda) :+ WeightExprs.TemporalLambdaDefault)
+      .map(lam => WeightExprs.temporalBase(lit(lam), days)): _*)
   }
-
-  // --- the pair factor expressions of influenceColumns; PairMath holds
-  // their scalar twins for the multi-date fold ---------------------------
-
-  private def spatialExpr: Column =
-    exp(-(pow(col("dist_km"), 2)) / col("__two_h2"))
-
-  private def elevationExpr: Column = {
-    val elevDiff = abs(col("a_elev") - col("elev"))
-    when(col("elev").isNull || col("a_elev").isNull, lit(1.0))
-      .otherwise(lit(1.0) + lit(WeightExprs.ElevationBonusMax) *
-        exp(-pow(elevDiff / col("__elev_c"), 2)))
-  }
-
-  private def routeTypeExpr: Column =
-    when(col("__rt_idx") >= 0 && col("__acc_idx") >= 0,
-      element_at(array(PairMath.RouteTypeMatrix.toSeq.map(lit): _*),
-        (col("__rt_idx") * 7 + col("__acc_idx") + 1).cast("int")))
-      .otherwise(WeightExprs.DefaultRouteTypeWeight)
-
-  private def gradeExpr: Column =
-    WeightExprs.gradeWeight(col("difficulty"), col("a_difficulty"))
 
   /** The per-pair kernel over an already-joined (enriched-routes ×
     * enriched-accidents) frame — the body of [[pairInfluence]]. It reads
@@ -209,18 +188,21 @@ object SafetyKernel {
     val baseWeight = element_at(col("__tw_arr"),
       when(col("__rt_idx") >= 0, col("__rt_idx") + 1)
         .otherwise(CanonicalTypes.size + 1).cast("int")) // default = last slot
-    val temporal = when(col("__same_season"), baseWeight * lit(PairMath.SeasonalMultiplier))
-      .otherwise(baseWeight)
     pairs
       // spatial: exp(-d²/(2h²)) with per-route bandwidth (2h² hoisted)
-      .withColumn("spatial_w", spatialExpr)
-      .withColumn("temporal_w", temporal)
+      .withColumn("spatial_w", WeightExprs.spatialKernel(col("dist_km"), col("__two_h2")))
+      .withColumn("temporal_w", WeightExprs.seasonallyBoosted(col("__same_season"), baseWeight))
       // elevation: bonus-only gaussian with per-route constant
-      .withColumn("elevation_w", elevationExpr)
+      .withColumn("elevation_w",
+        WeightExprs.elevationBonus(col("elev"), col("a_elev"), col("__elev_c")))
       // route-type: int-indexed flat 7×7 matrix (same literals as the map form)
-      .withColumn("route_type_w", routeTypeExpr)
+      .withColumn("route_type_w",
+        when(col("__rt_idx") >= 0 && col("__acc_idx") >= 0,
+          element_at(array(PairMath.RouteTypeMatrix.toSeq.map(lit): _*),
+            (col("__rt_idx") * 7 + col("__acc_idx") + 1).cast("int")))
+          .otherwise(WeightExprs.DefaultRouteTypeWeight))
       .withColumn("severity_w", col("__sev_w"))
-      .withColumn("grade_w", gradeExpr)
+      .withColumn("grade_w", WeightExprs.gradeWeight(col("difficulty"), col("a_difficulty")))
       // multiplication order mirrors the reference composition exactly
       // (safety_algorithm.py:293-319) — and the DuckDB oracle SQL.
       .withColumn("base_influence",

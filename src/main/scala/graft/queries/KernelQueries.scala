@@ -108,7 +108,7 @@ object KernelQueries {
           WeightExprs.normalizeSeverity(col("severity_raw")).as("severity_level"),
           WeightExprs.severityWeight(WeightExprs.normalizeSeverity(col("severity_raw")))
             .as("severity_norm_w"),
-          WeightExprs.severityWeightKernel(col("severity_raw")).as("severity_w"))
+          WeightExprs.severityWeight(col("severity_raw")).as("severity_w"))
         .orderBy("accident_id")
     }),
 
@@ -335,6 +335,18 @@ object KernelQueries {
 
   private val distExpr = Sql.haversine("lat", "lon", "a_lat", "a_lon")
 
+  /** The neutral-weather pair influences of the derived domain. */
+  private val influences = s"influences AS (${Sql.influenceSelect("routes CROSS JOIN accidents")})"
+
+  /** `acc2`: the accidents with their assembled weather similarity, neutral
+    * where none was assembled.
+    */
+  private val accidentsWithSim =
+    s"""${WeatherQueries.assembledSimilarityCtes},
+       |acc2 AS (SELECT a.*, coalesce(sims.wsim, ${SafetyKernel.NeutralWeatherSimilarity})
+       |           AS wsim
+       |         FROM accidents a LEFT JOIN sims USING (accident_id))""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "k21_morton_key" -> withDomain(
       s"""SELECT route_id,
@@ -401,7 +413,7 @@ object KernelQueries {
          |ORDER BY route_type, accident_id""".stripMargin),
 
     "k08_kernel_risk" -> withDomain(
-      s""", ${Sql.influencePairsCte()}
+      s""", $influences
          |SELECT route_id,
          |       round(${Sql.normalizeRisk("sum(influence)")}, 4) AS risk_score,
          |       count(*) FILTER (WHERE influence > ${SafetyKernel.SignificanceFloor}) AS n_contributing
@@ -410,7 +422,7 @@ object KernelQueries {
          |ORDER BY route_id""".stripMargin),
 
     "k09_kernel_topk" -> withDomain(
-      s""", ${Sql.influencePairsCte()},
+      s""", $influences,
          |ranked AS (
          |  SELECT route_id, accident_id, influence,
          |         row_number() OVER (PARTITION BY route_id
@@ -425,25 +437,17 @@ object KernelQueries {
     // dates; the merge REPLACES (route ≤ 100, 2024-07-15) with scores from
     // the accident-≤-50 subset; retention then drops 2024-07-14 — the
     // WHERE on `merged` mirrors exactly that survivor set.
-    "k30_score_sink_roundtrip" -> withDomain {
-      def kernelPairs(from: String, planDate: String): String =
-        s"""SELECT route_id, accident_id,
-           |       (${Sql.spatialWeight(distExpr, "route_type")})
-           |       * (${Sql.temporalWeight(planDate, "a_date", "route_type")})
-           |       * (${Sql.elevationWeight("elev", "a_elev", "route_type")})
-           |       * (${Sql.routeTypeWeight("route_type", "acc_type")})
-           |       * (${Sql.severityWeight("severity_raw")})
-           |       * (${Sql.gradeWeight("difficulty", "a_difficulty")})
-           |       * (${Sql.weatherFactor("0.5")}) AS influence
-           |FROM $from""".stripMargin
+    // `merged` is a positional UNION ALL: both CTEs emit (route_id,
+    // accident_id, prediction_date, influence)
+    "k30_score_sink_roundtrip" -> withDomain(
       s""", dts AS (SELECT (DATE '2024-07-14' + CAST(d AS INT)) AS prediction_date
          |          FROM range(3) t(d)),
          |nightly AS (
-         |${kernelPairs("routes CROSS JOIN dts CROSS JOIN accidents", "prediction_date")
-          .replaceFirst("SELECT", "  SELECT prediction_date,")}),
+         |${Sql.influenceSelect("routes CROSS JOIN dts CROSS JOIN accidents", "prediction_date",
+          extraCols = ", prediction_date")}),
          |upd AS (
-         |${kernelPairs("routes CROSS JOIN accidents", "DATE '2024-07-15'")
-          .replaceFirst("SELECT", "  SELECT DATE '2024-07-15' AS prediction_date,")}
+         |${Sql.influenceSelect("routes CROSS JOIN accidents", "DATE '2024-07-15'",
+          extraCols = ", DATE '2024-07-15' AS prediction_date")}
          |  WHERE route_id <= 100 AND accident_id <= 50),
          |merged AS (
          |  SELECT * FROM nightly
@@ -457,8 +461,7 @@ object KernelQueries {
          |       ${Sql.colorCase(Sql.normalizeRisk("sum(influence)"))} AS color_code
          |FROM merged
          |GROUP BY route_id, prediction_date
-         |ORDER BY prediction_date, route_id""".stripMargin
-    },
+         |ORDER BY prediction_date, route_id""".stripMargin),
 
     "k19_cache_warming" -> withDomain(
       s""", top AS (SELECT * FROM routes
@@ -467,15 +470,8 @@ object KernelQueries {
          |dts AS (SELECT (${Sql.PlanDate} + CAST(d AS INT)) AS target_date
          |        FROM range(7) t(d)),
          |winfl AS (
-         |  SELECT route_id, target_date,
-         |         (${Sql.spatialWeight(distExpr, "route_type")})
-         |         * (${Sql.temporalWeight("target_date", "a_date", "route_type")})
-         |         * (${Sql.elevationWeight("elev", "a_elev", "route_type")})
-         |         * (${Sql.routeTypeWeight("route_type", "acc_type")})
-         |         * (${Sql.severityWeight("severity_raw")})
-         |         * (${Sql.gradeWeight("difficulty", "a_difficulty")})
-         |         * (${Sql.weatherFactor("0.5")}) AS influence
-         |  FROM top CROSS JOIN dts CROSS JOIN accidents)
+         |${Sql.influenceSelect("top CROSS JOIN dts CROSS JOIN accidents", "target_date",
+          extraCols = ", target_date")})
          |SELECT route_id, target_date,
          |       round(${Sql.normalizeRisk("sum(influence)")}, 1) AS risk_score,
          |       ${Sql.colorCase(Sql.normalizeRisk("sum(influence)"))} AS color_code
@@ -493,16 +489,8 @@ object KernelQueries {
          |ORDER BY route_id""".stripMargin),
 
     "k14_kernel_weather" -> withDomain(
-      s""", ${WeatherQueries.assembledSimilarityCtes},
-         |acc2 AS (SELECT a.*, coalesce(sims.wsim, ${SafetyKernel.NeutralWeatherSimilarity})
-         |           AS wsim
-         |         FROM accidents a LEFT JOIN sims USING (accident_id)),
-         |${Sql.pairInfluenceSelectFrom("routes CROSS JOIN acc2", ", wsim")
-        .replaceFirst("SELECT", "wpairs AS (SELECT")}),
-         |winfl AS (
-         |  SELECT route_id, accident_id,
-         |         spatial_w * temporal_w * elevation_w * route_type_w * severity_w * grade_w * (${Sql.weatherFactor("wsim")}) AS influence
-         |  FROM wpairs)
+      s""", $accidentsWithSim,
+         |winfl AS (${Sql.influenceSelect("routes CROSS JOIN acc2", wsim = "wsim")})
          |SELECT route_id,
          |       round(${Sql.normalizeRisk("sum(influence)")}, 4) AS risk_score,
          |       count(*) FILTER (WHERE influence > ${SafetyKernel.SignificanceFloor}) AS n_contributing
@@ -512,21 +500,13 @@ object KernelQueries {
          |ORDER BY route_id""".stripMargin),
 
     "k16_kernel_extreme" -> withDomain(
-      s""", ${WeatherQueries.assembledSimilarityCtes},
-         |acc2 AS (SELECT a.*, coalesce(sims.wsim, ${SafetyKernel.NeutralWeatherSimilarity})
-         |           AS wsim
-         |         FROM accidents a LEFT JOIN sims USING (accident_id)),
+      s""", $accidentsWithSim,
          |${Sql.extremeMultCtes(7, Derived.CurrentKey.toString)},
          |routes2 AS (
          |  SELECT r.*, m.wmult
          |  FROM (SELECT *, route_id % 10 AS bucket FROM routes WHERE route_id <= 300) r
          |  JOIN mult m USING (bucket)),
-         |${Sql.pairInfluenceSelectFrom("routes2 CROSS JOIN acc2", ", wsim, wmult")
-        .replaceFirst("SELECT", "wpairs AS (SELECT")}),
-         |winfl AS (
-         |  SELECT route_id, accident_id,
-         |         spatial_w * temporal_w * elevation_w * route_type_w * severity_w * grade_w * (${Sql.weatherFactor("wsim * wmult")}) AS influence
-         |  FROM wpairs)
+         |winfl AS (${Sql.influenceSelect("routes2 CROSS JOIN acc2", wsim = "wsim * wmult")})
          |SELECT route_id,
          |       round(${Sql.normalizeRisk("sum(influence)")}, 4) AS risk_score,
          |       count(*) FILTER (WHERE influence > ${SafetyKernel.SignificanceFloor}) AS n_contributing
@@ -535,27 +515,22 @@ object KernelQueries {
          |ORDER BY route_id""".stripMargin),
 
     "k18_location_kernel" -> withDomain(
-      s""", ${WeatherQueries.assembledSimilarityCtes},
-         |acc2 AS (SELECT a.*, coalesce(sims.wsim, ${SafetyKernel.NeutralWeatherSimilarity})
-         |           AS wsim
-         |         FROM accidents a LEFT JOIN sims USING (accident_id)),
+      s""", $accidentsWithSim,
          |${Sql.LocationsCte},
          |base AS (
          |  SELECT location_id, accident_id, acc_type, a_difficulty,
          |         (${Sql.spatialWeight(Sql.haversine("loc_lat", "loc_lon", "a_lat", "a_lon"),
               "coalesce(loc_type, 'trad')")})
-         |         * ((1.0 - ${WeightExprs.TemporalDecayImpact} * (1.0 - pow(pow(
-              ${Sql.typeLookupCase("coalesce(loc_type, 'trad')",
-                WeightExprs.TemporalLambda, WeightExprs.TemporalLambdaDefault)},
-              CAST(greatest(date_diff('day', a_date, ${Sql.PlanDate}), 0) AS DOUBLE)),
-              ${WeightExprs.TemporalDecayShape}))) * ${graft.kernel.LocationKernel.AvgSeasonalBoost})
+         |         * ((${Sql.temporalBase(Sql.typeLookupCase("coalesce(loc_type, 'trad')",
+                WeightExprs.TemporalLambda, WeightExprs.TemporalLambdaDefault),
+              s"CAST(greatest(date_diff('day', a_date, ${Sql.PlanDate}), 0) AS DOUBLE)")})
+         |           * ${graft.kernel.LocationKernel.AvgSeasonalBoost})
          |         * (CASE WHEN loc_elev IS NULL OR a_elev IS NULL OR (a_elev - loc_elev) <= 0.0 THEN 1.0
          |                 ELSE exp(-pow((a_elev - loc_elev) / (${Sql.typeLookupCase(
               "coalesce(loc_type, 'trad')", WeightExprs.ElevationDecayConstant,
               WeightExprs.ElevationDecayDefault)}), 2)) END)
          |         * (${Sql.severityWeight("severity_raw")})
-         |         * (CASE WHEN wsim < ${WeightExprs.WeatherExclusionThreshold} THEN 0.0
-         |                 ELSE pow(wsim, ${WeightExprs.WeatherPower}) END)
+         |         * (${Sql.weatherFactor("wsim")})
          |           AS base_influence
          |  FROM locations CROSS JOIN acc2),
          |sig AS (SELECT * FROM base WHERE base_influence > ${SafetyKernel.SignificanceFloor}),
@@ -583,7 +558,7 @@ object KernelQueries {
          |ORDER BY route_id""".stripMargin),
 
     "k10_color_hist" -> withDomain(
-      s""", ${Sql.influencePairsCte()},
+      s""", $influences,
          |risks AS (
          |  SELECT route_id, ${Sql.normalizeRisk("sum(influence)")} AS risk_score
          |  FROM influences GROUP BY route_id)

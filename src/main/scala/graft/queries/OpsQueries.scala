@@ -182,8 +182,9 @@ object OpsQueries {
     // the null/empty guards, dist-asc/date-desc-nulls-last order, and a
     // BINDING limit. Coordinates depend on s_suppkey % 40, so keys 40
     // apart tie on distance and the date-desc-nulls-last tiebreak decides
-    // who crosses the LIMIT boundary (within a tie group dates are
-    // distinct with at most one null — the order is total) -------------
+    // who crosses the LIMIT boundary; a tie group can hold several NULL
+    // dates (keys 6, 126 and 606 at sf0.1), so accident_id ASC is the last
+    // key and the order is total --------------------------------------
     "k25_accident_proximity" -> ((s, dir) => {
       import graft.analytics.Analytics
       val acc = Tables.supplier(s, dir).select(
@@ -694,12 +695,12 @@ object OpsQueries {
          |              OR contains('great route', a) END AS same_route,
          |    dt
          |  FROM f
-         |  ORDER BY distance_km ASC, dt DESC NULLS LAST
+         |  ORDER BY distance_km ASC, dt DESC NULLS LAST, accident_id ASC
          |  LIMIT 15)
          |SELECT accident_id, round(distance_km, 6) AS dist_km, impact_score,
          |       same_route, strftime(dt, '%Y-%m-%d') AS acc_date
          |FROM scored
-         |ORDER BY dist_km""".stripMargin
+         |ORDER BY distance_km ASC, dt DESC NULLS LAST, accident_id ASC""".stripMargin
     },
     "k24_hourly_serving" -> {
       val rawCase = Seq("YDS", "Traditional", "sport climb", "Bouldering",

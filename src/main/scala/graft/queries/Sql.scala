@@ -106,15 +106,19 @@ object Sql {
       s"WHEN ($monthExpr) IN (3, 4, 5) THEN 'spring' " +
       s"WHEN ($monthExpr) IN (6, 7, 8) THEN 'summer' ELSE 'fall' END"
 
+  /** Temporal base weight `1 − 0.35·(1 − (λ^days)^1.5)`, mirroring
+    * WeightExprs.temporalBase.
+    */
+  def temporalBase(lambda: String, days: String): String =
+    s"1.0 - ${WeightExprs.TemporalDecayImpact} * " +
+      s"(1.0 - pow(pow($lambda, $days), ${WeightExprs.TemporalDecayShape}))"
+
   /** Temporal weight, mirroring WeightExprs.temporalWeight. */
   def temporalWeight(planDate: String, accDate: String, routeType: String): String = {
     val lam = typeLookupCase(routeType, WeightExprs.TemporalLambda, WeightExprs.TemporalLambdaDefault)
-    val days = s"CAST(abs(date_diff('day', $accDate, $planDate)) AS DOUBLE)"
-    val baseW = s"1.0 - ${WeightExprs.TemporalDecayImpact} * " +
-      s"(1.0 - pow(pow($lam, $days), ${WeightExprs.TemporalDecayShape}))"
-    val mult = 1.0 + (WeightExprs.SeasonalBoost - 1.0) * WeightExprs.TemporalSeasonalImpact
+    val baseW = temporalBase(lam, s"CAST(abs(date_diff('day', $accDate, $planDate)) AS DOUBLE)")
     s"CASE WHEN ${seasonCase(s"month($planDate)")} = ${seasonCase(s"month($accDate)")} " +
-      s"THEN ($baseW) * $mult ELSE ($baseW) END"
+      s"THEN ($baseW) * ${WeightExprs.SeasonalMultiplier} ELSE ($baseW) END"
   }
 
   def elevationWeight(routeElev: String, accElev: String, routeType: String): String = {
@@ -143,7 +147,7 @@ object Sql {
   }
 
   /** The kernel's severity weight: exact lower(raw) lookup, default 1.0
-    * (mirrors WeightExprs.severityWeightKernel).
+    * (mirrors WeightExprs.severityWeight).
     */
   def severityWeight(raw: String): String =
     s"CASE WHEN ($raw) IS NULL THEN 1.0 " +
@@ -181,50 +185,30 @@ object Sql {
     s"CASE WHEN ($risk) < 30 THEN 'green' WHEN ($risk) < 50 THEN 'yellow' " +
       s"WHEN ($risk) < 70 THEN 'orange' ELSE 'red' END"
 
-  /** The full per-pair influence with neutral weather similarity 0.5
-    * (missing-pattern path) — multiplication order mirrors
-    * SafetyKernel.pairInfluence exactly.
+  /** The kernel's per-pair influence, the one DuckDB twin of
+    * SafetyKernel.pairInfluence: `SELECT route_id, accident_id<extraCols>,
+    * (spatial) * (temporal) * (elevation) * (route type) * (severity) *
+    * (grade) * (weather factor) AS influence FROM <from>`, multiplied left
+    * to right in the reference's order. `from` supplies the route and
+    * accident columns (e.g. accidents pre-joined with their weather
+    * similarities); `planDate` is a date expression over it; `wsim` is the
+    * weather similarity expression, by default the missing-pattern neutral
+    * 0.5.
     */
-  def pairInfluenceSelect: String =
-    pairInfluenceSelectFrom("routes CROSS JOIN accidents", "")
-
-  /** Parametrized variant: custom FROM clause (e.g. accidents pre-joined
-    * with per-accident weather similarities) and extra pass-through columns.
-    */
-  def pairInfluenceSelectFrom(from: String, extraCols: String): String = {
-    val dist = haversine("lat", "lon", "a_lat", "a_lon")
-    s"""SELECT route_id, accident_id$extraCols,
-       |       $dist AS dist_km,
-       |       ${spatialWeight(dist, "route_type")} AS spatial_w,
-       |       ${temporalWeight(PlanDate, "a_date", "route_type")} AS temporal_w,
-       |       ${elevationWeight("elev", "a_elev", "route_type")} AS elevation_w,
-       |       ${routeTypeWeight("route_type", "acc_type")} AS route_type_w,
-       |       ${severityWeight("severity_raw")} AS severity_w,
-       |       ${gradeWeight("difficulty", "a_difficulty")} AS grade_w
-       |FROM $from""".stripMargin
+  def influenceSelect(from: String, planDate: String = PlanDate,
+                      wsim: String = graft.kernel.SafetyKernel.NeutralWeatherSimilarity.toString,
+                      extraCols: String = ""): String = {
+    val factors = Seq(
+      spatialWeight(haversine("lat", "lon", "a_lat", "a_lon"), "route_type"),
+      temporalWeight(planDate, "a_date", "route_type"),
+      elevationWeight("elev", "a_elev", "route_type"),
+      routeTypeWeight("route_type", "acc_type"),
+      severityWeight("severity_raw"),
+      gradeWeight("difficulty", "a_difficulty"),
+      weatherFactor(wsim))
+    s"SELECT route_id, accident_id$extraCols,\n       " +
+      factors.map(f => s"($f)").mkString("\n       * ") + s" AS influence\nFROM $from"
   }
-
-  /** CTE producing (route_id, accident_id, influence) pairs. `wsim` is the
-    * per-pair weather-similarity expression, evaluated in the `influences`
-    * CTE — so it may only reference columns the `pairs` CTE emits (the
-    * default is the missing-pattern neutral 0.5). To use PER-ACCIDENT
-    * similarities, pass a `pairsSelect` built with
-    * [[pairInfluenceSelectFrom]] whose FROM pre-joins them and whose
-    * `extraCols` carries the similarity column through — then name that
-    * column here (the k14/k16 oracles in KernelQueries are the worked
-    * examples).
-    */
-  def influencePairsCte(wsim: String = SafetyKernelNeutral,
-                        pairsSelect: String = pairInfluenceSelect): String = {
-    val wf = weatherFactor(wsim)
-    s"""pairs AS ($pairsSelect),
-       |influences AS (
-       |  SELECT route_id, accident_id,
-       |         spatial_w * temporal_w * elevation_w * route_type_w * severity_w * grade_w AS base_influence,
-       |         spatial_w * temporal_w * elevation_w * route_type_w * severity_w * grade_w * ($wf) AS influence
-       |  FROM pairs)""".stripMargin
-  }
-  private val SafetyKernelNeutral = "0.5"
 
   // --- deterministic 7-day weather series (twins of Derived.tempAvg etc.;
   // `a` = key expression, `k` = day index 0..6) ------------------------------

@@ -204,7 +204,7 @@ object StreamingOps {
   // --- streaming NEAR-dup candidates (LSH over a stateful posting list) ----
 
   /** One (doc, band) posting: `bucket` is xxhash64 of the band's signature
-    * slice — the SAME banding pipeline as the batch `Dedup.bandedPostings`,
+    * slice, made by `Dedup.bandSignatures` as in the batch `bandedPostings`,
     * so stream and batch agree on which docs collide.
     */
   case class BandedSig(id: Long, sig: Seq[Long], band: Int, bucket: Long)
@@ -260,7 +260,6 @@ object StreamingOps {
     require(numHashes % bands == 0,
       s"signature length $numHashes not divisible by $bands bands")
     import docs.sparkSession.implicits._
-    val r = numHashes / bands
     // native fused signature expression — bit-identical to the HOF column
     // form (Dedup.minhashSignature) and the batch bulk path, so
     // stream≡batch parity is by construction; null-text docs yield a NULL
@@ -271,12 +270,7 @@ object StreamingOps {
         graft.expr.MinHashExpr.minhashSigs(
           graft.text.TextExprs.tokens(col(textCol)), numHashes, shingleWidth).as("sig"))
       .where(col("sig").isNotNull)
-    val banded = signed.select(col("id"), col("sig"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(b, concat_ws(",", slice(col("sig"), b * r + 1, lit(r)))))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
-      .as[BandedSig]
+    val banded = graft.dedup.Dedup.bandSignatures(signed, "id", numHashes, bands).as[BandedSig]
     val timeoutConf =
       if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()

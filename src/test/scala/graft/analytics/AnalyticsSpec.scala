@@ -73,6 +73,25 @@ class AnalyticsSpec extends SparkSpec {
     assert(ranked.head.getAs[Int]("accident_id") == 1)
   }
 
+  test("accidentProximity: ties on distance and date straddling the limit keep the lowest ids") {
+    // accident 1 is nearest; 5-9 share one spot farther out, 6 and 8 on one
+    // date and 5, 7, 9 undated. Fed in descending id order, so only the
+    // accident_id key can put the lowest ids first within each tie group.
+    val d = Some(java.sql.Date.valueOf("2023-05-01"))
+    val acc = (Seq(9 -> None, 8 -> d, 7 -> None, 6 -> d, 5 -> None)
+      .map { case (id, date) => (id, date, 40.05, -105.05) } :+
+      ((1, d, 40.0, -105.0)))
+      .toDF("accident_id", "date", "latitude", "longitude")
+      .withColumn("route", lit(null).cast("string"))
+      .repartition(1)
+    def ids(limit: Int): Seq[Int] =
+      Analytics.accidentProximity(acc, lit(40.0), lit(-105.0), lit("x"), limit)
+        .collect().map(_.getAs[Int]("accident_id")).toSeq
+    assert(ids(2) == Seq(1, 6)) // the dated group straddles the limit
+    assert(ids(4) == Seq(1, 6, 8, 5)) // the undated group straddles it
+    assert(ids(6) == Seq(1, 6, 8, 5, 7, 9))
+  }
+
   test("ascentAnalytics: null tick dates form no phantom month") {
     val ticks = Seq(
       (1L, Some(java.sql.Date.valueOf("2023-07-01")), "sport"),

@@ -78,10 +78,10 @@ class WeightExprsSpec extends SparkSpec {
 
   test("severity: kernel raw lookup vs data-prep normalization") {
     // kernel path — exact lowercase lookup, default 1.0
-    assert(evalDouble(WeightExprs.severityWeightKernel(lit("Fatal"))) == 1.3)
-    assert(evalDouble(WeightExprs.severityWeightKernel(lit("serious"))) == 1.1)
-    assert(evalDouble(WeightExprs.severityWeightKernel(lit("Serious Injury"))) == 1.0)
-    assert(evalDouble(WeightExprs.severityWeightKernel(lit(null).cast("string"))) == 1.0)
+    assert(evalDouble(WeightExprs.severityWeight(lit("Fatal"))) == 1.3)
+    assert(evalDouble(WeightExprs.severityWeight(lit("serious"))) == 1.1)
+    assert(evalDouble(WeightExprs.severityWeight(lit("Serious Injury"))) == 1.0)
+    assert(evalDouble(WeightExprs.severityWeight(lit(null).cast("string"))) == 1.0)
     // normalization path — term containment, fatal → serious → minor priority
     val cases = Seq(
       ("Fatal fall from height", "fatal", 1.3),

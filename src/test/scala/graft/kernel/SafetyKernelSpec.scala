@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.expr.WeightExprs
+import graft.queries.Derived
 
 /** End-to-end kernel fidelity on the reference's own canonical fixture
   * (test_safety_algorithm.py:30-120: Longs Peak + 4 accidents, no weather →
@@ -92,5 +94,48 @@ class SafetyKernelSpec extends SparkSpec {
     assert(approx(pairs(1), math.pow(0.9, 3), 1e-12))
     assert(pairs(2) == 0.0)
     assert(approx(pairs(3), 0.125, 1e-12))
+  }
+
+  test("pairInfluence's factor columns equal the standalone WeightExprs factors, bit for bit") {
+    // the Derived fixture, with one route type in upper case, an unknown
+    // route type, a mixed-case and an unknown accident type and an
+    // upper-case severity; it already has NULL elevations and
+    // difficulties on both sides and every canonical type
+    val dir = "/root/testdata/sf0.001"
+    val routes = Derived.routes(spark, dir).withColumn("route_type",
+      when(col("route_id") % 9 === 0, upper(col("route_type")))
+        .when(col("route_id") % 11 === 0, lit("scramble")).otherwise(col("route_type")))
+    val accs = Derived.accidents(spark, dir)
+      .withColumn("acc_type", when(col("accident_id") === 8, initcap(col("acc_type")))
+        .when(col("accident_id") === 9, lit("via ferrata")).otherwise(col("acc_type")))
+      .withColumn("severity_raw",
+        when(col("accident_id") === 5, upper(col("severity_raw"))).otherwise(col("severity_raw")))
+    val factors = Seq(
+      "spatial_w" -> WeightExprs.spatialWeight(col("dist_km"), col("route_type")),
+      "temporal_w" -> WeightExprs.temporalWeight(Derived.planDate, col("a_date"), col("route_type")),
+      "elevation_w" -> WeightExprs.elevationWeight(col("elev"), col("a_elev"), col("route_type")),
+      "route_type_w" -> WeightExprs.routeTypeWeight(col("route_type"), col("acc_type")),
+      "severity_w" -> WeightExprs.severityWeight(col("severity_raw")),
+      "grade_w" -> WeightExprs.gradeWeight(col("difficulty"), col("a_difficulty")))
+    val rows = SafetyKernel.pairInfluence(routes, accs, Derived.planDate)
+      .select(Seq("route_type", "acc_type", "severity_raw", "elev", "a_elev", "difficulty",
+        "a_difficulty").map(col) ++ factors.flatMap { case (n, f) => Seq(col(n), f) }: _*)
+      .collect()
+    // the fixture covers what the factors branch on
+    def values(c: String): Set[Any] = rows.map(_.getAs[Any](c)).toSet
+    val types = SafetyKernel.CanonicalTypes.toSet[Any]
+    assert(types.subsetOf(values("route_type")) && types.subsetOf(values("acc_type")))
+    assert(values("route_type")("scramble") && values("route_type").exists(t => t != null &&
+      t.toString.exists(_.isUpper)))
+    assert(values("acc_type")("via ferrata") && values("acc_type").exists(t => t != null &&
+      t.toString.exists(_.isUpper)))
+    assert(values("severity_raw")("FATAL") && values("severity_raw")("Serious Injury"))
+    Seq("elev", "a_elev", "difficulty", "a_difficulty").foreach(c => assert(values(c)(null), c))
+    for (r <- rows; ((name, _), i) <- factors.zipWithIndex) {
+      val kernel = r.getDouble(7 + 2 * i)
+      val standalone = r.getDouble(8 + 2 * i)
+      assert(java.lang.Double.doubleToRawLongBits(kernel) ==
+        java.lang.Double.doubleToRawLongBits(standalone), s"$name: $kernel vs $standalone in $r")
+    }
   }
 }

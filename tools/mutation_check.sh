@@ -287,8 +287,8 @@ run_mutation hourly-temp-band \
 # dist_km; verified dead at sf0.001 in the round-10 default run).
 run_mutation proximity-nulls-first \
   src/main/scala/graft/analytics/Analytics.scala \
-  '.orderBy(col("distance_km").asc, col("date").desc_nulls_last)' \
-  '.orderBy(col("distance_km").asc, col("date").desc_nulls_first)' \
+  'col("date").desc_nulls_last, col("accident_id").asc)' \
+  'col("date").desc_nulls_first, col("accident_id").asc)' \
   'k25_accident_proximity' \
   /root/testdata/sf0.01
 
@@ -388,6 +388,17 @@ run_mutation_spec band-half-gate \
   'Math.toDegrees(gateKm / GeoExprs.EarthRadiusKm) * (1 + SkipMargin)' \
   'Math.toDegrees(gateKm / GeoExprs.EarthRadiusKm) * (1 + SkipMargin) / 2' \
   'graft.kernel.KernelPruningSpec'
+
+# M25: the temporal base's sign flipped — `1 − 0.35·(…)` becomes
+# `1 + 0.35·(…)` in WeightExprs.temporalBase, the one Catalyst body of the
+# decay: the standalone weight (k03), the pair kernel's per-type slots
+# (k08) and the location kernel's per-λ slots (k18) all read it, so one
+# plant moves all three
+run_mutation temporal-base-flip \
+  src/main/scala/graft/expr/WeightExprs.scala \
+  'lit(1.0) - lit(TemporalDecayImpact) * (lit(1.0) - pow(pow(lambda, days), TemporalDecayShape))' \
+  'lit(1.0) + lit(TemporalDecayImpact) * (lit(1.0) - pow(pow(lambda, days), TemporalDecayShape))' \
+  'k03_temporal_weight,k08_kernel_risk,k18_location_kernel'
 
 echo ""
 echo "==================================================================="
