@@ -45,37 +45,15 @@ object Dedup {
     df.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
   }
 
-  /** MinHash signature column: `numHashes` minima over seeded xxhash64 of
-    * w-token shingles. The HOF REFERENCE form (CodegenFallback —
-    * interpreted per element): kept as the independently-derived
-    * semantics the native fused expression is spec-pinned against. For
-    * bulk signature computation prefer [[minhashSignatures]] (the
-    * codegen'd single-pass [[graft.expr.MinHashSigs]]).
-    */
-  def minhashSignature(text: Column, numHashes: Int, shingleWidth: Int): Column = {
-    val shingles = TextExprs.shingleHashes(text, shingleWidth)
-    // null text → NULL signature, not [NULL × numHashes]: the outer
-    // transform runs over a non-null index sequence, so without the guard a
-    // null doc got a NON-null array of null minima — it survived into LSH
-    // where concat_ws skips NULLs, every band hashed to the same "" bucket,
-    // and all null docs emitted O(m²) phantom candidate pairs. The bulk
-    // form ([[minhashSignatures]]) drops null docs via an explicit
-    // isNotNull filter (the staged twin dropped them via explode); this
-    // guard keeps the column form consistent with both.
-    when(text.isNull, lit(null).cast("array<bigint>"))
-      .otherwise(transform(sequence(lit(0), lit(numHashes - 1)),
-        i => array_min(transform(shingles, sh => xxhash64(i, sh)))))
-  }
-
   /** Bulk MinHash signatures via the native codegen'd expression
     * ([[graft.expr.MinHashSigs]]): one fused map-side pass per document —
     * all `numHashes` minima in one scan over the token array, no explode,
-    * no aggregate, NO shuffle. Agrees bit-for-bit with the column form
-    * ([[minhashSignature]], the HOF reference) and with the staged
-    * explode→min-aggregate twin (`MinHashStaged.minhashSignaturesStaged`,
-    * in the test tree) — DedupSpec
-    * asserts both. Null-text docs are dropped, exactly as the staged
-    * form's explode-of-NULL-array emitted no rows for them.
+    * no aggregate, NO shuffle. Agrees bit-for-bit with the HOF column
+    * form (`MinHashStaged.minhashSignature`) and with the staged
+    * explode→min-aggregate form (`MinHashStaged.minhashSignaturesStaged`),
+    * both references in the test tree — DedupSpec asserts both.
+    * Null-text docs are dropped, exactly as the staged form's
+    * explode-of-NULL-array emitted no rows for them.
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int, shingleWidth: Int): DataFrame =
@@ -282,32 +260,11 @@ object Dedup {
     labels.select(col("node"), col("label").as("component"))
   }
 
-  /** 63-bit SimHash over token hashes: bit j of the result is the sign of
-    * Σ_tokens (±1 by bit j of xxhash64(token)). 63 bits so the Horner
-    * packing never overflows a long (ANSI-safe).
-    */
-  def simhash63(text: Column): Column = {
-    val toks = TextExprs.tokens(text)
-    val bitVotes = transform(sequence(lit(0), lit(62)), j =>
-      aggregate(toks, lit(0L),
-        (acc, t) => acc + when(
-          xxhash64(t).bitwiseAND(pow(lit(2.0), j).cast("long")) =!= 0L, 1L)
-          .otherwise(-1L)))
-    // null text → NULL, bit-for-bit with the native [[graft.expr.SimHash63]]
-    // (null array → NULL): without the guard the inner aggregates were NULL
-    // votes but the OUTER aggregate ran over a non-null 63-element array and
-    // packed every NULL vote to a 0-bit — all null docs got simhash 0L,
-    // hamming-0 phantom near-dups of each other and of any real simhash-0
-    // doc. MSB = bit 62; acc stays < 2^63 throughout.
-    when(text.isNull, lit(null).cast("bigint"))
-      .otherwise(aggregate(reverse(bitVotes), lit(0L),
-        (acc, v) => acc * 2L + when(v > 0, 1L).otherwise(0L)))
-  }
-
   /** Bulk SimHash signatures via the native codegen'd expression
     * ([[graft.expr.SimHash63]]): one fused map-side pass per document —
-    * no explode, no aggregate, no shuffle. Agrees bit-for-bit with
-    * [[simhash63]] (DedupSpec asserts it); the earlier explode→63-
+    * no explode, no aggregate, no shuffle. Agrees bit-for-bit with the
+    * HOF reference form (`MinHashStaged.simhash63`, in the test tree;
+    * DedupSpec asserts it); the earlier explode→63-
     * conditional-sum-aggregates form was scale-safe but paid 63 aggregate
     * expressions per (doc, token) row plus a doc-keyed exchange — 48 s at
     * sf0.1 vs scan throughput for this form.

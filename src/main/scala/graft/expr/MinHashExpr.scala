@@ -15,9 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `numHashes` minima computed in one codegen'd scan, no explode, no
   * aggregate, no shuffle.
   *
-  * Semantics are bit-identical to the staged reference form
-  * (`Dedup.minhashSignature` / the explode→min-aggregate bulk form it
-  * replaced as the hot path), reproducing Spark's own hash pipeline
+  * Semantics are bit-identical to the reference forms in the test tree
+  * (`MinHashStaged.minhashSignature` / the explode→min-aggregate bulk
+  * form it replaced as the hot path), reproducing Spark's own hash pipeline
   * exactly:
   *
   *  - shingle `s` (0-based) covers tokens `[s, min(s+w, n))`; there are

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native 63-bit SimHash over a token array — one codegen'd pass.
   *
-  * Semantics are bit-identical to Dedup.simhash63 (the higher-order-function
-  * reference form): per token `h = xxhash64(token)` (Spark's default seed
+  * Semantics are bit-identical to `MinHashStaged.simhash63` (the
+  * higher-order-function reference form, in the test tree): per token `h = xxhash64(token)` (Spark's default seed
   * 42), each of the 63 low bits votes ±1, the result packs `vote > 0` bits
   * with bit 62 as MSB. A null token hashes to the seed (XxHash64's
   * null-skip behavior); an EMPTY array packs to 0L, a null array yields

@@ -3,51 +3,50 @@ package graft.expr
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
+
+import graft.expr.StatsExprs.WithinWindowDecay
+import graft.weather.WeatherExprs.{FactorWeight, MinWeatherDaysRequired}
 
 /** Native scalar kernel for the 6-factor weather-pattern similarity
-  * (SURVEY A3-A5; ref `backend/app/services/weather_similarity.py:88-218`).
+  * (SURVEY A3-A5; ref `backend/app/services/weather_similarity.py:88-218`)
+  * — the one Catalyst similarity. [[WeatherPatternSimilarity]] (the
+  * composite: nightly, predict, memo, k14/k16/k18, w04 and the
+  * `weather_similarity` SQL function) and [[WeatherPatternDetail]] (its
+  * per-factor breakdown: w10) run the one `compute` body.
   *
-  * The staged Column-form similarity (WeatherExprs.withWeatherSimilarity)
-  * is correct but builds a ~10k-node expression
-  * tree: five weighted Pearsons over 7-day arrays via higher-order
-  * functions, each a deep `aggregate`/`zip_with` nest. Every query that
-  * composes it (k14/k16/k18 kernels, interactive predict) paid ~10-20 s of
-  * fixed driver cost — Catalyst rule iteration plus janino compilation of
-  * megabyte-scale generated classes — to process a few thousand accident
-  * rows. This expression is the same arithmetic as ONE tree node: plans
-  * shrink back to normal size and the per-row loop is a tight primitive
-  * pass over the ArrayData buffers (the SURVEY §7.3 preference order —
-  * native Expression for a scalar kernel built-ins can't express
-  * efficiently).
+  * Why native: the staged Column form (five weighted Pearsons over 7-day
+  * arrays via higher-order functions, each a deep `aggregate`/`zip_with`
+  * nest) built a ~10k-node expression tree, and every query composing it
+  * paid ~10-20 s of fixed driver cost — Catalyst rule iteration plus
+  * janino compilation of megabyte-scale generated classes. This is the
+  * same arithmetic as ONE tree node, and the per-row loop is a tight
+  * primitive pass over the ArrayData buffers (SURVEY §7.3).
   *
   * Bit-exactness: every sum is the same left fold, every multiply the same
   * association order, and every edge rule (zero-variance Pearson cases,
   * [-1,1] clamp, freeze-thaw null → 0.0 similarity, <5-day validity → 0.0)
-  * the same branch as the staged Column form, so results are bit-identical
-  * (WeatherSimExprSpec asserts exact equality against the staged form; the
-  * w04/w07/k14/k16/k18 DuckDB oracles hash the same values).
+  * the same branch as the staged form, which the test tree keeps as the
+  * independent reference (`graft.weather.WeatherSimStaged`);
+  * WeatherSimExprSpec asserts exact equality of the composite and of every
+  * detail column against it.
   *
   * Inputs are two pattern structs as built by [[graft.weather.WeatherExprs
   * .pattern]]: five array&lt;double&gt; factor series (non-null elements —
   * the assembly's per-field defaults guarantee this) plus
-  * `daily_temps: array&lt;struct&lt;min,avg,max&gt;&gt;`. A null struct on
-  * either side yields NULL (callers coalesce to the reference's neutral
-  * 0.5); a malformed side (null factor array / null element) yields the
-  * staged form's degenerate 0.0 score for that factor.
+  * `daily_temps: array&lt;struct&lt;min,avg,max&gt;&gt;`. A null struct or
+  * temperature series on either side yields NULL (callers coalesce to the
+  * reference's neutral 0.5); a malformed side (null factor array / null
+  * element) yields the degenerate 0.0 score for that factor.
   */
-case class WeatherPatternSimilarity(left: Expression, right: Expression)
-  extends BinaryExpression with CodegenFallback {
+sealed abstract class PatternPairExpression extends BinaryExpression with CodegenFallback {
 
   import WeatherPatternSimilarity._
 
-  override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
-  override def prettyName: String = "weather_pattern_similarity"
 
   override def checkInputDataTypes(): TypeCheckResult = {
     // compute() reads primitives positionally, so the SHAPE must be fully
@@ -83,19 +82,57 @@ case class WeatherPatternSimilarity(left: Expression, right: Expression)
   @transient private lazy val curDt = dtOrdinals(left.dataType)
   @transient private lazy val accDt = dtOrdinals(right.dataType)
 
-  override def nullSafeEval(a: Any, b: Any): Any =
+  /** The composite of one non-null pair, its parts reported to `parts`. */
+  protected def similarityOf(a: Any, b: Any, parts: Parts): Any =
     compute(a.asInstanceOf[InternalRow], curOrd, curDt,
-      b.asInstanceOf[InternalRow], accOrd, accDt)
+      b.asInstanceOf[InternalRow], accOrd, accDt, parts)
+}
+
+/** The composite similarity: one double per pair. */
+case class WeatherPatternSimilarity(left: Expression, right: Expression)
+  extends PatternPairExpression {
+
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "weather_pattern_similarity"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    similarityOf(a, b, WeatherPatternSimilarity.NoParts)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): WeatherPatternSimilarity =
     copy(left = newLeft, right = newRight)
 }
 
+/** The reference's `calculate_weather_similarity_detailed`
+  * (`weather_similarity.py:347-483`): one [[WeatherPatternSimilarity.DetailType]]
+  * struct per pair, its composite [[WeatherPatternSimilarity]]'s value bit
+  * for bit. NULL where the composite is NULL; an invalid pair (< 5 days on
+  * either side, an empty pattern included) is all zeros, the relational
+  * spelling of the reference's empty-dict-and-zeros return.
+  */
+case class WeatherPatternDetail(left: Expression, right: Expression)
+  extends PatternPairExpression {
+
+  override def dataType: DataType = WeatherPatternSimilarity.DetailType
+  override def prettyName: String = "weather_pattern_detail"
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val parts = new WeatherPatternSimilarity.Detail
+    similarityOf(a, b, parts) match {
+      case s: Double => parts.row.update(9, s); parts.row
+      case _ => null
+    }
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): WeatherPatternDetail =
+    copy(left = newLeft, right = newRight)
+}
+
 object WeatherPatternSimilarity {
 
-  /** Canonical factor order — mirrors the reference dict iteration order
-    * and the staged Column form's score summation order.
+  /** Canonical factor order — mirrors the reference dict iteration order,
+    * and is the order the composite sums its factor scores in.
     */
   val Factors: Seq[String] =
     Seq("temperature", "precipitation", "wind_speed", "visibility", "cloud_cover")
@@ -114,19 +151,47 @@ object WeatherPatternSimilarity {
     (et.fieldIndex("min"), et.fieldIndex("max"), et.length)
   }
 
-  private val MinDays = 5      // WeatherExprs.MinWeatherDaysRequired
-  private val Decay = 0.85     // StatsExprs.WithinWindowDecay
-  private val FactorWeight = 1.0 / 6
+  /** What [[compute]] reports of a valid pair besides the composite: each
+    * factor's score (`f` indexes [[Factors]], 5 = freeze-thaw), the
+    * freeze-thaw counts (-1 = NULL `daily_temps`) and the days compared.
+    * The base class keeps nothing: it is the composite's sink.
+    */
+  private[expr] class Parts {
+    def score(f: Int, s: Double): Unit = ()
+    def counts(ftCurrent: Int, ftAccident: Int, days: Int): Unit = ()
+  }
+  private[expr] val NoParts = new Parts
+
+  /** [[WeatherPatternDetail]]'s struct: `score_<factor>` (the five factors,
+    * then `freeze_thaw`), `ft_current` and `ft_accident` (NULL on a NULL
+    * `daily_temps` side), `days_compared` and the composite `similarity`.
+    */
+  val DetailType: StructType = StructType(
+    (Factors :+ "freeze_thaw").map(f => StructField(s"score_$f", DoubleType)) ++
+      Seq("ft_current", "ft_accident", "days_compared").map(StructField(_, LongType)) :+
+      StructField("similarity", DoubleType))
+
+  /** One detail row, zeros until a valid pair reports its parts. */
+  private[expr] final class Detail extends Parts {
+    val row = new GenericInternalRow(Array[Any](0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0L, 0L, 0L, 0.0))
+    override def score(f: Int, s: Double): Unit = row.update(f, s)
+    override def counts(ftCurrent: Int, ftAccident: Int, days: Int): Unit = {
+      row.update(6, if (ftCurrent < 0) null else ftCurrent.toLong)
+      row.update(7, if (ftAccident < 0) null else ftAccident.toLong)
+      row.update(8, days.toLong)
+    }
+  }
 
   // scalastyle:off method.length
-  private def compute(cur: InternalRow, co: Array[Int], cdt: (Int, Int, Int),
-                      acc: InternalRow, ao: Array[Int], adt: (Int, Int, Int)): Any = {
+  private[expr] def compute(cur: InternalRow, co: Array[Int], cdt: (Int, Int, Int),
+                            acc: InternalRow, ao: Array[Int], adt: (Int, Int, Int),
+                            parts: Parts): Any = {
     val curTemp = if (cur.isNullAt(co(0))) null else cur.getArray(co(0))
     val accTemp = if (acc.isNullAt(ao(0))) null else acc.getArray(ao(0))
     if (curTemp == null || accTemp == null) return null
     // validity gate uses the FULL series lengths (staged: size(x.temperature))
-    if (curTemp.numElements() < MinDays || accTemp.numElements() < MinDays)
-      return 0.0
+    if (curTemp.numElements() < MinWeatherDaysRequired ||
+      accTemp.numElements() < MinWeatherDaysRequired) return 0.0
 
     val n = math.min(curTemp.numElements(), accTemp.numElements())
     // within-window weights, oldest→newest: raw = decay^(n-1-i), then the
@@ -135,7 +200,7 @@ object WeatherPatternSimilarity {
     val wn = new Array[Double](n)
     var wsum1 = 0.0
     var i = 0
-    while (i < n) { wn(i) = math.pow(Decay, (n - 1 - i).toDouble); wsum1 += wn(i); i += 1 }
+    while (i < n) { wn(i) = math.pow(WithinWindowDecay, (n - 1 - i).toDouble); wsum1 += wn(i); i += 1 }
     var wsum2 = 0.0
     i = 0
     while (i < n) { wn(i) = wn(i) / wsum1; wsum2 += wn(i); i += 1 }
@@ -214,10 +279,12 @@ object WeatherPatternSimilarity {
       }
 
     // base = Σ scoreᵢ·(1/6), same left-assoc order as the staged reduce
-    var base = score(0) * FactorWeight
+    def weighted(f: Int, s: Double): Double = { parts.score(f, s); s * FactorWeight }
+    var base = weighted(0, score(0))
     var f = 1
-    while (f < 5) { base += score(f) * FactorWeight; f += 1 }
-    base += ftSim * FactorWeight
+    while (f < 5) { base += weighted(f, score(f)); f += 1 }
+    base += weighted(5, ftSim)
+    parts.counts(fa, fb, n)
     base
   }
   // scalastyle:on method.length
@@ -225,5 +292,10 @@ object WeatherPatternSimilarity {
   /** Column factory: native 6-factor similarity of two pattern structs. */
   def similarity(current: Column, accident: Column): Column =
     ColumnBridge.column(WeatherPatternSimilarity(
+      ColumnBridge.expression(current), ColumnBridge.expression(accident)))
+
+  /** Column factory: the [[DetailType]] breakdown of two pattern structs. */
+  def detailed(current: Column, accident: Column): Column =
+    ColumnBridge.column(WeatherPatternDetail(
       ColumnBridge.expression(current), ColumnBridge.expression(accident)))
 }

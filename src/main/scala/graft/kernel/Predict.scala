@@ -73,7 +73,7 @@ object Predict {
   /** Score one route. `accidents` uses the kernel schema (accident_id,
     * a_lat, a_lon, a_elev, acc_type, severity_raw, a_date, a_difficulty,
     * optional wsim); pass `currentWeather`/`accidentPatterns` upstream by
-    * pre-computing a `wsim` column (WeatherExprs.withWeatherSimilarity) —
+    * pre-computing a `wsim` column (WeatherPatternSimilarity.similarity) —
     * absent, the missing-pattern neutral 0.5 applies, exactly like the
     * reference (`safety_algorithm.py:265-269`). The P6 gate runs here,
     * mirroring the reference's step 1.6.

@@ -362,14 +362,15 @@ object KernelQueries {
          |WHERE route_id <= 200
          |ORDER BY route_id, accident_id""".stripMargin),
 
-    "k22_weather_factor" -> withDomain(
-      s"""SELECT accident_id,
-         |       CAST((accident_id * 25) % 101 AS DOUBLE) / 100.0 AS wsim,
-         |       round(CASE WHEN CAST((accident_id * 25) % 101 AS DOUBLE) / 100.0 < ${WeightExprs.WeatherExclusionThreshold}
-         |             THEN 0.0
-         |             ELSE pow(CAST((accident_id * 25) % 101 AS DOUBLE) / 100.0, ${WeightExprs.WeatherPower}) END, 6) AS wfactor
-         |FROM accidents
-         |ORDER BY accident_id""".stripMargin),
+    "k22_weather_factor" -> {
+      val wsim = "CAST((accident_id * 25) % 101 AS DOUBLE) / 100.0"
+      withDomain(
+        s"""SELECT accident_id,
+           |       $wsim AS wsim,
+           |       round(${Sql.weatherFactor(wsim)}, 6) AS wfactor
+           |FROM accidents
+           |ORDER BY accident_id""".stripMargin)
+    },
 
     "k02_spatial_weight" -> withDomain(
       s"""SELECT route_id, accident_id,

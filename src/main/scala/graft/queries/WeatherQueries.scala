@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.expr.StatsExprs
+import graft.expr.{StatsExprs, WeatherPatternSimilarity}
 import graft.weather.{WeatherAssembly, WeatherExprs, WeatherStats}
 
 /** Weather-pattern operators (SURVEY A2-A5, W3) oracle-checked on the
@@ -82,42 +82,28 @@ object WeatherQueries {
     }),
 
     // A5: full 6-factor weather similarity (no extreme amplification),
-    // via the staged let-bound form (bit-identical to the Column form).
-    "w04_weather_similarity" -> ((s, dir) => {
-      WeatherExprs.withWeatherSimilarity(
-        accidentIds(s, dir),
-        Derived.weatherPattern(lit(Derived.CurrentKey)),
-        Derived.weatherPattern(col("accident_id")),
-        "wsim_raw")
-        .select(
-          col("accident_id"),
-          round(col("wsim_raw"), 6).as("weather_similarity"))
-        .orderBy("accident_id")
-    }),
+    // the native expression every production path evaluates.
+    "w04_weather_similarity" -> ((s, dir) =>
+      accidentIds(s, dir).select(col("accident_id"), round(WeatherPatternSimilarity.similarity(
+          Derived.weatherPattern(lit(Derived.CurrentKey)),
+          Derived.weatherPattern(col("accident_id"))), 6).as("weather_similarity"))
+        .orderBy("accident_id")),
 
     // A5 detailed: the reference's calculate_weather_similarity_detailed
     // (weather_similarity.py:347-483) — per-factor normalized correlations,
-    // freeze-thaw counts and days compared alongside the composite; the
-    // oracle re-derives every factor column independently, so a wrong
-    // factor can no longer hide inside a right sum.
+    // freeze-thaw counts and days compared alongside the composite, all
+    // from the native detail struct; the oracle re-derives every factor
+    // column independently, so a wrong factor cannot hide inside a right sum.
     "w10_similarity_detailed" -> ((s, dir) => {
-      val d = WeatherExprs.withWeatherSimilarityDetailed(
-        accidentIds(s, dir),
-        Derived.weatherPattern(lit(Derived.CurrentKey)),
-        Derived.weatherPattern(col("accident_id")),
-        "wsim_raw")
-      d.select(
-        col("accident_id"),
-        round(col("ws_score_temperature"), 6).as("score_temperature"),
-        round(col("ws_score_precipitation"), 6).as("score_precipitation"),
-        round(col("ws_score_wind_speed"), 6).as("score_wind_speed"),
-        round(col("ws_score_visibility"), 6).as("score_visibility"),
-        round(col("ws_score_cloud_cover"), 6).as("score_cloud_cover"),
-        round(col("ws_score_freeze_thaw"), 6).as("score_freeze_thaw"),
-        col("ws_ft_current").as("ft_current"),
-        col("ws_ft_accident").as("ft_accident"),
-        col("ws_days_compared").as("days_compared"),
-        round(col("wsim_raw"), 6).as("base_similarity"))
+      accidentIds(s, dir)
+        .withColumn("ws", WeatherPatternSimilarity.detailed(
+          Derived.weatherPattern(lit(Derived.CurrentKey)),
+          Derived.weatherPattern(col("accident_id"))))
+        .select(Seq(col("accident_id")) ++
+          (WeatherPatternSimilarity.Factors :+ "freeze_thaw").map(f =>
+            round(col(s"ws.score_$f"), 6).as(s"score_$f")) ++
+          Seq("ft_current", "ft_accident", "days_compared").map(c => col(s"ws.$c").as(c)) :+
+          round(col("ws.similarity"), 6).as("base_similarity"): _*)
         .orderBy("accident_id")
     }),
 

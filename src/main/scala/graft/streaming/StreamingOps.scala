@@ -260,9 +260,9 @@ object StreamingOps {
     require(numHashes % bands == 0,
       s"signature length $numHashes not divisible by $bands bands")
     import docs.sparkSession.implicits._
-    // native fused signature expression — bit-identical to the HOF column
-    // form (Dedup.minhashSignature) and the batch bulk path, so
-    // stream≡batch parity is by construction; null-text docs yield a NULL
+    // native fused signature expression — bit-identical to the HOF
+    // reference form (MinHashStaged.minhashSignature) and the batch bulk
+    // path, so stream≡batch parity is by construction; null-text docs yield a NULL
     // signature (null tokens array → unary null propagation) and are
     // dropped here exactly as the batch path drops them
     val signed = docs.select(

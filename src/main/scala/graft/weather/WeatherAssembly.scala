@@ -112,9 +112,9 @@ object WeatherAssembly {
     * the risk sum; the reference treats a missing forecast as the same
     * neutral 0.5 as a missing accident pattern
     * (safety_computation_optimized.py:552-554). The similarity is the
-    * native single-node kernel (bit-identical to the staged Column form —
-    * WeatherSimExprSpec), which keeps the downstream kernel plans free of
-    * the ~10k-node staged expression tree.
+    * native single-node kernel (bit-identical to the test tree's staged
+    * reference — WeatherSimExprSpec), which keeps the downstream kernel
+    * plans free of a ~10k-node staged expression tree.
     */
   private[weather] def similarityOrNeutral(current: Column, pattern: Column): Column =
     coalesce(

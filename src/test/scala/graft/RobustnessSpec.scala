@@ -29,10 +29,10 @@ class RobustnessSpec extends SparkSpec {
     near.foreach(v => assert(!v.isNaN && v < 0.001))
   }
 
-  test("staged weather similarity survives an EMPTY pattern (0 days → 0.0)") {
+  test("weather similarity survives an EMPTY pattern (0 days → 0.0)") {
     import graft.weather.WeatherExprs
-    val empty = WeatherExprs.pattern(
-      array(), array(), array(), array(), array(),
+    val none = array().cast("array<double>")
+    val empty = WeatherExprs.pattern(none, none, none, none, none,
       array().cast("array<struct<min:double,avg:double,max:double>>"))
     val full = WeatherExprs.pattern(
       array((1 to 7).map(i => lit(i.toDouble)): _*),
@@ -42,9 +42,8 @@ class RobustnessSpec extends SparkSpec {
       array((1 to 7).map(_ => lit(50.0)): _*),
       array((1 to 7).map(i => struct(lit(i - 1.0).as("min"), lit(i.toDouble).as("avg"),
         lit(i + 1.0).as("max"))): _*))
-    val out = WeatherExprs.withWeatherSimilarity(
-      spark.range(1).toDF(), empty, full, "ws")
-      .select("ws").head()
+    val out = spark.range(1)
+      .select(graft.expr.WeatherPatternSimilarity.similarity(empty, full)).head()
     assert(!out.isNullAt(0) && out.getDouble(0) == 0.0,
       "empty-vs-full similarity must be the <5-day 0.0, not a crash")
   }

@@ -31,7 +31,7 @@ class DedupSpec extends SparkSpec {
     val exact = Dedup.ngramJaccardPairs(docs.where(col("doc_id") <= 2), "doc_id", "text", 3)
       .head().getAs[Double]("jaccard")
     val sigs = docs.select(col("doc_id"),
-      Dedup.minhashSignature(col("text"), 128, 3).as("sig"))
+      MinHashStaged.minhashSignature(col("text"), 128, 3).as("sig"))
     val sigMap = sigs.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val est = sigMap(1L).zip(sigMap(2L)).count { case (a, b) => a == b } / 128.0
     // 128 hashes → standard error ~ sqrt(j(1-j)/128) ≈ 0.04
@@ -44,7 +44,7 @@ class DedupSpec extends SparkSpec {
     val bulk = Dedup.minhashSignatures(docs, "doc_id", "text", 16, 3)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val colForm = docs.select(col("doc_id"),
-      Dedup.minhashSignature(col("text"), 16, 3).as("sig"))
+      MinHashStaged.minhashSignature(col("text"), 16, 3).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(bulk == colForm)
   }
@@ -200,7 +200,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash: near-dups close in hamming space, unrelated docs far") {
-    val hashes = docs.select(col("doc_id"), Dedup.simhash63(col("text")).as("h"))
+    val hashes = docs.select(col("doc_id"), MinHashStaged.simhash63(col("text")).as("h"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // bulk exploded-aggregate form agrees with the column form
     val bulk = Dedup.simhashSignatures(docs, "doc_id", "text")
@@ -269,7 +269,7 @@ class DedupSpec extends SparkSpec {
     assert(kept.toSeq == Seq(1L, 2L, 3L), s"got ${kept.toSeq}")
     assert(Dedup.exactGroups(withNulls, "text", "doc_id").count() == 1)
     // simhash: column form yields NULL, bit-for-bit with the native bulk form
-    val colForm = withNulls.select(col("doc_id"), Dedup.simhash63(col("text")).as("h"))
+    val colForm = withNulls.select(col("doc_id"), MinHashStaged.simhash63(col("text")).as("h"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
     val bulkForm = Dedup.simhashSignatures(withNulls, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
@@ -278,7 +278,7 @@ class DedupSpec extends SparkSpec {
     // minhash column form: NULL signature (not an array of NULL minima), so
     // null docs never reach LSH banding
     val sigs = withNulls.select(col("doc_id"),
-      Dedup.minhashSignature(col("text"), 8, 3).as("sig"))
+      MinHashStaged.minhashSignature(col("text"), 8, 3).as("sig"))
       .collect().map(r => r.getLong(0) -> r.isNullAt(1)).toMap
     assert(sigs(2L) && sigs(3L), "null text must yield a NULL signature")
     assert(!sigs(1L) && !sigs(4L))

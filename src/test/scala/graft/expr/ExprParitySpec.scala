@@ -121,7 +121,7 @@ class ExprParitySpec extends SparkSpec {
     val native = df.select($"doc_id", graft.expr.MinHashExpr.minhashSigs(
       graft.text.TextExprs.tokens($"text"), 8, 3).as("sig"))
     val hof = df.select($"doc_id",
-      graft.dedup.Dedup.minhashSignature($"text", 8, 3).as("sig"))
+      graft.dedup.MinHashStaged.minhashSignature($"text", 8, 3).as("sig"))
     assert(rows(native) == rows(hof))
   }
 

@@ -1,105 +1,24 @@
 package graft.expr
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.queries.Derived
-import graft.weather.WeatherExprs
+import graft.weather.{WeatherExprs, WeatherSimStaged}
 
-/** The native WeatherPatternSimilarity must be BIT-IDENTICAL to the staged
-  * Column form (WeatherExprs.withWeatherSimilarity) — the DuckDB oracles for
-  * k14/k16/k18 hash values produced by the native kernel, while w04 hashes
-  * the staged form, so exact (==, not ≈) agreement is what keeps both green.
+/** The native WeatherPatternSimilarity and its detail must be BIT-IDENTICAL
+  * to the staged Column form (WeatherSimStaged, the test-tree reference):
+  * the DuckDB oracles for w04/w10/k14/k16/k18 hash values produced by the
+  * native kernel, and exact (==, not ≈) agreement with an independently
+  * derived form is what pins its arithmetic.
   */
 class WeatherSimExprSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  test("native == staged, bit-for-bit, on every derived pattern pair") {
-    // all accident patterns vs the shared current pattern — the exact
-    // pairing the kernel queries evaluate
-    val df = Derived.accidents(spark, sfDir)
-      .select(col("accident_id"))
-      .withColumn("cur", Derived.weatherPattern(lit(Derived.CurrentKey)))
-      .withColumn("acc", Derived.weatherPattern(col("accident_id")))
-    val staged = WeatherExprs.withWeatherSimilarity(df, col("cur"), col("acc"), "s")
-    val both = staged
-      .withColumn("nat", WeatherPatternSimilarity.similarity(col("cur"), col("acc")))
-    val diff = both.where(col("s") =!= col("nat") ||
-      col("s").isNull =!= col("nat").isNull)
-    assert(diff.count() == 0, diff.select("accident_id", "s", "nat").head(5).mkString("; "))
-    assert(both.count() > 0)
-  }
-
-  test("native == staged over ASSEMBLED patterns (defaults, short series)") {
-    // the w07 assembly output carries every planted hazard: missing days,
-    // 5/6-day boundary patterns, defaulted fields
-    val pats = graft.weather.WeatherAssembly.assemblePatterns(
-      Derived.weatherRows(spark, sfDir), Derived.accidents(spark, sfDir))
-      .withColumn("cur", Derived.weatherPattern(lit(Derived.CurrentKey)))
-    val staged = WeatherExprs.withWeatherSimilarity(pats, col("cur"), col("pattern"), "s")
-    val both = staged
-      .withColumn("nat", WeatherPatternSimilarity.similarity(col("cur"), col("pattern")))
-    assert(both.where(col("s") =!= col("nat")).count() == 0)
-    assert(both.count() > 0)
-  }
-
-  test("null accident pattern → NULL (callers coalesce to neutral 0.5)") {
-    val df = spark.range(1)
-      .withColumn("cur", Derived.weatherPattern(lit(Derived.CurrentKey)))
-      .withColumn("acc", when(lit(false), Derived.weatherPattern(lit(1L))))
-    val out = df.select(
-      WeatherPatternSimilarity.similarity(col("cur"), col("acc")).as("v")).head()
-    assert(out.isNullAt(0))
-  }
-
-  test("null TEMPERATURE series → NULL from native AND staged alike") {
-    // a non-null struct with a null temperature array used to diverge: the
-    // native expression returns NULL, while the staged form's 3VL-null
-    // validity gate fell through to otherwise(base) and leaked a REAL
-    // number (temperature degenerating to score 0, other factors live)
-    val nullTempPat = WeatherExprs.pattern(
-      lit(null).cast("array<double>"),
-      array(lit(0.0), lit(0.0), lit(0.0), lit(0.0), lit(0.0)),
-      array(lit(5.0), lit(5.0), lit(5.0), lit(5.0), lit(5.0)),
-      array(lit(1.0), lit(1.0), lit(1.0), lit(1.0), lit(1.0)),
-      array(lit(50.0), lit(50.0), lit(50.0), lit(50.0), lit(50.0)),
-      array(struct(lit(0.0).as("min"), lit(1.0).as("avg"), lit(2.0).as("max"))))
-    val df = spark.range(1)
-      .withColumn("cur", Derived.weatherPattern(lit(Derived.CurrentKey)))
-      .withColumn("acc", nullTempPat)
-    val native = df.select(
-      WeatherPatternSimilarity.similarity(col("cur"), col("acc")).as("v")).head()
-    assert(native.isNullAt(0), "native must null on a null temperature array")
-    val staged = WeatherExprs.withWeatherSimilarity(df, col("cur"), col("acc"), "s")
-      .select("s").head()
-    assert(staged.isNullAt(0), "staged must match the native NULL, not leak a number")
-    // and the reserved staging prefix is guarded loudly
-    intercept[IllegalArgumentException] {
-      WeatherExprs.withWeatherSimilarity(
-        df.withColumn("__wsim_n", lit(1)), col("cur"), col("acc"), "s")
-    }
-  }
-
-  test("<5-day side → 0.0, exactly like the staged validity gate") {
-    def shortPat = WeatherExprs.pattern(
-      array(lit(1.0), lit(2.0), lit(3.0)), array(lit(0.0), lit(0.0), lit(0.0)),
-      array(lit(5.0), lit(5.0), lit(5.0)), array(lit(1.0), lit(1.0), lit(1.0)),
-      array(lit(50.0), lit(50.0), lit(50.0)),
-      array(struct(lit(0.0).as("min"), lit(1.0).as("avg"), lit(2.0).as("max"))))
-    val df = spark.range(1)
-      .withColumn("cur", Derived.weatherPattern(lit(Derived.CurrentKey)))
-      .withColumn("acc", shortPat)
-    val v = df.select(
-      WeatherPatternSimilarity.similarity(col("cur"), col("acc")).as("v"))
-      .head().getDouble(0)
-    assert(v == 0.0)
-  }
-
-  test("property: native == staged on random patterns incl. degenerate series") {
-    // deterministic pseudo-random pattern pairs: varying lengths (5-7),
-    // constant series (zero-variance Pearson edge), equal series
-    // (corr exactly 1), negated series (corr -1), freeze-thaw straddles
+  /** 200 seeded pattern pairs (i, cur, acc); see the property arm. */
+  private def randomPairs(): DataFrame = {
     val rnd = new scala.util.Random(20260812L)
     def series(n: Int, constant: Boolean, base: Double): Seq[Double] =
       if (constant) Seq.fill(n)(base)
@@ -127,16 +46,124 @@ class WeatherSimExprSpec extends SparkSpec {
     }
     import spark.implicits._
     val df = rows.toDF("i", "a", "b")
-    def toPattern(c: org.apache.spark.sql.Column) =
-      graft.weather.WeatherExprs.pattern(
+    def toPattern(c: Column) =
+      WeatherExprs.pattern(
         c.getField("_1"), c.getField("_2"), c.getField("_3"),
         c.getField("_4"), c.getField("_5"),
         transform(c.getField("_6"), t => struct(
           t.getField("_1").as("min"), t.getField("_2").as("avg"),
           t.getField("_3").as("max"))))
-    val patterns = df.select(col("i"),
-      toPattern(col("a")).as("cur"), toPattern(col("b")).as("acc"))
-    val staged = WeatherExprs.withWeatherSimilarity(
+    df.select(col("i"), toPattern(col("a")).as("cur"), toPattern(col("b")).as("acc"))
+  }
+
+  private def arr(xs: Double*): Column = array(xs.map(lit): _*)
+  private def oneDayTemps: Column =
+    array(struct(lit(0.0).as("min"), lit(1.0).as("avg"), lit(2.0).as("max")))
+
+  /** Five days of every factor but `temperature`, which the caller gives. */
+  private def fiveDayPat(temperature: Column): Column = WeatherExprs.pattern(temperature,
+    arr(0, 0, 0, 0, 0), arr(5, 5, 5, 5, 5), arr(1, 1, 1, 1, 1), arr(50, 50, 50, 50, 50), oneDayTemps)
+
+  /** A 3-day pattern: invalid (< 5 days). */
+  private def shortPat: Column = WeatherExprs.pattern(
+    arr(1, 2, 3), arr(0, 0, 0), arr(5, 5, 5), arr(1, 1, 1), arr(50, 50, 50), oneDayTemps)
+
+  /** Native detail ≡ staged detail in every column, and its composite ≡
+    * `similarity`, bit for bit and NULL for NULL over `pairs`' (cur, acc).
+    */
+  private def assertDetailParity(pairs: DataFrame): Int = {
+    val fields = WeatherPatternSimilarity.DetailType.fieldNames.toSeq
+    val rows = WeatherSimStaged.withWeatherSimilarity(
+        pairs, col("cur"), col("acc"), "ws_similarity", Some("ws_"))
+      .withColumn("nat", WeatherPatternSimilarity.detailed(col("cur"), col("acc")))
+      .withColumn("comp", WeatherPatternSimilarity.similarity(col("cur"), col("acc")))
+      .collect()
+    def bits(v: Any): Any = v match { case d: Double => java.lang.Double.doubleToLongBits(d); case o => o }
+    rows.foreach { r =>
+      val nat = Option(r.getAs[Row]("nat"))
+      val native = fields.map(f => nat.map(_.getAs[Any](f)).orNull).map(bits)
+      assert(fields.map(f => bits(r.getAs[Any](s"ws_$f"))) == native, s"in $r")
+      assert(native.last == bits(r.getAs[Any]("comp")), s"composite in $r")
+    }
+    rows.length
+  }
+
+  test("native == staged, bit-for-bit, on every derived pattern pair") {
+    // all accident patterns vs the shared current pattern — the exact
+    // pairing the kernel queries evaluate
+    val df = Derived.accidents(spark, sfDir)
+      .select(col("accident_id"))
+      .withColumn("cur", Derived.weatherPattern(lit(Derived.CurrentKey)))
+      .withColumn("acc", Derived.weatherPattern(col("accident_id")))
+    val staged = WeatherSimStaged.withWeatherSimilarity(df, col("cur"), col("acc"), "s")
+    val both = staged
+      .withColumn("nat", WeatherPatternSimilarity.similarity(col("cur"), col("acc")))
+    val diff = both.where(col("s") =!= col("nat") ||
+      col("s").isNull =!= col("nat").isNull)
+    assert(diff.count() == 0, diff.select("accident_id", "s", "nat").head(5).mkString("; "))
+    assert(both.count() > 0)
+  }
+
+  test("native == staged over ASSEMBLED patterns (defaults, short series)") {
+    // the w07 assembly output carries every planted hazard: missing days,
+    // 5/6-day boundary patterns, defaulted fields
+    val pats = graft.weather.WeatherAssembly.assemblePatterns(
+      Derived.weatherRows(spark, sfDir), Derived.accidents(spark, sfDir))
+      .withColumn("cur", Derived.weatherPattern(lit(Derived.CurrentKey)))
+    val staged = WeatherSimStaged.withWeatherSimilarity(pats, col("cur"), col("pattern"), "s")
+    val both = staged
+      .withColumn("nat", WeatherPatternSimilarity.similarity(col("cur"), col("pattern")))
+    assert(both.where(col("s") =!= col("nat")).count() == 0)
+    assert(both.count() > 0)
+  }
+
+  test("null accident pattern → NULL (callers coalesce to neutral 0.5)") {
+    val df = spark.range(1)
+      .withColumn("cur", Derived.weatherPattern(lit(Derived.CurrentKey)))
+      .withColumn("acc", when(lit(false), Derived.weatherPattern(lit(1L))))
+    val out = df.select(
+      WeatherPatternSimilarity.similarity(col("cur"), col("acc")).as("v")).head()
+    assert(out.isNullAt(0))
+  }
+
+  test("null TEMPERATURE series → NULL from native AND staged alike") {
+    // a non-null struct with a null temperature array used to diverge: the
+    // native expression returns NULL, while the staged form's 3VL-null
+    // validity gate fell through to otherwise(base) and leaked a REAL
+    // number (temperature degenerating to score 0, other factors live)
+    val nullTempPat = fiveDayPat(lit(null).cast("array<double>"))
+    val df = spark.range(1)
+      .withColumn("cur", Derived.weatherPattern(lit(Derived.CurrentKey)))
+      .withColumn("acc", nullTempPat)
+    val native = df.select(
+      WeatherPatternSimilarity.similarity(col("cur"), col("acc")).as("v")).head()
+    assert(native.isNullAt(0), "native must null on a null temperature array")
+    val staged = WeatherSimStaged.withWeatherSimilarity(df, col("cur"), col("acc"), "s")
+      .select("s").head()
+    assert(staged.isNullAt(0), "staged must match the native NULL, not leak a number")
+    // and the reserved staging prefix is guarded loudly
+    intercept[IllegalArgumentException] {
+      WeatherSimStaged.withWeatherSimilarity(
+        df.withColumn("__wsim_n", lit(1)), col("cur"), col("acc"), "s")
+    }
+  }
+
+  test("<5-day side → 0.0, exactly like the staged validity gate") {
+    val df = spark.range(1)
+      .withColumn("cur", Derived.weatherPattern(lit(Derived.CurrentKey)))
+      .withColumn("acc", shortPat)
+    val v = df.select(
+      WeatherPatternSimilarity.similarity(col("cur"), col("acc")).as("v"))
+      .head().getDouble(0)
+    assert(v == 0.0)
+  }
+
+  test("property: native == staged on random patterns incl. degenerate series") {
+    // deterministic pseudo-random pattern pairs: varying lengths (5-7),
+    // constant series (zero-variance Pearson edge), equal series
+    // (corr exactly 1), negated series (corr -1), freeze-thaw straddles
+    val patterns = randomPairs()
+    val staged = WeatherSimStaged.withWeatherSimilarity(
       patterns, col("cur"), col("acc"), "s")
     val both = staged.withColumn("nat",
       WeatherPatternSimilarity.similarity(col("cur"), col("acc")))
@@ -155,11 +182,36 @@ class WeatherSimExprSpec extends SparkSpec {
     val pats = graft.weather.WeatherAssembly.assemblePatterns(
       Derived.weatherRows(spark, dir01), Derived.accidents(spark, dir01))
       .withColumn("cur", Derived.weatherPattern(lit(Derived.CurrentKey)))
-    val staged = WeatherExprs.withWeatherSimilarity(pats, col("cur"), col("pattern"), "s")
+    val staged = WeatherSimStaged.withWeatherSimilarity(pats, col("cur"), col("pattern"), "s")
     val both = staged
       .withColumn("nat", WeatherPatternSimilarity.similarity(col("cur"), col("pattern")))
       .withColumn("n", size(col("pattern.temperature")))
     assert(both.where(col("n") < 7).count() > 0, "no short assembled patterns — fixture drift")
     assert(both.where(col("s") =!= col("nat")).count() == 0)
+  }
+
+  test("native detail == staged detail, bit-for-bit, NULL for NULL") {
+    assert(assertDetailParity(randomPairs()) == 200)
+    // sf0.01: its assembly yields 5- and 6-day patterns (sf0.001's does not)
+    val current = Derived.weatherPattern(lit(Derived.CurrentKey))
+    val dir01 = "/root/testdata/sf0.01"
+    val assembled = graft.weather.WeatherAssembly.assemblePatterns(
+        Derived.weatherRows(spark, dir01), Derived.accidents(spark, dir01))
+      .select(current.as("cur"), col("pattern").as("acc"))
+    Seq(5, 6).foreach(n => assert(
+      assembled.where(size(col("acc.temperature")) === n).count() > 0, s"no $n-day pattern"))
+    assert(assertDetailParity(assembled) > 0)
+    val none = array().cast("array<double>")
+    val empty = WeatherExprs.pattern(none, none, none, none, none,
+      array().cast("array<struct<min:double,avg:double,max:double>>"))
+    Seq(
+      "NULL struct" -> (current, when(lit(false), current)),
+      "NULL temperature" -> (current, fiveDayPat(lit(null).cast("array<double>"))),
+      "<5-day side" -> (shortPat, current),
+      "empty pattern" -> (empty, current),
+      "7-day vs 5-day" -> (current, fiveDayPat(arr(3, -1, 4, 1.5, 9)))
+    ).foreach { case (name, (cur, acc)) => withClue(name) {
+      assert(assertDetailParity(spark.range(1).select(cur.as("cur"), acc.as("acc"))) == 1)
+    }}
   }
 }

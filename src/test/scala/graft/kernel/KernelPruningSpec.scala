@@ -320,7 +320,7 @@ class KernelPruningSpec extends SparkSpec {
       .createOrReplaceTempView("tk")
     val viaSql = spark.sql("SELECT simhash64(toks) AS h FROM tk").head().getLong(0)
     val viaCol = spark.range(1)
-      .select(graft.dedup.Dedup.simhash63(org.apache.spark.sql.functions
+      .select(graft.dedup.MinHashStaged.simhash63(org.apache.spark.sql.functions
         .lit("the quick brown fox")).as("h")).head().getLong(0)
     assert(viaSql == viaCol)
     // weather_similarity: self-similarity of a 7-day pattern ≈ 1

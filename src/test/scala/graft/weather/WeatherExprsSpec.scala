@@ -9,9 +9,8 @@ import graft.expr.WeatherPatternSimilarity
 /** Composite weather-similarity fidelity — expected values produced by
   * executing the reference calculate_weather_similarity on these exact
   * patterns (test_safety_algorithm.py reference_weather fixture + an
-  * adversarial winter pattern). The composite is the native
-  * [[WeatherPatternSimilarity]] every caller uses; the staged detailed
-  * form must reproduce it.
+  * adversarial winter pattern). The composite and its detail are the
+  * native [[WeatherPatternSimilarity]] every caller uses.
   */
 class WeatherExprsSpec extends SparkSpec {
 
@@ -59,21 +58,18 @@ class WeatherExprsSpec extends SparkSpec {
   }
 
   test("detailed breakdown: factors sum to the composite, invalid → zeros") {
-    val spark0 = spark
-    import spark0.implicits._
-    val base = Seq(1).toDF("id")
-    val d = WeatherExprs.withWeatherSimilarityDetailed(base, wp1, wp2, "sim").head()
+    val d = spark.range(1)
+      .select(WeatherPatternSimilarity.detailed(wp1, wp2).as("ws")).select("ws.*").head()
     // weighted sum of the emitted factors IS the composite (shared core)
-    val factors = Seq("ws_score_temperature", "ws_score_precipitation",
-      "ws_score_wind_speed", "ws_score_visibility", "ws_score_cloud_cover",
-      "ws_score_freeze_thaw")
+    val factors = Seq("score_temperature", "score_precipitation",
+      "score_wind_speed", "score_visibility", "score_cloud_cover",
+      "score_freeze_thaw")
     val recomposed = factors.map(d.getAs[Double]).sum * WeatherExprs.FactorWeight
-    assert(approx(recomposed, d.getAs[Double]("sim"), 1e-12))
-    assert(approx(d.getAs[Double]("sim"), 0.6549681645127438, 1e-9))
+    assert(approx(recomposed, d.getAs[Double]("similarity"), 1e-12))
+    assert(approx(d.getAs[Double]("similarity"), 0.6549681645127438, 1e-9))
     // diagnostics: wp1 has no freeze-thaw days, wp2 crosses zero daily
-    assert(d.getAs[Long]("ws_ft_current") == 0L)
-    assert(d.getAs[Long]("ws_ft_accident") == 7L)
-    assert(d.getAs[Long]("ws_days_compared") == 7L)
+    val counts = Seq("ft_current", "ft_accident", "days_compared")
+    assert(counts.map(d.getAs[Long]) == Seq(0L, 7L, 7L))
     // every factor score is a valid normalized correlation
     factors.foreach(f => {
       val v = d.getAs[Double](f)
@@ -84,20 +80,19 @@ class WeatherExprsSpec extends SparkSpec {
     val short = WeatherExprs.pattern(
       arr(15, 16, 17), arr(0, 0, 0), arr(5, 5, 5), arr(10, 10, 10),
       arr(20, 20, 20), temps((10, 15, 20), (10, 15, 20), (10, 15, 20)))
-    val inv = WeatherExprs.withWeatherSimilarityDetailed(base, short, wp1, "sim").head()
-    assert(inv.getAs[Double]("sim") == 0.0)
+    val inv = spark.range(1)
+      .select(WeatherPatternSimilarity.detailed(short, wp1).as("ws")).select("ws.*").head()
+    assert(inv.getAs[Double]("similarity") == 0.0)
     factors.foreach(f => assert(inv.getAs[Double](f) == 0.0, f))
-    assert(inv.getAs[Long]("ws_ft_current") == 0L)
-    assert(inv.getAs[Long]("ws_ft_accident") == 0L)
-    assert(inv.getAs[Long]("ws_days_compared") == 0L)
+    assert(counts.map(inv.getAs[Long]) == Seq(0L, 0L, 0L))
   }
 
   test("freeze-thaw closeness formula") {
     // ft 7 vs 0: 1 - 7/(max(7,0,1)+7) = 0.5
-    assert(approx(evalDouble(WeatherExprs.freezeThawSimilarity(lit(7), lit(0))), 0.5))
-    assert(approx(evalDouble(WeatherExprs.freezeThawSimilarity(lit(3), lit(3))), 1.0))
+    assert(approx(evalDouble(WeatherSimStaged.freezeThawSimilarity(lit(7), lit(0))), 0.5))
+    assert(approx(evalDouble(WeatherSimStaged.freezeThawSimilarity(lit(3), lit(3))), 1.0))
     // 0 vs 0: max(0,0,1)=1 → 1 - 0/8 = 1
-    assert(approx(evalDouble(WeatherExprs.freezeThawSimilarity(lit(0), lit(0))), 1.0))
+    assert(approx(evalDouble(WeatherSimStaged.freezeThawSimilarity(lit(0), lit(0))), 1.0))
   }
 
   test("extreme multiplier: z-score beyond 2 SD amplifies per-factor") {

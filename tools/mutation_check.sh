@@ -400,6 +400,16 @@ run_mutation temporal-base-flip \
   'lit(1.0) + lit(TemporalDecayImpact) * (lit(1.0) - pow(pow(lambda, days), TemporalDecayShape))' \
   'k03_temporal_weight,k08_kernel_risk,k18_location_kernel'
 
+# M26: the freeze-thaw term's sign flipped in the weather similarity's one
+# `compute` body: the composite (w04, and k14 through the weather factor)
+# and the detail struct's composite (w10) all read it, so one plant moves
+# all three
+run_mutation wsim-freeze-thaw-flip \
+  src/main/scala/graft/expr/WeatherSimExpr.scala \
+  'base += weighted(5, ftSim)' \
+  'base -= weighted(5, ftSim)' \
+  'w04_weather_similarity,w10_similarity_detailed,k14_kernel_weather'
+
 echo ""
 echo "==================================================================="
 if [ -n "${ONLY:-}" ]; then
