@@ -4,12 +4,12 @@ package graft
   * was generated from, independent of git HEAD (committing an artifact
   * moves HEAD, so a commit hash could never match across the
   * write-then-commit cycle). The SINGLE Scala implementation shared by
-  * every stamp-carrying generator (Bench's min-merge key, PLANCHECK.json,
-  * QUANT_LADDER.md); `tools/claims_check.py` keeps the one unavoidable
-  * Python mirror — any change here must be mirrored there byte-for-byte
-  * (same walk set: every regular `*.scala` file under src/main/scala,
-  * sorted by path string; same digest input: path-string UTF-8 bytes then
-  * file bytes).
+  * every stamp-carrying generator (PLANCHECK.json, QUANT_LADDER.md, the
+  * `src_stamp` of Bench's line); `tools/claims_check.py` keeps the one
+  * unavoidable Python mirror — any change here must be mirrored there
+  * byte-for-byte (same walk set: every regular `*.scala` file under
+  * src/main/scala, sorted by path string; same digest input: path-string
+  * UTF-8 bytes then file bytes).
   */
 object SrcStamp {
   def srcStamp(): String = stampOf("src/main/scala")

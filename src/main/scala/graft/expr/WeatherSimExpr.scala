@@ -39,8 +39,12 @@ import graft.weather.WeatherExprs.{FactorWeight, MinWeatherDaysRequired}
   * the assembly's per-field defaults guarantee this) plus
   * `daily_temps: array&lt;struct&lt;min,avg,max&gt;&gt;`. A null struct or
   * temperature series on either side yields NULL (callers coalesce to the
-  * reference's neutral 0.5); a malformed side (null factor array / null
-  * element) yields the degenerate 0.0 score for that factor.
+  * reference's neutral 0.5). A NULL array of any other factor is rejected
+  * with an error naming the factor and the side: assembled patterns carry
+  * an empty array, never NULL, and no score for it agrees with the staged
+  * reference, whose three-valued logic gives 0.5 against a constant series
+  * and 0.0 otherwise. A null element yields the degenerate 0.0 score for
+  * that factor.
   */
 sealed abstract class PatternPairExpression extends BinaryExpression with CodegenFallback {
 
@@ -182,10 +186,23 @@ object WeatherPatternSimilarity {
     }
   }
 
+  /** Rejects a NULL array among the non-temperature factors of `row`. */
+  private def requireFactorArrays(row: InternalRow, ord: Array[Int], side: String): Unit = {
+    var f = 1
+    while (f < 5) {
+      if (row.isNullAt(ord(f))) throw new IllegalArgumentException(
+        s"weather pattern similarity: the $side pattern's ${Factors(f)} array is NULL " +
+          "(a factor series may be empty, never NULL)")
+      f += 1
+    }
+  }
+
   // scalastyle:off method.length
   private[expr] def compute(cur: InternalRow, co: Array[Int], cdt: (Int, Int, Int),
                             acc: InternalRow, ao: Array[Int], adt: (Int, Int, Int),
                             parts: Parts): Any = {
+    requireFactorArrays(cur, co, "current")
+    requireFactorArrays(acc, ao, "accident")
     val curTemp = if (cur.isNullAt(co(0))) null else cur.getArray(co(0))
     val accTemp = if (acc.isNullAt(ao(0))) null else acc.getArray(ao(0))
     if (curTemp == null || accTemp == null) return null
@@ -207,11 +224,10 @@ object WeatherPatternSimilarity {
     i = 0
     while (i < n) { wn(i) = wn(i) / wsum2; i += 1 }
 
-    // one factor's weighted-Pearson score; any null/short array → the
-    // staged form's null-poisoned degenerate branch, which lands on
-    // score = factorScore(-1) = 0.0
+    // one factor's weighted-Pearson score; a short array or a null
+    // element → the staged form's null-poisoned degenerate branch, which
+    // lands on score = factorScore(-1) = 0.0
     def score(f: Int): Double = {
-      if (cur.isNullAt(co(f)) || acc.isNullAt(ao(f))) return 0.0
       val xs = cur.getArray(co(f))
       val ys = acc.getArray(ao(f))
       if (xs.numElements() < n || ys.numElements() < n) return 0.0

@@ -10,9 +10,11 @@ import graft.expr.GradeParser
   * scored against the accident corpus, returning the risk score, color,
   * and the top-k contributing accidents with full factor breakdowns.
   *
-  * Plan shape: a 1-row routes frame through the same broadcast kernel as
-  * the batch — literally `SafetyKernel` with |routes| = 1, so interactive
-  * and batch semantics can never drift.
+  * Plan shape: a 1-row routes frame through `SafetyKernel`'s pair-grain
+  * kernel (`pairInfluence`, whose pairs also feed the top-k breakdown).
+  * The nightly batch and [[forecast]] run the per-route fold instead;
+  * PredictSpec's forecast arm ties the two together, asserting every
+  * forecast day equals a single predict at that plan date, bit for bit.
   */
 object Predict {
 
@@ -43,12 +45,6 @@ object Predict {
         graft.expr.WeightExprs.routeTypeWeight(lit(req.routeType), col("acc_type"))
           >= StrictRouteTypeThreshold)
 
-  /** Step 1.5 (`predict.py:105-115`): auto-detect elevation from the S7
-    * rounded-coordinate lookup table (columns g_lat, g_lon, elevation_m at
-    * 3-decimal grid) when the request has none. A grid miss leaves
-    * elevation empty — the kernel's null-elevation path (weight 1.0)
-    * handles it, like the reference's graceful missing-elevation handling.
-    */
   /** Same rounding as Spark's `round(col, 3)` (HALF_UP over the decimal
     * string form) — the S7 grid is BUILT with that expression, and
     * `math.rint` (half-even) would probe a different key for exact
@@ -58,6 +54,12 @@ object Predict {
     java.math.BigDecimal.valueOf(v)
       .setScale(3, java.math.RoundingMode.HALF_UP).doubleValue()
 
+  /** Step 1.5 (`predict.py:105-115`): auto-detect elevation from the S7
+    * rounded-coordinate lookup table (columns g_lat, g_lon, elevation_m at
+    * 3-decimal grid) when the request has none. A grid miss leaves
+    * elevation empty — the kernel's null-elevation path (weight 1.0)
+    * handles it, like the reference's graceful missing-elevation handling.
+    */
   def resolveElevation(req: PredictionRequest, elevation: DataFrame): PredictionRequest =
     if (req.elevation.isDefined) req
     else {

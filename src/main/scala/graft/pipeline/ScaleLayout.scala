@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * reducers, aggregate partially per salted key, then finish per original
   * key. Two exchanges of SMALL partial rows instead of one exchange that
   * funnels the hot key through a single task. (AQE's skew-join handling
-  * covers the JOIN side of the same problem at runtime — documented in
-  * Bench/AnsiCheck; salting covers aggregation and pre-AQE plans.)
+  * covers the JOIN side of the same problem at runtime — `AnsiCheck` runs
+  * every query with AQE on; salting covers aggregation and pre-AQE plans.)
   */
 object ScaleLayout {
 

@@ -263,7 +263,8 @@ object PipelineQueries {
     * subset — shared by d04 (pair dump) and d10 (clustering input).
     */
   /** d12's TF-IDF top-3 terms per doc over an arbitrary documents frame —
-    * shared by the oracle query and the 10× scale gate (`Bench.tfidf10x`).
+    * shared by the oracle query and the 10× scale gate (`tfidf_10x` in
+    * the test tree's `graft.Bench`).
     * One token explode, map-side-combinable (doc, term) counts, broadcast
     * corpus size, per-doc window for the rank cut.
     */
@@ -288,7 +289,8 @@ object PipelineQueries {
 
 
   /** d23's five-stage corpus funnel over an arbitrary documents frame —
-    * shared by the oracle query and the 10× scale gate (`Bench.funnel10x`).
+    * shared by the oracle query and the 10× scale gate (`funnel_10x` in
+    * the test tree's `graft.Bench`).
     */
   def corpusFunnel(s: SparkSession, docs: DataFrame): DataFrame = {
     // ONE trigram assembly: the explode+window pass is the funnel's

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object QuantLadder {
 
-  /** Same code-identity notion as Bench and PLANCHECK.json, so the
+  /** Same code-identity notion as PLANCHECK.json, so the
     * committed ladder carries the stamp of the code that generated it
     * (single shared impl: [[graft.SrcStamp]]).
     */
@@ -138,7 +138,7 @@ object QuantLadder {
       f"| ${t.name} | ${t.bytesPerVec} | $recall%.3f | $wall%.1f | ≥ ${t.recallFloor}%.2f |"
     }.mkString("\n")
     // stamp the generating code state (same MD5-over-src/main identity as
-    // Bench.srcStamp / PLANCHECK.json) so tools/claims_check.py can verify
+    // SrcStamp / PLANCHECK.json) so tools/claims_check.py can verify
     // the committed ladder was generated at HEAD — recall floors are
     // enforced at generation, so a current stamp IS the regression gate
     val table = header + "\n" + body + "\n\nsrc_stamp: " + srcStamp() + "\n"

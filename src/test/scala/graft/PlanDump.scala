@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * `plans/<tag>/<name>_<suffix>.txt` so optimization rounds can commit
   * before/after plan evidence. Usage:
   *
-  * {{{ sbt "runMain graft.PlanDump r17 before [name,...]" }}}
+  * {{{ sbt "Test/runMain graft.PlanDump r17 before [name,...]" }}}
   *
   * Explain only — nothing is executed, so this is safe to run while the
   * testdata host is busy.

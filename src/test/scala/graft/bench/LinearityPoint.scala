@@ -9,10 +9,8 @@ import org.apache.spark.sql.functions._
   * e.g. a 500× point at 84M routes × 69K accidents ≈ 5.8T raw
   * pair-candidates.
   *
-  * Lives in TEST scope deliberately: `Bench.srcStamp()` hashes
-  * `src/main/scala` so BENCH_LOCAL.json's min-merge history survives
-  * adding measurement tooling; the generators and kernel under test are
-  * the same public `graft.Bench.syntheticRoutes/syntheticAccidents` and
+  * The generators and kernel under test are the same
+  * `graft.Bench.syntheticRoutes/syntheticAccidents` and
   * `graft.kernel.KernelPruning.scoreRoutesPruned` (the pruned fold) the
   * committed `kernel_batch_10x/100x` entries run — this file adds no
   * third code path, only a multiplier knob. The committed series in

@@ -148,6 +148,29 @@ class WeatherSimExprSpec extends SparkSpec {
     }
   }
 
+  test("a NULL factor array is rejected, naming the factor and the side") {
+    // the staged reference scores such a factor 0.5 against a constant
+    // series (its NULL std passes the zero-variance test under three-valued
+    // logic), so no score could match it; assembled patterns never carry one
+    val nullPrecip = WeatherExprs.pattern(arr(1, 2, 3, 4, 5), lit(null).cast("array<double>"),
+      arr(5, 5, 5, 5, 5), arr(1, 1, 1, 1, 1), arr(50, 50, 50, 50, 50), oneDayTemps)
+    val zeroPrecip = fiveDayPat(arr(1, 2, 3, 4, 5))
+    val forms: Seq[(Column, Column) => Column] =
+      Seq(WeatherPatternSimilarity.similarity, WeatherPatternSimilarity.detailed)
+    Seq("current" -> (nullPrecip, zeroPrecip), "accident" -> (zeroPrecip, nullPrecip)).foreach {
+      case (side, (cur, acc)) => forms.foreach { form =>
+        // `id` keeps the pair out of constant folding: rows evaluate it
+        val pairs = spark.range(1).select(
+          when(col("id") === 0, cur).as("cur"), when(col("id") === 0, acc).as("acc"))
+        val e = intercept[Exception](pairs.select(form(col("cur"), col("acc"))).collect())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).toSeq
+        assert(msgs.exists(_.contains(s"the $side pattern's precipitation array is NULL")),
+          msgs.mkString(" | "))
+      }
+    }
+  }
+
   test("<5-day side → 0.0, exactly like the staged validity gate") {
     val df = spark.range(1)
       .withColumn("cur", Derived.weatherPattern(lit(Derived.CurrentKey)))

@@ -45,7 +45,7 @@ object PlanCheck {
     n
   }
 
-  /** Same code-identity notion as Bench and QUANT_LADDER.md, so a
+  /** Same code-identity notion as QUANT_LADDER.md, so a
     * PLANCHECK row is checkable against the code state it was taken from
     * (single shared impl: [[graft.SrcStamp]]).
     */
