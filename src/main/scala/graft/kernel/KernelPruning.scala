@@ -43,7 +43,8 @@ object KernelPruning {
     * kernel's: a route no pair reaches reads 0.0/0, a NULL-coordinate route
     * NULL/0, a repeated `route_id` one row, and an empty accident set gives
     * no rows. It has no latitude domain, and a route-side `wmult` (amplified
-    * weather) is rejected; score that with [[SafetyKernel.pairInfluence]].
+    * weather) is rejected; score that with the exact
+    * [[SafetyKernel.scoreRoutes]].
     */
   def scoreRoutesPruned(routes: DataFrame, accidents: DataFrame, planDate: Column): DataFrame =
     SafetyKernel.scoreRoutesForDates(routes, accidents, Seq(planDate), pruned = true)

@@ -3,15 +3,15 @@ package graft.kernel
 import graft.expr.{GeoExprs, WeightExprs}
 
 /** The influence kernel's per-pair factor math on primitive doubles — the
-  * one written definition the multi-date fold ([[RouteFold]]) evaluates
-  * for every (route, accident) pair.
+  * one written definition the fold ([[RouteFold]]) evaluates for every
+  * (route, accident) pair.
   *
   * Each function performs the same operations, in the same order and with
   * the same math functions, as the one Catalyst body of its factor
   * (`GeoExprs.haversineKmHoisted`, `WeightExprs.spatialKernel`,
-  * `elevationBonus`, `gradeWeight`) that the pair-grain kernel
-  * ([[SafetyKernel.influenceColumns]]) evaluates, so the two agree bit for
-  * bit. The temporal factor has no twin here: the fold reads the Catalyst
+  * `elevationBonus`, `gradeWeight`, `weatherFactor`), so the fold agrees
+  * bit for bit with a pair-grain kernel of those bodies (the specs'
+  * reference). The temporal factor has no twin here: the fold reads the Catalyst
   * `temporalBase` slots and applies `WeightExprs.SeasonalMultiplier`
   * ([[RouteFold]]). Spark's POWER and EXP call `StrictMath`, while SIN,
   * ASIN, SQRT, RADIANS and ABS call `java.lang.Math`
@@ -148,6 +148,11 @@ private[kernel] object PairMath {
     val x = Math.abs(difficulty - aDifficulty)
     greatest(WeightExprs.GradeMinWeight, StrictMath.exp(-(x * x) / GradeTwoSigma2))
   }
+
+  /** 0.0 below the exclusion threshold (NaN is not), else `wsim³`. */
+  def weatherFactor(wsim: Double): Double =
+    if (wsim < WeightExprs.WeatherExclusionThreshold) 0.0
+    else StrictMath.pow(wsim, WeightExprs.WeatherPower)
 
   /** base = spatial·temporal·elevation·route_type·severity·grade, then
     * ×weather — the reference's multiplication order.

@@ -10,11 +10,11 @@ import graft.expr.GradeParser
   * scored against the accident corpus, returning the risk score, color,
   * and the top-k contributing accidents with full factor breakdowns.
   *
-  * Plan shape: a 1-row routes frame through `SafetyKernel`'s pair-grain
-  * kernel (`pairInfluence`, whose pairs also feed the top-k breakdown).
-  * The nightly batch and [[forecast]] run the per-route fold instead;
-  * PredictSpec's forecast arm ties the two together, asserting every
-  * forecast day equals a single predict at that plan date, bit for bit.
+  * Plan shape: a 1-row routes frame through one pass of the per-route
+  * fold (`SafetyKernel.scoreWithContributors`), which gives the total and
+  * the top-k breakdown together — the same fold the nightly batch and
+  * [[forecast]] run, so every forecast day equals a single predict at that
+  * plan date, bit for bit (PredictSpec's forecast arm).
   */
 object Predict {
 
@@ -81,26 +81,15 @@ object Predict {
     * mirroring the reference's step 1.6.
     */
   def predict(spark: SparkSession, req: PredictionRequest, accidents: DataFrame,
-              topK: Int = 50): Prediction = {
-    val pairs = SafetyKernel.pairInfluence(routeFrame(spark, req), gateAccidents(req, accidents),
-      to_date(lit(req.plannedDate))).cache()
-    try {
-      val scored = SafetyKernel.scoreRoutes(pairs).collect()
-      val top = SafetyKernel.topContributors(pairs, topK)
-        .select("rank", "accident_id", "influence", "dist_km", "spatial_w",
-          "temporal_w", "elevation_w", "route_type_w", "severity_w", "grade_w")
-        .orderBy("rank")
-        .collect().toSeq
-      scored.headOption match {
-        case Some(r) => Prediction(
-          r.getAs[Double]("risk_score"), r.getAs[String]("color_code"),
-          r.getAs[Long]("n_contributing"), top)
-        case None => Prediction(0.0, "green", 0L, Seq.empty) // no accidents
-      }
-    } finally {
-      pairs.unpersist()
+              topK: Int = 50): Prediction =
+    SafetyKernel.scoreWithContributors(routeFrame(spark, req), gateAccidents(req, accidents),
+        to_date(lit(req.plannedDate)), topK)
+      .collect().headOption match {
+      case Some(r) => Prediction(
+        r.getAs[Double]("risk_score"), r.getAs[String]("color_code"),
+        r.getAs[Long]("n_contributing"), r.getSeq[Row](r.fieldIndex("contributors")).toSeq)
+      case None => Prediction(0.0, "green", 0L, Seq.empty) // no accidents
     }
-  }
 
   /** The request as a 1-row routes frame in the kernel schema. */
   private def routeFrame(spark: SparkSession, req: PredictionRequest): DataFrame = {
@@ -135,7 +124,8 @@ object Predict {
     *   4. missing current pattern (service returned None: no rows or <5
     *      days) or missing accident pattern → neutral 0.5
     *      (`safety_algorithm.py:265-269`);
-    *   5. the same broadcast kernel as `predict`.
+    *   5. the same fold pass as `predict`, over the accidents with their
+    *      (amplified) similarity as `wsim`.
     */
   def predictWithWeather(spark: SparkSession, req: PredictionRequest,
                          accidents: DataFrame, weatherRows: DataFrame,

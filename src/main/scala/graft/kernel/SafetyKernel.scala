@@ -1,10 +1,9 @@
 package graft.kernel
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.expr.{GeoExprs, WeightExprs}
+import graft.expr.WeightExprs
 
 /** The influence kernel — the heart of the engine (SURVEY §2.7).
   *
@@ -20,25 +19,21 @@ import graft.expr.{GeoExprs, WeightExprs}
   *
   * Spark-first shape: the accidents side is small (~6.9K rows in the
   * reference; ≪ broadcast threshold even at 100× that), so the conceptual
-  * cross join is a **broadcast nested-loop join** with zero shuffle on the
-  * routes side; the kernel itself is one `select` of pure column arithmetic
-  * (whole-stage codegen, no UDFs), followed by a hash aggregation on
-  * `route_id`. At 100 TB of routes this scales linearly with route
-  * partitions: no route-side shuffle until the final (already partial-
-  * aggregated) groupBy, whose key cardinality = #routes. The multi-date
-  * nightly kernel ([[scoreRoutesForDates]]) evaluates the same factors as
-  * a per-route fold over primitive accident arrays ([[RouteFold]],
-  * [[PairMath]]); this pair-grain form is its bitwise reference.
+  * cross join is a per-route fold ([[RouteFold]]) over the accidents,
+  * broadcast as primitive arrays: no route-side shuffle before one
+  * `route_id`-keyed aggregate, and no operator handles a row per pair.
+  * Every entry here — one date, several dates, pruned, amplified weather,
+  * top-k contributors — is that fold.
   *
   * Each factor's Catalyst formula is written once, in WeightExprs
   * (`spatialKernel`, `temporalBase`, `seasonallyBoosted`, `elevationBonus`,
-  * `severityWeight`, `gradeWeight`): this kernel applies them to hoisted
-  * per-route and per-accident columns, the standalone factor weights to
-  * per-type lookups, so both evaluate the same expression trees.
+  * `severityWeight`, `gradeWeight`, `weatherFactor`): the fold's hoisted
+  * per-route and per-accident columns apply them, and PairMath performs
+  * the per-pair ones in the same operations and order.
   *
   * Expected input columns —
   *   routes:    route_id, lat, lon, elev, route_type (canonical, any ASCII case),
-  *              difficulty (nullable Double)
+  *              difficulty (nullable Double), optionally wmult (double)
   *   accidents: accident_id, a_lat, a_lon, a_elev, acc_type, severity_raw,
   *              a_date, a_difficulty, and optionally wsim (weather
   *              similarity in [0,1]; missing column → neutral 0.5, the
@@ -66,37 +61,8 @@ object SafetyKernel {
       case (acc, (t, i)) => acc.when(typeLc === t, i)
     }.otherwise(-1)
 
-  /** Per-(route × accident) influence decomposition over a broadcast cross
-    * join. Returns the pair grain with every factor as its own column —
-    * downstream ops (risk agg, top-k breakdown, factor-contribution
-    * analytics A13) all derive from this one plan.
-    *
-    * Everything that depends on only ONE side is computed BEFORE the join
-    * (bandwidth/elevation-constant/type index per route; severity weight,
-    * season flag, temporal slots per accident) so the O(routes × accidents)
-    * inner loop is pure numeric trig/exp — no string ops, no when-chains
-    * over strings. Results are bit-identical to the reference composition
-    * (the hoisted values are the same values, evaluated once).
-    */
-  def pairInfluence(routes: DataFrame, accidents: DataFrame, planDate: Column): DataFrame = {
-    requireRouteSideWmult("pairInfluence", accidents)
-    influenceColumns(
-      enrichRoutes(balance(routes)).crossJoin(broadcast(enrichAccidents(accidents, planDate)))
-        .withColumn("dist_km", GeoExprs.haversineKmHoisted(
-          col("__coslat"), col("lat"), col("lon"), col("__a_coslat"), col("a_lat"), col("a_lon"))))
-  }
-
-  /** The A7 multiplier `wmult` is a ROUTE-side column ([[influenceColumns]]).
-    * An accidents frame carrying it would be amplified per pair by
-    * [[pairInfluence]] and ignored by the fold ([[scoreRoutesForDates]]),
-    * so the two would score it differently without an error: reject it.
-    */
-  private def requireRouteSideWmult(caller: String, accidents: DataFrame): Unit =
-    require(!accidents.columns.contains("wmult"),
-      s"$caller: accidents carry wmult (amplified weather), a route-side column")
-
-  /** The broadcast-NLJ kernel parallelizes over ROUTE partitions only — a
-    * small single-file parquet scan (one split) would run the whole
+  /** The fold parallelizes over ROUTE partitions only — a small
+    * single-file parquet scan (one split) would run the whole
     * routes × accidents loop on one core (graft.Partitioning.balanced).
     */
   private def balance(routes: DataFrame): DataFrame = graft.Partitioning.balanced(routes)
@@ -105,7 +71,7 @@ object SafetyKernel {
     * the pair loop. The type is case-folded once per row
     * ([[WeightExprs.asciiLower]]) and every lookup reads the folded column.
     */
-  private def enrichRoutes(routes: DataFrame): DataFrame =
+  private[kernel] def enrichRoutes(routes: DataFrame): DataFrame =
     routes
       .withColumn("__rt_lc", WeightExprs.asciiLower(col("route_type")))
       .withColumn("__h", WeightExprs.spatialBandwidthKm(col("__rt_lc")))
@@ -116,23 +82,10 @@ object SafetyKernel {
       .withColumn("__coslat", cos(radians(col("lat"))))
       .withColumn("__two_h2", WeightExprs.twoBandwidthSq(col("__h")))
 
-  /** Accident-side enrichment for one plan date: severity weight, type
-    * index, season flag, weather factor — all per accident, never per pair.
-    */
-  private def enrichAccidents(accidents: DataFrame, planDate: Column): DataFrame =
-    accidentScalars(accidents)
-      .withColumn("__same_season", accidentSameSeason(planDate))
-      // λ can only be one of the canonical types' values or the default,
-      // so the two per-pair pow() calls of the temporal weight collapse to
-      // a per-ACCIDENT slot-per-type precompute; the pair loop just
-      // indexes it with the route's type index. Same constants, same op
-      // order → the picked value is bit-identical to the inline formula.
-      .withColumn("__tw_arr", temporalSlots(planDate))
-
   /** The date-independent accident enrichment — severity weight, type
     * index, weather factor (wsim defaults to neutral 0.5), cos(lat) —
-    * shared by [[enrichAccidents]], the multi-date fold's accident
-    * arrays ([[RouteFold]]) and [[LocationKernel]].
+    * shared by the fold's accident arrays ([[RouteFold]]) and
+    * [[LocationKernel]].
     */
   private[kernel] def accidentScalars(accidents: DataFrame): DataFrame = {
     val accBase =
@@ -151,8 +104,9 @@ object SafetyKernel {
 
   /** For one plan date, the accident's temporal base weight
     * ([[WeightExprs.temporalBase]]) per canonical type, with the default
-    * slot last — the precompute indexed by `__rt_idx` in
-    * [[influenceColumns]].
+    * slot last: λ can only be one of the canonical types' values or the
+    * default, so the two per-pair pow() calls collapse to a per-ACCIDENT
+    * precompute that the fold indexes with the route's type index.
     */
   private[kernel] def temporalSlots(planDate: Column): Column = {
     val days = WeightExprs.dayCount(planDate, col("a_date"))
@@ -160,115 +114,26 @@ object SafetyKernel {
       .map(lam => WeightExprs.temporalBase(lit(lam), days)): _*)
   }
 
-  /** The per-pair kernel over an already-joined (enriched-routes ×
-    * enriched-accidents) frame — the body of [[pairInfluence]]. It reads
-    * exactly these columns, which the caller supplies:
-    *
-    *  - `dist_km` (the caller's haversine, `GeoExprs.haversineKmHoisted`);
-    *  - route side ([[enrichRoutes]]): `__two_h2`, `__rt_idx`, `__elev_c`,
-    *    `elev`, `difficulty`;
-    *  - accident side ([[enrichAccidents]]): `__tw_arr`, `__same_season`,
-    *    `__acc_idx`, `__sev_w`, `__wfactor`, `a_elev`, `a_difficulty`;
-    *  - `wsim` and `wmult`, only when the frame carries `wmult`.
-    *
-    * If the ROUTE side carries a `wmult` column (the A7 extreme-weather
-    * multiplier from the route-location bucket's historical stats,
-    * `weather_similarity.py:221-344` / batch per-bucket caching in
-    * `safety_computation_optimized.py:516-560`), the weather factor is
-    * computed per PAIR from the amplified similarity
-    * `wsim × wmult` (final_similarity = base × multiplier,
-    * `weather_similarity.py:473`) instead of the accident-hoisted factor —
-    * exclusion threshold and quadratic power apply to the amplified value.
-    * An accident-side `wmult` is rejected ([[requireRouteSideWmult]]).
+  /** Routes × accidents → per-route risk for one plan date: the exact
+    * fold of [[scoreRoutesForDates]] without `prediction_date`.
     */
-  private def influenceColumns(pairs: DataFrame): DataFrame = {
-    val amplified = pairs.columns.contains("wmult")
-    // temporal: 1 − 0.35·(1 − (λ^days)^1.5), ×1.05 same season — from the
-    // per-accident per-type-slot precompute
-    val baseWeight = element_at(col("__tw_arr"),
-      when(col("__rt_idx") >= 0, col("__rt_idx") + 1)
-        .otherwise(CanonicalTypes.size + 1).cast("int")) // default = last slot
-    pairs
-      // spatial: exp(-d²/(2h²)) with per-route bandwidth (2h² hoisted)
-      .withColumn("spatial_w", WeightExprs.spatialKernel(col("dist_km"), col("__two_h2")))
-      .withColumn("temporal_w", WeightExprs.seasonallyBoosted(col("__same_season"), baseWeight))
-      // elevation: bonus-only gaussian with per-route constant
-      .withColumn("elevation_w",
-        WeightExprs.elevationBonus(col("elev"), col("a_elev"), col("__elev_c")))
-      // route-type: int-indexed flat 7×7 matrix (same literals as the map form)
-      .withColumn("route_type_w",
-        when(col("__rt_idx") >= 0 && col("__acc_idx") >= 0,
-          element_at(array(PairMath.RouteTypeMatrix.toSeq.map(lit): _*),
-            (col("__rt_idx") * 7 + col("__acc_idx") + 1).cast("int")))
-          .otherwise(WeightExprs.DefaultRouteTypeWeight))
-      .withColumn("severity_w", col("__sev_w"))
-      .withColumn("grade_w", WeightExprs.gradeWeight(col("difficulty"), col("a_difficulty")))
-      // multiplication order mirrors the reference composition exactly
-      // (safety_algorithm.py:293-319) — and the DuckDB oracle SQL.
-      .withColumn("base_influence",
-        col("spatial_w") * col("temporal_w") * col("elevation_w") *
-          col("route_type_w") * col("severity_w") * col("grade_w"))
-      .withColumn("weather_factor",
-        if (amplified) WeightExprs.weatherFactor(col("wsim") * col("wmult"))
-        else col("__wfactor"))
-      .withColumn("influence", col("base_influence") * col("weather_factor"))
-      .drop("__rt_lc", "__h", "__elev_c", "__rt_idx", "__sev_w", "__acc_idx",
-        "__same_season", "__wfactor", "__coslat", "__a_coslat", "__tw_arr", "__two_h2")
-  }
-
-  /** Aggregate pair influences to per-route risk (A1 + F16).
-    *
-    * The explicit narrow projection before the groupBy matters at scale:
-    * without it the plan keeps the full ~20-column factor frame alive
-    * through several Project layers and materializes every pair row
-    * (~3.5× slower at 1.16B pairs); with it, Catalyst collapses the kernel
-    * into one fused Project producing exactly (route_id, influence).
-    */
-  def scoreRoutes(pairs: DataFrame): DataFrame =
-    pairs
-      .select("route_id", "influence")
-      .groupBy("route_id")
-      .agg(
-        sum("influence").as("total_influence"),
-        sum(when(col("influence") > SignificanceFloor, 1L).otherwise(0L))
-          .as("n_contributing"))
-      .withColumn("risk_score", WeightExprs.normalizeRiskScore(col("total_influence")))
-      .withColumn("color_code", WeightExprs.colorCode(col("risk_score")))
-
-  /** End-to-end: routes × accidents → per-route risk. */
   def scoreRoutes(routes: DataFrame, accidents: DataFrame, planDate: Column): DataFrame =
-    scoreRoutes(pairInfluence(routes, accidents, planDate))
+    scoreRoutesForDates(routes, accidents, Seq(planDate), pruned = false).drop("prediction_date")
 
   /** Multi-date scoring — the nightly batch
     * (ScoringPipeline.computeDailyScores) scores the same routes ×
     * accidents for several plan dates, and only the TEMPORAL factor
-    * depends on the date.
+    * depends on the date: the fold ([[RouteFold]]) evaluates the other
+    * factors once per pair and sums each date in accident order. One
+    * `route_id`-keyed aggregate over the fold's |route rows| merges rows
+    * sharing a route_id, and the date fan-out is a posexplode over |routes|
+    * rows. Each (route, date) is bit-identical to a Catalyst pair-grain
+    * kernel summed by a partial aggregate — pinned by the specs against
+    * the test tree's reference and by the DuckDB oracle.
     *
-    * The kernel is a per-route fold, not a pair-grain plan: the accidents
-    * are enriched by the same Catalyst expressions as [[enrichAccidents]],
-    * collected once and broadcast as primitive arrays ([[RouteFold]]);
-    * each balanced route partition then runs one loop per route over
-    * those arrays. The loop evaluates the date-independent factors once
-    * per pair with [[PairMath]], picks each date's precomputed temporal
-    * weight, and accumulates `total_influence` and `n_contributing` per
-    * date in accident order, skipping pairs whose spatial factor is
-    * exactly 0.0 (they would add ±0.0). One `route_id`-keyed aggregate
-    * over the fold's |route rows| merges rows sharing a route_id, and the
-    * date fan-out is a posexplode over |routes| rows. No operator handles
-    * a row per pair.
-    *
-    * Per-(route, date) results are bit-identical to
-    * `scoreRoutes(routes, accidents, to_date(lit(d)))`: PairMath performs
-    * the Catalyst factor expressions' operations in the same order with
-    * the same math functions, and each sum adds its accidents in the same
-    * broadcast order as the pair-grain partial aggregate, with Spark's
-    * NULL and NaN semantics — pinned by ScoringPipelineSpec's multi-date ≡
-    * per-date arms.
-    *
-    * Contract: neither side carries `wmult` (amplified weather is scored
-    * by [[pairInfluence]] only); coordinates, elevations and
-    * difficulties are double or integral; the accident arrays
-    * (accidents × (63 + 64 × dates) bytes) stay below
+    * Contract: `wmult` is a route-side column, double, as is `wsim` then;
+    * coordinates, elevations and difficulties are double or integral; the
+    * accident arrays (accidents × (63 + 64 × dates) bytes) stay below
     * `spark.sql.maxBroadcastTableSize`. The collect itself is bounded by
     * `spark.driver.maxResultSize`. Each breach fails with a message.
     *
@@ -284,22 +149,19 @@ object SafetyKernel {
     * With `pruned` a pair counts only if its distance `dist_km` is at
     * most the route's gate `__h · √(2·ln(B/SignificanceFloor))`
     * ([[KernelPruning]]; a NaN distance fails it). Per route, the pruned
-    * fold is bit-identical to `pairInfluence` with every non-NULL influence
-    * beyond that gate replaced by 0.0, then summed: the rows are the exact
-    * kernel's, and a route no pair reaches reads 0.0/0 (NULL/0 when every
-    * influence is NULL, as with a NULL coordinate; no rows for an empty
-    * accident set). There is no latitude domain: the gate holds at the
-    * poles and across the antimeridian. [[KernelPruning.scoreRoutesPruned]]
-    * is this fold for one date. `pruned = false` is the exact multi-date
-    * kernel above.
+    * fold is bit-identical to the exact kernel's pairs with every non-NULL
+    * influence beyond that gate replaced by 0.0, then summed: the rows are
+    * the exact kernel's, and a route no pair reaches reads 0.0/0 (NULL/0
+    * when every influence is NULL, as with a NULL coordinate; no rows for
+    * an empty accident set). There is no latitude domain: the gate holds
+    * at the poles and across the antimeridian.
+    * [[KernelPruning.scoreRoutesPruned]] is this fold for one date. A
+    * route-side `wmult` is rejected when pruned: the gate bound assumes a
+    * weather factor of at most 1.
     */
   def scoreRoutesForDates(routes: DataFrame, accidents: DataFrame,
                           dates: Seq[Column], pruned: Boolean): DataFrame = {
     require(dates.nonEmpty, "scoreRoutesForDates: empty dates list")
-    require(!routes.columns.contains("wmult"),
-      "scoreRoutesForDates: routes carry wmult (amplified weather), which the " +
-        "multi-date kernel does not score; use pairInfluence")
-    requireRouteSideWmult("scoreRoutesForDates", accidents)
     val folded = RouteFold(enrichRoutes(balance(routes)), accidents, dates, pruned)
     val aggCols = dates.indices.flatMap { i =>
       Seq(sum(col(s"__tot_$i")).as(s"__tot_$i"), sum(col(s"__n_$i")).as(s"__n_$i"))
@@ -318,15 +180,27 @@ object SafetyKernel {
       .drop("__di")
   }
 
-  /** Top-k contributing accidents per route (W1) — rank-filter BEFORE any
-    * collect so the shuffle carries ≤ k rows per route, never the full
-    * pair fan-out (SURVEY §7.4(5)).
+  /** [[scoreRoutes]] plus each route's top-`k` contributing accidents
+    * (W1) from the same exact fold pass: `contributors` holds (`rank`
+    * from 1, `accident_id`, `influence`, `dist_km`, `spatial_w`,
+    * `temporal_w`, `elevation_w`, `route_type_w`, `severity_w`,
+    * `grade_w`) structs by `influence` descending (NaN first, NULL last),
+    * then `accident_id` ascending (integral). Every pair competes, a void
+    * one with a NULL influence; a factor is NULL where the pair kernel's
+    * column is. Each route row keeps a heap of at most `k` pairs, so no
+    * pair fan-out reaches a shuffle (SURVEY §7.4(5)).
     */
-  def topContributors(pairs: DataFrame, k: Int = 50): DataFrame = {
-    val w = Window.partitionBy("route_id")
-      .orderBy(col("influence").desc, col("accident_id").asc)
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+  def scoreWithContributors(routes: DataFrame, accidents: DataFrame, planDate: Column,
+                            k: Int): DataFrame = {
+    require(k > 0, s"scoreWithContributors: k is $k, not positive")
+    val folded = RouteFold(enrichRoutes(balance(routes)), accidents, Seq(planDate),
+      pruned = false, topK = k)
+    val merged = folded
+      .groupBy("route_id")
+      .agg(sum("__tot_0").as("total_influence"), sum("__n_0").as("n_contributing"),
+        collect_list("__top").as("__top"))
+    RouteFold.rankContributors(merged, k)
+      .withColumn("risk_score", WeightExprs.normalizeRiskScore(col("total_influence")))
+      .withColumn("color_code", WeightExprs.colorCode(col("risk_score")))
   }
 }

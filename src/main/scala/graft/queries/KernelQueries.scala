@@ -50,9 +50,23 @@ object KernelQueries {
   private def withDomain(body: String): String =
     s"WITH ${Sql.RoutesCte},\n${Sql.AccidentsCte}\n$body"
 
+  /** The derived accidents with their assembled weather similarity to the
+    * current pattern as `wsim` — the accident side of k14, k16 and k18.
+    */
+  private[graft] def weatherAccidents(s: SparkSession, dir: String): DataFrame =
+    graft.weather.WeatherAssembly.accidentsWithSimilarity(
+      Derived.accidents(s, dir),
+      Derived.weatherRows(s, dir),
+      Derived.weatherPattern(lit(Derived.CurrentKey)))
+
   /** Small route subset for per-pair factor dumps (200 × 100 pairs). */
   private def routeSubset(s: SparkSession, dir: String): DataFrame =
     Derived.routes(s, dir).where(col("route_id") <= 200)
+
+  /** A kernel's per-route rows as the oracle compares them. */
+  private def riskRows(scored: DataFrame): DataFrame =
+    scored.select(col("route_id"), round(col("risk_score"), 4).as("risk_score"), col("n_contributing"))
+      .orderBy("route_id")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "k01_haversine" -> ((s, dir) => {
@@ -139,27 +153,23 @@ object KernelQueries {
         .orderBy("route_type", "accident_id")
     }),
 
-    // The full kernel: ~2K routes × 100 accidents broadcast cross join →
+    // The full kernel: ~2K routes folded over 100 broadcast accidents →
     // per-route risk. The flagship operator (SURVEY §2.7 / J2 / A1 / F16).
     "k08_kernel_risk" -> ((s, dir) => {
       SafetyKernel.scoreRoutes(
         Derived.routes(s, dir), Derived.accidents(s, dir), Derived.planDate)
-        .select(
-          col("route_id"),
-          round(col("risk_score"), 4).as("risk_score"),
-          col("n_contributing"))
-        .orderBy("route_id")
+        .transform(riskRows)
     }),
 
-    // W1 top-k contributing accidents, rank-filtered before any collect.
+    // W1 top-k contributing accidents: the fold keeps each route's best 5.
     "k09_kernel_topk" -> ((s, dir) => {
-      val pairs = SafetyKernel.pairInfluence(
+      SafetyKernel.scoreWithContributors(
         Derived.routes(s, dir).where(col("route_id") <= 300),
-        Derived.accidents(s, dir), Derived.planDate)
-      SafetyKernel.topContributors(pairs, 5)
+        Derived.accidents(s, dir), Derived.planDate, 5)
+        .select(col("route_id"), explode(col("contributors")).as("c"))
         .select(
-          col("route_id"), col("rank"), col("accident_id"),
-          round(col("influence"), 6).as("influence"))
+          col("route_id"), col("c.rank").as("rank"), col("c.accident_id").as("accident_id"),
+          round(col("c.influence"), 6).as("influence"))
         .orderBy("route_id", "rank")
     }),
 
@@ -177,18 +187,11 @@ object KernelQueries {
     // validity → A5 similarity (invalid accidents: neutral 0.5,
     // safety_algorithm.py:265-269) → quadratic weather factor → kernel.
     "k14_kernel_weather" -> ((s, dir) => {
-      val accWithSim = graft.weather.WeatherAssembly.accidentsWithSimilarity(
-        Derived.accidents(s, dir),
-        Derived.weatherRows(s, dir),
-        Derived.weatherPattern(lit(Derived.CurrentKey)))
+      val accWithSim = weatherAccidents(s, dir)
       SafetyKernel.scoreRoutes(
         Derived.routes(s, dir).where(col("route_id") <= 300),
         accWithSim, Derived.planDate)
-        .select(
-          col("route_id"),
-          round(col("risk_score"), 4).as("risk_score"),
-          col("n_contributing"))
-        .orderBy("route_id")
+        .transform(riskRows)
     }),
 
     // §3.2/§4.2: the LOCATION-FACTORIZED batch kernel — the reference's
@@ -197,10 +200,7 @@ object KernelQueries {
     // per-route type/grade adjustment, 25/50/75 colors), kernel cost
     // scaling with |locations| not |routes|.
     "k18_location_kernel" -> ((s, dir) => {
-      val accWithSim = graft.weather.WeatherAssembly.accidentsWithSimilarity(
-        Derived.accidents(s, dir),
-        Derived.weatherRows(s, dir),
-        Derived.weatherPattern(lit(Derived.CurrentKey)))
+      val accWithSim = weatherAccidents(s, dir)
       graft.kernel.LocationKernel.scoreRoutesViaLocations(
         Derived.routesWithLocation(s, dir),
         Derived.locations(s, dir),
@@ -315,10 +315,7 @@ object KernelQueries {
     // similarity wsim × wmult (weather_similarity.py:473, batch per-bucket
     // caching safety_computation_optimized.py:516-560).
     "k16_kernel_extreme" -> ((s, dir) => {
-      val accWithSim = graft.weather.WeatherAssembly.accidentsWithSimilarity(
-        Derived.accidents(s, dir),
-        Derived.weatherRows(s, dir),
-        Derived.weatherPattern(lit(Derived.CurrentKey)))
+      val accWithSim = weatherAccidents(s, dir)
       val mult = WeatherQueries.bucketMultipliers(s, dir)
         .select(col("bucket"), col("wmult"))
       val routes = Derived.routes(s, dir).where(col("route_id") <= 300)
@@ -326,11 +323,7 @@ object KernelQueries {
         .join(broadcast(mult), Seq("bucket"))
         .drop("bucket")
       SafetyKernel.scoreRoutes(routes, accWithSim, Derived.planDate)
-        .select(
-          col("route_id"),
-          round(col("risk_score"), 4).as("risk_score"),
-          col("n_contributing"))
-        .orderBy("route_id")
+        .transform(riskRows)
     }))
 
   private val distExpr = Sql.haversine("lat", "lon", "a_lat", "a_lon")

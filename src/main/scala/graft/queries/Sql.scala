@@ -185,8 +185,8 @@ object Sql {
     s"CASE WHEN ($risk) < 30 THEN 'green' WHEN ($risk) < 50 THEN 'yellow' " +
       s"WHEN ($risk) < 70 THEN 'orange' ELSE 'red' END"
 
-  /** The kernel's per-pair influence, the one DuckDB twin of
-    * SafetyKernel.pairInfluence: `SELECT route_id, accident_id<extraCols>,
+  /** The kernel's per-pair influence, the one DuckDB twin of the fold's
+    * per-pair product (RouteFold, PairMath): `SELECT route_id, accident_id<extraCols>,
     * (spatial) * (temporal) * (elevation) * (route type) * (severity) *
     * (grade) * (weather factor) AS influence FROM <from>`, multiplied left
     * to right in the reference's order. `from` supplies the route and

@@ -946,22 +946,13 @@ object Bench {
     def record(name: String)(v: => Double): Unit =
       if (want(name)) recordMulti(name)(Map(name -> v))
 
-    // interactive predict: collect, like the API would (top-50 included).
-    // The contributor collect takes the API-shaped 10-column breakdown —
-    // the same projection Predict.predict returns — NOT the raw 52-column
-    // pair frame: shipping every intermediate weight column to the driver
-    // is wrong at any scale, and the kitchen-sink row's deserializer also
-    // trips janino's 64KB method limit on this Spark build
-    // (EXPRESSION_DECODING_FAILED at collect; the narrow projection is
-    // what the reference's SafetyPrediction payload carries anyway).
-    val contributorCols = Seq("rank", "accident_id", "influence", "dist_km",
-      "spatial_w", "temporal_w", "elevation_w", "route_type_w", "severity_w",
-      "grade_w").map(col)
+    // interactive predict: collect, like the API would (top-50 included):
+    // Predict.predict's one fold pass, which returns the score and the
+    // contributors' 10-field breakdown together
     record("predict_single_route") { timedBlock {
       val route = syntheticRoutes(spark, 1)
-      val pairs = SafetyKernel.pairInfluence(route, syntheticAccidents(spark, 6900), planDate)
-      SafetyKernel.scoreRoutes(pairs).collect()
-      SafetyKernel.topContributors(pairs, 50).select(contributorCols: _*).collect()
+      SafetyKernel.scoreWithContributors(route, syntheticAccidents(spark, 6900), planDate, 50)
+        .collect()
     } }
     // 10 concurrent interactive predicts (BASELINE.md: asyncio 10-way
     // concurrency < 15-16 s, current ~13 s) — independent single-route
@@ -986,9 +977,7 @@ object Bench {
               lit(1500.0 + i * 200).as("elev"),
               lit(Seq("alpine", "trad", "sport", "ice")(i % 4)).as("route_type"),
               lit(5.0 + i).as("difficulty"))
-            val pairs = SafetyKernel.pairInfluence(route, acc, planDate)
-            SafetyKernel.scoreRoutes(pairs).collect()
-            SafetyKernel.topContributors(pairs, 50).select(contributorCols: _*).collect()
+            SafetyKernel.scoreWithContributors(route, acc, planDate, 50).collect()
           }
         }
         Await.result(Future.sequence(reqs), 600.seconds)

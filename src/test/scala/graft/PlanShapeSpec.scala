@@ -4,9 +4,9 @@ import graft.SparkSpec
 
 /** Physical-plan shape guards — the scale properties README promises,
   * asserted against `.explain` output so regressions surface in CI:
-  * filter/column pushdown reaches the parquet scan, the kernel joins
-  * broadcast with no route-side shuffle before partial aggregation, and
-  * the pruned kernel plans one per-route fold and no join.
+  * filter/column pushdown reaches the parquet scan, and the exact and the
+  * pruned kernel each plan one per-route fold, no join, and no route-side
+  * shuffle before partial aggregation.
   */
 class PlanShapeSpec extends SparkSpec {
 
@@ -25,10 +25,13 @@ class PlanShapeSpec extends SparkSpec {
       s"scan reads unpruned columns: $scanLine")
   }
 
-  test("kernel: broadcast join, no shuffle of the routes side before partial agg") {
+  test("kernel: one per-route fold, no join, no shuffle of the routes side before partial agg") {
+    // the accidents reach the fold as broadcast arrays, never as a join side
     val plan = planOf("k08_kernel_risk")
-    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
-      "accidents side not broadcast")
+    assert(plan.sliding("MapPartitions ".length).count(_ == "MapPartitions ") == 1,
+      "the exact kernel is not one fold operator:\n" + plan)
+    assert(!plan.contains("Join") && !plan.contains("CartesianProduct"),
+      "the exact kernel plans a join:\n" + plan)
     // the ONLY exchange should be the post-partial-agg hash partitioning
     val exchanges = plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(exchanges <= 1, s"unexpected extra shuffles: $exchanges")
@@ -83,9 +86,13 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("weather kernels: similarity is ONE native expression node, not the HOF tree") {
-    val plan = planOf("k14_kernel_weather")
+    // the fold collects its accident side while k14's plan is built, so the
+    // similarity lives in the plan of the accident rows it collects
+    val plan = graft.kernel.RouteFold.accidentFrame(
+      graft.queries.KernelQueries.weatherAccidents(spark, dir), Seq(graft.queries.Derived.planDate))
+      .queryExecution.executedPlan.toString
     assert(plan.contains("weather_pattern_similarity"),
-      "native similarity expression missing from the k14 plan")
+      "native similarity expression missing from the k14 accident plan")
     // the staged HOF form would inline hundreds of aggregate/zip_with
     // lambda nodes — the whole executed plan must stay small
     assert(plan.length < 100000,

@@ -144,7 +144,7 @@ class AnalyticsSpec extends SparkSpec {
     // two accidents at IDENTICAL coordinates/type/severity/date → identical
     // influence; topN=1 must pick accident 1 (lowest id), so the breakdown
     // equals the one computed from accident 1 alone on every run
-    import graft.kernel.SafetyKernel
+    import graft.kernel.PairKernel
     val routes = Seq((1L, 40.0, -105.0, Some(3000.0), "alpine", Some(10.0)))
       .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
     def acc(id: Int, grade: Double) =
@@ -152,7 +152,7 @@ class AnalyticsSpec extends SparkSpec {
     val accs = Seq(acc(2, 9.0), acc(1, 9.0), acc(3, 9.0))
       .toDF("accident_id", "a_lat", "a_lon", "a_elev", "acc_type", "severity_raw", "d", "a_difficulty")
       .withColumn("a_date", to_date(col("d"))).drop("d")
-    val pairs = SafetyKernel.pairInfluence(routes, accs, to_date(lit("2024-07-15")))
+    val pairs = PairKernel.pairInfluence(routes, accs, to_date(lit("2024-07-15")))
     val viaTies = Analytics.riskBreakdown(pairs, topN = 1).head()
     val viaOne = Analytics.riskBreakdown(
       pairs.where(col("accident_id") === 1), topN = 1).head()
@@ -201,7 +201,7 @@ class AnalyticsSpec extends SparkSpec {
   }
 
   test("riskBreakdown: factor shares sum to 100") {
-    import graft.kernel.SafetyKernel
+    import graft.kernel.PairKernel
     val routes = Seq((1L, 40.0, -105.0, Some(3000.0), "alpine", Some(10.0)))
       .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
     val accs = Seq(
@@ -209,7 +209,7 @@ class AnalyticsSpec extends SparkSpec {
       (2, 40.2, -105.1, Some(2500.0), "sport", "minor", "2023-01-15", Some(12.0)))
       .toDF("accident_id", "a_lat", "a_lon", "a_elev", "acc_type", "severity_raw", "d", "a_difficulty")
       .withColumn("a_date", to_date(col("d"))).drop("d")
-    val pairs = SafetyKernel.pairInfluence(routes, accs, to_date(lit("2024-07-15")))
+    val pairs = PairKernel.pairInfluence(routes, accs, to_date(lit("2024-07-15")))
     val row = Analytics.riskBreakdown(pairs).head()
     val shares = row.schema.fieldNames.filter(_.startsWith("share_"))
       .map(f => row.getAs[Double](f))

@@ -47,14 +47,14 @@ class KernelPruningSpec extends SparkSpec {
     * replaced by 0.0, summed per route.
     */
   private def gatedPairTotals(rts: DataFrame, accs: DataFrame): DataFrame = {
-    val gated = SafetyKernel.pairInfluence(
+    val gated = PairKernel.pairInfluence(
         rts.withColumn("gate_km", graft.expr.WeightExprs.spatialBandwidthKm(
           graft.expr.WeightExprs.asciiLower(col("route_type"))) *
           KernelPruning.SignificanceRadiusFactor), accs, planDate)
       .withColumn("influence",
         when(col("influence").isNull || col("dist_km") <= col("gate_km"), col("influence"))
           .otherwise(lit(0.0)))
-    SafetyKernel.scoreRoutes(gated)
+    PairKernel.scoreRoutes(gated)
   }
 
   /** route_id → (total_influence, n_contributing, risk_score) row. */
@@ -75,7 +75,7 @@ class KernelPruningSpec extends SparkSpec {
     val firstDiff = prunedTotals.zipAll(gatedTotals, "", "").find { case (a, b) => a != b }
     assert(firstDiff.isEmpty, s"pruned totals vs the gated pair sums: $firstDiff")
     val p = byRoute(pruned)
-    val e = byRoute(SafetyKernel.scoreRoutes(rts, accs, planDate))
+    val e = byRoute(PairKernel.scoreRoutes(rts, accs, planDate))
     assert(p.keySet == e.keySet)
     val miscounted = e.collect {
       case (id, r) if p(id).getLong(2) != r.getLong(2) => (id, p(id).getLong(2), r.getLong(2))
@@ -108,7 +108,7 @@ class KernelPruningSpec extends SparkSpec {
   }
 
   test("pruned scoring matches exact scoring within the floor error bound") {
-    val exact = SafetyKernel.scoreRoutes(routes, accidents, planDate)
+    val exact = PairKernel.scoreRoutes(routes, accidents, planDate)
       .select("route_id", "risk_score").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val pruned = KernelPruning.scoreRoutesPruned(routes, accidents, planDate)
@@ -270,24 +270,26 @@ class KernelPruningSpec extends SparkSpec {
       KernelPruning.scoreRoutesPruned(amplified, accidents, planDate)
     }
     assert(ex.getMessage.contains("scoreRoutesForDates: routes carry wmult") &&
-      ex.getMessage.endsWith("use pairInfluence"), ex.getMessage)
-    // k16's path: the exact pair kernel scores (wsim·wmult) per pair
+      ex.getMessage.endsWith("score them exact"), ex.getMessage)
+    // k16's path: the exact fold scores (wsim·wmult) per pair
     val plain = byRoute(SafetyKernel.scoreRoutes(routes, accidents, planDate))
     val amp = byRoute(SafetyKernel.scoreRoutes(amplified, accidents, planDate))
     assert(amp.keySet == plain.keySet)
     assert(amp.exists { case (id, r) => r.getDouble(1) != plain(id).getDouble(1) },
       "wmult changed no exact total")
+    assert(totalRows(SafetyKernel.scoreRoutes(amplified, accidents, planDate)) ==
+      totalRows(PairKernel.scoreRoutes(amplified, accidents, planDate)))
   }
 
   test("an accident-side wmult is rejected by both pair kernels") {
-    // influenceColumns amplifies any joined wmult, while the fold reads the
-    // weather factor from the accidents alone: the two would score an
-    // accident-side multiplier differently, so both reject it
+    // the fold reads the multiplier from the routes alone: an accidents
+    // frame carrying one would be scored unamplified without an error, so
+    // the exact and the pruned fold both reject it
     val amplified = accidents.withColumn("wmult", lit(1.5))
     val exact = intercept[IllegalArgumentException] {
-      SafetyKernel.pairInfluence(routes, amplified, planDate)
+      SafetyKernel.scoreRoutes(routes, amplified, planDate)
     }
-    assert(exact.getMessage.contains("pairInfluence: accidents carry wmult"), exact.getMessage)
+    assert(exact.getMessage.contains("scoreRoutesForDates: accidents carry wmult"), exact.getMessage)
     val pruned = intercept[IllegalArgumentException] {
       KernelPruning.scoreRoutesPruned(routes, amplified, planDate)
     }
@@ -390,7 +392,7 @@ class KernelPruningSpec extends SparkSpec {
     // contribute
     assert(!pruned.contains("[5,0.0,0]") && !pruned.contains("[7,0.0,0]"), pruned)
     // route 6 keeps the pair at the gate and drops the one an ulp beyond
-    val edgePairs = SafetyKernel.pairInfluence(rts.where(col("route_id") === 6L),
+    val edgePairs = PairKernel.pairInfluence(rts.where(col("route_id") === 6L),
         accs.where(col("accident_id").isin(5L, 6L)), planDate)
       .select("accident_id", "influence").as[(Long, Double)].collect().toMap
     val route6 = fold(rts.where(col("route_id") === 6L),
@@ -447,7 +449,7 @@ class KernelPruningSpec extends SparkSpec {
       df.select(col("route_id"), col("total_influence").isNull, col("n_contributing"))
         .as[(Long, Boolean, Long)].collect().sortBy(_._1).toSeq
     val pruned = KernelPruning.scoreRoutesPruned(rts, accs, planDate)
-    val exact = SafetyKernel.scoreRoutes(rts, accs, planDate)
+    val exact = PairKernel.scoreRoutes(rts, accs, planDate)
     assert(shape(pruned) == shape(exact))
     assert(shape(pruned) == Seq((1L, false, 2L), (2L, true, 0L), (3L, false, 4L), (4L, false, 0L)),
       shape(pruned))
@@ -461,6 +463,6 @@ class KernelPruningSpec extends SparkSpec {
       (p(4L), e(4L)))
     val none = accs.where(lit(false))
     assert(KernelPruning.scoreRoutesPruned(rts, none, planDate).count() == 0L)
-    assert(SafetyKernel.scoreRoutes(rts, none, planDate).count() == 0L)
+    assert(PairKernel.scoreRoutes(rts, none, planDate).count() == 0L)
   }
 }

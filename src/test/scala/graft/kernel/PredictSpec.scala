@@ -140,14 +140,14 @@ class PredictSpec extends SparkSpec {
     // day 0 equals the single predict (same plan date, same kernel)
     assert(approx(risks.head, 3.30406861212714, 1e-9))
     // EVERY day equals a fresh single predict at that plan date, bit for
-    // bit: the multi-date fold is the twin of the pair-grain kernel
+    // bit (both run the fold), and the pair-grain reference's total
     val route = Seq((1L, longsPeak.latitude, longsPeak.longitude, longsPeak.elevation,
       longsPeak.routeType, Option.empty[Double]))
       .toDF("route_id", "lat", "lon", "elev", "route_type", "difficulty")
     (0 until 7).foreach { d =>
       val day = f"2024-07-${15 + d}%02d"
       val single = Predict.predict(spark, longsPeak.copy(plannedDate = day), accidents)
-      val total = SafetyKernel.scoreRoutes(route, Predict.gateAccidents(longsPeak, accidents),
+      val total = PairKernel.scoreRoutes(route, Predict.gateAccidents(longsPeak, accidents),
         to_date(lit(day))).head().getAs[Double]("total_influence")
       assert(risks(d) == single.riskScore, s"forecast day $d diverges from the single predict")
       assert(f(d).getAs[Double]("total_influence") == total, s"forecast day $d total")
@@ -188,7 +188,7 @@ class PredictSpec extends SparkSpec {
     val dates = (29 to 31).map(d => f"2024-08-$d%02d") ++ (1 to 4).map(d => f"2024-09-$d%02d")
     val warmed = Predict.warmPopularRoutes(routes, accidents, "2024-08-29", days = 7, topN = 3)
     val expected = dates.map { d =>
-      SafetyKernel.scoreRoutes(routes.where(col("route_id").between(2, 4)), accidents,
+      PairKernel.scoreRoutes(routes.where(col("route_id").between(2, 4)), accidents,
         to_date(lit(d)))
         .select(col("route_id"), to_date(lit(d)).as("target_date"),
           round(col("risk_score"), 1).as("risk_score"), col("color_code"))

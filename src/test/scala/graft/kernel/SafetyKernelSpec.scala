@@ -31,6 +31,11 @@ class SafetyKernelSpec extends SparkSpec {
 
   private val planDate = to_date(lit("2024-07-15"))
 
+  /** The fold's top-`k` contributor structs over every route, flattened. */
+  private def contributors(routes: DataFrame, accs: DataFrame, k: Int = 50): DataFrame =
+    SafetyKernel.scoreWithContributors(routes, accs, planDate, k)
+      .select(col("route_id"), explode(col("contributors")).as("c")).select("route_id", "c.*")
+
   test("risk score matches reference exactly: 3.30406861212714") {
     val res = SafetyKernel.scoreRoutes(longsPeak, accidents, planDate).head()
     val risk = res.getAs[Double]("risk_score")
@@ -40,7 +45,7 @@ class SafetyKernelSpec extends SparkSpec {
   }
 
   test("per-accident influences match reference breakdown") {
-    val pairs = SafetyKernel.pairInfluence(longsPeak, accidents, planDate)
+    val pairs = contributors(longsPeak, accidents)
       .select("accident_id", "influence", "spatial_w", "temporal_w",
         "elevation_w", "route_type_w", "severity_w", "grade_w")
       .collect().map(r => r.getAs[Int]("accident_id") -> r).toMap
@@ -57,8 +62,7 @@ class SafetyKernelSpec extends SparkSpec {
   }
 
   test("top contributors ranked by influence desc: 3, 1, 4, 2") {
-    val pairs = SafetyKernel.pairInfluence(longsPeak, accidents, planDate)
-    val top = SafetyKernel.topContributors(pairs, 3)
+    val top = contributors(longsPeak, accidents, 3)
       .orderBy("rank").select("accident_id").as[Int].collect()
     assert(top.toSeq == Seq(3, 1, 4))
   }
@@ -88,12 +92,15 @@ class SafetyKernelSpec extends SparkSpec {
       when(col("accident_id") === 1, 0.9)
         .when(col("accident_id") === 2, 0.2) // below threshold → zeroed
         .otherwise(0.5))
-    val pairs = SafetyKernel.pairInfluence(longsPeak, withWsim, planDate)
-      .select("accident_id", "weather_factor").collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    assert(approx(pairs(1), math.pow(0.9, 3), 1e-12))
-    assert(pairs(2) == 0.0)
-    assert(approx(pairs(3), 0.125, 1e-12))
+    // the weather factor is the influence's last multiplier: over the
+    // neutral run's influence (0.5³) it reads back as the factor itself
+    def influences(accs: DataFrame): Map[Int, Double] = contributors(longsPeak, accs)
+      .select("accident_id", "influence").as[(Int, Double)].collect().toMap
+    val neutral = influences(accidents)
+    val weather = influences(withWsim).map { case (id, infl) => id -> infl / neutral(id) * 0.125 }
+    assert(approx(weather(1), math.pow(0.9, 3), 1e-12))
+    assert(weather(2) == 0.0)
+    assert(approx(weather(3), 0.125, 1e-12))
   }
 
   test("pairInfluence's factor columns equal the standalone WeightExprs factors, bit for bit") {
@@ -117,7 +124,7 @@ class SafetyKernelSpec extends SparkSpec {
       "route_type_w" -> WeightExprs.routeTypeWeight(col("route_type"), col("acc_type")),
       "severity_w" -> WeightExprs.severityWeight(col("severity_raw")),
       "grade_w" -> WeightExprs.gradeWeight(col("difficulty"), col("a_difficulty")))
-    val rows = SafetyKernel.pairInfluence(routes, accs, Derived.planDate)
+    val rows = PairKernel.pairInfluence(routes, accs, Derived.planDate)
       .select(Seq("route_type", "acc_type", "severity_raw", "elev", "a_elev", "difficulty",
         "a_difficulty").map(col) ++ factors.flatMap { case (n, f) => Seq(col(n), f) }: _*)
       .collect()
@@ -136,6 +143,39 @@ class SafetyKernelSpec extends SparkSpec {
       val standalone = r.getDouble(8 + 2 * i)
       assert(java.lang.Double.doubleToRawLongBits(kernel) ==
         java.lang.Double.doubleToRawLongBits(standalone), s"$name: $kernel vs $standalone in $r")
+    }
+  }
+
+  test("the fold's contributor factors equal the standalone WeightExprs factors, bit for bit") {
+    // every pair of the Derived fixture (k = its accident count), with an
+    // unknown route type, an upper-case route type and NULL elevations
+    // and difficulties on both sides; each reported factor against its
+    // standalone expression over the route and accident inputs
+    val dir = "/root/testdata/sf0.001"
+    val routes = Derived.routes(spark, dir).where(col("route_id") <= 300).withColumn("route_type",
+      when(col("route_id") % 9 === 0, upper(col("route_type")))
+        .when(col("route_id") % 11 === 0, lit("scramble")).otherwise(col("route_type")))
+    val accs = Derived.accidents(spark, dir)
+    val k = accs.count().toInt
+    val factors = Seq(
+      "spatial_w" -> WeightExprs.spatialWeight(col("dist_km"), col("route_type")),
+      "temporal_w" -> WeightExprs.temporalWeight(Derived.planDate, col("a_date"), col("route_type")),
+      "elevation_w" -> WeightExprs.elevationWeight(col("elev"), col("a_elev"), col("route_type")),
+      "route_type_w" -> WeightExprs.routeTypeWeight(col("route_type"), col("acc_type")),
+      "severity_w" -> WeightExprs.severityWeight(col("severity_raw")),
+      "grade_w" -> WeightExprs.gradeWeight(col("difficulty"), col("a_difficulty")))
+    val rows = SafetyKernel.scoreWithContributors(routes, accs, Derived.planDate, k)
+      .select(col("route_id"), explode(col("contributors")).as("c")).select("route_id", "c.*")
+      .join(routes, "route_id").join(accs, "accident_id")
+      .select(col("elev") +: col("a_elev") +: factors.flatMap { case (n, f) => Seq(col(n), f) }: _*)
+      .collect()
+    assert(rows.length == routes.count() * k)
+    assert(rows.exists(_.isNullAt(0)) && rows.exists(_.isNullAt(1)), "no NULL elevation")
+    for (r <- rows; ((name, _), i) <- factors.zipWithIndex) {
+      val fold = r.getDouble(2 + 2 * i)
+      val standalone = r.getDouble(3 + 2 * i)
+      assert(java.lang.Double.doubleToRawLongBits(fold) ==
+        java.lang.Double.doubleToRawLongBits(standalone), s"$name: $fold vs $standalone in $r")
     }
   }
 }

@@ -34,7 +34,7 @@ class ScoringPipelineSpec extends SparkSpec {
         .collect().map(_.toString).toSeq
     val fused = rows(graft.kernel.SafetyKernel.scoreRoutesForDates(rts, accs, dates))
     val perDate = rows(dates.map { d =>
-      graft.kernel.SafetyKernel.scoreRoutes(rts, accs, to_date(lit(d)))
+      graft.kernel.PairKernel.scoreRoutes(rts, accs, to_date(lit(d)))
         .withColumn("prediction_date", to_date(lit(d)))
     }.reduce(_ unionByName _))
     (fused, perDate)
@@ -311,13 +311,19 @@ class ScoringPipelineSpec extends SparkSpec {
       e.getMessage)
   }
 
-  test("multi-date kernel rejects amplified-weather routes (wmult) loudly") {
+  test("multi-date kernel scores amplified-weather routes (wmult) per date; bad inputs fail loudly") {
+    // a route-side multiplier amplifies every date alike, bitwise the
+    // per-date pair kernel
+    val amplified = routes.withColumn("wmult", lit(1.2))
+    val (fused, perDate) = multiVsPerDate(amplified, accidents, Seq("2024-07-15", "2024-07-16"))
+    assert(fused == perDate && fused.size == 4, fused)
+    // a float multiplier would multiply in float precision in Catalyst
     val e = intercept[IllegalArgumentException] {
       graft.kernel.SafetyKernel.scoreRoutesForDates(
-        routes.withColumn("wmult", lit(1.2)), accidents, Seq("2024-07-15"))
+        amplified.withColumn("wmult", col("wmult").cast("float")), accidents, Seq("2024-07-15"))
     }
-    assert(e.getMessage.contains("routes carry wmult"), e.getMessage)
-    // the message names the side that carried it
+    assert(e.getMessage.contains("column wmult is float"), e.getMessage)
+    // an accident-side multiplier is rejected, naming the side
     val a = intercept[IllegalArgumentException] {
       graft.kernel.SafetyKernel.scoreRoutesForDates(
         routes, accidents.withColumn("wmult", lit(1.2)), Seq("2024-07-15"))
@@ -511,11 +517,11 @@ class ScoringPipelineSpec extends SparkSpec {
     val planDate = graft.queries.Derived.planDate
 
     val incr = ScoringPipeline.applyAccidentDelta(
-      graft.kernel.SafetyKernel.scoreRoutes(routes, oldAcc, planDate),
+      graft.kernel.PairKernel.scoreRoutes(routes, oldAcc, planDate),
       routes, newAcc, planDate)
       .select("route_id", "total_influence", "n_contributing", "risk_score", "color_code")
       .collect().map(r => r.getLong(0) -> r).toMap
-    val full = graft.kernel.SafetyKernel.scoreRoutes(routes, acc, planDate)
+    val full = graft.kernel.PairKernel.scoreRoutes(routes, acc, planDate)
       .collect().map(r => r.getLong(0) -> r).toMap
 
     assert(incr.keySet == full.keySet)
@@ -553,7 +559,7 @@ class ScoringPipelineSpec extends SparkSpec {
         s"route $id: plan date did not absorb the delta")
     }
     // and the plan-date rows equal a full recompute with both accidents
-    val full = graft.kernel.SafetyKernel.scoreRoutes(
+    val full = graft.kernel.PairKernel.scoreRoutes(
       routes, accidents.unionByName(newAcc), to_date(lit("2024-07-15")))
       .select("route_id", "risk_score")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

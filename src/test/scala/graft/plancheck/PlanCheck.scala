@@ -87,13 +87,19 @@ object PlanCheck {
         "column_pruned" -> pruned.toString))
     }
 
-    // 2. exact kernel: accidents broadcast, ≤1 hash exchange (post-agg only)
+    // 2. exact kernel is the per-route fold over the broadcast accident
+    //    arrays: exactly one fold operator (MapPartitions), no join of any
+    //    kind, ≤1 hash exchange (post-agg only). Plant: the pair-grain
+    //    kernel this replaced plans a BroadcastNestedLoopJoin and no fold
+    //    (n_fold_ops 1→0, n_joins 0→1).
     contract("kernel_exact_broadcast_k08") {
       val plan = planOf("k08_kernel_risk")
-      val bcast = plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange")
+      val folds = countOcc(plan, "MapPartitions ")
+      val joins = countOcc(plan, "Join") + countOcc(plan, "CartesianProduct")
       val exchanges = countLines(plan, "Exchange hashpartitioning")
-      (bcast && exchanges <= 1, Seq(
-        "broadcast" -> bcast.toString,
+      (folds == 1 && joins == 0 && exchanges <= 1, Seq(
+        "n_fold_ops" -> folds.toString,
+        "n_joins" -> joins.toString,
         "n_hash_exchanges" -> exchanges.toString))
     }
 
@@ -177,9 +183,15 @@ object PlanCheck {
       }
     }
 
-    // 6. weather similarity is ONE native codegen expression, not a HOF tree
+    // 6. weather similarity is ONE native codegen expression, not a HOF
+    //    tree, in the accident rows k14's fold collects (the fold collects
+    //    them while k14's plan is built, so they are not in that plan).
+    //    Plant: the staged Column twin (WeatherSimStaged) in
+    //    accidentsWithSimilarity makes native_expr false.
     contract("weather_native_expr_k14") {
-      val plan = planOf("k14_kernel_weather")
+      val plan = planString(graft.kernel.RouteFold.accidentFrame(
+        graft.queries.KernelQueries.weatherAccidents(spark, dir),
+        Seq(graft.queries.Derived.planDate)))
       val native = plan.contains("weather_pattern_similarity")
       val bounded = plan.length < 100000
       (native && bounded, Seq(

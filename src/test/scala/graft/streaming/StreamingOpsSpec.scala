@@ -497,7 +497,7 @@ class StreamingOpsSpec extends SparkSpec {
       spark, spark.read.parquet(base), deltas)
       .select("route_id", "risk_score", "n_contributing", "color_code")
       .collect().map(r => r.getLong(0) -> r).toMap
-    val full = graft.kernel.SafetyKernel.scoreRoutes(
+    val full = graft.kernel.PairKernel.scoreRoutes(
       routes, Seq(a0, a1, a2).toDF(), to_date(lit(date)))
       .collect().map(r => r.getLong(0) -> r).toMap
 
@@ -581,7 +581,7 @@ class StreamingOpsSpec extends SparkSpec {
     // a stale replay of the already-FOLDED batch arrives after the restart
     StreamingOps.ingestAccidentBatch(Seq(a1).toDF(), routes, date, deltas, batchId = 0L)
 
-    val full = graft.kernel.SafetyKernel.scoreRoutes(
+    val full = graft.kernel.PairKernel.scoreRoutes(
       routes, Seq(a0, a1, a2, a3).toDF(), to_date(lit(date)))
       .collect().map(r => r.getLong(0) -> r).toMap
     def assertServedMatches(): Unit = {

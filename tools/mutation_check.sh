@@ -410,6 +410,18 @@ run_mutation wsim-freeze-thaw-flip \
   'base -= weighted(5, ftSim)' \
   'w04_weather_similarity,w10_similarity_detailed,k14_kernel_weather'
 
+# M27: the fold's spatial Gaussian evaluated with java.lang.Math.exp
+# instead of Spark's StrictMath.exp — an ulp apart on some inputs. PairMath
+# is the one per-pair definition every kernel query runs (k08, k09, k10,
+# k14, k16 through the fold), but an ulp does not cross the oracle's 4- and
+# 6-decimal rounding on the testdata (MUTATION_RUN.md), so the bitwise
+# fold ≡ pair-reference specs are the gate that sees it
+run_mutation_spec pairmath-spatial-exp \
+  src/main/scala/graft/kernel/PairMath.scala \
+  'StrictMath.exp(-(distKm * distKm) / twoH2)' \
+  'Math.exp(-(distKm * distKm) / twoH2)' \
+  'graft.pipeline.ScoringPipelineSpec graft.kernel.KernelPruningSpec graft.kernel.SafetyKernelSpec'
+
 echo ""
 echo "==================================================================="
 if [ -n "${ONLY:-}" ]; then
